@@ -444,7 +444,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         from csv_loader_spark.sinks.http import write_http
 
-        write_http(
+        row = write_http(
             pings,
             args.url,
             source_id,
@@ -452,7 +452,6 @@ def main(argv: list[str] | None = None) -> int:
             retry_interval=args.retry_interval,
             max_retries=args.max_retries,
         )
-        row = distinct_vehicle_counts(pings).collect()[0]
     # reference progress-line format (CsvLoader.java:165)
     print(
         "%.2fM records loaded, %d unique vehicles (%d unique ids)"

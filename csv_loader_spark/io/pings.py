@@ -4,9 +4,12 @@ The reference streams one CSV (plain / .gz / first-entry-of-.zip), projects
 positionally with a per-record schema-variant switch, casts, drops malformed
 rows, parses 3 timestamp formats, and truncates decimal id strings to int64 —
 all single-threaded. Here the same semantics are a declarative DataFrame
-chain: Catalyst fuses project+cast+filter into one whole-stage-codegen pass,
-and the scan parallelizes per file split (plain CSV splits; .gz/.zip stay
-single-task per file — same constraint as the reference, noted in SURVEY §7.4).
+chain that parses each field once: ``project_pings`` fences its typed
+projection from the null filter, which Catalyst would otherwise push below
+it with a copy of every parse expression. Projection and filter still run
+in one whole-stage-codegen pass, and the scan parallelizes per file split
+(plain CSV splits; .gz/.zip stay single-task per file — same constraint as
+the reference, noted in SURVEY §7.4).
 
 Layout (CsvLoader.java:120-127): col0=time, col1=vehicle_id, col2=lat,
 col3=lon; records wider than 9 fields use col9=lat, col10=lon instead,
@@ -120,8 +123,11 @@ def project_pings(raw: DataFrame) -> DataFrame:
     malformed drop, multi-format time parse, id truncation.
 
     All null-producing casts happen in one projection; the single trailing
-    filter is the reference's catch-and-continue (CsvLoader.java:131-143)
-    expressed as predicate pushdown fodder.
+    filter is the reference's catch-and-continue (CsvLoader.java:131-143).
+    Between them sits a one-row ``inline``, a Generate the optimizer cannot
+    push the filter through. Without it Catalyst pushes the filter below
+    the projection and copies every parse expression into it, so each row
+    is parsed twice.
     """
     # Per-record variant switch (CsvLoader.java:124-127): any evidence of a
     # >9-field record routes lat/lon to cols 9/10.
@@ -136,7 +142,8 @@ def project_pings(raw: DataFrame) -> DataFrame:
         lat_str.try_cast("double").alias("lat"),
         lon_str.try_cast("double").alias("lon"),
     )
-    return projected.filter(
+    fenced = projected.select(F.inline(F.array(F.struct(*projected.columns))))
+    return fenced.filter(
         F.col("lat").isNotNull()
         & F.col("lon").isNotNull()
         & F.col("ts_millis").isNotNull()

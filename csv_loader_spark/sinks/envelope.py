@@ -26,9 +26,10 @@ Two layers here:
    SCALE.md); a differently-numbered upstream would need only these
    constants re-mapped. README.md ("Wire-format compatibility") and the
    CLI --help epilog state this user-facing.
-   Pure Python, deterministic, dependency-free — runs inside
-   foreachPartition on executors; cost is per-POST-batch, not per-element
-   of the relational hot path.
+   Pure Python, deterministic, dependency-free — runs on executors in the
+   sink's Python worker (``mapInArrow`` for the batch sink, the streaming
+   sink's ``foreachPartition``). Each payload is assembled from a list of
+   parts joined once, so encoding is linear in the envelope's row count.
 """
 
 from __future__ import annotations
@@ -146,60 +147,61 @@ def build_file_descriptor_proto(package: str = "pbf"):
 # ---------------------------------------------------------------------------
 
 _MASK64 = (1 << 64) - 1
+# a 7-bit group as the last byte of a varint, and with the continuation bit
+_LAST_GROUP = [bytes((i,)) for i in range(0x80)]
+_MORE_GROUP = [bytes((i | 0x80,)) for i in range(0x80)]
 
 
 def _varint(value: int) -> bytes:
     """Protobuf base-128 varint; negative int64 encodes as its two's
     complement (10 bytes), like protobuf int64."""
+    if 0 <= value < 0x80:  # tags; location and message lengths
+        return _LAST_GROUP[value]
     value &= _MASK64
-    out = bytearray()
-    while True:
-        bits = value & 0x7F
+    groups = []
+    while value > 0x7F:
+        groups.append(_MORE_GROUP[value & 0x7F])
         value >>= 7
-        if value:
-            out.append(bits | 0x80)
-        else:
-            out.append(bits)
-            return bytes(out)
+    groups.append(_LAST_GROUP[value])
+    return b"".join(groups)
 
 
 def _tag(field_no: int, wire_type: int) -> bytes:
     return _varint((field_no << 3) | wire_type)
 
 
-def _len_delimited(field_no: int, payload: bytes) -> bytes:
-    return _tag(field_no, 2) + _varint(len(payload)) + payload
-
-
-def _fixed64_double(field_no: int, value: float) -> bytes:
-    return _tag(field_no, 1) + struct.pack("<d", value)
+# Tags of PROTO_SCHEMA's fields, built once; wire type 0 = varint,
+# 1 = fixed64, 2 = length-delimited.
+_SOURCE_ID, _MESSAGES = _tag(1, 0), _tag(2, 2)  # VehicleMessageEnvelope
+_VEHICLE_ID, _LOCATIONS = _tag(1, 0), _tag(2, 2)  # VehicleMessage
+_LAT, _LON, _TIMESTAMP = _tag(1, 1), _tag(2, 1), _tag(3, 0)  # VehicleLocation
+# a VehicleLocation up to its timestamp varint, in one pack
+_LOCATION_HEAD = struct.Struct("<cdcdc").pack
 
 
 def encode_location(lat: float, lon: float, ts_millis: int) -> bytes:
-    return (
-        _fixed64_double(1, lat)
-        + _fixed64_double(2, lon)
-        + _tag(3, 0)
-        + _varint(ts_millis)
-    )
+    return _LOCATION_HEAD(_LAT, lat, _LON, lon, _TIMESTAMP) + _varint(ts_millis)
 
 
 def encode_message(vehicle_id: int, locations: Sequence[tuple[float, float, int]]) -> bytes:
-    body = _tag(1, 0) + _varint(vehicle_id)
+    parts = [_VEHICLE_ID, _varint(vehicle_id)]
     for lat, lon, ts in locations:
-        body += _len_delimited(2, encode_location(lat, lon, ts))
-    return body
+        loc = encode_location(lat, lon, ts)
+        parts += (_LOCATIONS, _varint(len(loc)), loc)
+    return b"".join(parts)
 
 
 def encode_envelope(
     source_id: int, rows: Iterable[tuple[int, float, float, int]]
 ) -> bytes:
     """One POST payload: rows are (vehicle_id, lat, lon, ts_millis) tuples —
-    one single-location message per row, like the reference (:152-155)."""
-    payload = _tag(1, 0) + _varint(source_id)
+    one single-location message per row, like the reference (:152-155).
+    The parts are joined once, so the cost is linear in the row count."""
+    parts = [_SOURCE_ID, _varint(source_id)]
     for vehicle_id, lat, lon, ts in rows:
-        payload += _len_delimited(2, encode_message(vehicle_id, [(lat, lon, ts)]))
-    return payload
+        msg = encode_message(vehicle_id, ((lat, lon, ts),))
+        parts += (_MESSAGES, _varint(len(msg)), msg)
+    return b"".join(parts)
 
 
 # --- decoder (test/receiver side) ------------------------------------------

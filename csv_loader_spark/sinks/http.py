@@ -10,11 +10,17 @@ Delivery semantics reproduced exactly:
 - a fresh connection per attempt (the reference builds a new
   CloseableHttpClient every try, :202-204; urllib does this naturally).
 
-Scale shape: ``write_http`` posts from ``foreachPartition`` — each executor
-ships its own partition in ~10k-row envelopes, so the driver never
-materializes the data and N executors POST in parallel (the reference is one
-thread; at 100 TB the receiver's capacity, not the engine, is the limit —
-cap parallelism by coalescing first if the receiver needs it).
+Scale shape: ``write_http`` runs every partition through ``mapInArrow``.
+The executor's Python worker reads its partition as Arrow batches, posts it
+in ~10k-row envelopes, and emits one row per distinct (vehicle_id_str,
+vehicle_id) with its row count. The driver never materializes the data, N
+executors POST in parallel (the reference is one thread; at 100 TB the
+receiver's capacity, not the engine, is the limit — cap parallelism by
+coalescing first if the receiver needs it), and the load's distinct counts
+come from a Spark aggregate over those small rows in the same job, so the
+file is scanned and parsed once. A task or stage that Spark recomputes
+(lost executor, failed fetch) posts its envelopes again: at-least-once, like
+a transport retry.
 
 Divergences (documented): the reference posts one final possibly-EMPTY
 envelope per file (:169→:196); we skip empty flushes. Batch boundaries land
@@ -31,7 +37,8 @@ import urllib.error
 import urllib.request
 from collections.abc import Iterable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import functions as F
 
 from csv_loader_spark.sinks.envelope import encode_envelope
 
@@ -85,6 +92,27 @@ def _chunks(it: Iterator, size: int) -> Iterator[list]:
         yield chunk
 
 
+def _post_tuples(
+    tuples: Iterable[tuple[int, float, float, int]],
+    url: str,
+    source_id: int,
+    *,
+    batch_size: int,
+    retry_interval: float,
+    max_retries: int | None,
+) -> int:
+    sent = 0
+    for chunk in _chunks(iter(tuples), batch_size):
+        post_bytes(
+            url,
+            encode_envelope(source_id, chunk),
+            retry_interval=retry_interval,
+            max_retries=max_retries,
+        )
+        sent += len(chunk)
+    return sent
+
+
 def post_partition(
     rows: Iterable,
     url: str,
@@ -97,17 +125,31 @@ def post_partition(
     """Stream one partition's rows to the sink in ``batch_size`` envelopes
     (micro-batcher, op 14). Returns rows sent. Rows need fields
     (vehicle_id, lat, lon, ts_millis)."""
-    sent = 0
-    tuples = ((r["vehicle_id"], r["lat"], r["lon"], r["ts_millis"]) for r in rows)
-    for chunk in _chunks(tuples, batch_size):
-        post_bytes(
-            url,
-            encode_envelope(source_id, chunk),
-            retry_interval=retry_interval,
-            max_retries=max_retries,
-        )
-        sent += len(chunk)
-    return sent
+    return _post_tuples(
+        ((r["vehicle_id"], r["lat"], r["lon"], r["ts_millis"]) for r in rows),
+        url,
+        source_id,
+        batch_size=batch_size,
+        retry_interval=retry_interval,
+        max_retries=max_retries,
+    )
+
+
+_ID_KEYS = ["vehicle_id_str", "vehicle_id"]
+_ID_COUNTS_SCHEMA = "vehicle_id_str string, vehicle_id long, n long"
+
+
+def _arrow_tuples(batches: Iterable, tallies: list) -> Iterator[tuple]:
+    """The (vehicle_id, lat, lon, ts_millis) rows of Arrow ``batches`` in
+    order; appends each batch's row count per distinct id pair to
+    ``tallies`` as it goes."""
+    import pyarrow as pa
+
+    for batch in batches:
+        ids = pa.Table.from_batches([batch]).select(_ID_KEYS)
+        tallies.append(ids.group_by(_ID_KEYS).aggregate([([], "count_all")]))
+        cols = ("vehicle_id", "lat", "lon", "ts_millis")
+        yield from zip(*(batch.column(c).to_pylist() for c in cols))
 
 
 def write_http(
@@ -118,19 +160,38 @@ def write_http(
     batch_size: int = BATCH_SIZE,
     retry_interval: float = RETRY_INTERVAL_S,
     max_retries: int | None = None,
-) -> None:
+) -> Row:
     """Batch-mode sink: every partition posts its rows as protobuf envelopes.
 
-    Executor-side, no driver collect — the 100 TB-safe shape."""
+    Executor-side, no driver collect — the 100 TB-safe shape. Returns the
+    load's (n_records, n_vehicles, n_ids), the same exact counts as
+    ``io.pings.distinct_vehicle_counts``, from the same job that posts."""
 
-    def _send(rows: Iterable) -> None:
-        post_partition(
-            rows,
+    def _post_and_count(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        tallies: list = []
+        _post_tuples(
+            _arrow_tuples(batches, tallies),
             url,
             source_id,
             batch_size=batch_size,
             retry_interval=retry_interval,
             max_retries=max_retries,
         )
+        if tallies:  # yielded only once every envelope is posted
+            counts = pa.concat_tables(tallies).group_by(_ID_KEYS)
+            counts = counts.aggregate([("count_all", "sum")])
+            yield from counts.select([*_ID_KEYS, "count_all_sum"]).rename_columns(
+                [*_ID_KEYS, "n"]
+            ).to_batches()
 
-    pings.foreachPartition(_send)
+    id_counts = pings.select(
+        *_ID_KEYS, "lat", "lon", "ts_millis"
+    ).mapInArrow(_post_and_count, _ID_COUNTS_SCHEMA)
+    return id_counts.agg(
+        # a sum over no rows is NULL: an empty load has 0 records
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_records"),
+        F.countDistinct("vehicle_id_str").alias("n_vehicles"),
+        F.countDistinct("vehicle_id").alias("n_ids"),
+    ).collect()[0]

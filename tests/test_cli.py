@@ -6,7 +6,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 
-from conftest import NARROW_ROWS, write_narrow_csv
+from conftest import DIRTY_ROWS, NARROW_ROWS, write_narrow_csv
 
 from csv_loader_spark.cli import main
 from csv_loader_spark.sinks.envelope import decode_envelope
@@ -56,6 +56,21 @@ def test_end_to_end_post_and_progress_line(spark, tmp_path, http_server, capsys)
         vid for p in rec.payloads for vid, _ in decode_envelope(p).messages
     )
     assert sent == sorted(vid for _, (vid, *_ ) in NARROW_ROWS)
+
+
+@pytest.mark.parametrize(
+    "lines", [[], DIRTY_ROWS], ids=["empty_file", "every_row_rejected"]
+)
+def test_no_valid_rows_prints_zero_line_and_posts_nothing(
+    spark, tmp_path, http_server, capsys, lines
+):
+    url, rec = http_server
+    path = tmp_path / "pings.csv"
+    path.write_text("".join(line + "\n" for line in lines))
+    assert main(["-f", str(path), "-u", url, "--max-retries", "2"]) == 0
+    out = capsys.readouterr().out
+    assert "0.00M records loaded, 0 unique vehicles (0 unique ids)" in out
+    assert rec.payloads == []
 
 
 def test_dry_run_sends_nothing(spark, tmp_path, http_server, capsys):

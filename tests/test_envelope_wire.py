@@ -116,7 +116,24 @@ CASES = [
 ]
 
 
-@pytest.mark.parametrize("source_id,rows", CASES)
+def _edge_rows(n: int) -> list[tuple[int, float, float, int]]:
+    """``n`` rows cycling through non-finite and signed-zero coordinates
+    and int64-extreme ids and timestamps."""
+    lo, hi = -(2**63), 2**63 - 1
+    coords = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 45.5, -122.25]
+    ints = [lo, hi, lo + 1, hi - 1, -1, 0, 1, 127, 128, 2**35]
+    return [
+        (ints[i % len(ints)], coords[i % len(coords)], coords[(i + 3) % len(coords)],
+         ints[(i * 7) % len(ints)])
+        for i in range(n)
+    ]
+
+
+# one envelope at twice the sink's batch size, source_id -1 (10-byte varint)
+AT_SIZE = (-1, _edge_rows(20_000))
+
+
+@pytest.mark.parametrize("source_id,rows", [*CASES, AT_SIZE])
 def test_matches_official_protobuf_runtime(source_id, rows):
     Env = _official_envelope_class()
     e = Env()

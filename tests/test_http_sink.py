@@ -6,6 +6,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 
+from csv_loader_spark.io.pings import distinct_vehicle_counts
 from csv_loader_spark.sinks.envelope import decode_envelope
 from csv_loader_spark.sinks.http import post_bytes, post_partition, write_http
 
@@ -115,3 +116,35 @@ def test_write_http_from_dataframe(spark, http_server):
         (vid, locs[0]) for p in rec.payloads for vid, locs in decode_envelope(p).messages
     )
     assert got == [(1, (1.0, 2.0, 10)), (2, (3.0, 4.0, 20)), (3, (5.0, 6.0, 30))]
+
+
+def _low64(id_str: str) -> int:
+    return (int(id_str) + 2**63) % 2**64 - 2**63
+
+
+def test_write_http_posts_in_order_and_returns_distinct_counts(spark, http_server):
+    """One partition of 25,001 rows: three envelopes of 10,001 / 10,001 /
+    4,999 rows in input order, none posted twice, and the returned counts
+    equal distinct_vehicle_counts. Ids above 2^63 wrap onto other ids, so
+    n_vehicles != n_ids (CsvLoader.java:105-106,165)."""
+    url, rec = http_server
+    rows = []
+    for i in range(25_001):
+        k = i % 997
+        id_str = (str(k), str(2**63 + k), str(2**64 + k))[i % 3 if k < 50 else 0]
+        rows.append((id_str, _low64(id_str), 1_431_025_202_000 + i, k / 10, -i / 100))
+    df = spark.createDataFrame(
+        rows,
+        "vehicle_id_str string, vehicle_id long, ts_millis long, lat double, lon double",
+    ).coalesce(1)
+
+    counts = write_http(df, url, source_id=11, max_retries=2)
+
+    envelopes = [decode_envelope(p) for p in rec.payloads]
+    assert [len(e.messages) for e in envelopes] == [10_001, 10_001, 4_999]
+    assert len(set(rec.payloads)) == len(rec.payloads)
+    assert {e.source_id for e in envelopes} == {11}
+    got = [(vid, *locs[0]) for e in envelopes for vid, locs in e.messages]
+    assert got == [(vid, lat, lon, ts) for _, vid, ts, lat, lon in rows]
+    assert counts.asDict() == distinct_vehicle_counts(df).collect()[0].asDict()
+    assert counts["n_vehicles"] != counts["n_ids"]

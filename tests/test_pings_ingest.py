@@ -1,8 +1,12 @@
 """End-to-end batch ingestion tests (FIXTURES.md §A1-A5; CsvLoader.java:72-194)."""
 
+import random
+
 from conftest import (
+    DIRTY_ROWS,
     NARROW_ROWS,
     WIDE_ROWS,
+    WRAP_ROW,
     write_dirty_csv,
     write_gzip_csv,
     write_mixed_csv,
@@ -10,9 +14,14 @@ from conftest import (
     write_zip_csv,
 )
 
+from pyspark.sql import functions as F
+
+from csv_loader_spark.functions.ids import decimal_str_to_int64
+from csv_loader_spark.functions.timestamps import parse_time_to_millis
 from csv_loader_spark.io.pings import (
     PING_SCHEMA,
     distinct_vehicle_counts,
+    project_pings,
     read_pings,
     read_pings_raw,
     rejected_pings,
@@ -124,3 +133,100 @@ def test_distinct_dual_counters_expose_truncation(spark, tmp_path):
         f.write(f"2015-06-01 08:30:16+00,{2**64 + 7},40.1,-74.1\n")
     row = distinct_vehicle_counts(read_pings(spark, path)).collect()[0]
     assert (row["n_records"], row["n_vehicles"], row["n_ids"]) == (2, 2, 1)
+
+
+def _operators(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _operators(children.apply(i))
+
+
+def test_read_pings_parses_each_row_once(spark, tmp_path):
+    """The null filter must not be pushed below the typed projection, which
+    would copy every parse expression into it and parse each row twice."""
+    path = str(tmp_path / "mixed.csv")
+    write_mixed_csv(path)
+    plan = read_pings(spark, path)._jdf.queryExecution().optimizedPlan()
+    for fn in ("gettimestamp", "try_to_number"):
+        holders = [
+            op.nodeName() for op in _operators(plan)
+            if fn in op.expressions().mkString(" ")
+        ]
+        assert len(holders) == 1, (fn, holders)
+
+
+def _select_then_filter(raw):
+    """project_pings as a plain select followed by the null filter: the
+    oracle for the fenced chain."""
+    wide = F.col("_c9").isNotNull() | F.col("_c10").isNotNull()
+    projected = raw.select(
+        F.col("_c1").alias("vehicle_id_str"),
+        decimal_str_to_int64(F.col("_c1")).alias("vehicle_id"),
+        parse_time_to_millis(F.col("_c0")).alias("ts_millis"),
+        F.when(wide, F.col("_c9")).otherwise(F.col("_c2")).try_cast("double").alias("lat"),
+        F.when(wide, F.col("_c10")).otherwise(F.col("_c3")).try_cast("double").alias("lon"),
+    )
+    return projected.filter(
+        F.col("lat").isNotNull()
+        & F.col("lon").isNotNull()
+        & F.col("ts_millis").isNotNull()
+        & F.col("vehicle_id").isNotNull()
+    )
+
+
+def _fuzzed_lines(n: int, seed: int) -> list[str]:
+    """Narrow and wide rows whose timestamp, id and coordinates are drawn
+    from valid, boundary and malformed forms."""
+    rng = random.Random(seed)
+
+    def ts():
+        if rng.random() < 0.15:
+            return rng.choice(["", "not-a-time", "08:30:15", "2015-06-01",
+                               "2015-13-45 99:99:99", " 2015-06-01 08:30:15",
+                               "2015-06-01 08:30:15 +00", "2015-02-29 10:00:00"])
+        date = f"{rng.randint(1900, 2100):04d}-{rng.randint(1, 12):02d}-{rng.randint(1, 28):02d}"
+        time = f"{rng.randint(0, 23):02d}:{rng.randint(0, 59):02d}:{rng.randint(0, 59):02d}"
+        frac = rng.choice(["", "", f".{rng.randint(0, 10**rng.randint(1, 9) - 1)}"])
+        zone = rng.choice(["", "Z", "+00", "+05", "-03", "+05:30", "+0530", "-11:00"])
+        return f"{date}{rng.choice([' ', 'T'])}{time}{frac}{zone}"
+
+    def vid():
+        return rng.choice([
+            str(rng.randint(0, 10**6)), str(rng.randint(2**63, 2**64 + 10**6)),
+            f"-{rng.randint(0, 2**63 + 5)}", f"+{rng.randint(0, 999)}",
+            f" {rng.randint(0, 99)} ", f"00{rng.randint(0, 99)}",
+            "9" * 38, "9" * 39, "", "veh-7", "1e5", "12.5",
+        ])
+
+    def coord():
+        return rng.choice([
+            repr(rng.uniform(-180, 180)), str(rng.randint(-90, 90)), "", "abc",
+            "1e3", " 4.5", "-0.0", "NaN", "Infinity",
+        ])
+
+    lines = []
+    for _ in range(n):
+        if rng.random() < 0.3:
+            filler = [str(rng.randint(0, 9)) for _ in range(7)]
+            lines.append(",".join([ts(), vid(), *filler, coord(), coord()]))
+        else:
+            lines.append(",".join([ts(), vid(), coord(), coord()]))
+    return lines
+
+
+def test_fenced_projection_matches_select_then_filter(spark, tmp_path):
+    path = tmp_path / "corpus.csv"
+    lines = [line for line, _ in NARROW_ROWS + WIDE_ROWS] + DIRTY_ROWS + [WRAP_ROW]
+    lines.append('2015-06-01 08:30:15+00,305,"a,b\nc",-74.0')
+    path.write_text("".join(f"{line}\n" for line in lines + _fuzzed_lines(3000, seed=11)))
+    raw = read_pings_raw(spark, str(path))
+    got, want = project_pings(raw), _select_then_filter(raw)
+    assert got.schema == want.schema
+
+    def exact(rows):  # repr: NaN equals itself and -0.0 differs from 0.0
+        return [tuple(map(repr, r)) for r in rows]
+
+    got_rows = exact(got.collect())
+    assert got_rows == exact(want.collect())
+    assert 500 < len(got_rows) < 3000  # both kept and dropped rows
