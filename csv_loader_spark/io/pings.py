@@ -6,10 +6,14 @@ rows, parses 3 timestamp formats, and truncates decimal id strings to int64 —
 all single-threaded. Here the same semantics are a declarative DataFrame
 chain that parses each field once: ``project_pings`` fences its typed
 projection from the null filter, which Catalyst would otherwise push below
-it with a copy of every parse expression. Projection and filter still run
-in one whole-stage-codegen pass, and the scan parallelizes per file split
-(plain CSV splits; .gz/.zip stay single-task per file — same constraint as
-the reference, noted in SURVEY §7.4).
+it with a copy of every parse expression. The chain is three SQL strings
+(typed ``selectExpr``, ``inline`` fence, filter), so building it costs a
+few py4j round trips instead of ~15 per composed Column call, and the
+timestamp parse makes one pattern attempt per valid row (the guards in
+functions/timestamps.py). Projection and filter still run in one
+whole-stage-codegen pass, and the scan parallelizes per file split (plain
+CSV splits; .gz/.zip stay single-task per file — same constraint as the
+reference, noted in SURVEY §7.4).
 
 Layout (CsvLoader.java:120-127): col0=time, col1=vehicle_id, col2=lat,
 col3=lon; records wider than 9 fields use col9=lat, col10=lon instead,
@@ -118,6 +122,17 @@ def read_pings_raw(
     )
 
 
+# Per-record variant switch (CsvLoader.java:124-127): any evidence of a
+# >9-field record routes lat/lon to cols 9/10.
+_WIDE = "(_c9 IS NOT NULL OR _c10 IS NOT NULL)"
+# The typed fields as SQL fragments, shared by project_pings and
+# rejected_pings: each null-producing parse is written once.
+_VEHICLE_ID = decimal_str_to_int64("_c1")
+_TS_MILLIS = parse_time_to_millis("_c0")
+_LAT = f"try_cast(CASE WHEN {_WIDE} THEN _c9 ELSE _c2 END AS DOUBLE)"
+_LON = f"try_cast(CASE WHEN {_WIDE} THEN _c10 ELSE _c3 END AS DOUBLE)"
+
+
 def project_pings(raw: DataFrame) -> DataFrame:
     """Ops 6-10 as one declarative chain: variant projection, double cast,
     malformed drop, multi-format time parse, id truncation.
@@ -129,25 +144,19 @@ def project_pings(raw: DataFrame) -> DataFrame:
     the projection and copies every parse expression into it, so each row
     is parsed twice.
     """
-    # Per-record variant switch (CsvLoader.java:124-127): any evidence of a
-    # >9-field record routes lat/lon to cols 9/10.
-    wide = F.col("_c9").isNotNull() | F.col("_c10").isNotNull()
-    lat_str = F.when(wide, F.col("_c9")).otherwise(F.col("_c2"))
-    lon_str = F.when(wide, F.col("_c10")).otherwise(F.col("_c3"))
-
-    projected = raw.select(
-        F.col("_c1").alias("vehicle_id_str"),
-        decimal_str_to_int64(F.col("_c1")).alias("vehicle_id"),
-        parse_time_to_millis(F.col("_c0")).alias("ts_millis"),
-        lat_str.try_cast("double").alias("lat"),
-        lon_str.try_cast("double").alias("lon"),
+    projected = raw.selectExpr(
+        "_c1 AS vehicle_id_str",
+        f"{_VEHICLE_ID} AS vehicle_id",
+        f"{_TS_MILLIS} AS ts_millis",
+        f"{_LAT} AS lat",
+        f"{_LON} AS lon",
     )
-    fenced = projected.select(F.inline(F.array(F.struct(*projected.columns))))
+    fenced = projected.selectExpr(
+        "inline(array(struct(vehicle_id_str, vehicle_id, ts_millis, lat, lon)))"
+    )
     return fenced.filter(
-        F.col("lat").isNotNull()
-        & F.col("lon").isNotNull()
-        & F.col("ts_millis").isNotNull()
-        & F.col("vehicle_id").isNotNull()
+        "lat IS NOT NULL AND lon IS NOT NULL"
+        " AND ts_millis IS NOT NULL AND vehicle_id IS NOT NULL"
     )
 
 
@@ -155,19 +164,15 @@ def rejected_pings(raw: DataFrame) -> DataFrame:
     """The rows `project_pings` drops, with a reason column — the reference
     prints these and continues (CsvLoader.java:133,141); we keep them
     queryable (a strict superset of the reference's stdout log)."""
-    wide = F.col("_c9").isNotNull() | F.col("_c10").isNotNull()
-    lat = F.when(wide, F.col("_c9")).otherwise(F.col("_c2")).try_cast("double")
-    lon = F.when(wide, F.col("_c10")).otherwise(F.col("_c3")).try_cast("double")
-    ts = parse_time_to_millis(F.col("_c0"))
-    vid = decimal_str_to_int64(F.col("_c1"))
-    reason = (
-        F.when(lat.isNull() | lon.isNull(), F.lit("bad_latlon"))
-        .when(ts.isNull(), F.lit("bad_time"))
-        .otherwise(F.lit("bad_vehicle_id"))
-    )
+    bad_latlon = f"{_LAT} IS NULL OR {_LON} IS NULL"
+    bad_time = f"{_TS_MILLIS} IS NULL"
     return raw.filter(
-        lat.isNull() | lon.isNull() | ts.isNull() | vid.isNull()
-    ).withColumn("reject_reason", reason)
+        f"{bad_latlon} OR {bad_time} OR {_VEHICLE_ID} IS NULL"
+    ).selectExpr(
+        "*",
+        f"CASE WHEN {bad_latlon} THEN 'bad_latlon' WHEN {bad_time} THEN 'bad_time'"
+        " ELSE 'bad_vehicle_id' END AS reject_reason",
+    )
 
 
 def read_pings(spark: SparkSession, path: str) -> DataFrame:

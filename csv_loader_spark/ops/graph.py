@@ -243,9 +243,8 @@ def pagerank_fixed_point(
     # — repartitioning again here would re-shuffle the identical layout
     # (same key, and the partition-count default matches: both sides
     # plan at spark.sql.shuffle.partitions), so the flag skips it and
-    # the edge prep keeps exactly ONE src exchange end to end (q160:
-    # plans/r16/q160_edge_build_*). Callers whose edge frame is NOT
-    # src-partitioned must leave it False.
+    # the edge prep keeps exactly ONE src exchange end to end (q160).
+    # Callers whose edge frame is NOT src-partitioned must leave it False.
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not pre_partitioned:
         e = e.repartition("src")

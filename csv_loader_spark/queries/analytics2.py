@@ -976,8 +976,7 @@ def q200_monitoring_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-identical to summing is_gap over the gap-filled grid, without
     the grid explode/join/window machinery. Only q190 (PSI — a
     different, value-bucketed aggregate) keeps its own scan: events
-    scans 5 -> 2, hourly exchanges 4 -> 1
-    (plans/r16/q200_monitoring_capstone_*). The oracle still nests the
+    scans 5 -> 2, hourly exchanges 4 -> 1. The oracle still nests the
     five registered oracle texts — single source of truth per leg —
     and tests/test_analytics2.py pins new-vs-composed equality."""
     from csv_loader_spark.queries.registry import get

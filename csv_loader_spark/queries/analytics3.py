@@ -236,7 +236,7 @@ def q212_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup's clustering) and (b) leaving the checkpointed frame
     # CU-partitioned, which the per-round hub aggregate (groupBy("cu")
     # after the broadcast su-join) and the seed-hub distinct reuse
-    # exchange-free (plans/r16/q212_*). At cluster scale, rounds where
+    # exchange-free. At cluster scale, rounds where
     # the score frames exceed the broadcast threshold still re-exchange
     # by su for the authority leg — same trade as pagerank's rank join.
     pairs = (

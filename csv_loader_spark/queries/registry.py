@@ -20,6 +20,7 @@ Determinism rules applied throughout the library:
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -41,11 +42,21 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Decorator registering a query implementation with its oracle SQL."""
+    """Decorator registering a query implementation with its oracle SQL.
+
+    Raises at import, not at first run, when ``fn`` cannot be called as
+    ``fn(spark, sf_dir)``: a decorator left on a helper would otherwise
+    only fail once the bench or the driver contract calls it."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
+        try:
+            inspect.signature(fn).bind(None, "")
+        except TypeError as e:
+            raise TypeError(
+                f"query {name}: {fn.__qualname__} must take (spark, sf_dir): {e}"
+            ) from None
         _REGISTRY[name] = QuerySpec(name, fn, oracle, tuple(tags), fn.__doc__ or "")
         return fn
 

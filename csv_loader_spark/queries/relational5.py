@@ -190,11 +190,6 @@ def _ewma_oracle() -> str:
     """
 
 
-@query(
-    "q172_exp_smooth",
-    oracle=_ewma_oracle(),
-    tags=("timeseries", "window", "r12"),
-)
 def exp_smooth_over_hourly(hourly: DataFrame) -> DataFrame:
     """q172's FIR smoothing over a PREBUILT (event_type, hr, cnt)
     hourly-count frame (r16: extracted so q200 can feed all its hourly
@@ -223,6 +218,11 @@ def exp_smooth_over_hourly(hourly: DataFrame) -> DataFrame:
     )
 
 
+@query(
+    "q172_exp_smooth",
+    oracle=_ewma_oracle(),
+    tags=("timeseries", "window", "r12"),
+)
 def q172_exp_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted smoothing of the hourly event-count series
     (alpha=0.5, {EWMA_TAPS}-tap truncated horizon, weights renormalized

@@ -255,7 +255,7 @@ def q160_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrized_dedup_edges explodes the raw pairs, shuffles ONCE by
     # src, and dedups exchange-free above it; pre_partitioned=True tells
     # pagerank_fixed_point to checkpoint that layout as-is. Edge prep:
-    # 2 shuffle exchanges -> 1 (plans/r16/q160_edge_build_*). Contrast
+    # 2 shuffle exchanges -> 1. Contrast
     # q213, where the bigram pairs dedup 592x and the fold would shuffle
     # 2x the raw stream — measured and kept on the distinct-first shape.
     edges = symmetrized_dedup_edges(pairs, "cu", "su")

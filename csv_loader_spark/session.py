@@ -9,9 +9,47 @@ to UTC, see SURVEY.md §7.4), Arrow enabled for the pandas-UDF slow path.
 
 from __future__ import annotations
 
+import importlib.util
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+# A modern protobuf runtime (6.x) ships vendored inside a google-cloud-sdk
+# install; where one is present, discovering it unblocks the
+# transformWithStateInPandas live path (streaming/trips.py) without any pip
+# install. PYTHONPATH is prepended so the JVM-launched Python workers
+# inherit it too (effective when set before the SparkSession starts —
+# get_spark calls ensure_protobuf() for exactly that reason). It lives here
+# so session setup imports neither pandas nor the stateful-streaming API.
+_VENDORED_PROTOBUF = "/usr/lib/google-cloud-sdk/platform/google_appengine"
+
+
+def ensure_protobuf() -> bool:
+    """Make google.protobuf importable (installed or vendored); True if so."""
+    try:
+        if importlib.util.find_spec("google.protobuf") is not None:
+            return True
+    except ModuleNotFoundError:  # no 'google' namespace package at all
+        pass
+    if not os.path.isdir(os.path.join(_VENDORED_PROTOBUF, "google", "protobuf")):
+        return False
+    if _VENDORED_PROTOBUF not in sys.path:
+        sys.path.insert(0, _VENDORED_PROTOBUF)
+        importlib.invalidate_caches()
+    pp = os.environ.get("PYTHONPATH", "")
+    if _VENDORED_PROTOBUF not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            _VENDORED_PROTOBUF + (os.pathsep + pp if pp else "")
+        )
+    # The vendored runtime (6.32) is one minor behind pyspark's TWS gencode
+    # (6.33); the gencode's builder API is unchanged between them, and
+    # protobuf's own sanctioned escape hatch exists for exactly this:
+    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
+    try:
+        return importlib.util.find_spec("google.protobuf") is not None
+    except ModuleNotFoundError:
+        return False
 
 
 def get_spark(
@@ -34,8 +72,6 @@ def get_spark(
     # Discover the vendored protobuf runtime BEFORE the JVM starts so the
     # Python workers inherit it via PYTHONPATH — unblocks the
     # transformWithStateInPandas protocol (see streaming/trips.py).
-    from csv_loader_spark.streaming.trips import ensure_protobuf
-
     ensure_protobuf()
 
     builder = (

@@ -116,7 +116,7 @@ def build_file_descriptor_proto(package: str = "pbf"):
     """PROTO_SCHEMA as a ``descriptor_pb2.FileDescriptorProto`` — the
     programmatic twin of :func:`proto_schema` for building message
     classes with the official runtime (google.protobuf must be
-    importable; streaming/trips.py ``ensure_protobuf`` discovers the
+    importable; session.py ``ensure_protobuf`` discovers the
     vendored copy). tests/test_envelope_wire.py serializes through the
     resulting classes and asserts byte identity with the hand-rolled
     encoder."""

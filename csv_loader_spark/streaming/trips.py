@@ -21,7 +21,7 @@ this is the extension-surface operator family from SURVEY.md §2.3.
   Python worker requires the ``protobuf`` package
   (pyspark/sql/streaming/proto/StateMessage_pb2.py imports
   ``google.protobuf``) — not pip-installed here, but
-  :func:`ensure_protobuf` discovers the runtime vendored inside the
+  ``session.ensure_protobuf`` discovers the runtime vendored inside the
   image's google-cloud-sdk and exports it to the workers via PYTHONPATH,
   so the LIVE path runs end-to-end in this sandbox
   (tests/test_transform_with_state.py::test_trips_stream_tws_end_to_end);
@@ -48,7 +48,6 @@ Python.
 
 from __future__ import annotations
 
-import importlib.util
 import math
 from collections.abc import Iterator
 
@@ -61,6 +60,8 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
     TimerValues,
 )
+
+from csv_loader_spark.session import ensure_protobuf
 
 OUTPUT_SCHEMA = (
     "user_id bigint, trip_start timestamp, trip_end timestamp, "
@@ -259,44 +260,6 @@ class TripProcessor(StatefulProcessor):
 
     def close(self) -> None:
         pass
-
-
-# A modern protobuf runtime (6.x) ships vendored inside the google-cloud-sdk
-# install present on this image; discovering it unblocks the TWS live path
-# without any pip install. PYTHONPATH is prepended so the JVM-launched Python
-# workers inherit it too (effective when set before the SparkSession starts —
-# session.get_spark calls ensure_protobuf() for exactly that reason).
-_VENDORED_PROTOBUF = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-
-
-def ensure_protobuf() -> bool:
-    """Make google.protobuf importable (installed or vendored); True if so."""
-    import os
-    import sys
-
-    try:
-        if importlib.util.find_spec("google.protobuf") is not None:
-            return True
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        pass
-    if not os.path.isdir(os.path.join(_VENDORED_PROTOBUF, "google", "protobuf")):
-        return False
-    if _VENDORED_PROTOBUF not in sys.path:
-        sys.path.insert(0, _VENDORED_PROTOBUF)
-        importlib.invalidate_caches()
-    pp = os.environ.get("PYTHONPATH", "")
-    if _VENDORED_PROTOBUF not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _VENDORED_PROTOBUF + (os.pathsep + pp if pp else "")
-        )
-    # The vendored runtime (6.32) is one minor behind pyspark's TWS gencode
-    # (6.33); the gencode's builder API is unchanged between them, and
-    # protobuf's own sanctioned escape hatch exists for exactly this:
-    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
 
 
 def tws_available() -> bool:

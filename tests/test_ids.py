@@ -1,11 +1,13 @@
 """BigInteger.longValue() truncation parity (CsvLoader.java:145-146)."""
 
+from pyspark.sql import functions as F
+
 from csv_loader_spark.functions.ids import decimal_str_to_int64
 
 
 def _convert(spark, values):
     df = spark.createDataFrame([(v,) for v in values], ["id"])
-    return [r["v"] for r in df.select(decimal_str_to_int64("id").alias("v")).collect()]
+    return [r["v"] for r in df.select(F.expr(decimal_str_to_int64("id")).alias("v")).collect()]
 
 
 def test_in_range_and_signs(spark):

@@ -6,6 +6,8 @@ semantics."""
 import random
 from datetime import datetime, timedelta, timezone
 
+from pyspark.sql import functions as F
+
 from csv_loader_spark.functions.ids import decimal_str_to_int64
 from csv_loader_spark.functions.timestamps import parse_time_to_millis
 
@@ -34,7 +36,7 @@ def test_id_truncation_randomized(spark):
         cases.append(sign + "".join(rng.choice("0123456789") for _ in range(digits)))
     df = spark.createDataFrame([(c,) for c in cases], ["s"])
     got = [
-        r["v"] for r in df.select(decimal_str_to_int64("s").alias("v")).collect()
+        r["v"] for r in df.select(F.expr(decimal_str_to_int64("s")).alias("v")).collect()
     ]
     expected = [_py_biginteger_long(c) for c in cases]
     assert got == expected
@@ -92,6 +94,6 @@ def test_timestamp_parse_randomized(spark):
             expected.append(epoch_ms + add)
     df = spark.createDataFrame([(c,) for c in cases], ["s"])
     got = [
-        r["v"] for r in df.select(parse_time_to_millis("s").alias("v")).collect()
+        r["v"] for r in df.select(F.expr(parse_time_to_millis("s")).alias("v")).collect()
     ]
     assert got == expected

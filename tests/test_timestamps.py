@@ -29,7 +29,7 @@ BAD = ["not-a-time", "2015-13-45 99:99:99", "", "08:30:15"]
 
 def _parse_all(spark, values):
     df = spark.createDataFrame([(v,) for v in values], ["ts"])
-    rows = df.select(F.col("ts"), parse_time_to_millis("ts").alias("ms")).collect()
+    rows = df.select(F.col("ts"), F.expr(parse_time_to_millis("ts")).alias("ms")).collect()
     return {r["ts"]: r["ms"] for r in rows}
 
 

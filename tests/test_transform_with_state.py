@@ -4,7 +4,7 @@ on real table data, the transformWithStateInPandas StatefulProcessor
 logic (timer bookkeeping, stale-timer guard) through a fake-state harness,
 AND the live TWS protocol end-to-end (RocksDB state store) — runnable
 since ensure_protobuf() discovers the image's vendored google.protobuf
-runtime (streaming/trips.py). The gate test covers the truly-absent
+runtime (session.py). The gate test covers the truly-absent
 case and skips when the runtime is present."""
 
 import json

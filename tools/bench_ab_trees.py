@@ -26,6 +26,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -122,7 +123,8 @@ def main() -> None:
         "tree_a": args.tree_a, "tree_b": args.tree_b,
         "pairs": args.pairs, "estimator": "pooled_min",
         "geomean_a_over_b": round(geo, 4),
-        "median_a_over_b": ratios[len(ratios) // 2],
+        # the mean of the two middle ratios when the count is even
+        "median_a_over_b": round(statistics.median(ratios), 4),
         "per_query": pooled, "loads_after_cells": loads,
     }))
 

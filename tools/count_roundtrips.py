@@ -2,11 +2,14 @@
 DataFrame — the driver-side construction cost that r15 showed dominates
 the per-query floor on a loaded driver host.
 
-Every `F.<fn>(...)`/Column-operator call in PySpark is 1-2 synchronous
-py4j `send_command` round trips (reflection + invoke). The count is a
-load-independent measure of construction cost: unlike wall time it does
-not move with CPU steal, so before/after construction-cost claims are
-made in counts first and wall clock second.
+Every `F.<fn>(...)`/Column-operator call in PySpark is a run of
+synchronous py4j `send_command` round trips (reflection + invoke; with
+PySpark 4's DataFrame query-context capture about 15 per call). The
+count is a load-independent measure of construction cost: unlike wall
+time it does not move with CPU steal, so before/after construction-cost
+claims are made in counts first and wall clock second. Counts in
+OPTIMIZATION_r15.md came from an earlier patch that wrapped
+`send_command` twice and so counted every round trip twice.
 
 Usage:
     python tools/count_roundtrips.py [sf_dir] [query_name ...]
@@ -18,28 +21,52 @@ is executed (no actions), so this is safe to run on any sf_dir.
 
 from __future__ import annotations
 
+import contextlib
 import sys
+import threading
 import time
 
 from py4j import clientserver, java_gateway
 
-COUNTER = {"n": 0}
 
+@contextlib.contextmanager
+def counting():
+    """Count the py4j round trips the calling thread makes inside the block.
 
-def _patch() -> None:
-    """Wrap both possible client classes' send_command with a counter."""
+    Yields a dict whose ``"n"`` grows by one per ``send_command``. Only a
+    class that defines ``send_command`` itself is wrapped: ``JavaClient``
+    inherits ``GatewayClient``'s, and wrapping both would count each
+    round trip twice. Other threads are not counted: py4j's finalizer
+    thread sends the deletes of freed proxies, whenever they were freed,
+    on its own schedule."""
+    counter = {"n": 0}
+    caller = threading.get_ident()
+    patched = []
     for cls in (java_gateway.GatewayClient, clientserver.JavaClient):
-        orig = cls.send_command
+        orig = vars(cls).get("send_command")
+        if orig is None:
+            continue
 
         def wrapped(self, *a, _orig=orig, **kw):
-            COUNTER["n"] += 1
+            if threading.get_ident() == caller:
+                counter["n"] += 1
             return _orig(self, *a, **kw)
 
         cls.send_command = wrapped
+        patched.append((cls, orig))
+    try:
+        yield counter
+    finally:
+        for cls, orig in patched:
+            cls.send_command = orig
 
 
 def main() -> int:
-    _patch()
+    with counting() as counter:
+        return _report(counter)
+
+
+def _report(counter: dict) -> int:
     # $SPARK_GRAFT_REPO lets an A/B harness point the same tool at a
     # worktree pinned to an older commit (the "before" side).
     import os
@@ -57,10 +84,10 @@ def main() -> int:
     for name, spec in all_specs().items():
         if only and name not in only:
             continue
-        before = COUNTER["n"]
+        before = counter["n"]
         t0 = time.time()
         spec.fn(spark, sf_dir)  # build only — no action
-        rows.append((COUNTER["n"] - before, time.time() - t0, name))
+        rows.append((counter["n"] - before, time.time() - t0, name))
     rows.sort(reverse=True)
     total = sum(r[0] for r in rows)
     for calls, sec, name in rows:
