@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from csv_loader_spark.io.tables import TABLES, load_table  # noqa: E402
 from csv_loader_spark.queries.registry import all_specs  # noqa: E402
 from csv_loader_spark.session import get_spark  # noqa: E402
+from tools.count_roundtrips import compiling  # noqa: E402
 
 # Headline set: spans scan+agg, join shapes, windows, sessionize, dedup, KNN.
 HEADLINE = (
@@ -261,6 +262,10 @@ TIMED_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4"))
 #: so does the compile surface — a 48-query _ALL warmed in over THREE
 #: passes (10.85 -> 7.50 -> 4.28 -> 4.38) — and only a leading MAXIMUM is
 #: attributable to warm-in; noise in later runs still trips the gate.
+#: Not all of that warm-in was C2: before the codegen cache was sized
+#: (see _timed_passes) every pass also recompiled its generated classes
+#: through Janino, about 3,900 per steady 141-query _ALL pass; now about
+#: 170, from the 25 queries whose generated code differs per run.
 JIT_DISCARD_RUNS = 1
 
 #: max allowed max/min ratio of the per-run headline totals before the
@@ -291,10 +296,10 @@ def _wait_for_idle(max_wait_s: float) -> float:
 
 def _timed_passes(
     spark, specs, sf_dir: str, names: tuple[str, ...]
-) -> tuple[list[dict[str, float]], list[float], list[float]]:
+) -> tuple[list[dict[str, float]], list[float], list[float], list[int]]:
     """Warm every table + two untimed primes over ``names``, then
     TIMED_RUNS timed passes. Returns (per-run per-query times, per-run
-    headline totals, per-run end loads).
+    headline totals, per-run end loads, per-run codegen compile counts).
 
     Warm-up is TWICE, not once: the HOF-heavy queries (q35's
     zip_with/aggregate dot products are CodegenFallback, i.e.
@@ -312,7 +317,15 @@ def _timed_passes(
     What noise cannot fake is AGREEMENT — an interfering process inflates
     some runs and not others, so the per-run headline totals diverge.
     The caller gates on that spread; the median absorbs a single
-    disturbed run either way."""
+    disturbed run either way.
+
+    Not all warm-in is C2: Janino compiles each generated class on its
+    first use in the session, and again after the class cache evicts it.
+    The cache (session.CODEGEN_CACHE_ENTRIES) must hold every class of a
+    pass; at Spark's default of 100 it held less than one HEADLINE pass
+    (~130), and every steady-state pass recompiled 119-123 classes. A
+    steady HEADLINE pass now compiles 0, and the per-run compile count in
+    the artifact shows if that stops holding."""
     head = tuple(n for n in HEADLINE if n in names)
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
@@ -322,22 +335,29 @@ def _timed_passes(
     runs: list[dict[str, float]] = []
     run_totals: list[float] = []
     run_loads: list[float] = []
+    run_compiles: list[int] = []
     for r in range(TIMED_RUNS):
         t_run: dict[str, float] = {}
-        for name in names:
-            fn = specs[name].fn
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            t_run[name] = round(time.perf_counter() - t0, 4)
-            if r == 0:
-                print(f"# {name}: {n} rows in {t_run[name]:.3f}s", file=sys.stderr)
+        with compiling(spark) as compiles:
+            for name in names:
+                fn = specs[name].fn
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                n = df.count()
+                t_run[name] = round(time.perf_counter() - t0, 4)
+                if r == 0:
+                    print(f"# {name}: {n} rows in {t_run[name]:.3f}s", file=sys.stderr)
         runs.append(t_run)
+        run_compiles.append(compiles["n"])
         total = round(sum(t_run[n] for n in head), 4)
         run_totals.append(total)
         run_loads.append(round(os.getloadavg()[0], 2))
-        print(f"# run {r + 1}/{TIMED_RUNS}: headline {total}s", file=sys.stderr)
-    return runs, run_totals, run_loads
+        print(
+            f"# run {r + 1}/{TIMED_RUNS}: headline {total}s, "
+            f"{compiles['n']} classes compiled",
+            file=sys.stderr,
+        )
+    return runs, run_totals, run_loads, run_compiles
 
 
 def _trim_runs(
@@ -415,7 +435,7 @@ def headline_cell() -> None:
         float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "300"))
     )
     spark = get_spark("bench_headline")
-    runs, run_totals, run_loads = _timed_passes(
+    runs, run_totals, run_loads, run_compiles = _timed_passes(
         spark, all_specs(), sf_dir, HEADLINE
     )
     print(
@@ -423,6 +443,7 @@ def headline_cell() -> None:
             {
                 "runs": runs,
                 "run_totals": run_totals,
+                "codegen_compiles_per_run": run_compiles,
                 "run_loads": run_loads,
                 "load_avg_start": round(load_at_start, 2),
             }
@@ -473,7 +494,9 @@ def main() -> None:
     spark = get_spark("bench")
     specs = all_specs()
     load_avg_start = load_at_start
-    runs, run_totals, run_loads = _timed_passes(spark, specs, sf_dir, _ALL)
+    runs, run_totals, run_loads, run_compiles = _timed_passes(
+        spark, specs, sf_dir, _ALL
+    )
 
     kept, kept_totals, untrimmed_median, outlier_discarded, spread = (
         _trim_runs(runs, run_totals)
@@ -502,6 +525,7 @@ def main() -> None:
             "value": round(sum(itimes.values()), 4),
             "queries": itimes,
             "run_totals": cell["run_totals"],
+            "codegen_compiles_per_run": cell["codegen_compiles_per_run"],
             "spread": round(ispread, 3),
             "load_avg_start": cell["load_avg_start"],
             "canonical": (
@@ -547,6 +571,7 @@ def main() -> None:
                 "load_avg_start": round(load_avg_start, 2),
                 "load_avg_end": round(os.getloadavg()[0], 2),
                 "run_headline_totals": run_totals,
+                "codegen_compiles_per_run": run_compiles,
                 "headline_untrimmed_median": round(untrimmed_median, 4),
                 "run_spread": round(spread, 3),
                 "load_avg_after_each_run": run_loads,

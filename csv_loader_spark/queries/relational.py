@@ -148,8 +148,10 @@ def q06_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q03_topn_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3-shaped 3-way join + agg + deterministic top-N.
 
-    Scale: customer (filtered on segment) is broadcast into orders; the
-    orders⋈lineitem join shuffles on orderkey (bucket both at cluster scale).
+    Scale: customer (filtered on segment) is broadcast into orders; at
+    cluster scale the orders⋈lineitem join shuffles on orderkey (bucket
+    both). At sf0.1 the executed plan broadcasts lineitem instead
+    (BroadcastHashJoin [o_orderkey], [l_orderkey], BuildRight).
     Ordering ties broken by o_orderkey so LIMIT is deterministic.
     """
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -224,8 +226,10 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q05_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5-shaped 6-way join; every dim side broadcast, one fact shuffle.
 
-    Scale: region/nation/supplier/customer are broadcast; the only shuffle is
-    orders⋈lineitem on orderkey.
+    Scale: region/nation/supplier/customer are broadcast; at cluster scale
+    the only shuffle is orders⋈lineitem on orderkey. At sf0.1 the executed
+    plan broadcasts lineitem too (BroadcastHashJoin [o_orderkey],
+    [l_orderkey], BuildRight), so no join shuffles.
     """
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load_table(spark, sf_dir, "nation")

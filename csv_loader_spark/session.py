@@ -52,6 +52,21 @@ def ensure_protobuf() -> bool:
         return False
 
 
+#: Capacity of Spark's generated-class cache (static conf
+#: ``spark.sql.codegen.cache.maxEntries``, default 100). The ten bench.py
+#: HEADLINE queries generate about 130 distinct classes, so at the default a
+#: round-robin pass evicts every class before its next use and recompiles
+#: 119-123 of them through Janino per pass; bench.py's 141-query ``_ALL``
+#: suite generates 2,813-2,823 classes in one session. 4096 is the next
+#: power of two above that, so a query run twice in one session compiles
+#: nothing the second time unless its generated code embeds values computed
+#: per run (25 of the 141 do: 166-171 compiles per repeated ``_ALL`` pass,
+#: against 3,934 at the default). Metaspace after ``_ALL`` passes at sf0.01
+#: is no higher at this cap than at the default (evicted classes stay
+#: loaded until their class loader is collected).
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def get_spark(
     app_name: str = "csv_loader_spark",
     master: str | None = None,
@@ -85,19 +100,20 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # Spark's stock 10 MB, set explicitly to pin it: an earlier 64 MB
-        # override let the sf0.1 lineitem FACT (10.3 MB) ride the broadcast
-        # path in q03/q05 — contrary to those queries' documented
-        # shuffle-on-orderkey scale shape, measurably slower locally
-        # (q05 0.66 s -> 0.59 s median once the fact shuffles), and
-        # divergent from the verification driver's session, which runs on
-        # the stock default. Dims broadcast explicitly via F.broadcast()
-        # hints, which ignore this threshold.
+        # Spark's stock 10 MB, set explicitly to pin it and to match the
+        # verification driver's session, which runs on the stock default.
+        # Dims broadcast explicitly via F.broadcast() hints, which ignore
+        # this threshold. The intended cluster shape of q03/q05 shuffles
+        # lineitem on orderkey, but at sf0.1 (verification and perfbench data
+        # alike) both executed plans broadcast the 600k-row lineitem:
+        # BroadcastHashJoin [o_orderkey], [l_orderkey], BuildRight.
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
-        # Scan-split granularity: the benchmark tables are single small
-        # parquet files, which at the 128 MB default become ONE input
-        # partition — a 1-task scan on a 32-core executor. 4 MB keeps local
-        # scans parallel. At cluster scale raise this back to 128-256 MB
+        # Scan-split granularity. Parquet splits only at row-group
+        # boundaries, so 4 MB parallelizes a scan only over files with many
+        # row groups. Every table of the local TPC-H-shaped testdata and of
+        # perfbench's output is one row group, so its scan is one task with
+        # data plus empty tasks (sf0.1 lineitem on local[4]: one of four).
+        # At cluster scale raise this back to 128-256 MB
         # (SPARK_GRAFT_MAX_PARTITION_BYTES) — 4 MB over 100 TB would mean
         # 25M tasks, pure scheduler overhead.
         .config(
@@ -105,6 +121,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
         )
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # catalog tables (bucketing demos/tests) land outside the repo
         .config(
             "spark.sql.warehouse.dir",
@@ -121,7 +138,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The verification driver hands us its own SparkSession; timestamp semantics
     must still be deterministic (UTC), and AQE should be on. Only runtime SQL
-    confs are touched here.
+    confs are touched here. The generated-class cache cap
+    (``spark.sql.codegen.cache.maxEntries``, see CODEGEN_CACHE_ENTRIES) is
+    a static conf that cannot be set on a running session, so a session
+    built elsewhere keeps Spark's default of 100 entries.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -17,6 +17,10 @@ Usage:
 Prints one line per query: `<calls> <build_seconds> <name>`, sorted by
 calls descending, plus a total. Only construction is measured — nothing
 is executed (no actions), so this is safe to run on any sf_dir.
+
+`compiling(spark)` is the execution-side counterpart: the number of
+classes Spark's codegen compiles inside a block, i.e. the
+generated classes that missed the session's class cache.
 """
 
 from __future__ import annotations
@@ -59,6 +63,23 @@ def counting():
     finally:
         for cls, orig in patched:
             cls.send_command = orig
+
+
+@contextlib.contextmanager
+def compiling(spark):
+    """Count the classes Spark's codegen compiles inside the block.
+
+    Yields a dict whose ``"n"`` is set on exit to the change in
+    ``CodegenMetrics.METRIC_COMPILATION_TIME``'s count: one Janino compile
+    per generated class not found in the cache. The metric is JVM-wide, so
+    compiles on behalf of other threads in the same JVM count too."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    delta = {"n": 0}
+    before = timer.getCount()
+    try:
+        yield delta
+    finally:
+        delta["n"] = timer.getCount() - before
 
 
 def main() -> int:
