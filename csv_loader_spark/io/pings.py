@@ -11,9 +11,13 @@ it with a copy of every parse expression. The chain is three SQL strings
 few py4j round trips instead of ~15 per composed Column call, and the
 timestamp parse makes one pattern attempt per valid row (the guards in
 functions/timestamps.py). Projection and filter still run in one
-whole-stage-codegen pass, and the scan parallelizes per file split (plain
-CSV splits; .gz/.zip stay single-task per file — same constraint as the
-reference, noted in SURVEY §7.4).
+whole-stage-codegen pass. The scan is one task per file: ``read_pings``
+reads with the default ``multiline=True`` (quoted fields may span lines),
+so a plain CSV does not split either (perfbench's
+``io.pings.input_partitions`` reads 1 for its 25k-row file);
+``read_pings_raw(..., multiline=False)`` is the switch that makes a plain
+CSV splittable. .gz/.zip stay single-task per file in any mode — same
+constraint as the reference, noted in SURVEY §7.4.
 
 Layout (CsvLoader.java:120-127): col0=time, col1=vehicle_id, col2=lat,
 col3=lon; records wider than 9 fields use col9=lat, col10=lon instead,

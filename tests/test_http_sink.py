@@ -14,8 +14,10 @@ from csv_loader_spark.sinks.http import post_bytes, post_partition, write_http
 class _Recorder(BaseHTTPRequestHandler):
     payloads: list[bytes] = []
     fail_next_with: list[int] = []  # status codes to return for coming requests
+    requests = 0
 
     def do_POST(self):  # noqa: N802
+        type(self).requests += 1
         body = self.rfile.read(int(self.headers["Content-Length"]))
         status = self.fail_next_with.pop(0) if self.fail_next_with else 200
         if status == 200:
@@ -31,6 +33,7 @@ class _Recorder(BaseHTTPRequestHandler):
 def http_server():
     _Recorder.payloads = []
     _Recorder.fail_next_with = []
+    _Recorder.requests = 0
     srv = HTTPServer(("127.0.0.1", 0), _Recorder)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -122,12 +125,9 @@ def _low64(id_str: str) -> int:
     return (int(id_str) + 2**63) % 2**64 - 2**63
 
 
-def test_write_http_posts_in_order_and_returns_distinct_counts(spark, http_server):
-    """One partition of 25,001 rows: three envelopes of 10,001 / 10,001 /
-    4,999 rows in input order, none posted twice, and the returned counts
-    equal distinct_vehicle_counts. Ids above 2^63 wrap onto other ids, so
-    n_vehicles != n_ids (CsvLoader.java:105-106,165)."""
-    url, rec = http_server
+def _one_partition_frame(spark):
+    """25,001 rows in one partition (three envelopes: 10,001 / 10,001 /
+    4,999 rows); ids above 2^63 wrap onto other ids."""
     rows = []
     for i in range(25_001):
         k = i % 997
@@ -137,6 +137,16 @@ def test_write_http_posts_in_order_and_returns_distinct_counts(spark, http_serve
         rows,
         "vehicle_id_str string, vehicle_id long, ts_millis long, lat double, lon double",
     ).coalesce(1)
+    return rows, df
+
+
+def test_write_http_posts_in_order_and_returns_distinct_counts(spark, http_server):
+    """One partition of 25,001 rows: three envelopes of 10,001 / 10,001 /
+    4,999 rows in input order, none posted twice, and the returned counts
+    equal distinct_vehicle_counts. Ids above 2^63 wrap onto other ids, so
+    n_vehicles != n_ids (CsvLoader.java:105-106,165)."""
+    url, rec = http_server
+    rows, df = _one_partition_frame(spark)
 
     counts = write_http(df, url, source_id=11, max_retries=2)
 
@@ -148,3 +158,22 @@ def test_write_http_posts_in_order_and_returns_distinct_counts(spark, http_serve
     assert got == [(vid, lat, lon, ts) for _, vid, ts, lat, lon in rows]
     assert counts.asDict() == distinct_vehicle_counts(df).collect()[0].asDict()
     assert counts["n_vehicles"] != counts["n_ids"]
+
+
+def test_write_http_drops_an_envelope_refused_with_500(spark, http_server):
+    """The reference's loss policy at the DataFrame level
+    (CsvLoader.java:217-224): an envelope answered with a non-2xx status is
+    not retried, the load goes on, and the returned counts still include
+    its rows, so the loss is silent to the caller."""
+    url, rec = http_server
+    rows, df = _one_partition_frame(spark)
+    rec.fail_next_with = [200, 500]
+
+    counts = write_http(df, url, source_id=11, max_retries=2)
+
+    assert counts.asDict() == distinct_vehicle_counts(df).collect()[0].asDict()
+    assert rec.requests == 3  # no retry of the refused envelope
+    envelopes = [decode_envelope(p) for p in rec.payloads]
+    assert [len(e.messages) for e in envelopes] == [10_001, 4_999]
+    got = [(vid, *locs[0]) for e in envelopes for vid, locs in e.messages]
+    assert got == [(vid, lat, lon, ts) for _, vid, ts, lat, lon in rows[:10_001] + rows[20_002:]]
