@@ -674,10 +674,6 @@ def q216_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVM_SPLIT = "2000-01-01"
 
-#: the merge-state columns of the priority view (q217 and its streaming
-#: twin, streaming/continuous_agg.start_priority_view, share these)
-IVM_STATE_COLS = ("n_orders", "sum_cents", "min_cents", "max_cents")
-
 
 def ivm_partial(o: DataFrame) -> DataFrame:
     """Mergeable partial states of the per-priority view over a slice of

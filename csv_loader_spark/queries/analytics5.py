@@ -261,10 +261,8 @@ def q230_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     At unbounded value domains, quantize v into fixed-width bins first;
     here n_chars is already small-domain.
 
-    The post-histogram algebra lives in :func:`ks_from_length_counts`
-    so the streaming twin (streaming/ks_drift.py) provably computes the
-    SAME statistic from its incrementally-maintained histogram store —
-    stream-final == batch is a theorem about one shared function."""
+    The post-histogram algebra lives in :func:`ks_from_length_counts`,
+    which takes the mergeable length histogram as its only input."""
     d = load_table(spark, sf_dir, "documents").select("source", "n_chars")
     counts = d.groupBy("source", F.col("n_chars").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -276,8 +274,7 @@ def ks_from_length_counts(counts: DataFrame) -> DataFrame:
     """(source, v, c) length-histogram → (source, n_docs, ks), the exact
     integer KS algebra of q230 (see its docstring). `counts` is the
     MERGEABLE sufficient statistic: histograms from disjoint row sets
-    merge by summing c per (source, v) — the property the streaming twin
-    relies on. Sizes and the total derive from the histogram itself
+    merge by summing c per (source, v). Sizes and the total derive from the histogram itself
     (na = Σ_v c, n = ΣΣ c), so callers need only the counts frame."""
     sources = counts.select("source").distinct()
     values = counts.select("v").distinct()

@@ -203,10 +203,9 @@ def q100_pack_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pack_fold(n_toks, cur=0, fill=0, started=False, capacity=_PACK_CAP):
-    """THE first-fit fold — one implementation, three surfaces: the batch
-    packer below, the recursive-CTE oracle (same recurrence in SQL), and
-    the streaming continuation (streaming/packing.py resumes it from
-    (cur, fill) state). A doc that would overflow the budget opens the
+    """THE first-fit fold — one implementation, two surfaces: the batch
+    packer below and the recursive-CTE oracle (same recurrence in SQL);
+    ``cur``/``fill`` let a caller resume it from a carried state. A doc that would overflow the budget opens the
     next pack; an oversize doc gets a pack of its own; the very first doc
     never opens a new pack (``started``)."""
     packs = []

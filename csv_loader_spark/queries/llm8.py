@@ -1,7 +1,7 @@
-"""Round-9 operators: closing the ingest loop on NEAR-duplicates.
+"""Round-9 operators: ingest-time dedup on NEAR-duplicates.
 
-- q131: INGEST-TIME NEAR-DUP VERDICTS — the batch twin of the closed
-  incremental-ingest loop's r9 extension (streaming/ingest_dedup.py):
+- q131: INGEST-TIME NEAR-DUP VERDICTS — the batch run of the ingest-time
+  verdict functions (streaming/ingest_dedup.py):
   even doc_ids play the accepted corpus, reduced to its TWO indexes
   (exact content fingerprints + MinHash LSH band signatures, q34's
   sketch); odd doc_ids play the arriving batch. Every arrival gets an
@@ -11,11 +11,7 @@
   deduplicate-against-snapshot rule: rejection on LSH bucket
   membership), near dup of an earlier surviving arrival (keep the
   bucket-minimum doc_id — a WINDOW MIN per band bucket, linear, no
-  candidate self-join), or accepted. The streaming path runs the SAME
-  ``ingest_verdicts`` inside foreachBatch and appends the accepted docs'
-  band keys back to the index store, so batch N+1 rejects near-dups of
-  batch N's admissions (tests/test_stream_static_dedup.py asserts
-  stream == this batch answer and replay idempotence).
+  candidate self-join), or accepted.
 
 Scale notes ride each docstring; the common shape: every probe is a
 semi/anti equi-join on a derived key (fp, (band, bkey), doc_id) — the
@@ -350,11 +346,7 @@ def _dhash_band_exprs() -> list[str]:
 def dhash_sigs(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, v0..v3): q133's engine-side dHash band
     signatures — 72 codepoints sampled at fixed fractional positions, the
-    8x8 difference bits packed into 4 x 16-bit bands. For ASCII text this
-    is bit-identical to ops/multimodal.py media_dhash's pseudo-decode tier
-    over the UTF-8 payload bytes (same sample positions, byte == codepoint)
-    — asserted by tests/test_multimodal.py, so engine-side and
-    decoder-side signatures can be mixed in one index."""
+    8x8 difference bits packed into 4 x 16-bit bands."""
     ncell = _GRID_ROWS * _GRID_COLS
     cells = docs.select(
         "doc_id",
@@ -437,9 +429,9 @@ def q133_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pseudo-decode — 72 characters sampled at fixed fractional positions,
     their codepoints standing in for gray levels. Pure integer
     arithmetic, identical in Spark (ascii/element_at) and DuckDB
-    (unicode/list index). With a real codec the grid comes from a
-    mapInPandas batch decode (multimodal.py's tiered PIL path) and
-    everything from the band signatures down is unchanged.
+    (unicode/list index). With a real codec the grid would come from a
+    mapInPandas batch decode and everything from the band signatures
+    down would be unchanged.
 
     The natural corpus has no re-encoded assets (minimum pairwise dHash
     distance 13 at sf0.01), so the query injects deterministic twins —
@@ -975,7 +967,7 @@ def q137_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q138: ingest-time PASSAGE-granularity dedup verdicts (q115 in the loop)
+# q138: ingest-time PASSAGE-granularity dedup verdicts (q115 as a probe)
 # ---------------------------------------------------------------------------
 
 # Injection scaffolding: the natural corpus has few cross-parity passage
@@ -1093,10 +1085,8 @@ def q138_ingest_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     passages already in the corpus ('passage_corpus': recycled content
     under a fresh fingerprint, the case the exact probe cannot see), or
     majority lost to an earlier surviving arrival ('passage_batch').
-    This is the sub-document sibling of q131's band probe, and the batch
-    twin of ``start_ingest_pipeline(..., passage_index_path=...)``
-    (streaming/ingest_dedup.py ingest_verdicts_passage — same function,
-    same rules, stream==batch tested).
+    This is the sub-document sibling of q131's band probe
+    (streaming/ingest_dedup.py ingest_verdicts_passage).
 
     Scale: the index is one hashed column (distinct passage md5s, whose
     count FALLS with duplication); probes are semi/anti equi-joins; the
@@ -2116,7 +2106,7 @@ def q146_verified_probe_precision(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# q147: the release changelog as an INCREMENTAL operator (q135 in the loop)
+# q147: the release changelog as an INCREMENTAL operator (q135 as a fold)
 # ---------------------------------------------------------------------------
 
 
@@ -2175,11 +2165,8 @@ def q147_version_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     + deletes — q135's edit/removal/addition injections re-expressed as
     the event stream a crawler or CDC feed actually delivers) over the
     standing corpus state and report the per-(source, verdict) roll-up.
-    The streaming loop (start_changelog_pipeline) runs this exact
-    function per micro-batch against a state-snapshot chain;
-    tests/test_changelog.py asserts the two-batch streaming fold lands
-    this one-batch answer (commutes with batching) and replays
-    idempotently.
+    tests/test_changelog.py asserts that folding the events in two
+    batches lands this one-batch answer (commutes with batching).
 
     Scale: one last-event-wins window over the batch (batch-sized), one
     LEFT equi-join of the batch's events against the (doc_id, fp, n_tok)

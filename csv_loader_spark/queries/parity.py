@@ -35,7 +35,7 @@ def _stage_stream_dir(sf_dir: str) -> str:
     """Spark's file stream source requires a DIRECTORY; stage the single
     events.parquet into a temp dir once per sf_dir (testdata is read-only)."""
     if sf_dir not in _STREAM_STAGE:
-        d = tempfile.mkdtemp(prefix="stream_events_")
+        d = tempfile.mkdtemp(prefix="q57_stream_")
         shutil.copy(os.path.join(sf_dir, "events.parquet"), d)
         _STREAM_STAGE[sf_dir] = d
     return _STREAM_STAGE[sf_dir]
@@ -215,9 +215,7 @@ def q58_ping_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q84_trip_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trip segmentation (30-min gap, |Δvalue| travel accumulated in exact
-    integer cents) — the batch twin of the transformWithStateInPandas
-    streaming operator (streaming/trips.py); streaming-equals-batch is
-    asserted by tests/test_transform_with_state.py."""
+    integer cents), via streaming/trips.segment_trips."""
     trips = segment_trips(load_table(spark, sf_dir, "events"), gap_minutes=30)
     return trips.select(
         "user_id",

@@ -818,8 +818,8 @@ def q20_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window_time", "agg"),
 )
 def q22_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling event-time window (batch equivalent of the streaming
-    windowed agg in streaming/events_stream.py — same F.window primitive)."""
+    """1-hour tumbling event-time window (batch; q57_stream_tumbling runs
+    the same F.window primitive as a stream)."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

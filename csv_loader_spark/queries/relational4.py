@@ -147,8 +147,7 @@ def q106_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def scd2_intervals(events: DataFrame) -> DataFrame:
     """q106's pipeline over an arbitrary (user_id, event_id, ts, attr)
-    frame — DataFrame-in form so the streaming twin's equivalence test
-    (tests/test_streaming_scd2.py) runs the identical batch builder."""
+    frame."""
     order = [F.col("ts"), F.col("event_id")]
     w = W.partitionBy("user_id").orderBy(*order)
     ordered = events.select(

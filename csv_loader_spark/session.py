@@ -9,52 +9,13 @@ to UTC, see SURVEY.md §7.4), Arrow enabled for the pandas-UDF slow path.
 
 from __future__ import annotations
 
-import importlib.util
 import os
-import sys
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from csv_loader_spark import cds
-
-# A modern protobuf runtime (6.x) ships vendored inside a google-cloud-sdk
-# install; where one is present, discovering it unblocks the
-# transformWithStateInPandas live path (streaming/trips.py) without any pip
-# install. PYTHONPATH is prepended so the JVM-launched Python workers
-# inherit it too (effective when set before the SparkSession starts —
-# get_spark calls ensure_protobuf() for exactly that reason). It lives here
-# so session setup imports neither pandas nor the stateful-streaming API.
-_VENDORED_PROTOBUF = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-
-
-def ensure_protobuf() -> bool:
-    """Make google.protobuf importable (installed or vendored); True if so."""
-    try:
-        if importlib.util.find_spec("google.protobuf") is not None:
-            return True
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        pass
-    if not os.path.isdir(os.path.join(_VENDORED_PROTOBUF, "google", "protobuf")):
-        return False
-    if _VENDORED_PROTOBUF not in sys.path:
-        sys.path.insert(0, _VENDORED_PROTOBUF)
-        importlib.invalidate_caches()
-    pp = os.environ.get("PYTHONPATH", "")
-    if _VENDORED_PROTOBUF not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _VENDORED_PROTOBUF + (os.pathsep + pp if pp else "")
-        )
-    # The vendored runtime (6.32) is one minor behind pyspark's TWS gencode
-    # (6.33); the gencode's builder API is unchanged between them, and
-    # protobuf's own sanctioned escape hatch exists for exactly this:
-    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
 
 #: Capacity of Spark's generated-class cache (static conf
 #: ``spark.sql.codegen.cache.maxEntries``, default 100). The ten bench.py
@@ -76,7 +37,14 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults.
+    """Build a SparkSession with engine defaults, or return this process's
+    active session unchanged.
+
+    The arguments and engine defaults apply only to a session this call
+    creates. When a session is already active (``getActiveSession``), it
+    is returned as it stands: no conf is re-applied, so a runtime conf set
+    on it survives, and a caller that runs once per pass (the CLI's
+    ``main``) pays no py4j round trips for it.
 
     ``shuffle_partitions`` defaults to the local core count — at cluster scale
     AQE coalesces post-shuffle partitions anyway, so the static number only
@@ -93,16 +61,14 @@ def get_spark(
     used — a non-local master, a conf directory with real files, an
     unwritable cache, a JVM already running — the launch is unchanged.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-
-    # Discover the vendored protobuf runtime BEFORE the JVM starts so the
-    # Python workers inherit it via PYTHONPATH — unblocks the
-    # transformWithStateInPandas protocol (see streaming/trips.py).
-    ensure_protobuf()
 
     driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     launch = None
@@ -142,7 +108,7 @@ def get_spark(
         )
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        # catalog tables (bucketing demos/tests) land outside the repo
+        # catalog tables land outside the checkout
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),

@@ -1,186 +1,25 @@
-"""Incremental release changelog: q135's snapshot diff as a CLOSED-LOOP
-streaming operator (r10; r11 made the state store INCREMENTAL).
+"""Incremental release changelog: q135's snapshot diff as a fold of
+document-version events over the standing corpus state.
 
 q135 diffs two complete corpus snapshots with one full-outer fingerprint
 join. A release pipeline rarely has two complete snapshots side by side —
 it has a STREAM of document-version events (upserts and deletes from a
-crawler or an upstream CDC feed) and wants, per micro-batch, the
+crawler or an upstream CDC feed) and wants, per batch, the
 added/changed/removed/unchanged roll-up against the corpus's standing
 state, plus that state kept current for the next batch.
 
-Store layout (default, ``state_mode="bucketed"`` — r11):
-
-    store/state/bucket=NN/batch=<id>   the post-batch content of ONE
-                                       hash bucket of the standing state
-                                       (doc_id, source, fp, n_tok);
-                                       bucket = pmod(xxhash64(doc_id), B)
-    store/changelog/batch=<id>         the batch's (source, verdict,
-                                       n_docs, tok_delta) roll-up
-    store/state_snapshots/batch=<id>   optional full-state snapshots on a
-                                       ``snapshot_every=K`` cadence
-                                       (time travel / external readers)
-
-The r10 store wrote the FULL corpus-sized state once per micro-batch (the
-quota-snapshot chain pattern) — honest but O(corpus) of write per batch,
-the repo's one remaining weak-at-100-TB shape. The bucketed store applies
-continuous_agg.py's dynamic-partition-overwrite idea to keyed state: a
-batch reads and rewrites ONLY the hash buckets its doc_ids land in, so
-per-batch I/O is O(batch/B × corpus) ≈ O(touched buckets), not O(corpus).
-At 10^10 docs and B=4096, a 10k-doc batch touches ≤ 10k buckets' worth of
-narrow 4-column rows — each bucket 1/4096th of the state — instead of
-rewriting the whole index. Each touched bucket gets a NEW ``batch=<id>``
-leaf (a per-bucket snapshot chain, newest-committed-wins), which keeps
-the crash-window discipline intact: a redelivered batch re-reads each
-touched bucket's true predecessor (``exclude_batch``) and rewrites
-identical files. A bucket whose post-batch content is empty still writes
-its leaf via a null-doc_id marker row (dynamic partition overwrite emits
-nothing for empty partitions; readers filter the marker), so deletes
-cannot resurrect. Superseded per-bucket leaves are pruned on the
-``compact_every`` cadence, same janitor story as the band/fp index
-stores.
-
-``state_mode="snapshot"`` keeps the r10 full-snapshot chain (each
-``state/batch=<id>`` is the complete state) for consumers that want
-every historical version addressable; in bucketed mode the same need is
-served by ``snapshot_every=K``.
-
-The TRANSFORMATION (``apply_version_events``) is mode-agnostic, so the
-exact same function serves the oracle-gated batch twin (q147,
-queries/llm8.py) and the foreachBatch loop — tests/test_changelog.py
-asserts the streaming fold lands exactly the batch answer, replays
-idempotently, and (r11) that a 1-doc batch rewrites only its own bucket.
+``apply_version_events`` is that fold. It is mode-agnostic (plain
+DataFrame ops); the oracle-gated q147 (queries/llm8.py) runs it as one
+batch, and tests/test_changelog.py asserts that folding the same events
+in two batches lands the one-batch answer (commutes with batching).
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from csv_loader_spark.functions import text as TXT
-from csv_loader_spark.streaming.continuous_agg import (
-    _already_applied,
-    _record_applied,
-)
-from csv_loader_spark.streaming.ingest_dedup import (
-    list_batch_partitions,
-    prune_snapshot_chain,
-    read_newest_snapshot,
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("fp", T.StringType(), True),
-        T.StructField("n_tok", T.IntegerType(), True),
-    ]
-)
-_STATE_COLS = ["doc_id", "source", "fp", "n_tok"]
-
-#: default bucket count for the incremental state store. Tests use small
-#: values; a 10^10-doc corpus would size this so one bucket's rows fit an
-#: executor comfortably (e.g. 4096).
-DEFAULT_BUCKETS = 64
-
-#: store metadata file, written at seed/first-write time. ``state_mode``
-#: and ``n_buckets`` are DURABLE layout properties of a store, not
-#: per-call knobs: resuming a snapshot-layout store with
-#: ``state_mode="bucketed"`` would read empty bucket state (every upsert
-#: misclassified 'added', deletes dropped), and re-running a bucketed
-#: store with a different ``n_buckets`` hashes doc_ids to different
-#: buckets, so prior versions are never found nor superseded (r11 advice,
-#: both mediums). The leading underscore makes parquet readers of the
-#: state directory skip the file (Hadoop hidden-file convention).
-_META_FILE = "_store_meta.json"
-
-
-def _meta_path(state_path: str) -> str:
-    return os.path.join(state_path, _META_FILE)
-
-
-def read_store_meta(state_path: str) -> dict | None:
-    """The store's persisted layout metadata, or None for a store created
-    before r12 (layout is then detected from the directory shape)."""
-    p = _meta_path(state_path)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_store_meta(state_path: str, state_mode: str, n_buckets: int) -> None:
-    os.makedirs(state_path, exist_ok=True)
-    meta = {"state_mode": state_mode}
-    if state_mode == "bucketed":
-        meta["n_buckets"] = n_buckets
-    with open(_meta_path(state_path), "w") as f:
-        json.dump(meta, f)
-
-
-def _detect_layout(spark: SparkSession, state_path: str) -> str | None:
-    """The layout actually on disk: 'bucketed' (bucket=NN children),
-    'snapshot' (batch=<id> children directly under state/), or None for
-    a store with no state written yet."""
-    if _is_bucketed(spark, state_path):
-        return "bucketed"
-    if list_batch_partitions(spark, state_path):
-        return "snapshot"
-    return None
-
-
-def resolve_store_config(
-    spark: SparkSession, state_path: str, state_mode: str, n_buckets: int
-) -> None:
-    """Fail fast when the caller's (state_mode, n_buckets) disagree with
-    the store's durable layout. Precedence: the metadata file if present;
-    else the on-disk directory shape (legacy pre-r12 stores); a fresh
-    store adopts the caller's parameters and persists them. Called from
-    seed_state and from every _fold (one tiny local file read)."""
-    meta = read_store_meta(state_path)
-    if meta is None:
-        layout = _detect_layout(spark, state_path)
-        if layout is not None and layout != state_mode:
-            raise ValueError(
-                f"changelog store at {state_path} has on-disk layout "
-                f"'{layout}' but was opened with state_mode='{state_mode}'; "
-                "resuming with the wrong mode would silently read empty "
-                "state (pass the mode the store was created with)"
-            )
-        # adopt: fresh store, or legacy store whose layout matches.
-        # A legacy bucketed store's n_buckets cannot be recovered from
-        # the directory shape alone (buckets may be sparsely touched),
-        # so the caller's value is trusted ONCE here and pinned.
-        _write_store_meta(state_path, state_mode, n_buckets)
-        return
-    if meta.get("state_mode") != state_mode:
-        raise ValueError(
-            f"changelog store at {state_path} was created with "
-            f"state_mode='{meta.get('state_mode')}' but opened with "
-            f"state_mode='{state_mode}'"
-        )
-    if state_mode == "bucketed" and meta.get("n_buckets") != n_buckets:
-        raise ValueError(
-            f"changelog store at {state_path} was created with "
-            f"n_buckets={meta.get('n_buckets')} but opened with "
-            f"n_buckets={n_buckets}; doc_ids would hash to different "
-            "buckets and prior versions would never be found or superseded"
-        )
-
-
-def _bucket_expr(n_buckets: int):
-    """Stable doc_id → bucket assignment. xxhash64 is seed-stable across
-    Spark versions/sessions (unlike Python hash), so a doc always lands
-    in the same bucket for the life of the store; the cast pins the hash
-    input type (xxhash64 of int 4 != xxhash64 of long 4), so an
-    int-typed corpus seed and long-typed events still agree."""
-    return F.pmod(
-        F.xxhash64(F.col("doc_id").cast("long")), F.lit(n_buckets)
-    ).cast("int")
 
 
 def snapshot_state(docs: DataFrame) -> DataFrame:
@@ -206,7 +45,7 @@ def apply_version_events(
     wins — the NET effect is what the changelog reports, so an add
     followed by an in-batch delete is a no-op, exactly as if the batch
     boundary had fallen differently (the commutes-with-batching property
-    the stream==batch test asserts).
+    tests/test_changelog.py asserts).
 
     Returns ``(changelog, new_state)``:
 
@@ -294,307 +133,3 @@ def apply_version_events(
         latest.select("doc_id"), "doc_id", "left_anti"
     ).unionByName(upserts)
     return changelog, new_state
-
-
-# --------------------------------------------------------------------------
-# Bucketed state store (default): per-bucket snapshot chains, dynamic
-# partition overwrite of ONLY the buckets a batch touches.
-# --------------------------------------------------------------------------
-
-
-def _list_buckets(spark: SparkSession, state_path: str) -> list[int]:
-    """``bucket=NN`` children of the state root, via the Hadoop FS API
-    (scheme-aware like list_batch_partitions)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return []
-    out: list[int] = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("bucket="):
-            try:
-                out.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return out
-
-
-def _is_bucketed(spark: SparkSession, state_path: str) -> bool:
-    return bool(_list_buckets(spark, state_path))
-
-
-def _list_bucket_leaves(
-    spark: SparkSession, state_path: str
-) -> dict[int, list[int]]:
-    """Every bucket's batch ids in ONE ``globStatus(bucket=*/batch=*)``
-    round trip — the all-buckets read path (snapshot_every full-state
-    copies, read_state_snapshot) must not pay one LIST per bucket: at
-    the documented B=4096 on an object store that is 4096 serial RPCs
-    per snapshot (r11 advice). Touched-bucket reads keep the per-bucket
-    listing (a handful of buckets, and globStatus over the whole store
-    would be the slower call there)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return {}
-    out: dict[int, list[int]] = {}
-    pattern = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(state_path, "bucket=*", "batch=*")
-    )
-    for st in fs.globStatus(pattern) or []:
-        leaf = st.getPath()
-        bname, lname = leaf.getParent().getName(), leaf.getName()
-        try:
-            b = int(bname.split("=", 1)[1])
-            i = int(lname.split("=", 1)[1])
-        except ValueError:
-            continue
-        out.setdefault(b, []).append(i)
-    return out
-
-
-def read_bucketed_state(
-    spark: SparkSession,
-    state_path: str,
-    *,
-    buckets: list[int] | None = None,
-    exclude_batch: int | None = None,
-) -> DataFrame:
-    """The standing state of the given buckets (all buckets when None):
-    per bucket, the newest committed ``batch=<id>`` leaf wins — the
-    full-snapshot chain rule applied per bucket. One LIST per requested
-    bucket, then ONE parquet read over the selected leaf directories;
-    marker rows (null doc_id, written so empty buckets still supersede
-    their predecessors) are filtered here. The all-buckets path resolves
-    every chain from ONE recursive globStatus listing instead of one
-    LIST per bucket (r11 advice: B=4096 serial round trips per
-    full-state read on an object store)."""
-    if buckets is None:
-        leaves = _list_bucket_leaves(spark, state_path)
-    else:
-        leaves = {
-            b: list_batch_partitions(
-                spark, os.path.join(state_path, f"bucket={b}")
-            )
-            for b in buckets
-        }
-    dirs: list[str] = []
-    for b, all_ids in leaves.items():
-        ids = [i for i in all_ids if exclude_batch is None or i != exclude_batch]
-        if ids:
-            dirs.append(
-                os.path.join(state_path, f"bucket={b}", f"batch={max(ids)}")
-            )
-    if not dirs:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return (
-        spark.read.option("basePath", state_path)
-        .parquet(*dirs)
-        .filter(F.col("doc_id").isNotNull())
-        .select(*_STATE_COLS)
-    )
-
-
-def _write_bucketed_state(
-    new_state: DataFrame,
-    state_path: str,
-    batch_id: int,
-    touched: list[int],
-    n_buckets: int,
-) -> None:
-    """Land the post-batch content of the touched buckets as
-    ``bucket=NN/batch=<id>`` leaves in ONE dynamic-partition-overwrite
-    write. ``new_state`` must already be restricted to the touched
-    buckets (it is: the fold's state input was). A marker row per
-    touched bucket guarantees every touched bucket writes its leaf even
-    when its post-batch content is empty (all docs deleted) — without
-    it the bucket's previous snapshot would stay newest and resurrect
-    the deleted docs."""
-    spark = new_state.sparkSession
-    markers = spark.createDataFrame(
-        [(None, None, None, None, b) for b in touched],
-        T.StructType(
-            _STATE_SCHEMA.fields + [T.StructField("bucket", T.IntegerType(), True)]
-        ),
-    )
-    out = (
-        new_state.withColumn("bucket", _bucket_expr(n_buckets))
-        .unionByName(markers)
-        .withColumn("batch", F.lit(batch_id))
-    )
-    # caller contract: new_state is already materialized (localCheckpoint)
-    # so this plan does NOT read the state_path leaves it is about to
-    # overwrite (continuous_agg.py's race note). Overwrite mode is scoped
-    # to THIS write via the writer option — a session-conf set would
-    # silently make every later partitioned overwrite in the session
-    # dynamic (r11 advice)
-    out.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket", "batch").parquet(state_path)
-
-
-def _prune_bucketed_state(spark: SparkSession, state_path: str) -> int:
-    """Per-bucket chain prune: keep each bucket's newest leaf only."""
-    return sum(
-        prune_snapshot_chain(spark, os.path.join(state_path, f"bucket={b}"))
-        for b in _list_buckets(spark, state_path)
-    )
-
-
-# --------------------------------------------------------------------------
-# Mode-dispatching store API.
-# --------------------------------------------------------------------------
-
-
-def read_state_snapshot(
-    spark: SparkSession, store: str, *, exclude_batch: int | None = None
-) -> DataFrame:
-    """The standing state, whichever layout the store uses: per-bucket
-    newest-committed leaves (bucketed, default) or the newest full
-    snapshot (legacy chain). The metadata file is the layout authority
-    when present; directory-shape detection covers pre-r12 stores."""
-    state_path = os.path.join(store, "state")
-    meta = read_store_meta(state_path)
-    mode = meta["state_mode"] if meta else None
-    if mode == "bucketed" or (mode is None and _is_bucketed(spark, state_path)):
-        return read_bucketed_state(spark, state_path, exclude_batch=exclude_batch)
-    return read_newest_snapshot(
-        spark, state_path, _STATE_COLS, _STATE_SCHEMA, exclude_batch=exclude_batch
-    )
-
-
-def seed_state(
-    docs: DataFrame,
-    store: str,
-    *,
-    state_mode: str = "bucketed",
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
-    """Bootstrap the state store from an existing corpus snapshot
-    (``batch=-1``, the seed convention — per bucket in bucketed mode).
-    Persists (state_mode, n_buckets) in the store's metadata file; they
-    are durable layout properties, validated on every later open."""
-    state_path = os.path.join(store, "state")
-    resolve_store_config(docs.sparkSession, state_path, state_mode, n_buckets)
-    snap = snapshot_state(docs)
-    if state_mode == "snapshot":
-        snap.write.mode("overwrite").parquet(os.path.join(state_path, "batch=-1"))
-        return
-    out = snap.withColumn("bucket", _bucket_expr(n_buckets)).withColumn(
-        "batch", F.lit(-1)
-    )
-    out.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket", "batch").parquet(state_path)
-
-
-def _prune_state_snapshots(spark: SparkSession, store: str) -> int:
-    """Chain janitor, both layouts: superseded full snapshots (legacy) or
-    superseded per-bucket leaves (bucketed). Corpus-sized (legacy) or
-    bucket-sized (bucketed) garbage otherwise accumulates per batch."""
-    state_path = os.path.join(store, "state")
-    if _is_bucketed(spark, state_path):
-        return _prune_bucketed_state(spark, state_path)
-    return prune_snapshot_chain(spark, state_path)
-
-
-def start_changelog_pipeline(
-    events: DataFrame,
-    store: str,
-    checkpoint_dir: str,
-    *,
-    state_mode: str = "bucketed",
-    n_buckets: int = DEFAULT_BUCKETS,
-    snapshot_every: int | None = None,
-    compact_every: int | None = None,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Per micro-batch: fold the batch's version events over the standing
-    state, land the batch changelog under ``changelog/batch=<id>`` and
-    the state update, ledger last — the ingest_dedup crash discipline: a
-    crash between the writes and the ledger record redelivers the batch,
-    which re-reads its true predecessor (``exclude_batch``) and rewrites
-    identical files.
-
-    ``state_mode="bucketed"`` (default): the batch reads ONLY the hash
-    buckets its doc_ids touch and overwrites only those buckets'
-    ``batch=<id>`` leaves (dynamic partition overwrite) — per-batch
-    state I/O is O(touched buckets), not O(corpus). The touched-bucket
-    list is one tiny distinct over the batch's ids (≤ ``n_buckets``
-    values, collected driver-side like continuous_agg's day list).
-    ``snapshot_every=K`` additionally lands a complete state copy under
-    ``state_snapshots/batch=<id>`` every K-th committed batch (time
-    travel / external full-scan readers).
-
-    ``state_mode="snapshot"`` keeps the r10 full-snapshot chain: every
-    batch writes the complete state to ``state/batch=<id>``.
-
-    ``compact_every=K`` prunes superseded state (full snapshots or
-    per-bucket leaves) after every K-th committed batch; changelog
-    partitions are the pipeline's OUTPUT history and are never pruned.
-    Pruning runs after the ledger record, so the newest committed
-    snapshot — the one a redelivery would need — always survives."""
-    state_path = os.path.join(store, "state")
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # layout guard BEFORE the fast-skip: a mode/bucket-count mismatch
-        # must fail loudly even on a replayed batch, never silently fold
-        # over empty or re-hashed state (r11 advice, both mediums)
-        resolve_store_config(spark, state_path, state_mode, n_buckets)
-        if _already_applied(state_path, batch_id):
-            return
-        if state_mode == "bucketed":
-            touched = sorted(
-                r[0]
-                for r in batch_df.select(
-                    _bucket_expr(n_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            if not touched:
-                _record_applied(state_path, batch_id)
-                return
-            prev = read_bucketed_state(
-                spark, state_path, buckets=touched, exclude_batch=batch_id
-            )
-            changelog, new_state = apply_version_events(prev, batch_df)
-            new_state = new_state.localCheckpoint(eager=True)
-            changelog.write.mode("overwrite").parquet(
-                os.path.join(store, "changelog", f"batch={batch_id}")
-            )
-            _write_bucketed_state(
-                new_state, state_path, batch_id, touched, n_buckets
-            )
-            if snapshot_every is not None and (batch_id + 1) % snapshot_every == 0:
-                read_bucketed_state(spark, state_path).write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(store, "state_snapshots", f"batch={batch_id}")
-                )
-        else:
-            prev = read_state_snapshot(spark, store, exclude_batch=batch_id)
-            changelog, new_state = apply_version_events(prev, batch_df)
-            new_state = new_state.localCheckpoint(eager=True)
-            changelog.write.mode("overwrite").parquet(
-                os.path.join(store, "changelog", f"batch={batch_id}")
-            )
-            new_state.write.mode("overwrite").parquet(
-                os.path.join(state_path, f"batch={batch_id}")
-            )
-        _record_applied(state_path, batch_id)
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
-            _prune_state_snapshots(spark, store)
-
-    writer = (
-        events.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

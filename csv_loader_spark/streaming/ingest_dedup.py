@@ -1,56 +1,33 @@
-"""Incremental corpus ingestion with dedup against the existing corpus.
+"""Ingest-time dedup against an existing corpus: the verdicts an
+arriving batch of documents gets from the fingerprint, band and passage
+indexes of the accepted corpus.
 
 A 100 TB pipeline never re-runs global dedup when new documents arrive; it
 maintains a fingerprint INDEX of the accepted corpus and checks each
-arriving micro-batch against it:
+arriving batch against it:
 
-    new docs ->(fingerprint)-> anti-join vs static index -> in-stream dedup
+    new docs ->(fingerprint)-> anti-join vs static index -> in-batch dedup
 
-- The index probe is a STREAM-STATIC left-anti join: stateless on the
-  streaming side (Spark re-plans the static side per micro-batch, so a
-  refreshed index parquet is picked up between batches), and the index
-  frame carries only the fingerprint column — at 10^10 docs that is a
-  hash-partitioned id table, not the corpus.
-- Within-stream duplicates (the same novel doc arriving twice before the
-  index is refreshed) are dropped by fingerprint with
-  dropDuplicatesWithinWatermark when an event-time column is available —
-  bounded state, the same trade as streaming/pings.py's metrics — or
-  exact dropDuplicates as the documented unbounded opt-in for ts-less
-  streams.
+- The index probe is a left-anti join on one narrow fingerprint column —
+  at 10^10 docs a hash-partitioned id table, not the corpus.
+- Duplicates within the arrivals are dropped by fingerprint:
+  deterministically (min doc_id) in batch; in a stream, with
+  dropDuplicatesWithinWatermark when an event-time column is available
+  (bounded state) or exact dropDuplicates as the unbounded opt-in.
 
-The transformation is mode-agnostic (plain DataFrame ops), so the SAME
-function serves the oracle-gated batch twin (q104, queries/llm5.py) and
-the streaming path; tests/test_stream_static_dedup.py asserts the
-streaming run lands exactly the batch answer.
-
-The APPEND side of the loop (``start_ingest_pipeline`` below) closes the
-cycle: each micro-batch's accepted fingerprints are written BACK to the
-index store, so batch N+1's anti-join probes an index that already
-contains batch N's admissions — cross-batch dedup comes from the growing
-index itself, with no unbounded stream state. Idempotency: every batch
-writes into its own ``batch=<id>`` partition with mode=overwrite, so a
-foreachBatch re-delivery rewrites the same files instead of duplicating
-them — the batch-id ledger (continuous_agg's pattern) is a fast-skip, not
-the correctness mechanism, which closes even the crash-between-write-and-
-ledger window that continuous_agg documents. Limitation (same as every
-batch-id scheme): ids restart at 0 if the CHECKPOINT is deleted — the
-ledger is scoped to one checkpoint lineage.
+The transformations are mode-agnostic (plain DataFrame ops). The
+oracle-gated queries run them in batch (q104 in queries/llm5.py; q131 and
+its verify/passage tiers in queries/llm8.py), as does the ``curate``
+subcommand (ops/curate.py); tests/test_stream_static_dedup.py asserts
+that a streaming run of ``novel_documents`` lands the batch answer.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from csv_loader_spark.functions import text as TXT
-from csv_loader_spark.streaming.continuous_agg import (
-    _already_applied,
-    _record_applied,
-)
 
 
 def fingerprint_index(corpus: DataFrame, text_col: str = "text") -> DataFrame:
@@ -222,10 +199,8 @@ def ingest_verdicts(
     5. ``accepted`` otherwise. Docs with < 3 tokens have no bands and
        skip the near checks (exact checks still apply).
 
-    Batch-mode only (the closed loop runs it inside foreachBatch): the
-    within-batch window rules need the whole micro-batch, which
-    foreachBatch provides; a pure stream-stream self-join shape is not
-    needed. Scale: every join is a semi/anti equi-join on fp, doc_id or
+    Batch-mode only: the within-batch window rules need the whole
+    batch. Scale: every join is a semi/anti equi-join on fp, doc_id or
     (band, bkey) — id-table probes, never a corpus rescan."""
 
     def _membership(tagged: DataFrame, arr_bands: DataFrame, rest2: DataFrame):
@@ -321,276 +296,9 @@ def ingest_verdicts_verified(
 
 
 # --------------------------------------------------------------------------
-# The index append loop: accepted fingerprints flow BACK to the index store.
+# Passage-granularity NEAR-dup at ingest (r9): the q115 index as a probe.
 # --------------------------------------------------------------------------
 
-_FP_SCHEMA = T.StructType([T.StructField("fp", T.StringType(), True)])
-_BAND_SCHEMA = T.StructType(
-    [
-        T.StructField("band", T.IntegerType(), True),
-        T.StructField("bkey", T.StringType(), True),
-    ]
-)
-
-
-# --- store layout metadata (r13) ------------------------------------------
-# The changelog store's `_store_meta.json` hardening (changelog.py) ported
-# to the four ingest-dedup index stores: the fingerprint/band/member/passage
-# tiers write INCOMPATIBLE index layouts (and the band tiers additionally
-# bake in the MinHash geometry + shingle rules), so a caller flipping
-# `verify_members` or probing a store built under different band parameters
-# was the same silent-mismatch class the changelog closed — e.g. a MEMBER
-# store read as a plain band index "works" (band/bkey project fine) but
-# silently loses the verify tier's precision-1.0 contract. Each store now
-# persists {kind, layout params} at seed/first-append; every open validates
-# and fails fast on mismatch. Legacy pre-r13 stores (data, no meta file)
-# adopt the running code's parameters on the next WRITE — reads stay
-# side-effect-free (a probe against a read-only path must not create files).
-
-_STORE_META_FILE = "_store_meta.json"
-
-
-def _store_layout(kind: str) -> dict:
-    """The running code's layout descriptor for a store kind — the values
-    that make an on-disk store un-probe-able when they drift."""
-    out: dict = {"kind": kind}
-    if kind in ("band", "band_member"):
-        from csv_loader_spark.queries import llm
-
-        out["n_hashes"] = llm._N_HASHES
-        out["band_size"] = llm._BAND_SIZE
-    elif kind == "passage":
-        from csv_loader_spark.queries import llm7
-
-        out["passage_words"] = llm7._PASSAGE
-    return out
-
-
-def read_store_meta(path: str) -> dict | None:
-    """The store's persisted layout metadata, or None for a legacy /
-    fresh store."""
-    p = os.path.join(path, _STORE_META_FILE)
-    if not os.path.exists(p):
-        return None
-    import json
-
-    with open(p) as f:
-        return json.load(f)
-
-
-def _validate_store_kind(path: str, kind: str, *, persist: bool) -> None:
-    """Fail fast when ``path`` holds a store of a different kind or
-    incompatible layout parameters. ``persist=True`` (write paths) stamps
-    fresh/legacy stores with the running layout; reads never write."""
-    want = _store_layout(kind)
-    meta = read_store_meta(path)
-    if meta is not None:
-        if meta != want:
-            raise ValueError(
-                f"store at {path} was built as {meta}, but this caller "
-                f"expects {want} — flipping the tier (verify_members) or "
-                "the MinHash/shingle geometry against an existing store "
-                "would probe it incorrectly; compact/rebuild the store or "
-                "fix the caller"
-            )
-        return
-    if persist:
-        import json
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, _STORE_META_FILE), "w") as f:
-            json.dump(want, f)
-
-
-def list_batch_partitions(spark: SparkSession, path: str) -> list[int]:
-    """The ``batch=<id>`` partition ids under a store directory, listed
-    through the JVM Hadoop FileSystem API — the scheme-aware listing
-    (file://, hdfs://, s3a://) that the r9 ``os.listdir`` discovery could
-    not do on a cluster. A missing directory lists as ``[]`` (bootstrap).
-
-    Object-store note: one LIST call per probe; on S3-style stores the
-    listing is eventually-consistent only on ancient stacks (S3 is
-    strongly consistent since 2020), so a partition written by a
-    committed batch is visible to the next batch's probe."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return []
-    out: list[int] = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("batch="):
-            try:
-                out.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return out
-
-
-def read_newest_snapshot(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    empty_schema: T.StructType,
-    *,
-    exclude_batch: int | None = None,
-) -> DataFrame:
-    """The read half of the FULL-SNAPSHOT chain rule (prune half below):
-    take the newest committed ``batch=<id>`` partition — each snapshot is
-    complete, so only the newest is ever read — with the standard
-    ``exclude_batch`` crash-window semantics; a missing/empty chain reads
-    as the empty frame. Shared by the curation quota chain and the
-    changelog state chain (r10 review)."""
-    ids = [
-        i
-        for i in list_batch_partitions(spark, path)
-        if exclude_batch is None or i != exclude_batch
-    ]
-    if ids:
-        return spark.read.parquet(os.path.join(path, f"batch={max(ids)}")).select(
-            *columns
-        )
-    return spark.createDataFrame([], empty_schema)
-
-
-def prune_snapshot_chain(spark: SparkSession, path: str) -> int:
-    """Delete every ``batch=<id>`` partition of a FULL-SNAPSHOT chain
-    except the newest (each snapshot is complete, so only the newest is
-    ever read — the curation quota chain and the changelog state chain
-    both follow this rule). Local-FS janitor by design, like
-    ``compact_index``. Returns the number pruned."""
-    import shutil
-
-    ids = sorted(list_batch_partitions(spark, path))
-    for i in ids[:-1]:
-        shutil.rmtree(os.path.join(path, f"batch={i}"))
-    return max(0, len(ids) - 1)
-
-
-def read_band_index(
-    spark: SparkSession, band_index_path: str, *, exclude_batch: int | None = None
-) -> DataFrame:
-    """The current band-signature index: (band, bkey) over every committed
-    ``batch=<id>`` partition, with the same bootstrap and
-    ``exclude_batch`` crash-window semantics as ``read_index``."""
-    _validate_store_kind(band_index_path, "band", persist=False)
-    if list_batch_partitions(spark, band_index_path):
-        df = spark.read.parquet(band_index_path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch") != exclude_batch)
-        return df.select("band", "bkey")
-    return spark.createDataFrame([], _BAND_SCHEMA)
-
-
-def seed_band_index(corpus: DataFrame, band_index_path: str) -> None:
-    """Bootstrap the near-dup index from an already-accepted corpus
-    (``batch=-1``, same convention as ``seed_index``)."""
-    _validate_store_kind(band_index_path, "band", persist=True)
-    band_signature_index(corpus).write.mode("overwrite").parquet(
-        os.path.join(band_index_path, "batch=-1")
-    )
-
-
-_MEMBER_SCHEMA = T.StructType(
-    [
-        T.StructField("band", T.IntegerType(), True),
-        T.StructField("bkey", T.StringType(), True),
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("toks", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-
-def read_band_member_index(
-    spark: SparkSession, path: str, *, exclude_batch: int | None = None
-) -> DataFrame:
-    """The current VERIFY-tier index: (band, bkey, doc_id, toks) over
-    every committed ``batch=<id>`` partition (same bootstrap /
-    ``exclude_batch`` semantics as ``read_index``). The per-bucket cap is
-    applied per APPEND, so a hot bucket may accumulate up to
-    cap × batches members across the store's lifetime — extra members
-    only ADD witnesses (better recall, precision still 1.0 by
-    construction), so reads take the store as-is instead of paying a
-    store-wide window per probe; ``compact_member_index`` restores the
-    GLOBAL cap on the compaction cadence (the same deterministic
-    keep-first-by-doc_id window the batch build applies)."""
-    _validate_store_kind(path, "band_member", persist=False)
-    if list_batch_partitions(spark, path):
-        df = spark.read.parquet(path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch") != exclude_batch)
-        return df.select("band", "bkey", "doc_id", "toks")
-    return spark.createDataFrame([], _MEMBER_SCHEMA)
-
-
-def seed_band_member_index(
-    corpus: DataFrame, path: str, cap: int | None = None
-) -> None:
-    """Bootstrap the verify-tier index from an accepted corpus
-    (``batch=-1``)."""
-    _validate_store_kind(path, "band_member", persist=True)
-    band_member_index(corpus, cap).write.mode("overwrite").parquet(
-        os.path.join(path, "batch=-1")
-    )
-
-
-def read_index(
-    spark: SparkSession, index_path: str, *, exclude_batch: int | None = None
-) -> DataFrame:
-    """The current fingerprint index: one ``fp`` column over every
-    committed ``batch=<id>`` partition (plus any seed partition written by
-    ``seed_index``). Bootstrap-safe: a missing or empty store reads as an
-    empty index.
-
-    ``exclude_batch`` drops that batch's OWN partition from the probe
-    (partition-pruned, hive-style ``batch`` dir column). The ingest loop
-    passes the in-flight batch id: a crash AFTER the index partition
-    landed but BEFORE the ledger record means redelivery re-runs the
-    batch with its own fingerprints already in the store — probing them
-    would anti-join every document of the batch away and overwrite the
-    accepted partition with an empty frame (silent loss). Excluding the
-    batch's own partition makes the re-run reproduce the original result
-    instead."""
-    _validate_store_kind(index_path, "fp", persist=False)
-    if list_batch_partitions(spark, index_path):
-        df = spark.read.parquet(index_path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch") != exclude_batch)
-        return df.select("fp")
-    return spark.createDataFrame([], _FP_SCHEMA)
-
-
-def seed_index(corpus: DataFrame, index_path: str) -> None:
-    """Bootstrap the index store from an already-accepted corpus (the
-    one-time global-dedup output). Lands in ``batch=-1`` so stream batch
-    ids (>= 0) never collide with the seed."""
-    _validate_store_kind(index_path, "fp", persist=True)
-    fingerprint_index(corpus).write.mode("overwrite").parquet(
-        os.path.join(index_path, "batch=-1")
-    )
-
-
-def append_to_index(novel_fps: DataFrame, index_path: str, batch_id: int) -> None:
-    """Idempotently append a batch's accepted fingerprints to the store.
-
-    The write targets the batch's OWN partition directory with overwrite —
-    a re-delivered batch rewrites identical files, never double-appends,
-    regardless of whether the ledger record landed."""
-    if _already_applied(index_path, batch_id):
-        return
-    _validate_store_kind(index_path, "fp", persist=True)
-    novel_fps.select("fp").distinct().write.mode("overwrite").parquet(
-        os.path.join(index_path, f"batch={batch_id}")
-    )
-    _record_applied(index_path, batch_id)
-
-
-# --------------------------------------------------------------------------
-# Passage-granularity NEAR-dup at ingest (r9): the q115 index in the loop.
-# --------------------------------------------------------------------------
-
-_PFP_SCHEMA = T.StructType([T.StructField("pfp", T.StringType(), True)])
 
 
 def passage_index(corpus: DataFrame) -> DataFrame:
@@ -602,28 +310,6 @@ def passage_index(corpus: DataFrame) -> DataFrame:
     from csv_loader_spark.queries.llm7 import doc_passages
 
     return doc_passages(corpus).select(F.md5("passage").alias("pfp")).distinct()
-
-
-def read_passage_index(
-    spark: SparkSession, passage_index_path: str, *, exclude_batch: int | None = None
-) -> DataFrame:
-    """Current passage-fingerprint index (same bootstrap / exclude_batch
-    semantics as ``read_index``)."""
-    _validate_store_kind(passage_index_path, "passage", persist=False)
-    if list_batch_partitions(spark, passage_index_path):
-        df = spark.read.parquet(passage_index_path)
-        if exclude_batch is not None:
-            df = df.filter(F.col("batch") != exclude_batch)
-        return df.select("pfp")
-    return spark.createDataFrame([], _PFP_SCHEMA)
-
-
-def seed_passage_index(corpus: DataFrame, passage_index_path: str) -> None:
-    """Bootstrap the passage index from an accepted corpus (``batch=-1``)."""
-    _validate_store_kind(passage_index_path, "passage", persist=True)
-    passage_index(corpus).write.mode("overwrite").parquet(
-        os.path.join(passage_index_path, "batch=-1")
-    )
 
 
 def ingest_verdicts_passage(
@@ -712,343 +398,3 @@ def ingest_verdicts_passage(
         .otherwise(F.lit("accepted"))
     )
     return out.withColumn("verdict", verdict).drop("_ec", "_eb", "_pc", "_pb")
-
-
-def compact_index(
-    spark: SparkSession, index_path: str, *, ledger_path: str | None = None
-) -> int:
-    """Fold every committed ``batch=<id>`` partition of an index store
-    (fingerprint, band-signature, or passage — schema-agnostic) into the
-    single seed partition ``batch=-1``, returning the number of batch
-    partitions folded (0 = nothing to do).
-
-    ``ledger_path`` names the store whose ``_applied_batches`` ledger
-    defines "committed" — defaults to ``index_path`` (right for the
-    fingerprint store, which owns the ledger). The band/passage stores
-    are written in lockstep with the fingerprint store under the SAME
-    batch ids but carry no ledger of their own, so compacting them
-    requires passing the fingerprint store's path here; without it every
-    partition would look in-flight and compaction would be a no-op (r9
-    review).
-
-    WHY this op exists: the closed loop writes one parquet directory per
-    micro-batch — after 100k batches the store is 100k directories and
-    every probe pays 100k file-listing opens (the classic streaming
-    small-file problem). Compaction restores O(1) directories; the probe
-    plan is unchanged.
-
-    Crash-safety (ops/compaction.py's swap discipline, adapted to the
-    partitioned store): the folded union is written to a TMP directory
-    OUTSIDE the store (so a crash never leaves a non-partition directory
-    inside it to break partition discovery), the old seed is renamed
-    aside, the tmp renamed in, and only then are the batch partitions
-    deleted. Every intermediate crash state is safe: before the swap the
-    store is untouched; after it the seed already holds the full union,
-    so surviving batch directories merely duplicate fingerprints —
-    harmless to the semi/anti-join probes and removed by the next
-    compaction. The ``_applied_batches`` ledger is kept as-is: fast-skip
-    of redelivered batches keeps working, and a ledger-stripped
-    redelivery recreates its own batch partition with fingerprints the
-    seed already holds (duplicate rows, same probe semantics). One
-    redelivery hazard remains if the LEDGER ITSELF is lost after a
-    compaction: the redelivered batch's fingerprints then sit in the seed
-    partition where ``exclude_batch`` cannot hide them, the probe rejects
-    every document, and the re-run would overwrite the batch's accepted
-    partition with an empty frame — ``guard_accepted_overwrite`` in the
-    ingest loops refuses exactly that write, so the hazard surfaces as a
-    loud error instead of silent data loss.
-
-    Local-FS only BY DESIGN: the swap uses POSIX renames (the repo's
-    documented single-FS stand-in for a transactional table format —
-    see ops/compaction.py); the probe-side listings use the scheme-aware
-    ``list_batch_partitions``, but run this janitor where the store is a
-    real filesystem."""
-    import shutil
-
-    base = index_path.rstrip("/")
-    seed = os.path.join(base, "batch=-1")
-    tmp = base + "._compact_tmp"
-    backup = base + "._seed_backup"
-    # recover any interrupted previous run (mirrors compaction.py)
-    if os.path.exists(backup):
-        if os.path.exists(seed):
-            shutil.rmtree(backup)
-        else:
-            os.rename(backup, seed)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    if not os.path.isdir(base):
-        return 0
-    batch_dirs = [e for e in os.listdir(base) if e.startswith("batch=")]
-    # fold ONLY ledger-committed batches (r9 review): an unledgered
-    # partition belongs to an IN-FLIGHT batch that crashed between its
-    # index write and the ledger record — folding it into the seed would
-    # defeat read_index(exclude_batch=...) on redelivery (the batch's own
-    # fingerprints, no longer hidden, would anti-join the whole batch
-    # away and overwrite its accepted partition with an empty frame).
-    # Such partitions stay put until their redelivery commits them.
-    # (Ledger read ONCE into a set — per-directory file reads would be
-    # O(B^2) at exactly the store size compaction exists to fix.)
-    from csv_loader_spark.streaming.continuous_agg import _ledger_path
-
-    lp = _ledger_path((ledger_path or index_path).rstrip("/"))
-    committed: set[int] = set()
-    if os.path.exists(lp):
-        with open(lp) as f:
-            committed = {int(x) for x in f.read().split()}
-    fold = []
-    for e in batch_dirs:
-        bid = int(e.split("=", 1)[1])
-        if bid >= 0 and bid in committed:
-            fold.append(e)
-    if not fold:
-        return 0
-    paths = [os.path.join(base, e) for e in fold]
-    if os.path.isdir(seed):
-        paths.append(seed)
-    # leaf-path reads carry no hive `batch` column, so no drop is needed
-    df = spark.read.parquet(*paths).distinct()
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(seed):
-        os.rename(seed, backup)
-    os.rename(tmp, seed)
-    if os.path.isdir(backup):
-        shutil.rmtree(backup)
-    for e in fold:
-        shutil.rmtree(os.path.join(base, e))
-    return len(fold)
-
-
-def guard_accepted_overwrite(
-    spark: SparkSession, accepted_path: str, batch_id: int, novel_is_empty: bool
-) -> None:
-    """Refuse to overwrite a NON-EMPTY ``accepted/batch=<id>`` partition
-    with an EMPTY novel frame (r9 advice): a batch that previously landed
-    documents can only re-run empty if its own fingerprints are probing
-    against it — the ledger-stripped-after-compaction redelivery, where
-    ``exclude_batch`` can no longer hide the batch's fingerprints because
-    compaction folded them into the seed. Overwriting would silently drop
-    the landed documents; failing loudly leaves the store intact and
-    names the recovery (restore the ledger entry, or accept the seed as
-    the source of truth and skip the batch)."""
-    if not novel_is_empty:
-        return
-    part = os.path.join(accepted_path, f"batch={batch_id}")
-    if batch_id not in list_batch_partitions(spark, accepted_path):
-        return
-    if spark.read.parquet(part).limit(1).count() > 0:
-        raise RuntimeError(
-            f"refusing to overwrite non-empty accepted partition {part} "
-            "with an EMPTY novel frame: this is the signature of a "
-            "ledger-stripped redelivery of a batch whose fingerprints were "
-            "compacted into the index seed (exclude_batch can no longer "
-            "hide them, so the probe rejects the whole batch). Restore the "
-            "_applied_batches ledger record for this batch id (it makes "
-            "the redelivery fast-skip), or delete the accepted partition "
-            "explicitly if the empty result is intended."
-        )
-
-
-def compact_member_index(
-    spark: SparkSession,
-    path: str,
-    *,
-    ledger_path: str | None = None,
-    cap: int | None = None,
-) -> int:
-    """``compact_index`` for the VERIFY-tier member store, plus the
-    GLOBAL re-cap the per-append cap cannot provide: after folding the
-    committed partitions into the seed, each (band, bkey) bucket is
-    trimmed back to its first ``cap`` members by doc_id — the exact
-    keep-first convention ``band_member_index`` applies, so the
-    compacted store equals the index a batch build over the whole
-    accepted corpus would produce (deterministic, tested). Trimming only
-    removes WITNESSES (recall), never correctness: the verified rule's
-    precision is 1.0 regardless of membership.
-
-    The re-cap rewrite reuses the seed-swap discipline: write the capped
-    seed to a tmp directory outside the store, rename the old seed
-    aside, rename tmp in, drop the backup — every intermediate crash
-    state leaves a recoverable store. Recovery runs FIRST, before the
-    fold and before any early return (r10 review): a crash between the
-    two renames leaves no seed and the full pre-crash seed in the
-    backup, so folding first would build a fresh seed missing that
-    history and the cleanup branch would then delete the backup — silent
-    loss of the member store. Restoring the backup up front makes every
-    crash state converge to the correct store on the next call.
-    Returns the number of batch partitions folded."""
-    import shutil
-
-    from csv_loader_spark.queries.llm import _BAND_CAP
-
-    if cap is None:
-        cap = _BAND_CAP
-    base = path.rstrip("/")
-    seed = os.path.join(base, "batch=-1")
-    tmp = base + "._recap_tmp"
-    backup = base + "._recap_backup"
-    recovered = False
-    if os.path.exists(backup):  # recover an interrupted previous re-cap
-        if os.path.isdir(seed):
-            shutil.rmtree(backup)
-        else:
-            # the backup holds the UNCAPPED pre-recap seed — restore it
-            # and re-run the cap below even if nothing new folds
-            os.rename(backup, seed)
-            recovered = True
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    folded = compact_index(spark, path, ledger_path=ledger_path)
-    if not os.path.isdir(seed):
-        return folded
-    if folded == 0 and not recovered:
-        # nothing folded and the previous re-cap's postcondition stands:
-        # skip the corpus-sized seed rewrite (re-cap is idempotent, so a
-        # quiet cadence tick must not re-read the largest store for a
-        # byte-equivalent result; r10 review)
-        return 0
-    w = Window.partitionBy("band", "bkey").orderBy("doc_id")
-    capped = (
-        spark.read.parquet(seed)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cap)
-        .drop("_rn")
-    )
-    capped.write.mode("overwrite").parquet(tmp)
-    os.rename(seed, backup)
-    os.rename(tmp, seed)
-    shutil.rmtree(backup)
-    return folded
-
-
-def start_ingest_pipeline(
-    arrivals: DataFrame,
-    index_path: str,
-    accepted_path: str,
-    checkpoint_dir: str,
-    *,
-    band_index_path: str | None = None,
-    passage_index_path: str | None = None,
-    verify_members: bool = False,
-    compact_every: int | None = None,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """The closed-loop incremental ingest: per micro-batch, anti-join the
-    CURRENT index (re-read each batch, so it sees every prior batch's
-    appends), dedup within the batch (batch-mode min-doc_id survivor —
-    deterministic under replay, unlike first-arrival order), land accepted
-    documents under ``accepted_path/batch=<id>`` and their fingerprints
-    under ``index_path/batch=<id>``, both overwrite-idempotent.
-
-    With ``band_index_path`` (r9) the probe is NEAR-dup as well: arrivals
-    run through ``ingest_verdicts`` against both the fingerprint index and
-    the band-signature index, only ``accepted`` docs land, and the
-    accepted docs' band keys are appended to ``band_index_path/batch=<id>``
-    alongside the fingerprints — so batch N+1 rejects near-dups of batch
-    N's admissions (CCNet's deduplicate-against-snapshot, incremental).
-    ``verify_members=True`` (r10) upgrades the band probe to the VERIFY
-    tier: the store at ``band_index_path`` holds (band, bkey, doc_id,
-    toks) member rows, the probe is ``ingest_verdicts_verified``
-    (rejection only on an exact-Jaccard-confirmed witness — precision
-    1.0), and accepted docs append their capped member rows back.
-    ``passage_index_path`` selects the PASSAGE-granularity probe instead
-    (``ingest_verdicts_passage``: majority-recycled docs rejected, the
-    accepted docs' passage fingerprints appended) — one near-dup
-    granularity per loop, so the two paths are mutually exclusive.
-    Same crash-window discipline as the exact loop: both index reads
-    exclude the in-flight batch's own partition, every write targets the
-    batch's own partition with overwrite, the ledger records last.
-
-    ``compact_every=K`` (r10) runs the small-file janitor INSIDE the
-    loop: after every K-th committed batch, ``compact_index`` folds the
-    ledger-committed partitions of every store this loop maintains (fp,
-    plus band or passage) into their seed partitions — without it a
-    100k-batch run leaves 100k directories per store and every probe
-    pays 100k file listings. Compaction runs AFTER the ledger record, so
-    it only ever folds committed batches, and probe results are
-    unchanged (the seed holds the identical distinct fingerprints —
-    asserted mid-stream by tests/test_streaming_dedup.py)."""
-    if band_index_path is not None and passage_index_path is not None:
-        raise ValueError(
-            "choose ONE near-dup granularity: band_index_path or "
-            "passage_index_path, not both"
-        )
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _already_applied(index_path, batch_id):
-            return
-        index = read_index(spark, index_path, exclude_batch=batch_id)
-        if band_index_path is not None:
-            if verify_members:
-                members = read_band_member_index(
-                    spark, band_index_path, exclude_batch=batch_id
-                )
-                verdicts = ingest_verdicts_verified(batch_df, index, members)
-            else:
-                band_idx = read_band_index(
-                    spark, band_index_path, exclude_batch=batch_id
-                )
-                verdicts = ingest_verdicts(batch_df, index, band_idx)
-            novel = verdicts.filter(F.col("verdict") == "accepted").drop("verdict")
-        elif passage_index_path is not None:
-            pfp_idx = read_passage_index(
-                spark, passage_index_path, exclude_batch=batch_id
-            )
-            verdicts = ingest_verdicts_passage(batch_df, index, pfp_idx)
-            novel = verdicts.filter(F.col("verdict") == "accepted").drop("verdict")
-        else:
-            novel = novel_documents(batch_df, index)
-        # one materialization feeding all writes; also decouples the
-        # accepted-write plan from a mid-write index refresh
-        novel = novel.localCheckpoint(eager=True)
-        guard_accepted_overwrite(
-            spark, accepted_path, batch_id, novel.isEmpty()
-        )
-        novel.drop("fp").write.mode("overwrite").parquet(
-            os.path.join(accepted_path, f"batch={batch_id}")
-        )
-        if band_index_path is not None:
-            _validate_store_kind(
-                band_index_path,
-                "band_member" if verify_members else "band",
-                persist=True,
-            )
-            grown = (
-                band_member_index(novel)
-                if verify_members
-                else band_signature_index(novel)
-            )
-            grown.write.mode("overwrite").parquet(
-                os.path.join(band_index_path, f"batch={batch_id}")
-            )
-        if passage_index_path is not None:
-            _validate_store_kind(passage_index_path, "passage", persist=True)
-            passage_index(novel).write.mode("overwrite").parquet(
-                os.path.join(passage_index_path, f"batch={batch_id}")
-            )
-        append_to_index(novel, index_path, batch_id)
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
-            compact_index(spark, index_path)
-            if band_index_path is not None:
-                if verify_members:
-                    compact_member_index(
-                        spark, band_index_path, ledger_path=index_path
-                    )
-                else:
-                    compact_index(
-                        spark, band_index_path, ledger_path=index_path
-                    )
-            if passage_index_path is not None:
-                compact_index(
-                    spark, passage_index_path, ledger_path=index_path
-                )
-
-    writer = (
-        arrivals.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,138 +1,27 @@
-"""Trip segmentation — one operator, three execution surfaces.
+"""Trip segmentation, the batch operator behind ``q84_trip_segmentation``.
 
-Semantics (shared by all): per user, events ordered by (ts, event_id); a
-new TRIP starts when the gap from the previous event exceeds
-``gap_minutes``; a trip's ``travel`` is the sum of |Δvalue| over
-consecutive events *within* the trip (the carry-the-previous-point shape
-that distinguishes trips from plain sessions — state must remember the
-last position, not just the last time). The reference has no stateful
-surface at all (its only state is two HashSets, CsvLoader.java:105-106);
-this is the extension-surface operator family from SURVEY.md §2.3.
-
-- :func:`segment_trips` — batch: lag → gap flag → cumulative trip id →
-  group. One shuffle on user_id; windows + agg stay whole-stage codegen.
-  Oracle-gated as ``q84_trip_segmentation``.
-- :func:`segment_trips_stream` — streaming via
-  ``applyInPandasWithState`` (event-time timeout). Runs on any Spark.
-- :func:`segment_trips_stream_tws` — streaming via Spark 4's
-  ``transformWithStateInPandas`` (StatefulProcessor + ValueState +
-  explicit event-time timers; the API that adds state TTL, multiple
-  typed state variables, and timer management). The TWS protocol's
-  Python worker requires the ``protobuf`` package
-  (pyspark/sql/streaming/proto/StateMessage_pb2.py imports
-  ``google.protobuf``) — not pip-installed here, but
-  ``session.ensure_protobuf`` discovers the runtime vendored inside the
-  image's google-cloud-sdk and exports it to the workers via PYTHONPATH,
-  so the LIVE path runs end-to-end in this sandbox
-  (tests/test_transform_with_state.py::test_trips_stream_tws_end_to_end);
-  environments with no runtime at all still get the actionable
-  ImportError, and the fold/timer logic stays shared with the
-  always-runnable surfaces + the fake-state harness.
-
-A trip CLOSES and is emitted when (a) a later event for the user arrives
-past the gap, or (b) the event-time watermark passes ``last_event + gap``
-(timeout/timer — emitted even if the user never returns).
+Semantics: per user, events ordered by (ts, event_id); a new TRIP starts
+when the gap from the previous event exceeds ``gap_minutes``; a trip's
+``travel`` is the sum of |Δvalue| over consecutive events *within* the
+trip (the carry-the-previous-point shape that distinguishes trips from
+plain sessions). The reference has no stateful surface at all (its only
+state is two HashSets, CsvLoader.java:105-106); this is the
+extension-surface operator family from SURVEY.md §2.3.
 
 Determinism: ``travel`` is accumulated in integer CENTS (values are 2dp
 doubles; ``round(value*100)`` is exact) so the sum is order-independent
-and bit-identical across engines and modes; the single ``/100.0`` at emit
-is exact. Python-side rounding uses ``floor(x*100+0.5)`` (half-away, like
-SQL round) — never Python's banker's ``round()``.
+and bit-identical across engines; the single ``/100.0`` at the end is
+exact.
 
-Scale: batch = one shuffle, bounded window state per user. Streaming
-state is ONE fixed-size tuple per active user (never an event buffer);
-timeouts/timers garbage-collect idle users, so state size tracks
-concurrent activity, not history. Arrow-batched per group — no per-row
-Python.
+Scale: lag → gap flag → cumulative trip id → group. One shuffle on
+user_id; windows + agg stay whole-stage codegen.
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-
-from csv_loader_spark.session import ensure_protobuf
-
-OUTPUT_SCHEMA = (
-    "user_id bigint, trip_start timestamp, trip_end timestamp, "
-    "n_events bigint, travel double"
-)
-# One fixed-size tuple per ACTIVE user; epoch µs + integer cents keep all
-# arithmetic integral inside the state store.
-# fields: start_us, last_us, last_cents, n, travel_cents
-STATE_SCHEMA = (
-    "start_us bigint, last_us bigint, last_cents bigint, n bigint, "
-    "travel_cents bigint"
-)
 
 _US_PER_MIN = 60 * 1_000_000
-
-
-def _cents(v: float) -> int:
-    """value → integer cents, SQL-style half-away rounding (not banker's)."""
-    return (
-        int(math.floor(v * 100 + 0.5)) if v >= 0 else -int(math.floor(-v * 100 + 0.5))
-    )
-
-
-def _fold(
-    cur: list | None, ts_us: list[int], values: list[float], gap_us: int
-) -> tuple[list[tuple], list]:
-    """Fold a sorted event batch into (closed_trips, open_state).
-
-    The single definition of the incremental semantics — shared by both
-    streaming surfaces so they cannot drift from each other.
-    """
-    closed: list[tuple] = []
-    for t, v in zip(ts_us, values):
-        c = _cents(float(v))
-        if cur is None:
-            cur = [t, t, c, 1, 0]
-        elif t - cur[1] > gap_us:
-            closed.append(tuple(cur))
-            cur = [t, t, c, 1, 0]
-        else:
-            cur[4] += abs(c - cur[2])
-            cur[1] = t
-            cur[2] = c
-            cur[3] += 1
-    return closed, cur
-
-
-def _batch_to_lists(batch: pd.DataFrame) -> tuple[list[int], list[float]]:
-    """Sorted (ts epoch-µs, value) lists; tolerates ns- or µs-unit frames."""
-    batch = batch.sort_values(["ts", "event_id"])
-    ts_int = batch["ts"].astype("int64").tolist()
-    if "[ns]" in str(batch["ts"].dtype):
-        ts_int = [t // 1000 for t in ts_int]
-    return ts_int, batch["value"].tolist()
-
-
-def _trips_frame(user_id: int, trips: list[tuple]) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [user_id] * len(trips),
-            "trip_start": [pd.Timestamp(t[0], unit="us") for t in trips],
-            "trip_end": [pd.Timestamp(t[1], unit="us") for t in trips],
-            "n_events": [t[3] for t in trips],
-            "travel": [t[4] / 100.0 for t in trips],
-        }
-    )
-
-
-# ---------------------------------------------------------------------------
-# Batch
-# ---------------------------------------------------------------------------
 
 
 def segment_trips(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -162,130 +51,4 @@ def segment_trips(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             (F.sum("step_cents") / F.lit(100.0)).alias("travel"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming: applyInPandasWithState (runs on any Spark)
-# ---------------------------------------------------------------------------
-
-
-def segment_trips_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Streaming trip segmentation via applyInPandasWithState.
-
-    ``events`` must be a streaming DataFrame with a watermark on ``ts`` and
-    columns user_id, event_id, ts, value. Emits each trip exactly once, when
-    it closes (gap-arrival or watermark timeout). Open trips stay in state.
-    """
-    gap_us = gap_minutes * _US_PER_MIN
-
-    def _fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            closed = [tuple(state.get)]
-            state.remove()
-        else:
-            batch = pd.concat(list(pdfs))
-            ts_int, values = _batch_to_lists(batch)
-            cur = list(state.get) if state.exists else None
-            closed, cur = _fold(cur, ts_int, values, gap_us)
-            state.update(tuple(cur))
-            state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)  # ms
-        if closed:
-            yield _trips_frame(user_id, closed)
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming: transformWithStateInPandas (Spark 4 StatefulProcessor)
-# ---------------------------------------------------------------------------
-
-
-class TripProcessor(StatefulProcessor):
-    """StatefulProcessor closing trips on gap-arrival or event-time timer.
-
-    Timer bookkeeping: exactly one live timer per user at
-    ``last_event + gap`` (ms); on every update the previous timer is
-    deleted and re-registered, and :meth:`handleExpiredTimer` ignores
-    stale timers that survived a delete/re-register race.
-    """
-
-    def __init__(self, gap_us: int) -> None:
-        self._gap_us = gap_us
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("trip", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows, timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        ts_int, values = _batch_to_lists(pd.concat(list(rows)))
-        cur = list(self._state.get()) if self._state.exists() else None
-        old_expiry_ms = (cur[1] + self._gap_us) // 1000 if cur is not None else None
-
-        closed, cur = _fold(cur, ts_int, values, self._gap_us)
-        self._state.update(tuple(cur))
-
-        new_expiry_ms = (cur[1] + self._gap_us) // 1000
-        if old_expiry_ms != new_expiry_ms:
-            if old_expiry_ms is not None:
-                self._handle.deleteTimer(old_expiry_ms)
-            self._handle.registerTimer(new_expiry_ms)
-        if closed:
-            yield _trips_frame(user_id, closed)
-
-    def handleExpiredTimer(
-        self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if not self._state.exists():
-            return
-        cur = self._state.get()
-        # stale-timer guard: only close if THIS timer is the live one
-        if (cur[1] + self._gap_us) // 1000 > expiredTimerInfo.getExpiryTimeInMs():
-            return
-        self._state.clear()
-        yield _trips_frame(user_id, [tuple(cur)])
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithState's Python worker needs the protobuf package."""
-    return ensure_protobuf()
-
-
-def segment_trips_stream_tws(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Streaming trip segmentation via transformWithStateInPandas.
-
-    Same contract as :func:`segment_trips_stream`; requires (a) the
-    RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and (b) the
-    ``protobuf`` Python package on driver + workers (the TWS state-server
-    protocol imports ``google.protobuf``; see module docstring).
-    """
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(google.protobuf) on the Python workers; it is not installed "
-            "in this environment. Use segment_trips_stream() "
-            "(applyInPandasWithState) — same semantics, same output."
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TripProcessor(gap_minutes * _US_PER_MIN),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
     )

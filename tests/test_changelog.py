@@ -1,38 +1,13 @@
 """Incremental release changelog (streaming/changelog.py): version events
-folded over a state-snapshot chain; the streaming fold must equal the
-batch twin (q147's operator) and replay idempotently."""
-
-import json
-import os
-
-from pyspark.sql import functions as F
+folded over the standing state; the fold must match a reference model and
+commute with batching."""
 
 from csv_loader_spark.streaming.changelog import (
     apply_version_events,
-    read_state_snapshot,
-    seed_state,
     snapshot_state,
-    start_changelog_pipeline,
 )
 
 _EV_SCHEMA = "doc_id long, source string, op string, text string, seq long"
-
-
-def _write_events(path, rows):
-    with open(path, "w") as f:
-        for doc_id, source, op, text, seq in rows:
-            f.write(
-                json.dumps(
-                    {
-                        "doc_id": doc_id,
-                        "source": source,
-                        "op": op,
-                        "text": text,
-                        "seq": seq,
-                    }
-                )
-                + "\n"
-            )
 
 
 def _corpus(spark):
@@ -73,126 +48,6 @@ def test_apply_version_events_verdicts_and_netting(spark):
         ("t", "removed"): (1, -5),
     }
     assert {r["doc_id"] for r in new_state.collect()} == {1, 2, 4}
-
-
-def test_changelog_stream_equals_batch_and_replays(spark, tmp_path):
-    """The two-batch streaming fold lands exactly the one-batch twin's
-    roll-up (commutes with batching for disjoint docs), state carries
-    across a restart, and a ledger-intact redelivery fast-skips."""
-    store = str(tmp_path / "store")
-    src = tmp_path / "events"
-    src.mkdir()
-    seed_state(_corpus(spark), store)
-
-    _write_events(
-        src / "e1.json",
-        [
-            (4, "s", "upsert", "delta document freshly crawled now", 0),
-            (3, "t", "delete", None, 0),
-        ],
-    )
-    _write_events(
-        src / "e2.json",
-        [
-            (1, "s", "upsert", "alpha document about storage engines v2", 0),
-        ],
-    )
-    for i, name in enumerate(("e1.json", "e2.json")):
-        os.utime(src / name, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def _run(ck):
-        q = start_changelog_pipeline(
-            spark.readStream.schema(_EV_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src)),
-            store,
-            ck,
-            available_now=True,
-        )
-        q.awaitTermination(180)
-
-    _run(str(tmp_path / "ck"))
-
-    folded = (
-        spark.read.parquet(os.path.join(store, "changelog"))
-        .groupBy("source", "verdict")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("tok_delta").alias("tok_delta"),
-        )
-    )
-    got = {
-        (r["source"], r["verdict"]): (r["n_docs"], r["tok_delta"])
-        for r in folded.collect()
-    }
-    # the batch twin over the same events in ONE batch
-    all_events = spark.read.schema(_EV_SCHEMA).json(str(src))
-    twin, twin_state = apply_version_events(
-        snapshot_state(_corpus(spark)), all_events
-    )
-    expected = {
-        (r["source"], r["verdict"]): (r["n_docs"], r["tok_delta"])
-        for r in twin.collect()
-    }
-    assert got == expected
-    assert ("s", "changed") in got and ("t", "removed") in got
-
-    # final state equals the twin's state
-    final = read_state_snapshot(spark, store)
-    assert {
-        (r["doc_id"], r["fp"]) for r in final.collect()
-    } == {(r["doc_id"], r["fp"]) for r in twin_state.collect()}
-
-    # replay under a fresh checkpoint: ledger fast-skip leaves the store
-    # byte-identical (no duplicate changelog partitions, same state ids)
-    n_parts = len(os.listdir(os.path.join(store, "changelog")))
-    _run(str(tmp_path / "ck2"))
-    assert len(os.listdir(os.path.join(store, "changelog"))) == n_parts
-    assert {r["doc_id"] for r in read_state_snapshot(spark, store).collect()} == {
-        r["doc_id"] for r in final.collect()
-    }
-
-
-def test_changelog_crash_redelivery_rebuilds_identically(spark, tmp_path):
-    """Crash window: the last batch's ledger record is lost AFTER its
-    state/changelog writes landed — redelivery must re-read the true
-    predecessor (exclude_batch) and rewrite the identical result."""
-    store = str(tmp_path / "store")
-    src = tmp_path / "events"
-    src.mkdir()
-    seed_state(_corpus(spark), store)
-    _write_events(
-        src / "e1.json",
-        [(4, "s", "upsert", "delta document freshly crawled now", 0)],
-    )
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA).json(str(src)),
-        store,
-        str(tmp_path / "ck"),
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    before = {
-        (r["source"], r["verdict"], r["n_docs"])
-        for r in spark.read.parquet(os.path.join(store, "changelog")).collect()
-    }
-    # strip the ledger record -> a fresh-checkpoint run redelivers batch 0
-    os.remove(os.path.join(store, "state", "_applied_batches"))
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA).json(str(src)),
-        store,
-        str(tmp_path / "ck2"),
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    after = {
-        (r["source"], r["verdict"], r["n_docs"])
-        for r in spark.read.parquet(os.path.join(store, "changelog")).collect()
-    }
-    assert after == before
-    assert {r["doc_id"] for r in read_state_snapshot(spark, store).collect()} == {
-        1, 2, 3, 4,
-    }
 
 
 def test_apply_version_events_matches_reference_model(spark):
@@ -277,242 +132,6 @@ def test_apply_version_events_matches_reference_model(spark):
         }, seed
 
 
-def test_changelog_prunes_state_chain_on_cadence(spark, tmp_path):
-    """Legacy snapshot mode, compact_every=2: superseded corpus-sized
-    state snapshots are pruned mid-stream (batch 2's snapshot stands
-    alone after the fold at batch 1), the changelog history is
-    untouched, and the final state is identical to an unpruned run."""
-    store = str(tmp_path / "store")
-    src = tmp_path / "events"
-    src.mkdir()
-    seed_state(_corpus(spark), store, state_mode="snapshot")
-    _write_events(src / "e1.json", [(4, "s", "upsert", "delta doc", 0)])
-    _write_events(src / "e2.json", [(5, "s", "upsert", "epsilon doc", 0)])
-    _write_events(src / "e3.json", [(3, "t", "delete", None, 0)])
-    for i, name in enumerate(("e1.json", "e2.json", "e3.json")):
-        os.utime(src / name, (1_700_000_000 + i, 1_700_000_000 + i))
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src)),
-        store,
-        str(tmp_path / "ck"),
-        state_mode="snapshot",
-        compact_every=2,
-        available_now=True,
-    )
-    q.awaitTermination(240)
-    # prune fired at batch 1 (dropping seed + batch 0); batch 2 landed after
-    state_parts = sorted(
-        e
-        for e in os.listdir(os.path.join(store, "state"))
-        if e.startswith("batch=")
-    )
-    assert state_parts == ["batch=1", "batch=2"]
-    # changelog history intact: one partition per batch
-    assert (
-        len(
-            [
-                e
-                for e in os.listdir(os.path.join(store, "changelog"))
-                if e.startswith("batch=")
-            ]
-        )
-        == 3
-    )
-    assert {r["doc_id"] for r in read_state_snapshot(spark, store).collect()} == {
-        1, 2, 4, 5,
-    }
-
-
-def _bucket_of(spark, doc_id, n_buckets):
-    """The operator's own bucket assignment for one doc_id."""
-    return spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(doc_id).cast("long")), F.lit(n_buckets))
-        .cast("int")
-        .alias("b")
-    ).collect()[0]["b"]
-
-
-def test_bucketed_batch_rewrites_only_touched_buckets(spark, tmp_path):
-    """The r11 incremental store: a 1-doc batch writes a batch=0 leaf
-    ONLY under that doc's hash bucket — every other bucket's chain still
-    ends at the seed. This is the O(touched buckets), not O(corpus),
-    write-cost claim, asserted on the store layout itself."""
-    store = str(tmp_path / "store")
-    state = os.path.join(store, "state")
-    src = tmp_path / "events"
-    src.mkdir()
-    n_buckets = 8
-    seed_state(_corpus(spark), store, n_buckets=n_buckets)
-    _write_events(
-        src / "e1.json",
-        [(4, "s", "upsert", "delta document freshly crawled now", 0)],
-    )
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA).json(str(src)),
-        store,
-        str(tmp_path / "ck"),
-        n_buckets=n_buckets,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    touched = _bucket_of(spark, 4, n_buckets)
-    for entry in sorted(os.listdir(state)):
-        if not entry.startswith("bucket="):
-            continue
-        b = int(entry.split("=")[1])
-        leaves = sorted(os.listdir(os.path.join(state, entry)))
-        if b == touched:
-            assert "batch=0" in leaves, leaves
-        else:
-            assert leaves == ["batch=-1"], (b, leaves)
-    assert {r["doc_id"] for r in read_state_snapshot(spark, store).collect()} == {
-        1, 2, 3, 4,
-    }
-
-
-def test_bucketed_delete_to_empty_bucket_does_not_resurrect(spark, tmp_path):
-    """Marker-row semantics: deleting the only doc in a bucket must
-    still write the bucket's batch leaf (dynamic partition overwrite
-    emits nothing for empty partitions), or the seed snapshot would stay
-    newest and the doc would resurrect on the next read."""
-    store = str(tmp_path / "store")
-    src = tmp_path / "events"
-    src.mkdir()
-    docs = spark.createDataFrame(
-        [(1, "s", "only document in the corpus")],
-        "doc_id long, source string, text string",
-    )
-    seed_state(docs, store, n_buckets=4)
-    _write_events(src / "e1.json", [(1, "s", "delete", None, 0)])
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA).json(str(src)),
-        store,
-        str(tmp_path / "ck"),
-        n_buckets=4,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    assert read_state_snapshot(spark, store).count() == 0
-    log = spark.read.parquet(os.path.join(store, "changelog")).collect()
-    assert [(r["verdict"], r["n_docs"]) for r in log] == [("removed", 1)]
-
-
-def test_bucketed_compact_and_snapshot_every(spark, tmp_path):
-    """compact_every prunes superseded per-bucket leaves (each bucket's
-    chain ends at its newest committed leaf only) and snapshot_every
-    lands a complete time-travel snapshot whose content equals the
-    bucketed standing state at that batch."""
-    store = str(tmp_path / "store")
-    state = os.path.join(store, "state")
-    src = tmp_path / "events"
-    src.mkdir()
-    seed_state(_corpus(spark), store, n_buckets=4)
-    _write_events(src / "e1.json", [(4, "s", "upsert", "delta doc", 0)])
-    _write_events(src / "e2.json", [(5, "s", "upsert", "epsilon doc", 0)])
-    for i, name in enumerate(("e1.json", "e2.json")):
-        os.utime(src / name, (1_700_000_000 + i, 1_700_000_000 + i))
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src)),
-        store,
-        str(tmp_path / "ck"),
-        n_buckets=4,
-        compact_every=2,
-        snapshot_every=2,
-        available_now=True,
-    )
-    q.awaitTermination(240)
-    # every bucket chain pruned to a single (newest) leaf
-    for entry in os.listdir(state):
-        if entry.startswith("bucket="):
-            leaves = os.listdir(os.path.join(state, entry))
-            assert len([e for e in leaves if e.startswith("batch=")]) == 1, (
-                entry, leaves,
-            )
-    # the time-travel snapshot landed at the cadence batch and matches
-    # the standing state read (batches 0 and 1 both applied by then)
-    snap = spark.read.parquet(os.path.join(store, "state_snapshots", "batch=1"))
-    assert {r["doc_id"] for r in snap.collect()} == {1, 2, 3, 4, 5}
-    assert {r["doc_id"] for r in read_state_snapshot(spark, store).collect()} == {
-        1, 2, 3, 4, 5,
-    }
-
-
-def test_store_meta_rejects_mode_and_bucket_mismatch(spark, tmp_path):
-    """(state_mode, n_buckets) are durable layout properties persisted in
-    the store metadata file at seed time; reopening with a different
-    mode or bucket count must fail fast, not silently fold over empty or
-    re-hashed state (r11 advice, both mediums)."""
-    import pytest
-
-    from csv_loader_spark.streaming.changelog import resolve_store_config
-
-    store = str(tmp_path / "store")
-    state = os.path.join(store, "state")
-    seed_state(_corpus(spark), store, n_buckets=8)
-    with pytest.raises(ValueError, match="state_mode"):
-        resolve_store_config(spark, state, "snapshot", 8)
-    with pytest.raises(ValueError, match="n_buckets=8"):
-        resolve_store_config(spark, state, "bucketed", 16)
-    # the matching config passes and seeding again with it still works
-    resolve_store_config(spark, state, "bucketed", 8)
-    with pytest.raises(ValueError):
-        seed_state(_corpus(spark), store, state_mode="snapshot")
-
-
-def test_legacy_layout_detected_without_meta(spark, tmp_path):
-    """A pre-r12 store has no metadata file; the on-disk directory shape
-    is the fallback authority. Resuming a snapshot-layout store with the
-    bucketed default must fail fast (the silent-empty-state hazard), and
-    resuming with the matching mode adopts + persists the config."""
-    import pytest
-
-    from csv_loader_spark.streaming.changelog import (
-        _meta_path,
-        read_store_meta,
-        resolve_store_config,
-    )
-
-    store = str(tmp_path / "store")
-    state = os.path.join(store, "state")
-    seed_state(_corpus(spark), store, state_mode="snapshot")
-    os.remove(_meta_path(state))  # simulate a pre-r12 store
-    with pytest.raises(ValueError, match="layout"):
-        resolve_store_config(spark, state, "bucketed", 64)
-    resolve_store_config(spark, state, "snapshot", 64)
-    assert read_store_meta(state)["state_mode"] == "snapshot"
-
-
-def test_pipeline_fails_fast_on_mode_mismatch(spark, tmp_path):
-    """End-to-end: a snapshot-mode store resumed through the pipeline
-    with the bucketed default terminates the query with the layout
-    error instead of misclassifying every upsert as 'added'."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    store = str(tmp_path / "store")
-    src = tmp_path / "events"
-    src.mkdir()
-    seed_state(_corpus(spark), store, state_mode="snapshot")
-    _write_events(src / "e1.json", [(1, "s", "upsert", "alpha v2", 0)])
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA).json(str(src)),
-        store,
-        str(tmp_path / "ck"),
-        available_now=True,  # state_mode defaults to "bucketed": mismatch
-    )
-    try:
-        q.awaitTermination(180)
-        raised = None
-    except StreamingQueryException as e:
-        raised = str(e)
-    assert raised is not None and "state_mode" in raised
-    # no state leaf was written and no changelog landed
-    assert not os.path.exists(os.path.join(store, "changelog"))
-
-
 def test_null_doc_id_events_rejected(spark):
     """A null-doc_id event has no identity and would collide with the
     store's marker rows (xxhash64(null) still buckets it); it must be
@@ -534,26 +153,36 @@ def test_null_doc_id_events_rejected(spark):
     assert {r["doc_id"] for r in new_state.collect()} == {1, 2, 3, 4}
 
 
-def test_overwrite_mode_scoped_to_writer_not_session(spark, tmp_path):
-    """The dynamic partition overwrite is a per-write option; the session
-    conf must come back untouched (r11 advice: a session-conf set makes
-    every later partitioned overwrite in the session dynamic)."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key)
-    store = str(tmp_path / "store")
-    src = tmp_path / "events"
-    src.mkdir()
-    seed_state(_corpus(spark), store, n_buckets=4)
-    _write_events(src / "e1.json", [(4, "s", "upsert", "delta doc", 0)])
-    q = start_changelog_pipeline(
-        spark.readStream.schema(_EV_SCHEMA).json(str(src)),
-        store,
-        str(tmp_path / "ck"),
-        n_buckets=4,
-        available_now=True,
+def test_two_batch_fold_equals_one_batch(spark):
+    """Folding the events in two batches (state carried between them)
+    lands the same final state and the same per-verdict counts as one
+    batch, for disjoint doc_ids per batch."""
+    first = [
+        (4, "s", "upsert", "delta document freshly crawled now", 0),
+        (3, "t", "delete", None, 0),
+    ]
+    second = [
+        (2, "s", "upsert", "beta document about a new topic", 1),
+        (6, "t", "upsert", "zeta document", 1),
+    ]
+    state = snapshot_state(_corpus(spark))
+    one_log, one_state = apply_version_events(
+        state, spark.createDataFrame(first + second, _EV_SCHEMA)
     )
-    q.awaitTermination(180)
-    assert spark.conf.get(key) == before
-    assert {r["doc_id"] for r in read_state_snapshot(spark, store).collect()} == {
-        1, 2, 3, 4,
+    log1, mid = apply_version_events(state, spark.createDataFrame(first, _EV_SCHEMA))
+    log2, two_state = apply_version_events(
+        mid, spark.createDataFrame(second, _EV_SCHEMA)
+    )
+    two = {}
+    for r in log1.collect() + log2.collect():
+        key = (r["source"], r["verdict"])
+        n, d = two.get(key, (0, 0))
+        two[key] = (n + r["n_docs"], d + r["tok_delta"])
+    one = {
+        (r["source"], r["verdict"]): (r["n_docs"], r["tok_delta"])
+        for r in one_log.collect()
     }
+    assert two == one
+    assert sorted(map(tuple, two_state.collect())) == sorted(
+        map(tuple, one_state.collect())
+    )

@@ -416,3 +416,49 @@ def test_sql_subcommand_error_paths(tmp_path, spark, capsys):
                    str(tmp_path / "missing.sql")])
     assert rc == 1
     assert "sql file not found" in capsys.readouterr().err
+
+
+def test_get_spark_returns_the_active_session_unchanged(spark):
+    """A second get_spark call hands back the running session as it
+    stands: its own arguments apply only to a session it creates."""
+    from csv_loader_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        again = get_spark("another_app", shuffle_partitions=3)
+        assert again.conf.get(key) == "7"
+        assert again.sparkContext is spark.sparkContext
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_repeated_cli_main_logs_no_existing_session_warning(tmp_path):
+    """cli.main in a process that already has a session (perfbench calls
+    it once per pass) re-applies no conf, so Spark logs no 'Using an
+    existing Spark session' WARN. Runs in a fresh process: the WARN is
+    the JVM's, on the JVM's own stderr."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = str(tmp_path / "pings.csv")
+    write_narrow_csv(path)
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from csv_loader_spark.cli import main\n"
+        f"assert main(['-f', {path!r}, '--dry-run']) == 0\n"
+        f"assert main(['-f', {path!r}, '--dry-run']) == 0\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.count(f"{len(NARROW_ROWS)} unique vehicles") == 2
+    assert "Using an existing Spark session" not in proc.stderr

@@ -1,20 +1,15 @@
-"""Stream-static incremental-ingest dedup (streaming/ingest_dedup.py):
-arriving document batches anti-join a STATIC fingerprint index (stateless
-per-batch probe) then dedup within the stream — and the streaming run must
-land exactly the batch twin's answer (q104's shape)."""
+"""Ingest-time dedup (streaming/ingest_dedup.py): arriving documents
+anti-join a static fingerprint index then dedup among themselves — a
+streaming run must land exactly the batch answer (q104's shape) — and the
+near-dup verdict tiers keep their precedence and precision rules."""
 
 import json
-import os
 
 from pyspark.sql import functions as F
 
 from csv_loader_spark.streaming.ingest_dedup import (
-    append_to_index,
     fingerprint_index,
     novel_documents,
-    read_index,
-    seed_index,
-    start_ingest_pipeline,
 )
 
 _SCHEMA = "doc_id long, ts timestamp, text string"
@@ -106,143 +101,14 @@ def test_index_probe_carries_only_fingerprints(spark):
     assert "LeftAnti" in plan
 
 
-def test_ingest_pipeline_grows_index_and_survives_replay(spark, tmp_path):
-    """The closed loop: batch N+1's probe sees batch N's admissions via the
-    index store (no unbounded stream state), a stopped-and-restarted stream
-    does not re-admit previously accepted content, and a re-delivered batch
-    never double-appends — even with its ledger record stripped."""
-    idx = str(tmp_path / "index")
-    acc = str(tmp_path / "accepted")
-    ck = str(tmp_path / "ck")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    corpus = spark.createDataFrame(
-        [(i, f"seed corpus document {i}") for i in range(3)],
-        "doc_id long, text string",
-    )
-    seed_index(corpus, idx)
-    assert read_index(spark, idx).count() == 3
-
-    _write_batch(
-        src / "b1.json",
-        [
-            (100, "2026-01-01 10:00:00", "seed corpus document 1"),  # corpus dup
-            (101, "2026-01-01 10:00:01", "fresh document alpha"),
-            (102, "2026-01-01 10:00:02", "fresh document beta"),
-            (103, "2026-01-01 10:00:03", "fresh document alpha"),  # in-batch dup
-        ],
-    )
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    # alpha + beta admitted; their fps now IN the index
-    assert read_index(spark, idx).count() == 5
-
-    # batch 2 lands after a stream restart: cross-batch dup of alpha must be
-    # rejected by the GROWN index, not by stream state (none is kept)
-    _write_batch(
-        src / "b2.json",
-        [
-            (200, "2026-01-01 10:01:00", "fresh document alpha"),  # cross-batch dup
-            (201, "2026-01-01 10:01:01", "seed corpus document 0"),  # corpus dup
-            (202, "2026-01-01 10:01:02", "brand new document gamma"),
-        ],
-    )
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-
-    accepted = spark.read.parquet(acc)
-    got = {(r["doc_id"], r["text"]) for r in accepted.select("doc_id", "text").collect()}
-    assert got == {
-        (101, "fresh document alpha"),
-        (102, "fresh document beta"),
-        (202, "brand new document gamma"),
-    }
-    n_idx = read_index(spark, idx).count()
-    assert n_idx == 6  # 3 seed + alpha + beta + gamma
-
-    # re-delivery with the ledger intact: fast-skip, no growth
-    bogus = spark.createDataFrame([("deadbeef",)], "fp string")
-    append_to_index(bogus, idx, 0)
-    assert read_index(spark, idx).count() == n_idx
-
-    # re-delivery with the ledger record STRIPPED (crash-between-write-and-
-    # ledger window): the per-batch overwrite rewrites, never duplicates
-    ledger = os.path.join(idx, "_applied_batches")
-    with open(ledger) as f:
-        lines = [ln for ln in f.read().split() if ln != "1"]
-    with open(ledger, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    batch1_docs = accepted.filter(F.col("batch") == 1).select("doc_id", "text")
-    append_to_index(fingerprint_index(batch1_docs), idx, 1)
-    assert read_index(spark, idx).count() == n_idx
-
-
-def test_redelivery_after_index_write_crash_does_not_lose_the_batch(spark, tmp_path):
-    """The nastiest window: the batch's index partition landed but the
-    ledger record did not (crash between the two). Redelivery re-runs the
-    batch with its own fingerprints already in the store — probing them
-    would anti-join the whole batch away and OVERWRITE the accepted
-    partition with an empty frame. read_index(exclude_batch=...) must
-    make the re-run reproduce the original accepted output instead."""
-    idx = str(tmp_path / "index")
-    acc = str(tmp_path / "accepted")
-    ck = str(tmp_path / "ck")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    seed_index(
-        spark.createDataFrame([(0, "seed doc")], "doc_id long, text string"), idx
-    )
-    _write_batch(src / "b1.json", [(10, "2026-01-01 10:00:00", "fresh delta")])
-
-    # simulate the crash aftermath: batch 0's OWN fps are already in the
-    # index store, but neither the ledger record nor the accepted write
-    # exists (foreachBatch will redeliver batch 0)
-    delta = spark.createDataFrame([(10, "fresh delta")], "doc_id long, text string")
-    fingerprint_index(delta).write.mode("overwrite").parquet(
-        os.path.join(idx, "batch=0")
-    )
-    assert not os.path.exists(os.path.join(idx, "_applied_batches"))
-
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).json(str(src)),
-        idx,
-        acc,
-        ck,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-
-    accepted = spark.read.parquet(acc)
-    assert {(r["doc_id"], r["text"]) for r in accepted.collect()} >= {
-        (10, "fresh delta")
-    }
-    # and the index still holds exactly seed + delta, no duplicates
-    assert read_index(spark, idx).count() == 2
-
-
 # ---------------------------------------------------------------------------
-# r9: the NEAR-dup closed loop (band-signature index alongside the fp index)
+# r9: NEAR-dup verdicts (band-signature index alongside the fp index)
 # ---------------------------------------------------------------------------
 
 # Fixtures chosen so the MinHash band collisions are deterministic (verified
 # against a pure-python replica of the md5 sketch): _NEAR collides with
 # _CORPUS_DOC in 2 of 3 bands, _N1/_N2 collide with each other (3 bands) but
-# not with the corpus, _N3 collides with _N1 (2 bands) only, _GAMMA with
-# nothing.
+# not with the corpus, _GAMMA with nothing.
 _CORPUS_DOC = (
     "the quick brown fox jumps over the lazy dog near the river bank "
     "every sunny morning in spring"
@@ -258,10 +124,6 @@ _N1 = (
 _N2 = (
     "distributed stream processing with incremental checkpoints handles "
     "late data gracefully in production systems"
-)
-_N3 = (
-    "distributed stream processing with incremental checkpoints handles "
-    "late data gracefully in modern pipelines"
 )
 _GAMMA = (
     "graph algorithms on sparse matrices benefit from cache aware "
@@ -306,257 +168,6 @@ def test_ingest_verdicts_batch_rules(spark):
     }
 
 
-def test_neardup_ingest_loop_grows_band_index(spark, tmp_path):
-    """The closed NEAR-dup loop: batch 2's near-dup of a batch-1 admission
-    is rejected by the GROWN band index (no stream state), rejected docs'
-    bands are NOT appended, and redelivery is overwrite-idempotent."""
-    from csv_loader_spark.streaming.ingest_dedup import read_band_index, seed_band_index
-
-    idx = str(tmp_path / "index")
-    bidx = str(tmp_path / "band_index")
-    acc = str(tmp_path / "accepted")
-    ck = str(tmp_path / "ck")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    corpus = spark.createDataFrame(
-        [(0, _CORPUS_DOC)], "doc_id long, text string"
-    )
-    seed_index(corpus, idx)
-    seed_band_index(corpus, bidx)
-    n_seed_bands = read_band_index(spark, bidx).count()
-    assert n_seed_bands >= 1
-
-    _write_batch(
-        src / "b1.json",
-        [
-            (100, "2026-01-01 10:00:00", _NEAR),  # near dup of corpus
-            (101, "2026-01-01 10:00:01", _N1),    # accepted
-            (102, "2026-01-01 10:00:02", _N2),    # near dup of 101 in-batch
-        ],
-    )
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        band_index_path=bidx,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    accepted = spark.read.parquet(acc)
-    assert {r["doc_id"] for r in accepted.collect()} == {101}
-    # only the ACCEPTED doc's bands grew the index
-    n_after_b1 = read_band_index(spark, bidx).count()
-    assert n_after_b1 > n_seed_bands
-
-    # batch 2 after a restart: near-dup of batch 1's admission must be
-    # rejected by the index the loop itself grew
-    _write_batch(
-        src / "b2.json",
-        [
-            (200, "2026-01-01 10:01:00", _N3),    # near dup of 101 (cross-batch)
-            (201, "2026-01-01 10:01:01", _GAMMA), # accepted
-        ],
-    )
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        band_index_path=bidx,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    accepted = spark.read.parquet(acc)
-    assert {r["doc_id"] for r in accepted.collect()} == {101, 201}
-
-    # redelivery idempotence: rerunning a batch's band write never
-    # double-appends (overwrite into its own partition)
-    n_final = read_band_index(spark, bidx).count()
-    from csv_loader_spark.streaming.ingest_dedup import band_signature_index
-
-    batch1 = accepted.filter(F.col("doc_id") == 101).select("doc_id", "text")
-    band_signature_index(batch1).write.mode("overwrite").parquet(
-        os.path.join(bidx, "batch=0")
-    )
-    assert read_band_index(spark, bidx).count() == n_final
-
-
-def test_compact_index_folds_batches_and_preserves_probe(spark, tmp_path):
-    """r9: compaction folds every batch partition into the seed — same
-    fingerprint set, one directory — and the grown-index probe behaves
-    identically before and after; a ledger-stripped redelivery after
-    compaction recreates its partition without corrupting the probe."""
-    from csv_loader_spark.streaming.ingest_dedup import compact_index
-
-    idx = str(tmp_path / "index")
-    acc = str(tmp_path / "accepted")
-    ck = str(tmp_path / "ck")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    seed_index(
-        spark.createDataFrame(
-            [(i, f"seed doc {i}") for i in range(3)], "doc_id long, text string"
-        ),
-        idx,
-    )
-    _write_batch(
-        src / "b1.json",
-        [(10, "2026-01-01 10:00:00", "novel one"), (11, "2026-01-01 10:00:01", "novel two")],
-    )
-    _write_batch(src / "b2.json", [(20, "2026-01-01 10:01:00", "novel three")])
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    before = {r["fp"] for r in read_index(spark, idx).collect()}
-    assert len(before) == 6  # 3 seed + 3 admitted
-
-    folded = compact_index(spark, idx)
-    assert folded == 2  # batch=0 and batch=1 folded into the seed
-    assert [e for e in os.listdir(idx) if e.startswith("batch=")] == ["batch=-1"]
-    after = {r["fp"] for r in read_index(spark, idx).collect()}
-    assert after == before
-
-    # probe against the compacted index still rejects all known content
-    arrivals = spark.createDataFrame(
-        [(100, "novel one"), (101, "truly new")], "doc_id long, text string"
-    )
-    out = novel_documents(arrivals, read_index(spark, idx))
-    assert [r["doc_id"] for r in out.collect()] == [101]
-
-    # second compaction with nothing to fold is a no-op
-    assert compact_index(spark, idx) == 0
-
-    # ledger-stripped redelivery of old batch 0: recreates batch=0 with
-    # fps the seed already holds — probe semantics unchanged
-    ledger = os.path.join(idx, "_applied_batches")
-    with open(ledger) as f:
-        lines = [ln for ln in f.read().split() if ln != "0"]
-    with open(ledger, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    batch0 = spark.createDataFrame(
-        [(10, "novel one"), (11, "novel two")], "doc_id long, text string"
-    )
-    append_to_index(fingerprint_index(batch0), idx, 0)
-    assert {r["fp"] for r in read_index(spark, idx).collect()} == before
-    out = novel_documents(arrivals, read_index(spark, idx))
-    assert [r["doc_id"] for r in out.collect()] == [101]
-
-
-def test_passage_ingest_loop_rejects_recycled_content(spark, tmp_path):
-    """r9 passage-granularity loop: an arrival that recycles a majority of
-    an ACCEPTED doc's passages under a fresh fingerprint is rejected by
-    the grown passage index (the case the exact loop cannot see); novel
-    docs land and extend the index for the next batch."""
-    from csv_loader_spark.streaming.ingest_dedup import (
-        read_passage_index,
-        seed_passage_index,
-    )
-
-    idx = str(tmp_path / "index")
-    pidx = str(tmp_path / "passage_index")
-    acc = str(tmp_path / "accepted")
-    ck = str(tmp_path / "ck")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    # a 60-token corpus doc = 3 passages
-    corpus_text = " ".join(f"corpusword{i}" for i in range(60))
-    corpus = spark.createDataFrame(
-        [(0, corpus_text)], "doc_id long, text string"
-    )
-    seed_index(corpus, idx)
-    seed_passage_index(corpus, pidx)
-    n_seed = read_passage_index(spark, pidx).count()
-    assert n_seed == 3
-
-    novel_text = " ".join(f"novelword{i}" for i in range(60))
-    recycled_corpus = corpus_text + " freshtailword"  # 2/4... 3 of 4 passages known
-    _write_batch(
-        src / "b1.json",
-        [
-            (100, "2026-01-01 10:00:00", recycled_corpus),  # passage_corpus
-            (101, "2026-01-01 10:00:01", novel_text),       # accepted
-        ],
-    )
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        passage_index_path=pidx,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    accepted = spark.read.parquet(acc)
-    assert {r["doc_id"] for r in accepted.collect()} == {101}
-    # the accepted doc's 3 passages grew the index
-    assert read_passage_index(spark, pidx).count() == n_seed + 3
-
-    # batch 2: recycling a majority of doc 101's passages must be caught
-    # by the index the loop itself grew
-    recycled_batch1 = novel_text + " anothertailword"
-    _write_batch(
-        src / "b2.json",
-        [(200, "2026-01-01 10:01:00", recycled_batch1)],
-    )
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        passage_index_path=pidx,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    accepted = spark.read.parquet(acc)
-    assert {r["doc_id"] for r in accepted.collect()} == {101}
-
-
-def test_compact_index_skips_unledgered_inflight_partition(spark, tmp_path):
-    """r9 review fix: a batch partition whose ledger record never landed
-    (crash between index write and ledger) must NOT be folded into the
-    seed — folding would defeat read_index(exclude_batch=...) on
-    redelivery and the batch would anti-join itself away."""
-    from csv_loader_spark.streaming.ingest_dedup import compact_index
-
-    idx = str(tmp_path / "index")
-    seed_index(
-        spark.createDataFrame([(0, "seed doc")], "doc_id long, text string"), idx
-    )
-    # committed batch 0
-    append_to_index(
-        fingerprint_index(
-            spark.createDataFrame([(1, "committed doc")], "doc_id long, text string")
-        ),
-        idx,
-        0,
-    )
-    # IN-FLIGHT batch 1: partition written, ledger record missing
-    fingerprint_index(
-        spark.createDataFrame([(2, "inflight doc")], "doc_id long, text string")
-    ).write.mode("overwrite").parquet(os.path.join(idx, "batch=1"))
-
-    folded = compact_index(spark, idx)
-    assert folded == 1  # only the committed batch folds
-    dirs = sorted(e for e in os.listdir(idx) if e.startswith("batch="))
-    assert dirs == ["batch=-1", "batch=1"]
-    # redelivery of batch 1 still sees its own partition excluded and the
-    # seed WITHOUT its fingerprints — the crash window stays closed
-    probe = read_index(spark, idx, exclude_batch=1)
-    inflight_fp = fingerprint_index(
-        spark.createDataFrame([(2, "inflight doc")], "doc_id long, text string")
-    ).collect()[0]["fp"]
-    assert inflight_fp not in {r["fp"] for r in probe.collect()}
-
-
 def test_doubled_delivery_of_novel_doc_is_still_admitted(spark):
     """r9 review fix: a doubled landing-zone file delivering the same
     (doc_id, text) row twice in one batch must yield ONE accepted verdict
@@ -584,142 +195,6 @@ def test_doubled_delivery_of_novel_doc_is_still_admitted(spark):
     )
     got_p = sorted((r["doc_id"], r["verdict"]) for r in out_p.collect())
     assert got_p == [(10, "accepted"), (11, "accepted")]
-
-
-def test_compact_band_index_with_fp_ledger(spark, tmp_path):
-    """r9 review fix: the band store has no ledger of its own — compaction
-    must take the fingerprint store's ledger via ledger_path; without it
-    the band store would never compact (silent no-op)."""
-    from csv_loader_spark.streaming.ingest_dedup import (
-        compact_index,
-        read_band_index,
-        seed_band_index,
-    )
-
-    idx = str(tmp_path / "index")
-    bidx = str(tmp_path / "band_index")
-    acc = str(tmp_path / "accepted")
-    ck = str(tmp_path / "ck")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    corpus = spark.createDataFrame([(0, _CORPUS_DOC)], "doc_id long, text string")
-    seed_index(corpus, idx)
-    seed_band_index(corpus, bidx)
-    _write_batch(src / "b1.json", [(10, "2026-01-01 10:00:00", _N1)])
-    _write_batch(src / "b2.json", [(20, "2026-01-01 10:01:00", _GAMMA)])
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        band_index_path=bidx,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    before = {(r["band"], r["bkey"]) for r in read_band_index(spark, bidx).collect()}
-
-    # without the fp ledger the band store looks all-in-flight: no-op
-    assert compact_index(spark, bidx) == 0
-    # with it, both committed batches fold and the content is unchanged
-    assert compact_index(spark, bidx, ledger_path=idx) == 2
-    assert [e for e in os.listdir(bidx) if e.startswith("batch=")] == ["batch=-1"]
-    after = {(r["band"], r["bkey"]) for r in read_band_index(spark, bidx).collect()}
-    assert after == before
-
-
-def test_ingest_loop_compacts_on_cadence(spark, tmp_path):
-    """r10: compact_every=K runs the janitor INSIDE the loop — after
-    batch 1 commits (K=2), batches 0-1 fold into the seed while the
-    stream is still running, batch 2 lands as its own partition, and the
-    grown-index probe result is unchanged by the mid-stream fold."""
-    idx = str(tmp_path / "index")
-    acc = str(tmp_path / "accepted")
-    ck = str(tmp_path / "ck")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    _write_batch(src / "b1.json", [(10, "2026-01-01 10:00:00", "novel one")])
-    _write_batch(src / "b2.json", [(11, "2026-01-01 10:01:00", "novel two")])
-    _write_batch(src / "b3.json", [(12, "2026-01-01 10:02:00", "novel three")])
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        ck,
-        compact_every=2,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    # batches 0+1 folded mid-stream (cadence fired at batch 1), batch 2
-    # committed AFTER the fold and still stands alone — i.e. the fold ran
-    # inside the loop, not at stream end
-    parts = sorted(e for e in os.listdir(idx) if e.startswith("batch="))
-    assert parts == ["batch=-1", "batch=2"]
-    assert {r["doc_id"] for r in spark.read.parquet(acc).collect()} == {10, 11, 12}
-
-    # probe against the folded index: all three contents still rejected
-    arrivals = spark.createDataFrame(
-        [(100, "novel one"), (101, "novel three"), (102, "truly new")],
-        "doc_id long, text string",
-    )
-    out = novel_documents(arrivals, read_index(spark, idx))
-    assert [r["doc_id"] for r in out.collect()] == [102]
-
-
-def test_guard_refuses_empty_overwrite_of_landed_partition(spark, tmp_path):
-    """The r9-advice hazard, end-to-end: after compaction folds a batch's
-    fingerprints into the seed, a LEDGER-STRIPPED redelivery of that
-    batch probes its own fingerprints (exclude_batch can no longer hide
-    them), computes an empty novel frame, and must FAIL LOUDLY instead of
-    overwriting the landed accepted partition with nothing."""
-    import pytest
-
-    from csv_loader_spark.streaming.ingest_dedup import (
-        compact_index,
-        guard_accepted_overwrite,
-    )
-
-    idx = str(tmp_path / "index")
-    acc = str(tmp_path / "accepted")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    _write_batch(
-        src / "b1.json",
-        [(10, "2026-01-01 10:00:00", "landed doc one"),
-         (11, "2026-01-01 10:00:01", "landed doc two")],
-    )
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).json(str(src)),
-        idx,
-        acc,
-        str(tmp_path / "ck1"),
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    assert compact_index(spark, idx) == 1  # batch=0 folded into the seed
-    os.remove(os.path.join(idx, "_applied_batches"))  # the lost ledger
-
-    # redelivery under a FRESH checkpoint lineage re-runs batch 0; the
-    # guard converts silent data loss into a streaming failure
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).json(str(src)),
-        idx,
-        acc,
-        str(tmp_path / "ck2"),
-        available_now=True,
-    )
-    with pytest.raises(Exception, match="refusing to overwrite"):
-        q.awaitTermination(180)
-        raise AssertionError("stream should have failed on the guard")
-    # the landed partition is intact
-    assert {r["doc_id"] for r in spark.read.parquet(acc).collect()} == {10, 11}
-
-    # unit shape: an empty frame over a never-landed batch id is fine
-    guard_accepted_overwrite(spark, acc, 7, True)
-    # and a NON-empty novel frame over a landed partition is fine too
-    guard_accepted_overwrite(spark, acc, 0, False)
 
 
 def test_verified_verdicts_match_membership_on_true_neardups(spark):
@@ -815,271 +290,3 @@ def test_verify_tier_admits_band_false_positives(spark):
         .count()
     )
     assert witnesses == 0
-
-
-def test_verify_members_ingest_loop(spark, tmp_path):
-    """The closed loop in verify mode: the band store holds member rows
-    (band, bkey, doc_id, toks), cross-batch verified rejection works off
-    the store the loop itself grew, and accepted docs append their
-    member rows back."""
-    from csv_loader_spark.streaming.ingest_dedup import (
-        read_band_member_index,
-        seed_band_member_index,
-    )
-
-    idx = str(tmp_path / "index")
-    bidx = str(tmp_path / "band_index")
-    acc = str(tmp_path / "accepted")
-    src = tmp_path / "arrivals"
-    src.mkdir()
-
-    corpus = spark.createDataFrame([(0, _CORPUS_DOC)], "doc_id long, text string")
-    seed_index(corpus, idx)
-    seed_band_member_index(corpus, bidx)
-
-    _write_batch(
-        src / "b1.json",
-        [
-            (100, "2026-01-01 10:00:00", _NEAR),  # verified near dup of corpus
-            (101, "2026-01-01 10:00:01", _N1),    # accepted
-        ],
-    )
-    _write_batch(
-        src / "b2.json",
-        [
-            (200, "2026-01-01 10:01:00", _N3),    # verified near dup of 101
-            (201, "2026-01-01 10:01:01", _GAMMA), # accepted
-        ],
-    )
-    import os as _os
-
-    for i, name in enumerate(("b1.json", "b2.json")):
-        _os.utime(src / name, (1_700_000_000 + i, 1_700_000_000 + i))
-    q = start_ingest_pipeline(
-        spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
-        idx,
-        acc,
-        str(tmp_path / "ck"),
-        band_index_path=bidx,
-        verify_members=True,
-        available_now=True,
-    )
-    q.awaitTermination(180)
-    assert {r["doc_id"] for r in spark.read.parquet(acc).collect()} == {101, 201}
-    # the grown store carries shingle arrays for the admitted docs
-    members = read_band_member_index(spark, bidx)
-    assert {r["doc_id"] for r in members.collect()} == {0, 101, 201}
-    assert members.filter(F.size("toks") < 1).count() == 0
-
-
-def test_compact_member_index_recaps_buckets(spark, tmp_path):
-    """r10: folding the member store re-applies the GLOBAL per-bucket cap
-    — the compacted seed equals a fresh batch build over the same corpus
-    at the same cap (keep-first by doc_id), and an in-flight unledgered
-    partition stays put."""
-    from csv_loader_spark.streaming.ingest_dedup import (
-        band_member_index,
-        compact_member_index,
-        read_band_member_index,
-    )
-    from csv_loader_spark.streaming.continuous_agg import _record_applied
-
-    path = str(tmp_path / "members")
-    ledger = str(tmp_path / "members")
-    # five near-identical docs -> shared buckets with 5 members each
-    docs = [(i, _CORPUS_DOC) for i in range(5)]
-    corpus = spark.createDataFrame(docs, "doc_id long, text string")
-    # write each doc as its own "batch" partition (per-append cap never
-    # fires at batch size 1), committing all of them
-    for i in range(5):
-        one = spark.createDataFrame([docs[i]], "doc_id long, text string")
-        band_member_index(one).write.mode("overwrite").parquet(
-            os.path.join(path, f"batch={i}")
-        )
-        _record_applied(ledger, i)
-    before = read_band_member_index(spark, path)
-    assert before.groupBy("band", "bkey").count().agg(
-        F.max("count")
-    ).collect()[0][0] == 5
-
-    folded = compact_member_index(spark, path, ledger_path=ledger, cap=2)
-    assert folded == 5
-    after = read_band_member_index(spark, path)
-    # every bucket trimmed to the cap...
-    assert after.groupBy("band", "bkey").count().agg(
-        F.max("count")
-    ).collect()[0][0] <= 2
-    # ...and the survivors equal the batch build at the same cap
-    expected = {
-        (r["band"], r["bkey"], r["doc_id"])
-        for r in band_member_index(corpus, cap=2).collect()
-    }
-    got = {(r["band"], r["bkey"], r["doc_id"]) for r in after.collect()}
-    assert got == expected
-
-    # an unledgered in-flight partition is neither folded nor capped away
-    one = spark.createDataFrame([(99, _GAMMA)], "doc_id long, text string")
-    band_member_index(one).write.mode("overwrite").parquet(
-        os.path.join(path, "batch=9")
-    )
-    assert compact_member_index(spark, path, ledger_path=ledger, cap=2) == 0
-    assert os.path.isdir(os.path.join(path, "batch=9"))
-    assert 99 in {
-        r["doc_id"] for r in read_band_member_index(spark, path).collect()
-    }
-
-
-def test_compact_member_index_recovers_mid_swap_crash(spark, tmp_path):
-    """r10 review: a crash BETWEEN the re-cap's two renames leaves no
-    seed and the pre-crash seed in the backup — the next call must
-    restore it BEFORE folding (folding first would rebuild a seed
-    without the backed-up history and then delete the backup). Also: a
-    quiet cadence tick (nothing folded, no recovery) must not rewrite
-    the seed."""
-    import shutil
-
-    from csv_loader_spark.streaming.ingest_dedup import (
-        band_member_index,
-        compact_member_index,
-        read_band_member_index,
-    )
-    from csv_loader_spark.streaming.continuous_agg import _record_applied
-
-    path = str(tmp_path / "members")
-    docs = [(i, f"member doc number {i} with some words") for i in range(3)]
-    for i, row in enumerate(docs):
-        one = spark.createDataFrame([row], "doc_id long, text string")
-        band_member_index(one).write.mode("overwrite").parquet(
-            os.path.join(path, f"batch={i}")
-        )
-        _record_applied(path, i)
-    assert compact_member_index(spark, path, ledger_path=path, cap=2) == 3
-    before = {
-        (r["band"], r["bkey"], r["doc_id"])
-        for r in read_band_member_index(spark, path).collect()
-    }
-
-    # simulate the mid-swap crash: seed renamed aside, stale tmp left over
-    seed = os.path.join(path, "batch=-1")
-    backup = path + "._recap_backup"
-    tmpdir = path + "._recap_tmp"
-    os.rename(seed, backup)
-    shutil.copytree(backup, tmpdir)
-    # next cadence call: nothing new to fold, but recovery must restore
-    # the seed and re-run the cap — not lose the store
-    assert compact_member_index(spark, path, ledger_path=path, cap=2) == 0
-    assert not os.path.exists(backup) and not os.path.exists(tmpdir)
-    after = {
-        (r["band"], r["bkey"], r["doc_id"])
-        for r in read_band_member_index(spark, path).collect()
-    }
-    assert after == before
-
-    # quiet tick: no fold, no recovery -> the seed files are untouched
-    files_before = sorted(os.listdir(seed))
-    assert compact_member_index(spark, path, ledger_path=path, cap=2) == 0
-    assert sorted(os.listdir(seed)) == files_before
-
-
-# --- r13: store layout metadata (the changelog _store_meta hardening) -------
-
-
-def test_store_meta_written_and_tier_flip_fails_fast(spark, tmp_path):
-    """Each index store persists {kind, layout params} at seed; opening a
-    BAND store as the verify (member) tier — or vice versa — fails fast
-    instead of silently probing the wrong layout."""
-    import json
-
-    import pytest
-
-    from csv_loader_spark.streaming.ingest_dedup import (
-        _STORE_META_FILE,
-        read_band_index,
-        read_band_member_index,
-        seed_band_index,
-        seed_band_member_index,
-        seed_index,
-        seed_passage_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, _CORPUS_DOC)], "doc_id long, text string"
-    )
-    bidx = str(tmp_path / "band_index")
-    seed_band_index(corpus, bidx)
-    meta = json.load(open(f"{bidx}/{_STORE_META_FILE}"))
-    assert meta["kind"] == "band" and meta["n_hashes"] >= 1
-
-    # tier flip: probe the band store as a member store -> fail fast
-    with pytest.raises(ValueError, match="verify_members|built as"):
-        read_band_member_index(spark, bidx)
-    # and seeding the other tier over it fails too
-    with pytest.raises(ValueError, match="built as"):
-        seed_band_member_index(corpus, bidx)
-    # the matching tier still opens fine
-    assert read_band_index(spark, bidx).count() >= 1
-
-    midx = str(tmp_path / "member_index")
-    seed_band_member_index(corpus, midx)
-    assert json.load(open(f"{midx}/{_STORE_META_FILE}"))["kind"] == "band_member"
-    with pytest.raises(ValueError, match="built as"):
-        read_band_index(spark, midx)
-
-    # fp / passage kinds are disjoint as well
-    fpi = str(tmp_path / "fp_index")
-    seed_index(corpus, fpi)
-    with pytest.raises(ValueError, match="built as"):
-        seed_passage_index(corpus, fpi)
-
-
-def test_store_meta_geometry_drift_fails_fast(spark, tmp_path):
-    """A store seeded under a DIFFERENT MinHash geometry (e.g. an older
-    build with other band parameters) is rejected on open — the silent
-    wrong-candidate class the metadata exists to close."""
-    import json
-
-    import pytest
-
-    from csv_loader_spark.streaming.ingest_dedup import (
-        _STORE_META_FILE,
-        read_band_index,
-        seed_band_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, _CORPUS_DOC)], "doc_id long, text string"
-    )
-    bidx = str(tmp_path / "band_index")
-    seed_band_index(corpus, bidx)
-    # simulate a store written by a build with different geometry
-    p = f"{bidx}/{_STORE_META_FILE}"
-    meta = json.load(open(p))
-    meta["n_hashes"] = meta["n_hashes"] + 2
-    json.dump(meta, open(p, "w"))
-    with pytest.raises(ValueError, match="built as"):
-        read_band_index(spark, bidx)
-
-
-def test_store_meta_legacy_store_reads_then_adopts_on_write(spark, tmp_path):
-    """Pre-r13 stores (data, no meta file): reads stay side-effect-free
-    and permissive; the next WRITE stamps the running layout."""
-    import os
-
-    from csv_loader_spark.streaming.ingest_dedup import (
-        _STORE_META_FILE,
-        append_to_index,
-        fingerprint_index,
-        read_index,
-        seed_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, _CORPUS_DOC)], "doc_id long, text string"
-    )
-    fpi = str(tmp_path / "fp_index")
-    seed_index(corpus, fpi)
-    os.remove(f"{fpi}/{_STORE_META_FILE}")  # make it a legacy store
-    assert read_index(spark, fpi).count() >= 1  # permissive read
-    assert not os.path.exists(f"{fpi}/{_STORE_META_FILE}")  # no side effect
-    append_to_index(fingerprint_index(corpus), fpi, 0)  # write adopts
-    assert os.path.exists(f"{fpi}/{_STORE_META_FILE}")

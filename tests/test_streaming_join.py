@@ -9,8 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from csv_loader_spark.io.tables import load_table
-from csv_loader_spark.streaming.events_stream import attribution_pairs, stream_events
+from csv_loader_spark.io.tables import load_table, normalize_event_ts
+from csv_loader_spark.session import tune_session
+from csv_loader_spark.streaming.events_stream import attribution_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,7 +32,13 @@ def test_stream_stream_join_equals_batch(spark, tmp_path):
     src = tmp_path / "events_src"
     src.mkdir()
     shutil.copy(f"{SF_DIR}/events.parquet", src / "events.parquet")
-    stream = stream_events(spark, str(src), max_files_per_trigger=1)
+    tune_session(spark)  # events.parquet's nanosecond timestamps
+    schema = spark.read.parquet(str(src)).schema
+    stream = normalize_event_ts(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
     pairs = attribution_pairs(
         stream.filter(F.col("event_type") == "view"),
         stream.filter(F.col("event_type") == "click"),

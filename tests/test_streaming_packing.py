@@ -1,185 +1,14 @@
-"""Streaming greedy packing must land EXACTLY the batch fold's answer:
-q101's pack_fold resumed across micro-batches from (pack_id, fill) state
-(streaming/packing.py)."""
+"""q101's greedy first-fit fold resumes from carried (pack_id, fill)
+state: folding a size sequence in two halves lands the one-shot answer."""
 
-import json
-
-import pandas as pd
-
-from csv_loader_spark.queries.llm5 import _greedy_pack, pack_fold
-from csv_loader_spark.streaming.packing import pack_stream
-
-_SCHEMA = "source string, doc_id long, n_tok long"
-
-
-def _write_batch(path, rows):
-    with open(path, "w") as f:
-        for source, doc_id, n_tok in rows:
-            f.write(
-                json.dumps({"source": source, "doc_id": doc_id, "n_tok": n_tok})
-                + "\n"
-            )
-
-
-def test_stream_packing_matches_batch_fold(spark, tmp_path):
-    src = tmp_path / "docs"
-    src.mkdir()
-    # capacity 256: per-source sizes chosen to make packs straddle the
-    # batch boundary (pack continues mid-fill into batch 2) and to include
-    # an oversize doc
-    _write_batch(
-        src / "b1.json",
-        [("a", 1, 200), ("a", 2, 40), ("b", 1, 300), ("b", 2, 256)],
-    )
-    _write_batch(
-        src / "b2.json",
-        [("a", 3, 10), ("a", 4, 250), ("b", 3, 1)],
-    )
-
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", 1)  # two real micro-batches
-        .json(str(src))
-    )
-    q = (
-        pack_stream(stream)
-        .writeStream.format("memory")
-        .queryName("packed_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["source"], r["doc_id"]): r["pack_id"]
-        for r in spark.sql("SELECT * FROM packed_stream").collect()
-    }
-
-    # batch twin over the concatenation, per source
-    all_rows = [
-        ("a", 1, 200), ("a", 2, 40), ("a", 3, 10), ("a", 4, 250),
-        ("b", 1, 300), ("b", 2, 256), ("b", 3, 1),
-    ]
-    expected = {}
-    for source in ("a", "b"):
-        pdf = pd.DataFrame(
-            [r for r in all_rows if r[0] == source],
-            columns=["source", "doc_id", "n_tok"],
-        )
-        out = _greedy_pack(pdf)
-        for _, r in out.iterrows():
-            expected[(source, r["doc_id"])] = r["pack_id"]
-    assert got == expected
-    # spot-check the interesting facts: source a's pack 0 carries 200+40+10
-    # ACROSS the batch boundary; b's oversize doc 1 (300) sits alone
-    assert got[("a", 3)] == got[("a", 1)] == 0 and got[("a", 4)] == 1
-    assert got[("b", 1)] == 0 and got[("b", 2)] == 1 and got[("b", 3)] == 2
-
-
-def test_out_of_order_batch_is_quarantined(spark, tmp_path):
-    """Docs arriving at-or-behind the last folded doc_id must land with
-    pack_id = QUARANTINED (-1), leaving the carry — and every in-order
-    doc's assignment — exactly as if the late docs never arrived."""
-    from csv_loader_spark.streaming.packing import QUARANTINED
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    _write_batch(src / "b1.json", [("a", 3, 200), ("a", 4, 40)])
-    # batch 2 regresses: docs 1 and 2 are behind the fold (last_doc = 4);
-    # doc 5 is in order and must continue pack 0 (fill 240 + 10 <= 256)
-    _write_batch(
-        src / "b2.json", [("a", 1, 100), ("a", 2, 7), ("a", 5, 10)]
-    )
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        pack_stream(stream)
-        .writeStream.format("memory")
-        .queryName("packed_ooo")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        r["doc_id"]: r["pack_id"]
-        for r in spark.sql("SELECT * FROM packed_ooo").collect()
-    }
-    assert got == {3: 0, 4: 0, 5: 0, 1: QUARANTINED, 2: QUARANTINED}
+from csv_loader_spark.queries.llm5 import pack_fold
 
 
 def test_pack_fold_resumption_equals_one_shot():
-    """Folding in two halves from carried state == folding once (the
-    property the streaming state protocol relies on)."""
+    """Folding in two halves from carried state == folding once."""
     sizes = [100, 200, 56, 300, 1, 255, 2, 256, 10]
     one, cur1, fill1, _ = pack_fold(sizes)
     first, cur, fill, started = pack_fold(sizes[:4])
     second, cur2, fill2, _ = pack_fold(sizes[4:], cur, fill, started)
     assert first + second == one
     assert (cur2, fill2) == (cur1, fill1)
-
-
-def test_within_batch_duplicate_doc_is_quarantined(spark, tmp_path):
-    """A doubled landing-zone file delivers the same doc_id twice in ONE
-    micro-batch: the first copy folds, the second is quarantined — the
-    fill carry counts the doc once (same contract as the cross-batch
-    last_doc guard)."""
-    from csv_loader_spark.streaming.packing import QUARANTINED
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    _write_batch(
-        src / "b1.json",
-        [("s", 1, 600), ("s", 2, 500), ("s", 2, 500), ("s", 3, 400)],
-    )
-    stream = spark.readStream.schema(_SCHEMA).json(str(src))
-    q = (
-        pack_stream(stream)
-        .writeStream.format("memory")
-        .queryName("packed_dup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM packed_dup").collect()
-    assignments = sorted((r["doc_id"], r["pack_id"]) for r in rows)
-    # dedup'd fold at cap 256: each of [600], [500], [400] is oversize and
-    # packs alone (packs 0, 1, 2); the second copy of doc 2 surfaces as
-    # quarantine instead of folding into the carry
-    assert assignments == [(1, 0), (2, QUARANTINED), (2, 1), (3, 2)]
-
-
-def test_duplicate_doc_with_differing_ntok_folds_smallest(spark, tmp_path):
-    """r9 determinism guard: duplicated doc_id rows carrying DIFFERENT
-    n_tok values (a corrupted redelivery) must fold a deterministic copy —
-    the (doc_id, n_tok) sort makes it the smallest n_tok, replay-stable
-    regardless of pandas' unstable default sort."""
-    from csv_loader_spark.streaming.packing import QUARANTINED
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    # doc 2 arrives as 500 AND 90 tokens; the 90-token copy must fold
-    # (doc 3 at 160 then fits the same 256-cap pack iff 90 folded)
-    _write_batch(
-        src / "b1.json",
-        [("s", 1, 600), ("s", 2, 500), ("s", 2, 90), ("s", 3, 160)],
-    )
-    stream = spark.readStream.schema(_SCHEMA).json(str(src))
-    q = (
-        pack_stream(stream)
-        .writeStream.format("memory")
-        .queryName("packed_dup_ntok")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM packed_dup_ntok").collect()
-    got = sorted((r["doc_id"], r["n_tok"], r["pack_id"]) for r in rows)
-    # fold: [600] alone (pack 0), then 90+160=250 share pack 1;
-    # the 500-token copy surfaces as quarantine
-    assert got == [(1, 600, 0), (2, 90, 1), (2, 500, QUARANTINED), (3, 160, 1)]
