@@ -16,8 +16,9 @@ of a ping-analytics engine needs, re-expressed Spark-first:
   range-partitioning by the Z key then gives file-level min/max pruning
   for 2-D box predicates (the technique behind Delta/Iceberg Z-order
   clustering, public literature: Morton 1966; Orenstein & Merrett 1984).
-  ``zorder_key`` is the layout key; the registered query reports the
-  Z-bucket locality of a box predicate.
+  ``zorder_key``/``write_zordered`` are the layout ops; the registered
+  query reports the Z-bucket locality of a box predicate. No entry point
+  writes a Z-ordered layout; tests/test_geo.py checks its file pruning.
 
 Determinism: no table carries coordinates, so both operators derive
 integer coordinates in [0, 65536) from ``c_custkey`` via the portable
@@ -32,7 +33,11 @@ Scale notes (100 TB):
   occupancy bounds candidate work; a hotspot cell is the skew case and
   takes the same salting/cap treatment as every posting join in this
   repo (llm docstrings); AQE's skew-join split handles the moderate case.
-- q158's Z key is 32 integer mul/add terms, fully whole-stage-codegen'd.
+- q158's Z key is 32 integer mul/add terms, fully whole-stage-codegen'd;
+  ``write_zordered`` is a single ``repartitionByRange`` (one range
+  shuffle with a driver-side sampled boundary pass, Spark's standard
+  global-sort machinery) + per-partition sort — the write path Delta's
+  OPTIMIZE ZORDER runs per file group.
 """
 
 from __future__ import annotations
@@ -180,6 +185,21 @@ def zorder_key(x: Column | str, y: Column | str) -> Column:
         raise TypeError("zorder_key takes column NAMES (needs SQL expr)")
     # Spark SQL uses `div` for integer division
     return F.expr(_z_terms(xn, yn).replace("//", "div"))
+
+
+def write_zordered(df: DataFrame, path: str, x: str, y: str, n_files: int) -> None:
+    """Write ``df`` clustered on the Z curve: one range shuffle on the Z
+    key + per-partition sort, so each output file owns a compact Z range
+    and 2-D box predicates prune at file granularity (Delta/Iceberg
+    OPTIMIZE ZORDER's layout, expressed with stock Spark primitives)."""
+    (
+        df.withColumn("_z", zorder_key(x, y))
+        .repartitionByRange(n_files, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
 def _zorder_oracle() -> str:

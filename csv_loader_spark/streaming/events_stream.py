@@ -1,15 +1,65 @@
-"""Streaming event analytics: the watermarked click-attribution join.
+"""Streaming event analytics: the watermarked click-attribution join and
+the windowed counts whose batch form is q22 (queries/relational.py).
 
-The DataFrame API is mode-agnostic, so the same transformation runs as a
-stream-stream join on streaming frames and as a plain interval join on
-batch frames; q165 (queries/relational4.py) runs it in batch under the
-oracle gate, and tests/test_streaming_join.py runs it as a stream.
+The DataFrame API is mode-agnostic, so the same transformation runs on
+streaming and on batch frames. q165 (queries/relational4.py) runs
+``attribution_pairs`` in batch under the oracle gate, and
+tests/test_streaming_join.py runs it as a stream. ``stream_events`` and
+``windowed_counts`` are reached by no entry point; tests/test_events_stream.py
+checks them against q22 in both modes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from csv_loader_spark.io.tables import normalize_event_ts
+from csv_loader_spark.session import tune_session
+
+
+def stream_events(
+    spark: SparkSession, events_dir: str, *, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """Incremental parquet source over an events directory; normalizes the
+    ts column (nanos-bigint or NTZ) exactly like the batch loader."""
+    tune_session(spark)
+    schema = spark.read.parquet(events_dir).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return normalize_event_ts(reader.parquet(events_dir))
+
+
+def windowed_counts(
+    events: DataFrame,
+    *,
+    window: str = "1 hour",
+    slide: str | None = None,
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Tumbling (or sliding, when ``slide`` is set) event-time window counts
+    with a late-data watermark. Works on both batch and streaming frames;
+    state per open window is one partial aggregate, GC'd by the watermark."""
+    win = (
+        F.window("ts", window) if slide is None else F.window("ts", window, slide)
+    )
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy(win.alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
 
 
 def attribution_pairs(

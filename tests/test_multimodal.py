@@ -1,12 +1,14 @@
-"""Multimodal mapInPandas plumbing: schemas, batch iteration, decode tiers."""
+"""Multimodal mapInPandas plumbing: schemas, batch iteration, frame fan-out."""
 
 import hashlib
 
 from csv_loader_spark.ops.multimodal import (
     FEATURE_SCHEMA,
+    FRAME_SCHEMA,
     MEDIA_SCHEMA,
     attach_fake_media,
     extract_features,
+    sample_frames,
 )
 
 
@@ -33,6 +35,24 @@ def test_media_schema_and_features(spark):
     assert r2["content_sha256"] == hashlib.sha256(payload).hexdigest()
     assert abs(r2["mean_byte"] - sum(payload) / len(payload)) < 1e-3
     assert (r2["decoded_width"], r2["decoded_height"]) == (2 + 16, 2 + 16)
+
+
+def test_frame_sampling_fanout(spark):
+    media = attach_fake_media(
+        spark.createDataFrame([(2, "x" * 700)], "doc_id long, text string")
+    )  # doc_id 2 → video; 700 bytes → 10 full 64-byte frames → keep 0,4,8
+    frames = sample_frames(media, frame_size=64, every_n=4)
+    assert _shape(frames.schema) == _shape(FRAME_SCHEMA)
+    rows = sorted(frames.collect(), key=lambda r: r["frame_no"])
+    assert [r["frame_no"] for r in rows] == [0, 4, 8]
+    assert all(len(r["frame_bytes"]) == 64 for r in rows)
+
+
+def test_non_video_produces_no_frames(spark):
+    media = attach_fake_media(
+        spark.createDataFrame([(0, "y" * 700)], "doc_id long, text string")
+    )  # doc_id 0 → image
+    assert sample_frames(media).count() == 0
 
 
 def _make_bmp(width: int, height: int, pixel: tuple[int, int, int]) -> bytes:
@@ -145,6 +165,99 @@ def test_pil_decode_used_when_it_works(monkeypatch):
     w, h, mean = mm._decode_one(b"anything", 1, 1)
     assert (w, h) == (5, 7)
     assert abs(mean - 20.0) < 1e-9
+
+
+def _make_bmp_fn(width: int, height: int, pixel_fn) -> bytes:
+    """24-bit BMP with per-pixel control: pixel_fn(x, y) -> (b, g, r)."""
+    import struct
+
+    stride = ((width * 3 + 3) // 4) * 4
+    rows = []
+    for y in range(height - 1, -1, -1):  # bottom-up, positive height
+        row = bytearray()
+        for x in range(width):
+            row += bytes(pixel_fn(x, y))
+        row += b"\x00" * (stride - len(row))
+        rows.append(bytes(row))
+    pix = b"".join(rows)
+    hdr = struct.pack("<2sIHHI", b"BM", 54 + len(pix), 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(pix), 0, 0, 0, 0)
+    return hdr + info + pix
+
+
+def test_media_dhash_real_decode_distances(spark):
+    """r9 perceptual dHash over real decoded pixels: a one-block edit of a
+    gradient image lands within the q133 Hamming ball, an unrelated image
+    far outside it — computed through mapInPandas over Arrow batches."""
+    from csv_loader_spark.ops.multimodal import media_dhash
+
+    grad = lambda x, y: (x * 7 % 251, x * 7 % 251, x * 7 % 251)
+
+    def grad_edited(x, y):
+        # brighten one interior block: flips at most a couple of bits
+        if 10 <= x < 14 and 10 <= y < 14:
+            return (255, 255, 255)
+        return grad(x, y)
+
+    rnd = lambda x, y: ((x * 37 + y * 91) % 256,) * 3
+    media = spark.createDataFrame(
+        [
+            (1, "image", bytearray(_make_bmp_fn(36, 32, grad)), 36, 32, 0),
+            (2, "image", bytearray(_make_bmp_fn(36, 32, grad_edited)), 36, 32, 0),
+            (3, "image", bytearray(_make_bmp_fn(36, 32, rnd)), 36, 32, 0),
+        ],
+        "doc_id long, media_type string, payload binary, width int, height int, duration_ms int",
+    )
+    sigs = {r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"]) for r in media_dhash(media).collect()}
+
+    def ham(a, b):
+        return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
+
+    assert ham(sigs[1], sigs[2]) <= 3     # near-identical: inside the q133 ball
+    assert ham(sigs[1], sigs[3]) > 10     # unrelated content: far outside
+    assert ham(sigs[1], sigs[1]) == 0
+
+
+def test_media_dhash_pseudo_tier_is_stable(spark):
+    """Non-image bytes fall to the deterministic byte-sampling tier —
+    stable signatures, no error, identical bytes => identical bands."""
+    from csv_loader_spark.ops.multimodal import media_dhash
+
+    media = spark.createDataFrame(
+        [
+            (1, "audio", bytearray(b"not an image " * 40), 0, 0, 0),
+            (2, "audio", bytearray(b"not an image " * 40), 0, 0, 0),
+        ],
+        "doc_id long, media_type string, payload binary, width int, height int, duration_ms int",
+    )
+    sigs = {r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"]) for r in media_dhash(media).collect()}
+    assert sigs[1] == sigs[2]
+
+
+def test_media_dhash_pseudo_tier_matches_engine_side_sigs(spark):
+    """The decoder-side pseudo tier and q133's engine-side Catalyst
+    signatures must be BIT-IDENTICAL on ASCII payloads (same fractional
+    sample positions, byte == codepoint) — so one banded index can mix
+    signatures from both paths."""
+    from csv_loader_spark.ops.multimodal import attach_fake_media, media_dhash
+    from csv_loader_spark.queries.llm8 import dhash_sigs
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog " * 4),
+            (2, "completely different text about query planning " * 3),
+        ],
+        "doc_id long, text string",
+    )
+    engine = {
+        r["doc_id"]: (r["v0"], r["v1"], r["v2"], r["v3"])
+        for r in dhash_sigs(docs).collect()
+    }
+    decoder = {
+        r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
+        for r in media_dhash(attach_fake_media(docs)).collect()
+    }
+    assert engine == decoder
 
 
 def test_wav_parse_rejects_malformed_and_roundtrips(spark):

@@ -112,6 +112,21 @@ def test_directory_of_csvs(spark, tmp_path):
     assert 901 in _by_id(df)
 
 
+def test_ordered_per_vehicle(spark, tmp_path):
+    from csv_loader_spark.io.pings import ordered_per_vehicle
+
+    path = str(tmp_path / "order.csv")
+    with open(path, "w") as f:
+        # interleaved vehicles, shuffled times
+        for ts, vid in [(5, 1), (3, 2), (1, 1), (4, 2), (2, 1)]:
+            f.write(f"2015-06-01 08:30:0{ts}+00,{vid},40.0,-74.0\n")
+    df = ordered_per_vehicle(read_pings(spark, path), num_partitions=2)
+    for part in df.rdd.glom().collect():
+        seen = [(r["vehicle_id"], r["ts_millis"]) for r in part]
+        # within a partition: vehicles contiguous, time ascending per vehicle
+        assert seen == sorted(seen)
+
+
 def test_distinct_dual_counters_expose_truncation(spark, tmp_path):
     # two distinct id STRINGS that truncate to the same int64 (2^64+7 ≡ 7)
     path = str(tmp_path / "collide.csv")
