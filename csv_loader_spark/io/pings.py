@@ -184,25 +184,6 @@ def read_pings(spark: SparkSession, path: str) -> DataFrame:
     return project_pings(read_pings_raw(spark, path))
 
 
-def ordered_per_vehicle(pings: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Restore the ordering guarantee downstream map-matching needs.
-
-    The reference emits rows in file order (single-threaded); a parallel
-    Spark read does not. Global order is neither needed nor scalable — what
-    matters is PER-VEHICLE time order, which this provides by partitioning
-    on vehicle_id and sorting within partitions (one shuffle, no global
-    sort; SURVEY §7.4.5). Iterating any partition yields each vehicle's
-    pings contiguously and time-ascending. No entry point calls it;
-    tests/test_pings_ingest.py checks the order."""
-    parts = [F.col("vehicle_id")]
-    df = (
-        pings.repartition(num_partitions, *parts)
-        if num_partitions
-        else pings.repartition(*parts)
-    )
-    return df.sortWithinPartitions("vehicle_id", "ts_millis")
-
-
 def distinct_vehicle_counts(pings: DataFrame) -> DataFrame:
     """Op 11: the reference's dual exact distinct metric (string ids vs
     truncated int64 ids — the pair exposes >64-bit truncation collisions,

@@ -1,4 +1,6 @@
-"""Iterative graph ops: connected components and fixed-point PageRank.
+"""Iterative graph ops: connected components and fixed-point PageRank,
+plus the trade-graph edge build, hub and PageRank oracle SQL that the
+graph queries share.
 
 Connected components is the dedup pipeline's last step: near-dup PAIRS
 (from MinHash/SimHash/Jaccard) → duplicate CLUSTERS (keep one doc per
@@ -20,19 +22,21 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_loader_spark.io.tables import load_table
+
 #: edge-count ceiling under which an iterative op narrows its working
-#: frames (env-tunable). 4M edges ~ 64 MB of (long, long) rows — the
-#: point where per-stage scheduling overhead dominates per-task work.
-_SMALL_GRAPH_EDGE_MAX_ENV = "SPARK_GRAFT_SMALL_GRAPH_EDGES"
+#: frames. 4M edges ~ 64 MB of (long, long) rows — the point where
+#: per-stage scheduling overhead dominates per-task work.
 _SMALL_GRAPH_EDGE_MAX = 4_000_000
 
+#: PageRank damping d = _DAMPING_NUM / _DAMPING_DEN, in exact integers.
+_DAMPING_NUM, _DAMPING_DEN = 85, 100
 
-def small_graph_coalesce(e: DataFrame, n_rows: int | None = None) -> DataFrame:
+
+def small_graph_coalesce(e: DataFrame) -> DataFrame:
     """Narrow a (lazily checkpointed) iterative working frame when the
     graph is measurably SMALL, else return it untouched.
 
@@ -46,15 +50,11 @@ def small_graph_coalesce(e: DataFrame, n_rows: int | None = None) -> DataFrame:
     narrowing is SIZE-GATED the same way triangle_nodes gates its
     broadcast: count once (the action materializes the checkpoint every
     round reuses — effectively free for an executing caller), coalesce
-    only under ``$SPARK_GRAFT_SMALL_GRAPH_EDGES`` (default 4M) edges.
+    only under ``_SMALL_GRAPH_EDGE_MAX`` (4M) edges.
     ``coalesce`` on the materialized checkpoint is a narrow read-time
     merge — no recompute, values untouched.
     """
-    if n_rows is None:
-        n_rows = e.count()
-    if n_rows > int(
-        os.environ.get(_SMALL_GRAPH_EDGE_MAX_ENV, str(_SMALL_GRAPH_EDGE_MAX))
-    ):
+    if e.count() > _SMALL_GRAPH_EDGE_MAX:
         return e
     cpus = e.sparkSession.sparkContext.defaultParallelism
     return e.coalesce(max(2, cpus // 8))
@@ -69,7 +69,7 @@ def explode_both_directions(pairs: DataFrame, a: str, b: str) -> DataFrame:
     stage inherits; exploding a 2-element struct array emits both
     directed copies from one whole-stage-codegen pass over each pair
     row. Callers typically follow with ``.repartition("src")`` +
-    ``.localCheckpoint()`` (see pagerank_fixed_point, q237/q242/q232)."""
+    ``.localCheckpoint()`` (see pagerank_fixed_point)."""
     return pairs.select(
         F.explode(
             F.array(
@@ -123,6 +123,98 @@ def symmetrized_dedup_edges(raw_pairs: DataFrame, a: str, b: str) -> DataFrame:
         .repartition("src")
         .dropDuplicates(["src", "dst"])
     )
+
+
+def trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer-supplier trade graph of q160, q232, q237 and q242:
+    one (src, dst) row per direction of each distinct (customer,
+    supplier) pair that shares an order. Node ids are even/odd encoded
+    — 2*custkey for a customer, 2*suppkey+1 for a supplier — so the two
+    domains never collide, which is the precondition
+    symmetrized_dedup_edges needs. The frame is NOT checkpointed: each
+    caller checkpoints it, q242 after adding its edge weight (w is
+    symmetric in the endpoints, so computing it post-dedup leaves every
+    edge's value unchanged).
+
+    Edge prep (r15): both directions are EXPLODED from each (cu, su)
+    pair in one pass — no self-union re-executing the join plan — and
+    the edge list is hash-repartitioned by src before the caller's one
+    checkpoint. On a cluster that co-locates each node's adjacency list
+    for every round's join; on local[32] it halved per-round task counts
+    vs the 2x-partitioned union (q237 x100 isolated 6.7-7.7 -> 5.4 s,
+    q242 8.6-9.7 -> 6.1-6.7 s, q232 9.0 -> 6.3 s with its argmax
+    aggregate). r15b: the pair dedup is folded ABOVE that src shuffle
+    (symmetrized_dedup_edges). The trade pairs are near-unique (600k raw
+    -> 587k distinct at sf0.1), so the old pre-explode distinct paid a
+    second full exchange whose map-side partial distinct deduped almost
+    nothing; edge multiset proven identical, 2 shuffles -> 1
+    (plans/r15/q232_edge_build_before/after.txt,
+    plans/r15/q237_edge_build_before/after.txt). pagerank_fixed_point's
+    own ``repartition("src")`` over this frame plans no second exchange:
+    the src layout already satisfies it (tests/test_graph.py).
+    """
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    pairs = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
+        (F.col("o_custkey") * 2).alias("cu"),
+        (F.col("l_suppkey") * 2 + 1).alias("su"),
+    )
+    return symmetrized_dedup_edges(pairs, "cu", "su")
+
+
+def trade_graph_hub(e: DataFrame) -> int:
+    """The max-out-degree ``src`` node of edge frame ``e``, smallest id on
+    ties — the BFS/shortest-path root of q237 and q242. One 1-row collect
+    (a bounded driver-side result, not a data-sized one)."""
+    deg = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+    return int(deg.orderBy(F.desc("d"), "node").limit(1).collect()[0]["node"])
+
+
+#: DuckDB CTEs ``pairs`` and ``e(src, dst)``: the oracle form of
+#: trade_graph_edges (distinct pairs, then both directions).
+TRADE_GRAPH_SQL = """pairs AS (
+      SELECT DISTINCT o_custkey * 2 AS cu, l_suppkey * 2 + 1 AS su
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    ),
+    e AS (
+      SELECT cu AS src, su AS dst FROM pairs
+      UNION ALL SELECT su AS src, cu AS dst FROM pairs
+    )"""
+
+#: DuckDB CTEs ``hub_deg`` and ``hub(node)`` over ``e``: the oracle form
+#: of trade_graph_hub.
+TRADE_GRAPH_HUB_SQL = """hub_deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY src),
+    hub AS (SELECT node FROM hub_deg ORDER BY d DESC, node LIMIT 1)"""
+
+
+def pagerank_oracle(iters: int, scale: int) -> str:
+    """DuckDB CTEs ``deg``, ``n`` and ``r0`` … ``r{iters}`` that reproduce
+    pagerank_fixed_point exactly over a CTE ``e(src, dst)`` the caller
+    defines first; the final ranks are ``r{iters}(node, pr)``. The rounds
+    are unrolled: one ``s{i}`` (summed contributions) and one ``r{i}``
+    per iteration. Nodes are the ``src`` set, which is every node of a
+    symmetrized edge list."""
+    base = scale * (_DAMPING_DEN - _DAMPING_NUM) // _DAMPING_DEN
+    ctes = [
+        "deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY src)",
+        "n AS (SELECT DISTINCT src AS node FROM e)",
+        f"r0 AS (SELECT node, CAST({scale} AS BIGINT) AS pr FROM n)",
+    ]
+    for i in range(1, iters + 1):
+        ctes.append(
+            f"""s{i} AS (
+      SELECT e.dst AS node, CAST(sum(r{i - 1}.pr // d.deg) AS BIGINT) AS s
+      FROM e JOIN r{i - 1} ON e.src = r{i - 1}.node JOIN deg d ON e.src = d.src
+      GROUP BY e.dst
+    ),
+    r{i} AS (
+      SELECT n.node,
+             CAST({base} + ({_DAMPING_NUM} * coalesce(s{i}.s, 0)) // {_DAMPING_DEN}
+                  AS BIGINT) AS pr
+      FROM n LEFT JOIN s{i} USING (node)
+    )"""
+        )
+    return ",\n    ".join(ctes)
 
 
 def connected_components(
@@ -201,9 +293,6 @@ def pagerank_fixed_point(
     dst: str,
     iterations: int = 3,
     scale: int = 1_000_000,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list in EXACT integer arithmetic.
 
@@ -216,8 +305,8 @@ def pagerank_fixed_point(
         pr'(v) = (scale*(den-num)) div den
                  + (num * sum_{u->v} contrib(u)) div den
 
-    i.e. the standard damped power iteration with d = num/den (default
-    0.85), floored at each division. Dangling nodes (no out-edges)
+    i.e. the standard damped power iteration with d = num/den = 85/100,
+    floored at each division. Dangling nodes (no out-edges)
     contribute nothing — the standard simplification; symmetrize the edge
     list to avoid them entirely. Fixed ``iterations`` (no convergence
     probe): rank ordering stabilizes in a few rounds and a fixed count
@@ -238,17 +327,11 @@ def pagerank_fixed_point(
     # (the q237/q242 edge-prep finding). small_graph_coalesce may then
     # narrow it for small graphs — coalesce on the materialized
     # checkpoint is a read-time merge, compatible with either layout.
-    # ``pre_partitioned`` (r16): a caller handing over
-    # symmetrized_dedup_edges output is ALREADY hash-partitioned by src
-    # — repartitioning again here would re-shuffle the identical layout
-    # (same key, and the partition-count default matches: both sides
-    # plan at spark.sql.shuffle.partitions), so the flag skips it and
-    # the edge prep keeps exactly ONE src exchange end to end (q160).
-    # Callers whose edge frame is NOT src-partitioned must leave it False.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not pre_partitioned:
-        e = e.repartition("src")
-    e = e.localCheckpoint(eager=False)
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .repartition("src")
+        .localCheckpoint(eager=False)
+    )
     e = small_graph_coalesce(e)
     # out-degree FOLDED into the node frame (r14): deg is static across
     # rounds, so carrying it on the rank frame replaces the per-round
@@ -270,7 +353,7 @@ def pagerank_fixed_point(
         .localCheckpoint(eager=False)
     )
     pr = nd.select("node", "deg", F.lit(scale).cast("long").alias("pr"))
-    base = scale * (damping_den - damping_num) // damping_den
+    base = scale * (_DAMPING_DEN - _DAMPING_NUM) // _DAMPING_DEN
     for _ in range(iterations):
         contrib = pr.filter(F.col("deg") > 0).select(
             F.col("node").alias("src"), F.expr("pr div deg").alias("c")
@@ -288,7 +371,7 @@ def pagerank_fixed_point(
                 "deg",
                 (
                     F.lit(base).cast("long")
-                    + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
+                    + F.expr(f"({_DAMPING_NUM} * coalesce(s, 0L)) div {_DAMPING_DEN}")
                 ).alias("pr"),
             )
             .localCheckpoint(eager=False)

@@ -55,14 +55,6 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("frame_bytes", T.BinaryType()),
-    ]
-)
-
 
 def attach_fake_media(documents: DataFrame) -> DataFrame:
     """documents → MEDIA_SCHEMA rows with deterministic fake payloads (the
@@ -181,161 +173,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(_batches, FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, frame_size: int = 64, every_n: int = 4) -> DataFrame:
-    """'Video' frame sampling: slice the payload into ``frame_size``-byte
-    frames, keep every ``every_n``-th (FRAME_SCHEMA). A real implementation
-    would seek keyframes via ffmpeg — the fan-out shape (one row in, many
-    rows out through mapInPandas) is what matters here. No entry point
-    calls it; tests/test_multimodal.py checks the fan-out."""
-
-    def _frames(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"doc_id": [], "frame_no": [], "frame_bytes": []}
-            for doc_id, payload, mtype in zip(
-                pdf["doc_id"], pdf["payload"], pdf["media_type"]
-            ):
-                if mtype != "video":
-                    continue
-                b = bytes(payload)
-                for i in range(0, len(b) // frame_size, every_n):
-                    out["doc_id"].append(doc_id)
-                    out["frame_no"].append(i)
-                    out["frame_bytes"].append(b[i * frame_size : (i + 1) * frame_size])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_frames, FRAME_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Perceptual dHash over the media table (r9): the mapInPandas twin of q133
-# ---------------------------------------------------------------------------
-
-DHASH_ROWS, DHASH_COLS = 8, 9  # 8x9 gray cells -> 8x8 difference bits
-DHASH_BANDS = 4  # 4 x 16-bit bands, q133's layout (pigeonhole at hamming<=3)
-
-DHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("b0", T.IntegerType()),
-        T.StructField("b1", T.IntegerType()),
-        T.StructField("b2", T.IntegerType()),
-        T.StructField("b3", T.IntegerType()),
-    ]
-)
-
-
-def _dhash_bands_from_cells(cells: list[float]) -> list[int]:
-    """72 gray cells (row-major 8x9) -> 4 band values, bit (rr*8+c) of band
-    j set iff cell[r][c] < cell[r][c+1] for r = 2j+rr — the SAME packing
-    q133's Catalyst/SQL expressions use (queries/llm8.py), so a pipeline
-    can mix engine-side and decoder-side signatures."""
-    bands = []
-    for j in range(DHASH_BANDS):
-        v = 0
-        for rr in range(2):
-            r = 2 * j + rr
-            for c in range(DHASH_COLS - 1):
-                if cells[r * DHASH_COLS + c] < cells[r * DHASH_COLS + c + 1]:
-                    v |= 1 << (rr * 8 + c)
-        bands.append(v)
-    return bands
-
-
-def _gray_grid_pil(payload: bytes) -> list[float] | None:
-    """REAL dHash grid: PIL grayscale resize to 9x8 (the textbook dHash
-    preprocessing). None when PIL is absent or cannot parse the bytes."""
-    try:
-        from PIL import Image  # type: ignore
-    except ImportError:
-        return None
-    import io as _io
-
-    try:
-        with Image.open(_io.BytesIO(payload)) as img:
-            g = img.convert("L").resize((DHASH_COLS, DHASH_ROWS))
-            return [float(x) for x in g.tobytes()]
-    except Exception:
-        return None
-
-
-def _gray_grid_bmp(payload: bytes) -> list[float] | None:
-    """Real-decode tier without PIL: parse an uncompressed 24-bit BMP and
-    block-average per-pixel gray (mean of BGR) into the 8x9 grid."""
-    import struct as _struct
-
-    if len(payload) < 54 or payload[:2] != b"BM":
-        return None
-    pix_off = _struct.unpack_from("<I", payload, 10)[0]
-    hdr_size = _struct.unpack_from("<I", payload, 14)[0]
-    if hdr_size < 40:
-        return None
-    w, h = _struct.unpack_from("<ii", payload, 18)
-    bpp = _struct.unpack_from("<H", payload, 28)[0]
-    compression = _struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0 or w <= 0 or h == 0:
-        return None
-    rows = abs(h)
-    stride = ((w * 3 + 3) // 4) * 4
-    if pix_off + stride * rows > len(payload):
-        return None
-    # BMP rows are bottom-up when h > 0; read top-down for grid stability
-    order = range(rows - 1, -1, -1) if h > 0 else range(rows)
-    gray = []
-    for r in order:
-        row = payload[pix_off + r * stride : pix_off + r * stride + w * 3]
-        gray.append([
-            (row[3 * x] + row[3 * x + 1] + row[3 * x + 2]) / 3.0 for x in range(w)
-        ])
-    cells = []
-    for gr in range(DHASH_ROWS):
-        y0, y1 = gr * rows // DHASH_ROWS, max(gr * rows // DHASH_ROWS + 1, (gr + 1) * rows // DHASH_ROWS)
-        for gc in range(DHASH_COLS):
-            x0, x1 = gc * w // DHASH_COLS, max(gc * w // DHASH_COLS + 1, (gc + 1) * w // DHASH_COLS)
-            block = [gray[y][x] for y in range(y0, min(y1, rows)) for x in range(x0, min(x1, w))]
-            cells.append(sum(block) / len(block) if block else 0.0)
-    return cells
-
-
-def _gray_grid_pseudo(payload: bytes) -> list[float]:
-    """Deterministic pseudo-decode tier: sample the raw bytes at the same
-    fixed fractional positions q133 samples characters — stable for any
-    byte stream, clearly fake, never an error."""
-    n = len(payload)
-    k = DHASH_ROWS * DHASH_COLS
-    if n == 0:
-        return [0.0] * k
-    return [float(payload[(i * n) // k]) for i in range(k)]
-
-
-def media_dhash(media: DataFrame) -> DataFrame:
-    """Per-asset perceptual dHash band signatures via Arrow-batched
-    mapInPandas — the decoder-side twin of q133's engine-side signatures:
-    PIL grayscale-resize when importable (the textbook dHash), real BMP
-    block-averaging otherwise, deterministic byte sampling as the final
-    tier. Downstream (banded equi-join + Hamming verify) is exactly
-    q133's and engine-side; only the grid extraction needs Python. No
-    entry point calls it; tests/test_multimodal.py checks its tiers and
-    its parity with q133's signatures."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                cells = _gray_grid_pil(p)
-                if cells is None:
-                    cells = _gray_grid_bmp(p)
-                if cells is None:
-                    cells = _gray_grid_pseudo(p)
-                b = _dhash_bands_from_cells(cells)
-                out["doc_id"].append(doc_id)
-                for j in range(DHASH_BANDS):
-                    out[f"b{j}"].append(b[j])
-            yield pd.DataFrame(out)
-
-    return media.select("doc_id", "payload").mapInPandas(_batches, DHASH_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,7 @@ from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.ops.graph import (
     explode_both_directions,
     pagerank_fixed_point,
+    pagerank_oracle,
 )
 from csv_loader_spark.queries.registry import query
 
@@ -297,24 +298,6 @@ TR_MINLEN = 4
 
 
 def _textrank_oracle() -> str:
-    base = TR_SCALE * 15 // 100
-    rounds = []
-    prev = "r0"
-    for i in range(1, TR_ITERS + 1):
-        rounds.append(
-            f"""
-    s{i} AS (
-      SELECT e.dst AS node, CAST(sum({prev}.pr // d.deg) AS BIGINT) AS s
-      FROM e JOIN {prev} ON e.src = {prev}.node JOIN deg d ON e.src = d.src
-      GROUP BY e.dst
-    ),
-    r{i} AS (
-      SELECT n.node,
-             CAST({base} + (85 * coalesce(s{i}.s, 0)) // 100 AS BIGINT) AS pr
-      FROM n LEFT JOIN s{i} USING (node)
-    )"""
-        )
-        prev = f"r{i}"
     return rf"""
     WITH toks AS (
       SELECT string_split_regex(trim(lower(text)), '\s+') AS t FROM documents
@@ -333,15 +316,12 @@ def _textrank_oracle() -> str:
       SELECT pa AS src, pb AS dst FROM pairs
       UNION ALL SELECT pb AS src, pa AS dst FROM pairs
     ),
-    deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY src),
-    n AS (SELECT DISTINCT src AS node FROM e),
-    r0 AS (SELECT node, CAST({TR_SCALE} AS BIGINT) AS pr FROM n),
-    {",".join(rounds)}
+    {pagerank_oracle(TR_ITERS, TR_SCALE)}
     SELECT node AS word, pr AS pr_e6, n_rank FROM (
       SELECT node, pr,
              CAST(row_number() OVER (ORDER BY pr DESC, node) AS INTEGER)
                AS n_rank
-      FROM {prev}
+      FROM r{TR_ITERS}
     ) WHERE n_rank <= {TR_TOPK}
     """
 
@@ -375,7 +355,7 @@ def q213_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # one-pass symmetrization (r15, the q160 note): the explode emits
+    # one-pass symmetrization (r15): the explode emits
     # both directions from a single execution of the ngram+distinct
     # plan; pagerank_fixed_point checkpoints the exploded frame once.
     # r16: the symmetrized_dedup_edges fold q160 adopted was MEASURED

@@ -62,6 +62,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.ops.graph import (
+    TRADE_GRAPH_HUB_SQL,
+    TRADE_GRAPH_SQL,
+    trade_graph_edges,
+    trade_graph_hub,
+)
 from csv_loader_spark.queries.registry import query
 
 # --- q228: ancestor closure by pointer doubling ------------------------------
@@ -446,14 +452,7 @@ def _lp_oracle() -> str:
         )
         prev = f"l{i}"
     return f"""
-    WITH pairs AS (
-      SELECT DISTINCT o_custkey * 2 AS cu, l_suppkey * 2 + 1 AS su
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    e AS (
-      SELECT cu AS src, su AS dst FROM pairs
-      UNION ALL SELECT su AS src, cu AS dst FROM pairs
-    ),
+    WITH {TRADE_GRAPH_SQL},
     l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
     {",".join(rounds)}
     SELECT label AS community, CAST(count(*) AS BIGINT) AS n_members
@@ -488,30 +487,8 @@ def q232_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, so the materialization barriers cost more than they save
     (measured A/B at sf0.1: 2.9 -> 2.4 s without — the q212 finding; a
     deeper/convergence-looped variant should adopt pagerank_fixed_point's
-    lazy checkpoint per round). The symmetrized edge list is built by
-    EXPLODING each (cu, su) pair into both directions in one pass (no
-    self-union re-executing the join plan) and hash-repartitioned by src
-    before its one checkpoint — on a cluster that co-locates each node's
-    adjacency list for every round's join; on local[32] it halves the
-    per-round task count vs the 2x-partitioned union. r15b: the pair
-    dedup is folded ABOVE that src shuffle
-    (ops/graph.symmetrized_dedup_edges) — near-unique trade pairs made
-    the old pre-explode distinct a second full exchange that deduped
-    almost nothing; edge multiset proven identical, 2 shuffles -> 1
-    (plans/r15/q232_edge_build_before/after.txt)."""
-    from csv_loader_spark.ops.graph import symmetrized_dedup_edges
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
-        (F.col("o_custkey") * 2).alias("cu"),
-        (F.col("l_suppkey") * 2 + 1).alias("su"),
-    )
-    e = symmetrized_dedup_edges(pairs, "cu", "su").localCheckpoint(
-        eager=False
-    )
+    lazy checkpoint per round). Edge prep: ops/graph.trade_graph_edges."""
+    e = trade_graph_edges(spark, sf_dir).localCheckpoint(eager=False)
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -892,18 +869,10 @@ _BFS_MAX_HOPS = 12
 
 def _bfs_oracle() -> str:
     return f"""
-    WITH RECURSIVE pairs AS (
-      SELECT DISTINCT o_custkey * 2 AS cu, l_suppkey * 2 + 1 AS su
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    e AS (
-      SELECT cu AS src, su AS dst FROM pairs
-      UNION ALL SELECT su AS src, cu AS dst FROM pairs
-    ),
-    deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY src),
-    root AS (SELECT node FROM deg ORDER BY d DESC, node LIMIT 1),
+    WITH RECURSIVE {TRADE_GRAPH_SQL},
+    {TRADE_GRAPH_HUB_SQL},
     walk(node, lvl) AS (
-      SELECT node, 0 FROM root
+      SELECT node, 0 FROM hub
       UNION
       SELECT e.dst, walk.lvl + 1
       FROM walk JOIN e ON e.src = walk.node
@@ -933,51 +902,22 @@ def q237_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE explores (node, lvl) pairs and takes min(lvl) — same
     fixed point, sequential.
 
-    The 1-row root collect is the bounded driver-side pattern
-    (llm5's |Q| matrix note), not a data-sized collect.
-
-    Edge prep (r15): both directions are EXPLODED from each (cu, su)
-    pair in one pass (no self-union re-executing the join plan) and the
-    edge list is hash-repartitioned by src before its one checkpoint —
-    on a cluster this co-locates each node's adjacency list for every
-    round's frontier join; on local[32] it halves per-round task counts
-    (x100 isolated 6.7-7.7 -> 5.4 s). r15b: the pair dedup is folded
-    ABOVE that src shuffle (ops/graph.symmetrized_dedup_edges) — the
-    trade pairs are near-unique (dup ratio ~1.1), so the old pre-explode
-    distinct paid a second full exchange to dedup almost nothing; edge
-    multiset proven identical, 2 shuffles -> 1 in the edge build
-    (plans/r15/q237_edge_build_before/after.txt). The prescribed connected-
-    components PRE-PASS was measured and REJECTED: min-label
-    propagation over the full edge list is itself a multi-source BFS
-    (same per-round full-edge scans), so the pre-pass cost 13-19 s at
-    x100 — 2-3x the entire direct BFS it was meant to shrink. Partition-
-    by-component BFS only pays off when component labels already exist
-    (e.g. maintained by the dedup pipeline), and then it is a filter,
-    not a pre-pass.
+    Edge prep and hub: ops/graph.trade_graph_edges and trade_graph_hub.
+    The prescribed connected-components PRE-PASS was measured and
+    REJECTED: min-label propagation over the full edge list is itself a
+    multi-source BFS (same per-round full-edge scans), so the pre-pass
+    cost 13-19 s at x100 — 2-3x the entire direct BFS it was meant to
+    shrink. Partition-by-component BFS only pays off when component
+    labels already exist (e.g. maintained by the dedup pipeline), and
+    then it is a filter, not a pre-pass.
 
     The visited set is kept as a UNION of the per-round frontier
     checkpoints (each already materialized) instead of a re-checkpointed
     growing frame — removes one checkpoint copy of O(|visited|) per
     round."""
-    from csv_loader_spark.ops.graph import symmetrized_dedup_edges
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
-        (F.col("o_custkey") * 2).alias("cu"),
-        (F.col("l_suppkey") * 2 + 1).alias("su"),
-    )
-    e = symmetrized_dedup_edges(pairs, "cu", "su").localCheckpoint(
-        eager=False
-    )
-    deg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    root = deg.orderBy(F.desc("d"), "node").limit(1).collect()[0]["node"]
+    e = trade_graph_edges(spark, sf_dir).localCheckpoint(eager=False)
     frontier = spark.createDataFrame(
-        [(int(root), 0)], "node long, lvl long"
+        [(trade_graph_hub(e), 0)], "node long, lvl long"
     ).localCheckpoint(eager=False)
     levels = [frontier]
     visited = frontier
@@ -1491,25 +1431,17 @@ def _bf_oracle() -> str:
       SELECT node, CAST(min(dist) AS BIGINT) AS dist FROM (
         SELECT node, dist FROM {prev}
         UNION ALL
-        SELECT e.dst AS node, {prev}.dist + e.w AS dist
-        FROM {prev} JOIN e ON e.src = {prev}.node
+        SELECT we.dst AS node, {prev}.dist + we.w AS dist
+        FROM {prev} JOIN we ON we.src = {prev}.node
       ) u GROUP BY node
     )"""
         )
         prev = f"d{i}"
     return f"""
-    WITH pairs AS (
-      SELECT DISTINCT o_custkey * 2 AS cu, l_suppkey * 2 + 1 AS su
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    e AS (
-      SELECT cu AS src, su AS dst, 1 + (cu + su) % 7 AS w FROM pairs
-      UNION ALL
-      SELECT su AS src, cu AS dst, 1 + (cu + su) % 7 AS w FROM pairs
-    ),
-    deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY src),
-    root AS (SELECT node FROM deg ORDER BY d DESC, node LIMIT 1),
-    d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM root),
+    WITH {TRADE_GRAPH_SQL},
+    we AS (SELECT src, dst, 1 + (src + dst) % 7 AS w FROM e),
+    {TRADE_GRAPH_HUB_SQL},
+    d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM hub),
     {",".join(rounds)}
     SELECT dist, CAST(count(*) AS BIGINT) AS n_nodes,
            CAST(min(node) AS BIGINT) AS min_node
@@ -1537,39 +1469,21 @@ def q242_bounded_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pass-through + relaxation legs), so without the checkpoint the
     plan re-executes doubly per round (2^k leaf blow-up).
 
-    Edge prep as in q237 (r15): explode both directions in one pass,
-    hash-repartition by src, one checkpoint — x100 isolated 8.6-9.7 ->
-    6.1-6.7 s; r15b folds the pair dedup above the src shuffle
-    (ops/graph.symmetrized_dedup_edges, 2 shuffles -> 1) with the weight
-    computed POST-dedup — w is symmetric in the endpoints
-    (cu + su == src + dst in both directions), so the value per edge is
-    unchanged. The FUSED two-hop relaxation round (e2 = min-weight paths
-    of length <= 2, halving the round count) was measured and REJECTED:
-    this trade graph has sum(deg^2) = 25.3M two-hop paths per copy vs
-    97k edges (a 260x blowup — hub degree 538), and the fused run took
-    28.6-37.8 s at x10 vs 6 s at x100 for the per-round form; min-plus
-    fusion only pays on sparse graphs where sum(deg^2) = O(|E|)."""
-    from csv_loader_spark.ops.graph import symmetrized_dedup_edges
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
-        (F.col("o_custkey") * 2).alias("cu"),
-        (F.col("l_suppkey") * 2 + 1).alias("su"),
-    )
+    Edge prep and hub: ops/graph.trade_graph_edges and trade_graph_hub;
+    the weight is added before the one checkpoint. The FUSED two-hop
+    relaxation round (e2 = min-weight paths of length <= 2, halving the
+    round count) was measured and REJECTED: this trade graph has
+    sum(deg^2) = 25.3M two-hop paths per copy vs 97k edges (a 260x
+    blowup — hub degree 538), and the fused run took 28.6-37.8 s at x10
+    vs 6 s at x100 for the per-round form; min-plus fusion only pays on
+    sparse graphs where sum(deg^2) = O(|E|)."""
     e = (
-        symmetrized_dedup_edges(pairs, "cu", "su")
+        trade_graph_edges(spark, sf_dir)
         .withColumn("w", F.lit(1) + (F.col("src") + F.col("dst")) % 7)
         .localCheckpoint(eager=False)
     )
-    deg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    root = deg.orderBy(F.desc("d"), "node").limit(1).collect()[0]["node"]
     dist = spark.createDataFrame(
-        [(int(root), 0)], "node long, dist long"
+        [(trade_graph_hub(e), 0)], "node long, dist long"
     ).localCheckpoint(eager=False)
     for _ in range(_BF_ROUNDS):
         relaxed = (

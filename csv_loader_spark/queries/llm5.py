@@ -389,10 +389,8 @@ def q104_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-ingest dedup: even doc_ids play the ACCEPTED corpus
     (reduced to its fingerprint index), odd doc_ids play the arriving
     batch; only arrivals whose content is absent from the index — and not
-    a duplicate of an earlier arrival — land. This is the batch twin of
-    the stream-static path (streaming/ingest_dedup.py): the SAME
-    novel_documents() serves both modes, and the streaming test asserts
-    the stream lands exactly this answer.
+    a duplicate of an earlier arrival — land, via
+    streaming/ingest_dedup.novel_documents.
 
     Scale: the index probe is an anti-join on the fingerprint — the index
     frame is one hashed column, so at 10^10 accepted docs it is an

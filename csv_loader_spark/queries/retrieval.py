@@ -57,8 +57,10 @@ from pyspark.sql import functions as F
 
 from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.ops.graph import (
+    TRADE_GRAPH_SQL,
     pagerank_fixed_point,
-    symmetrized_dedup_edges,
+    pagerank_oracle,
+    trade_graph_edges,
 )
 from csv_loader_spark.queries.registry import query
 
@@ -194,78 +196,27 @@ PR_SCALE = 1_000_000
 PR_TOPK = 20
 
 
-def _pagerank_oracle() -> str:
-    base = PR_SCALE * 15 // 100
-    rounds = []
-    prev = "r0"
-    for i in range(1, PR_ITERS + 1):
-        rounds.append(
-            f"""
-    s{i} AS (
-      SELECT e.dst AS node, CAST(sum({prev}.pr // d.deg) AS BIGINT) AS s
-      FROM e JOIN {prev} ON e.src = {prev}.node JOIN deg d ON e.src = d.src
-      GROUP BY e.dst
-    ),
-    r{i} AS (
-      SELECT n.node,
-             CAST({base} + (85 * coalesce(s{i}.s, 0)) // 100 AS BIGINT) AS pr
-      FROM n LEFT JOIN s{i} USING (node)
-    )"""
-        )
-        prev = f"r{i}"
-    return f"""
-    WITH pairs AS (
-      SELECT DISTINCT o_custkey * 2 AS cu, l_suppkey * 2 + 1 AS su
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    e AS (
-      SELECT cu AS src, su AS dst FROM pairs
-      UNION ALL SELECT su AS src, cu AS dst FROM pairs
-    ),
-    deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY src),
-    n AS (SELECT DISTINCT src AS node FROM e),
-    r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS pr FROM n),
-    {",".join(rounds)}
-    SELECT CAST(node AS BIGINT) AS node_id, pr AS pr_e6
-    FROM {prev} ORDER BY pr_e6 DESC, node_id LIMIT {PR_TOPK}
-    """
-
-
 @query(
     "q160_pagerank",
-    oracle=_pagerank_oracle(),
+    oracle=f"""
+    WITH {TRADE_GRAPH_SQL},
+    {pagerank_oracle(PR_ITERS, PR_SCALE)}
+    SELECT CAST(node AS BIGINT) AS node_id, pr AS pr_e6
+    FROM r{PR_ITERS} ORDER BY pr_e6 DESC, node_id LIMIT {PR_TOPK}
+    """,
     tags=("graph", "llm", "r12"),
 )
 def q160_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{PR_TOPK} nodes by {PR_ITERS}-round fixed-point PageRank over the
-    symmetrized customer-supplier trade graph (node id = 2*custkey /
-    2*suppkey+1). Integer arithmetic end-to-end — the unrolled-CTE oracle
-    reproduces it exactly."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
-        (F.col("o_custkey") * 2).alias("cu"),
-        (F.col("l_suppkey") * 2 + 1).alias("su"),
-    )
-    # r16 (the r15b fold, finally applied here): the trade pairs are
-    # NEAR-UNIQUE (600k raw -> 587k distinct at sf0.1, dup ratio 1.02),
-    # so the old distinct-then-explode shape paid a (cu, su) exchange
-    # whose map-side partial distinct deduped almost nothing, and then
-    # pagerank's internal repartition("src") paid a SECOND shuffle.
-    # symmetrized_dedup_edges explodes the raw pairs, shuffles ONCE by
-    # src, and dedups exchange-free above it; pre_partitioned=True tells
-    # pagerank_fixed_point to checkpoint that layout as-is. Edge prep:
-    # 2 shuffle exchanges -> 1. Contrast
-    # q213, where the bigram pairs dedup 592x and the fold would shuffle
-    # 2x the raw stream — measured and kept on the distinct-first shape.
-    edges = symmetrized_dedup_edges(pairs, "cu", "su")
+    symmetrized customer-supplier trade graph (ops/graph.trade_graph_edges,
+    node id = 2*custkey / 2*suppkey+1). Integer arithmetic end-to-end —
+    the unrolled-CTE oracle reproduces it exactly."""
     pr = pagerank_fixed_point(
-        edges,
+        trade_graph_edges(spark, sf_dir),
         "src",
         "dst",
         iterations=PR_ITERS,
         scale=PR_SCALE,
-        pre_partitioned=True,
     )
     return (
         pr.select(F.col("node").cast("long").alias("node_id"), F.col("pr").alias("pr_e6"))

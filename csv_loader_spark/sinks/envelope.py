@@ -1,4 +1,4 @@
-"""Row→nested-message transform + protobuf wire serialization (ops 13-15).
+"""Protobuf wire serialization of ping envelopes (ops 13-15).
 
 The reference builds, per row, a protobuf
 ``VehicleMessage{vehicleId: int64, locations: repeated VehicleLocation{lat:
@@ -7,30 +7,25 @@ CsvLoader.java:150-158) and, per ~10k batch, a
 ``VehicleMessageEnvelope{sourceId: int64, messages: repeated VehicleMessage}``
 (:206-211) serialized with ``toByteArray()``.
 
-Two layers here:
+``encode_envelope``/``decode_envelope`` are the batch wire format, a
+hand-rolled protobuf-wire encoder (varint + fixed64 little-endian +
+length-delimited submessages; the standard public encoding), verified
+BYTE-FOR-BYTE against the official google.protobuf runtime in
+tests/test_envelope_wire.py for the layout
+VehicleLocation{1:lat fixed64, 2:lon fixed64, 3:timestamp varint},
+VehicleMessage{1:vehicle_id varint, 2:locations message},
+Envelope{1:source_id varint, 2:messages message} —
+field numbers in declaration order of the reference's builder calls
+(the protobuf convention). The upstream io.opentraffic ExchangeFormat
+.proto is not vendored in the reference tree (fetch attempts logged in
+SCALE.md); a differently-numbered upstream would need only these
+constants re-mapped. README.md ("Wire-format compatibility") and the
+CLI --help epilog state this user-facing.
 
-1. ``vehicle_message_col`` — the same nested shape as a Spark
-   struct/array-of-struct column (DataFrame-native; what downstream
-   relational ops would consume). No entry point reaches it;
-   tests/test_envelope.py checks its shape.
-2. ``encode_envelope``/``decode_envelope`` — the batch wire format, a
-   hand-rolled protobuf-wire encoder (varint + fixed64 little-endian +
-   length-delimited submessages; the standard public encoding), verified
-   BYTE-FOR-BYTE against the official google.protobuf runtime in
-   tests/test_envelope_wire.py for the layout
-   VehicleLocation{1:lat fixed64, 2:lon fixed64, 3:timestamp varint},
-   VehicleMessage{1:vehicle_id varint, 2:locations message},
-   Envelope{1:source_id varint, 2:messages message} —
-   field numbers in declaration order of the reference's builder calls
-   (the protobuf convention). The upstream io.opentraffic ExchangeFormat
-   .proto is not vendored in the reference tree (fetch attempts logged in
-   SCALE.md); a differently-numbered upstream would need only these
-   constants re-mapped. README.md ("Wire-format compatibility") and the
-   CLI --help epilog state this user-facing.
-   Pure Python, deterministic, dependency-free — runs on executors in the
-   sink's Python worker (``mapInArrow`` for the batch sink, the streaming
-   sink's ``foreachPartition``). Each payload is assembled from a list of
-   parts joined once, so encoding is linear in the envelope's row count.
+Pure Python, deterministic, dependency-free — runs on executors in the
+sink's Python worker (``mapInArrow`` for the batch sink, the streaming
+sink's ``foreachPartition``). Each payload is assembled from a list of
+parts joined once, so encoding is linear in the envelope's row count.
 """
 
 from __future__ import annotations
@@ -38,33 +33,6 @@ from __future__ import annotations
 from collections.abc import Iterable, Sequence
 from dataclasses import dataclass
 import struct
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-# ---------------------------------------------------------------------------
-# DataFrame-native nested message shape (op 13)
-# ---------------------------------------------------------------------------
-
-
-def vehicle_message_col() -> Column:
-    """struct<vehicleId, locations: array<struct<lat, lon, timestamp>>> from
-    the PING_SCHEMA columns — the reference's message as a Spark column."""
-    return F.struct(
-        F.col("vehicle_id").alias("vehicleId"),
-        F.array(
-            F.struct(
-                F.col("lat").alias("lat"),
-                F.col("lon").alias("lon"),
-                F.col("ts_millis").alias("timestamp"),
-            )
-        ).alias("locations"),
-    )
-
-
-def to_vehicle_messages(pings: DataFrame) -> DataFrame:
-    return pings.select(vehicle_message_col().alias("message"))
-
 
 # ---------------------------------------------------------------------------
 # Declared message schema (op 15): ONE table drives the hand-rolled encoder

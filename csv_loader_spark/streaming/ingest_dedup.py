@@ -10,16 +10,12 @@ arriving batch against it:
 
 - The index probe is a left-anti join on one narrow fingerprint column —
   at 10^10 docs a hash-partitioned id table, not the corpus.
-- Duplicates within the arrivals are dropped by fingerprint:
-  deterministically (min doc_id) in batch; in a stream, with
-  dropDuplicatesWithinWatermark when an event-time column is available
-  (bounded state) or exact dropDuplicates as the unbounded opt-in.
+- Duplicates within the arrivals are dropped by fingerprint,
+  deterministically (min doc_id survives).
 
-The transformations are mode-agnostic (plain DataFrame ops). The
-oracle-gated queries run them in batch (q104 in queries/llm5.py; q131 and
-its verify/passage tiers in queries/llm8.py), as does the ``curate``
-subcommand (ops/curate.py); tests/test_stream_static_dedup.py asserts
-that a streaming run of ``novel_documents`` lands the batch answer.
+The oracle-gated queries run these transformations in batch (q104 in
+queries/llm5.py; q131 and its verify/passage tiers in queries/llm8.py),
+as does the ``curate`` subcommand (ops/curate.py).
 """
 
 from __future__ import annotations
@@ -37,31 +33,13 @@ def fingerprint_index(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     return corpus.select(TXT.fingerprint(text_col).alias("fp")).distinct()
 
 
-def novel_documents(
-    arrivals: DataFrame,
-    index: DataFrame,
-    *,
-    ts_col: str | None = None,
-    delay: str = "10 minutes",
-) -> DataFrame:
+def novel_documents(arrivals: DataFrame, index: DataFrame) -> DataFrame:
     """Documents from ``arrivals`` whose content is new — absent from the
     ``index`` AND not a duplicate of an earlier arrival. Keeps every input
-    column plus ``fp``.
-
-    Batch: the in-stream dedup keeps the min doc_id per fingerprint
-    (deterministic). Streaming: first-arrival-wins per fingerprint, with
-    watermark-bounded state when ``ts_col`` is given (late duplicates
-    beyond ``delay`` may re-admit a fingerprint — the documented bounded-
-    state trade); without ``ts_col`` the state is exact and unbounded."""
+    column plus ``fp``; the min doc_id survives per fingerprint."""
     tagged = arrivals.withColumn("fp", TXT.fingerprint("text"))
     novel = tagged.join(index, "fp", "left_anti")
-    if novel.isStreaming:
-        if ts_col is not None:
-            return novel.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-                ["fp"]
-            )
-        return novel.dropDuplicates(["fp"])
-    # batch: deterministic survivor (min doc_id), not hash-partition luck
+    # deterministic survivor (min doc_id), not hash-partition luck
     return (
         novel.withColumn(
             "_rn",

@@ -3,7 +3,6 @@
 from csv_loader_spark.sinks.envelope import (
     decode_envelope,
     encode_envelope,
-    to_vehicle_messages,
 )
 from csv_loader_spark.sinks.kinesis import records_for_kinesis
 
@@ -19,19 +18,6 @@ def test_wire_roundtrip_preserves_values():
     assert [(vid, locs[0]) for vid, locs in env.messages] == [
         (vid, (lat, lon, ts)) for vid, lat, lon, ts in rows
     ]
-
-
-def test_message_struct_shape(spark):
-    df = spark.createDataFrame(
-        [("101", 101, 1433147415000, 40.7, -74.0)],
-        "vehicle_id_str string, vehicle_id long, ts_millis long, lat double, lon double",
-    )
-    (row,) = to_vehicle_messages(df).collect()
-    msg = row["message"]
-    assert msg["vehicleId"] == 101
-    assert len(msg["locations"]) == 1  # one location per message (ref :152-155)
-    loc = msg["locations"][0]
-    assert (loc["lat"], loc["lon"], loc["timestamp"]) == (40.7, -74.0, 1433147415000)
 
 
 def test_kinesis_chunking_limit():

@@ -1,15 +1,10 @@
 """Tests for the spatial operators (queries/geo.py).
 
-- grid epsilon-join candidate generation must be lossless AND produce
-  each pair exactly once (the one-matching-offset argument).
-- write_zordered must produce files owning disjoint Z ranges, and a 2-D
-  box predicate must touch strictly fewer files than a hash layout does
-  — the file-pruning property that motivates the layout op.
+Grid epsilon-join candidate generation must be lossless AND produce
+each pair exactly once (the one-matching-offset argument).
 """
 
 from __future__ import annotations
-
-import glob
 
 from pyspark.sql import functions as F
 
@@ -17,8 +12,6 @@ from csv_loader_spark.queries.geo import (
     EPS,
     _points,
     q157_grid_distance_join,
-    write_zordered,
-    zorder_key,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -44,44 +37,3 @@ def test_grid_join_lossless_and_no_double_count(spark):
     # (no offset double-counts)
     assert got == brute
 
-
-def test_zorder_layout_prunes_files(spark, tmp_path):
-    pts = _points(spark, SF_DIR)
-    zpath = str(tmp_path / "zordered")
-    n_files = 8
-    write_zordered(pts, zpath, "x", "y", n_files)
-
-    files = sorted(glob.glob(f"{zpath}/part-*.parquet"))
-    assert len(files) == n_files
-
-    # per-file Z ranges are disjoint (repartitionByRange guarantee)
-    ranges = []
-    for f in files:
-        r = (
-            spark.read.parquet(f)
-            .select(zorder_key("x", "y").alias("z"))
-            .agg(F.min("z"), F.max("z"))
-            .collect()[0]
-        )
-        ranges.append((r[0], r[1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, "file Z ranges must not overlap"
-
-    # a quadrant box maps to one aligned Z range; with the clustered
-    # layout only the files whose [min,max] intersect it can hold matches
-    x_hi = y_hi = (1 << 15) - 1  # the x<2^15, y<2^15 quadrant = z < 2^30
-    z_hi = 1 << 30
-    touched = sum(1 for lo, hi in ranges if lo < z_hi)
-    # the quadrant holds ~1/4 of a uniform point set; with 8 range files
-    # it must live in a strict subset of them
-    assert touched < n_files
-
-    # sanity: the clustered copy still answers the box exactly
-    full = pts.filter((F.col("x") <= x_hi) & (F.col("y") <= y_hi)).count()
-    boxed = (
-        spark.read.parquet(zpath)
-        .filter((F.col("x") <= x_hi) & (F.col("y") <= y_hi))
-        .count()
-    )
-    assert boxed == full and full > 0

@@ -106,6 +106,10 @@ def test_symmetrized_dedup_edges_multiset_and_plan(spark):
     # dedup aggregate; createDataFrame feeds a local scan so no broadcast
     # exchange muddies the count
     assert plan.count("Exchange hashpartitioning") == 1, plan
+    # pagerank_fixed_point repartitions its input by src again before its
+    # checkpoint: over this layout that plans no second exchange
+    plan = got.repartition("src")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_symmetrized_dedup_edges_precondition_edge_cases(spark):
@@ -132,22 +136,3 @@ def test_symmetrized_dedup_edges_precondition_edge_cases(spark):
     )
     assert got == [(2, 3), (3, 2)]
 
-
-def test_pagerank_pre_partitioned_matches_default(spark):
-    """pre_partitioned=True only skips the internal src repartition —
-    ranks must be bit-identical either way (r16, the q160 edge-prep
-    fold)."""
-    from csv_loader_spark.ops.graph import (
-        pagerank_fixed_point,
-        symmetrized_dedup_edges,
-    )
-
-    raw = spark.createDataFrame(
-        [(2, 3), (2, 5), (4, 3), (4, 7), (2, 3)], "cu long, su long"
-    )
-    e = symmetrized_dedup_edges(raw, "cu", "su")
-    a = pagerank_fixed_point(e, "src", "dst", iterations=3, scale=1_000_000)
-    b = pagerank_fixed_point(
-        e, "src", "dst", iterations=3, scale=1_000_000, pre_partitioned=True
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))

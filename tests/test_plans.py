@@ -981,6 +981,31 @@ def test_q237_q238_plan_shapes(spark):
     assert p238.count("BroadcastHashJoin") >= 2  # the two norm frames
 
 
+
+def test_trade_graph_edges_plan_equals_inline_build(spark):
+    """ops/graph.trade_graph_edges is the edge build q160, q232, q237 and
+    q242 each wrote inline: its optimized plan equals that build's, written
+    out here as the reference."""
+    from pyspark.sql import functions as F
+
+    from csv_loader_spark.io.tables import load_table
+    from csv_loader_spark.ops.graph import (
+        symmetrized_dedup_edges,
+        trade_graph_edges,
+    )
+
+    li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
+    pairs = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
+        (F.col("o_custkey") * 2).alias("cu"),
+        (F.col("l_suppkey") * 2 + 1).alias("su"),
+    )
+    want = symmetrized_dedup_edges(pairs, "cu", "su")
+    got = trade_graph_edges(spark, SF_DIR)
+    assert got._jdf.queryExecution().optimizedPlan().sameResult(
+        want._jdf.queryExecution().optimizedPlan()
+    )
+
 def test_q247_q249_window_runs_over_histogram_not_fact(spark):
     """q247/q249 claim their rank windows sort the per-(group, value)
     HISTOGRAM, never the fact table: below every Window, a HashAggregate

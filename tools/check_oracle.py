@@ -27,11 +27,13 @@ import json
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from csv_loader_spark.io.tables import TABLES  # noqa: E402
 from csv_loader_spark.queries.registry import all_specs  # noqa: E402
