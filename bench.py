@@ -3,7 +3,8 @@
 Prints exactly ONE JSON line:
     {"metric": "headline_total", "value": <sec>, "unit": "sec",
      "queries": {"q01_pricing_summary": <sec>, ...},
-     "groups": {"headline": <sec>, "new_ops": <sec>}, "sf": 0.1}
+     "groups": {"headline": <sec>, "r7": <sec>, ..., "r15": <sec>},
+     "sf": 0.1}
 
 ``value`` is the HEADLINE total measured in its OWN fresh JVM (the
 ``--headline-cell`` subprocess, spawned before the full-suite session):
@@ -13,9 +14,9 @@ ten headline queries run inside an ever-heavier JVM as the tree grows).
 The isolated number is the cross-round comparable one; the in-process
 figure is kept as ``headline_inprocess`` (and ``groups.headline``) for
 continuity with BENCH_r01..r13. Per-query times for all groups land in
-``queries``, group subtotals in ``groups``. Set
-SPARK_GRAFT_BENCH_ISOLATE=0 to skip the cell (value falls back to the
-in-process headline).
+``queries``, group subtotals in ``groups``, keyed by registry tag
+(GROUPS). Set SPARK_GRAFT_BENCH_ISOLATE=0 to skip the cell (value falls
+back to the in-process headline).
 
 Per-query time = plan + execute + collect to the driver (count() for large
 results), measured after a warm-up action so JVM/session startup isn't billed
@@ -40,203 +41,30 @@ from csv_loader_spark.queries.registry import all_specs  # noqa: E402
 from csv_loader_spark.session import get_spark  # noqa: E402
 from tools.count_roundtrips import compiling  # noqa: E402
 
-# Headline set: spans scan+agg, join shapes, windows, sessionize, dedup, KNN.
-HEADLINE = (
-    "q01_pricing_summary",
-    "q03_topn_revenue",
-    "q05_nation_volume",
-    "q07_brand_volume",
-    "q13_window_topk",
-    "q21_monthly_orders",
-    "q23_sessionize",
-    "q26_distinct_exact",
-    "q28_dedup_exact",
-    "q35_knn_bruteforce",
-)
+#: the bench's query groups, each a registry tag: ``headline`` spans
+#: scan+agg, join shapes, windows, sessionize, dedup and KNN; ``rN`` is the
+#: operator surface added in round N, each query against its DuckDB oracle.
+GROUPS = ("headline", "r7", "r8", "r9", "r10", "r12", "r13", "r14", "r15")
 
-# The r7 operator surface under the bench (r8): chunking, greedy packing,
-# CDC merge, SCD2 intervals, Arrow KNN — each against its DuckDB oracle.
-NEW_OPS = (
-    "q99_chunk_sliding",
-    "q101_pack_greedy",
-    "q105_cdc_upsert",
-    "q106_scd2_intervals",
-    "q108_knn_arrow",
-)
 
-# The r8 operator surface: passage dedup, dup metering, quantized KNN,
-# prefix-filtered Jaccard join, per-source quota — same oracle pairing.
-R8_OPS = (
-    "q115_passage_dedup",
-    "q117_dup_fraction",
-    "q118_sq8_knn_recall",
-    "q119_prefix_jaccard_join",
-    "q121_source_quota",
-)
+def _qnum(name: str) -> int:
+    return int(name[1:name.index("_")])
 
-# The r9 operator surface: ingest-time near-dup verdicts, the five-rule
-# admission manifest, perceptual-hash image dedup, IVF-residual PQ.
-R9_OPS = (
-    "q131_ingest_neardup",
-    "q132_admission_manifest",
-    "q133_phash_neardup",
-    "q134_ivfpq_knn_recall",
-    "q135_snapshot_diff",
-    "q136_rare_tokens",
-    "q137_gopher_rules",
-    "q138_ingest_passage_dedup",
-    "q139_bpe_apply",
-    "q140_html_strip",
-    "q141_unicode_normalize",
-    "q142_intradoc_dedup",
-    "q143_cluster_keep_best",
-    "q144_ingest_probe_precision",
-)
 
-# The r10 operator surface: the verified ingest probe, its
-# precision-by-construction meter, and the incremental changelog.
-R10_OPS = (
-    "q145_ingest_verified_neardup",
-    "q146_verified_probe_precision",
-    "q147_version_changelog",
-)
+def tagged(tag: str) -> tuple[str, ...]:
+    """Registered query names carrying ``tag``, in query-number order."""
+    return tuple(
+        sorted((n for n, s in all_specs().items() if tag in s.tags), key=_qnum)
+    )
 
-# The r12 operator surface: DSIR importance selection, SemDeDup, CCNet
-# scoring, UniMax mixing, the curation capstone, edit-distance join,
-# duplicated-span mining, and the spatial pair (grid join / Z-order).
-R12_OPS = (
-    "q148_dsir_importance",
-    "q149_semdedup",
-    "q150_lm_perplexity",
-    "q151_repetition_rules",
-    "q152_unimax_mixture",
-    "q153_ccnet_buckets",
-    "q154_curation_capstone",
-    "q155_editdist_join",
-    "q156_dup_spans",
-    "q157_grid_distance_join",
-    "q158_zorder_layout",
-    "q159_bm25_topk",
-    "q160_pagerank",
-    "q161_phrase_search",
-    "q162_weighted_sample",
-    "q163_rendezvous_shards",
-    "q164_dedup_clean",
-    "q165_click_attribution",
-    "q166_triangle_nodes",
-    "q167_pmi_collocations",
-    "q168_embedding_diversity",
-    "q169_heavy_hitters",
-    "q170_exact_quantile",
-)
 
-# The r12c analytics surface (q171+): time-series repair/smoothing,
-# robust stats, association rules, retrieval fusion, graph peeling,
-# optimizer statistics, experiment/attribution analytics, drift/audit
-# meters, the q200 capstone, training-data ops, audio plumbing.
-R12C_OPS = (
-    "q171_gap_fill",
-    "q172_exp_smooth",
-    "q173_mad_outliers",
-    "q174_group_ols",
-    "q175_markov_transitions",
-    "q176_basket_lift",
-    "q177_time_weighted_avg",
-    "q178_path_mining",
-    "q179_profile_table",
-    "q180_hybrid_rrf",
-    "q181_kcore_peel",
-    "q182_join_size_estimate",
-    "q183_ab_welch_ttest",
-    "q184_multi_touch_attribution",
-    "q185_cumulative_uniques",
-    "q186_seasonality_index",
-    "q187_cusum_changepoint",
-    "q188_leadlag_xcorr",
-    "q189_fd_audit",
-    "q190_psi_drift",
-    "q191_unpivot",
-    "q192_lift_curve",
-    "q193_rfm_segments",
-    "q194_benford_audit",
-    "q195_abc_pareto",
-    "q196_theil_sen",
-    "q197_id_gaps",
-    "q198_activity_drawdown",
-    "q199_dup_payments",
-    "q200_monitoring_capstone",
-    "q201_hard_negatives",
-    "q202_negative_sampling",
-    "q203_span_corruption",
-    "q204_lateness_audit",
-    "q205_funnel_latency",
-    "q206_audio_features",
-    "q207_skyline",
-    "q208_max_concurrency",
-    "q209_largest_remainder",
-    "q210_weighted_median",
-)
+def group_totals(times: dict[str, float]) -> dict[str, float]:
+    """Per-group sums of per-query ``times``, keyed by tag."""
+    return {g: round(sum(times[n] for n in tagged(g)), 4) for g in GROUPS}
 
-# The r13 batch: funnel, HITS, TextRank, decayed demand, SAX motifs,
-# behavioral entropy.
-R13_OPS = (
-    "q211_funnel_conversion",
-    "q212_hits_authority",
-    "q213_textrank_keywords",
-    "q214_decayed_demand",
-    "q215_sax_motifs",
-    "q216_user_entropy",
-    "q217_incremental_view_merge",
-    "q218_bloom_join_prune",
-    "q219_cohort_retention",
-    "q220_window_funnel",
-    "q221_event_runs",
-    "q222_status_pivot",
-    "q223_expectation_suite",
-    "q224_fk_orphan_census",
-)
 
-# The r14 batch: decontamination meter, assortativity, vocab overlap,
-# pointer-doubling closure, rolling actives, KS drift, bot regularity,
-# label propagation, revenue ACF, rank skew, Gini, Fano burstiness.
-R14_OPS = (
-    "q225_split_contamination",
-    "q226_degree_assortativity",
-    "q227_source_vocab_overlap",
-    "q228_ancestor_closure",
-    "q229_rolling_actives",
-    "q230_ks_drift",
-    "q231_bot_regularity",
-    "q232_label_propagation",
-    "q233_revenue_acf",
-    "q234_source_rank_skew",
-    "q235_revenue_gini",
-    "q236_event_burstiness",
-    "q237_bfs_levels",
-    "q238_item_cosine_cf",
-    "q239_churn_hazard",
-    "q240_cuped_ab",
-    "q241_mutual_nn",
-    "q242_bounded_shortest_path",
-    "q243_seasonal_anomaly_days",
-    "q244_sample_bias_chi2",
-    "q245_vocab_growth",
-    "q246_spearman_brand",
-    "q247_mann_whitney",
-    "q248_anova_priority",
-    "q249_winsorized_mean",
-)
-
-# The r15 batch: Kendall tau-b (joint-histogram pair algebra), Cramér's V.
-R15_OPS = (
-    "q250_kendall_tau",
-    "q251_cramers_v",
-)
-
-_ALL = (
-    HEADLINE + NEW_OPS + R8_OPS + R9_OPS + R10_OPS + R12_OPS + R12C_OPS
-    + R13_OPS + R14_OPS + R15_OPS
-)
+HEADLINE = tagged("headline")
+_ALL = tuple(sorted({n for g in GROUPS for n in tagged(g)}, key=_qnum))
 
 
 #: a 1-min load average above this at bench start means some other work is
@@ -509,7 +337,8 @@ def main() -> None:
         name: round(sorted(t[name] for t in kept)[len(kept) // 2], 4)
         for name in _ALL
     }
-    inprocess_headline = round(sum(times[n] for n in HEADLINE), 4)
+    groups = group_totals(times)
+    inprocess_headline = groups["headline"]
     # headline VALUE comes from the isolated fresh-JVM cell (same trim
     # pipeline) when it ran: the r13 in-process headline drifted +25%
     # purely from suite growth (101 -> 114 queries loading the shared
@@ -547,20 +376,7 @@ def main() -> None:
                 "headline_isolated": iso,
                 "headline_inprocess": inprocess_headline,
                 "queries": times,
-                "groups": {
-                    "headline": round(sum(times[n] for n in HEADLINE), 4),
-                    "new_ops": round(sum(times[n] for n in NEW_OPS), 4),
-                    "r8_ops": round(sum(times[n] for n in R8_OPS), 4),
-                    "r9_ops": round(sum(times[n] for n in R9_OPS), 4),
-                    "r10_ops": round(sum(times[n] for n in R10_OPS), 4),
-                    "r12_ops": round(sum(times[n] for n in R12_OPS), 4),
-                    "r12c_ops": round(
-                        sum(times[n] for n in R12C_OPS), 4
-                    ),
-                    "r13_ops": round(sum(times[n] for n in R13_OPS), 4),
-                    "r14_ops": round(sum(times[n] for n in R14_OPS), 4),
-                    "r15_ops": round(sum(times[n] for n in R15_OPS), 4),
-                },
+                "groups": groups,
                 "sf": sf,
                 # host-noise provenance (r9-r11 verdicts): canonical means
                 # BOTH the host was idle when measurement began AND the

@@ -18,8 +18,6 @@ explicitly-bounded brute-force KNN baseline (20 query vectors).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -80,7 +78,7 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1
     """,
-    tags=("dedup", "llm"),
+    tags=("dedup", "llm", "headline"),
 )
 def q28_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by normalized-content fingerprint: one survivor (min id)
@@ -174,9 +172,9 @@ _BAND_SIZE = 2  # 3 bands of 2 hashes
 # `dedup` r6) but unbounded in principle; the guard makes the bound
 # structural. row_number orders by doc_id on the same (band, bkey) key the
 # join hashes — one exchange serves both. Mirrored in the oracle CTE so
-# the exact gate holds; inert at sf0.01 (largest bucket ≪ 1024). Read at
-# import so plan and oracle bake the same value.
-_BAND_CAP = int(os.environ.get("SPARK_GRAFT_BAND_CAP", "1024"))
+# the exact gate holds; inert at sf0.01 (largest bucket ≪ 1024). One
+# constant, so plan and oracle bake the same value.
+_BAND_CAP = 1024
 
 
 def _minhash_sig_cols():
@@ -537,7 +535,7 @@ _KNN_QUERIES = 20  # vec_id < 20 are the query vectors
     FROM pairs
     QUALIFY n_rank <= {_KNN_K}
     """,
-    tags=("similarity", "knn", "llm"),
+    tags=("similarity", "knn", "llm", "headline"),
 )
 def q35_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast the (small) query set against the
@@ -603,9 +601,9 @@ def _hyperplanes(dim: int = 64, n: int = 8) -> list[list[float]]:
 # candidate fraction ≈ 1-(1-2^-b)^L, independent of n, while the work an
 # index saves is (1 - that) × n — at 1e9 vectors you'd raise b toward
 # ~log2(n/target_bucket_size) (b≈20-24) and keep L for recall; the
-# equi-join-on-bucket shape is unchanged. Env-tunable per corpus.
-_LSH_TABLES = int(os.environ.get("SPARK_GRAFT_LSH_TABLES", "24"))
-_LSH_BITS = int(os.environ.get("SPARK_GRAFT_LSH_BITS", "5"))
+# equi-join-on-bucket shape is unchanged. Set per corpus here.
+_LSH_TABLES = 24
+_LSH_BITS = 5
 
 
 @query(

@@ -24,8 +24,6 @@ All three are exact-oracle checked (no rows-only carve-outs).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -551,11 +549,10 @@ _HEX = "0123456789abcdef"
 # identity (high signal, keep some members), but a single hot fingerprint
 # certifies only one shared 11-char substring (low signal at high df).
 # Identical-content floods are exact dedup's job upstream (q28 runs first
-# in the q83 curation pipeline). Env-tunable like the LSH geometry knobs;
-# read at import so the Spark plan and the oracle SQL bake the SAME value
-# and the exact gate cannot silently diverge. 512 is inert at the sf0.01
-# gate (≤100 docs ⇒ df ≤ 100).
-_WINNOW_MAX_DF = int(os.environ.get("SPARK_GRAFT_WINNOW_MAX_DF", "512"))
+# in the q83 curation pipeline). One constant, so the Spark plan and the
+# oracle SQL bake the SAME value and the exact gate cannot silently
+# diverge. 512 is inert at the sf0.01 gate (≤100 docs ⇒ df ≤ 100).
+_WINNOW_MAX_DF = 512
 
 
 def _hash32_sql(expr: str) -> str:

@@ -40,10 +40,9 @@ _PLANES = _hyperplanes(n=_LSH_TABLES * _LSH_BITS)
 # instead of the join degenerating quadratically. The cap is a row_number
 # window over (bucket) ordered by vec_id — same key as the candidate join,
 # and reproducible in ANSI SQL so the exact oracle gate still holds.
-# Env-tunable like the LSH geometry knobs (SPARK_GRAFT_LSH_TABLES/BITS);
-# read at import, so the Spark plan and the oracle CTE below always bake
+# One constant, so the Spark plan and the oracle CTE below always bake
 # the SAME value and the gate cannot silently diverge.
-_HOT_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_HOT_BUCKET_CAP", "1024"))
+_HOT_BUCKET_CAP = 1024
 
 
 def _planes_values_sql() -> str:
@@ -263,7 +262,7 @@ def _lsh_candidates(
             "%(n_buckets_over)d buckets (largest %(max_bucket)d > cap "
             "%(cap)d) — pairs wholly past the cap are LOST; recall "
             "degrades. Run exact dedup (q28) upstream or raise "
-            "SPARK_GRAFT_HOT_BUCKET_CAP.",
+            "llm4._HOT_BUCKET_CAP.",
             stats,
         )
     else:

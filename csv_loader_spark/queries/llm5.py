@@ -97,7 +97,7 @@ _TOKS_CTE = r"""
            md5(array_to_string(t[start_tok : start_tok + {_CHUNK} - 1], ' ')) AS chunk_fp
     FROM chunks
     """,
-    tags=("text", "chunking", "llm"),
+    tags=("text", "chunking", "llm", "r7"),
 )
 def q99_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking (size {_CHUNK}, stride {_STRIDE}): every doc
@@ -252,7 +252,7 @@ def _greedy_pack(pdf: pd.DataFrame) -> pd.DataFrame:
     SELECT source, doc_id, CAST(n AS BIGINT) AS n_tok, pack_id
     FROM packed
     """,
-    tags=("packing", "stateful", "llm"),
+    tags=("packing", "stateful", "llm", "r7"),
 )
 def q101_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-fit-in-order packing (instruction-tuning style: a doc NEVER
@@ -529,7 +529,7 @@ def _knn_arrow_batches(qids, QM, qn, k):
 @query(
     "q108_knn_arrow",
     oracle=get("q35_knn_bruteforce").oracle,
-    tags=("similarity", "knn", "arrow", "llm"),
+    tags=("similarity", "knn", "arrow", "llm", "r7"),
 )
 def q108_knn_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q35's brute-force cosine top-k re-expressed on the Arrow path:

@@ -111,7 +111,7 @@ _PASSAGE_CTE = rf"""
     FROM flagged
     GROUP BY doc_id
     """,
-    tags=("dedup", "text", "llm"),
+    tags=("dedup", "text", "llm", "r8"),
 )
 def q115_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style sub-document dedup: split each doc into fixed
@@ -223,7 +223,7 @@ def q116_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM df
     GROUP BY doc_id
     """,
-    tags=("dedup", "metrics", "llm"),
+    tags=("dedup", "metrics", "llm", "r8"),
 )
 def q117_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplication fraction: the share of a doc's distinct
@@ -361,7 +361,7 @@ def _quantized_knn_recall(spark: SparkSession, joined: DataFrame) -> DataFrame:
     FROM ranked
     GROUP BY query_id
     """,
-    tags=("similarity", "quantization", "llm"),
+    tags=("similarity", "quantization", "llm", "r8"),
 )
 def q118_sq8_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar quantization of the embedding column (per-dimension
@@ -550,7 +550,7 @@ def jaccard_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q119_prefix_jaccard_join",
     oracle=get("q33_ngram_jaccard").oracle,
-    tags=("dedup", "similarity", "llm"),
+    tags=("dedup", "similarity", "llm", "r8"),
 )
 def q119_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard >= 0.5 join via PREFIX FILTERING (the
@@ -678,7 +678,7 @@ _QUOTA_SALT = ":quota"
     SELECT doc_id, source, CAST(rnk AS BIGINT) AS rnk
     FROM ranked WHERE rnk <= {_QUOTA}
     """,
-    tags=("sampling", "curation", "llm"),
+    tags=("sampling", "curation", "llm", "r8"),
 )
 def q121_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain/source cap: keep at most 30 documents per source,

@@ -97,7 +97,7 @@ _FP_SQL = r"md5(array_to_string(string_split_regex(trim(lower(text)), '\s+'), ' 
                 ELSE 'accepted' END AS verdict
     FROM arr a
     """,
-    tags=("dedup", "incremental", "lsh", "llm"),
+    tags=("dedup", "incremental", "lsh", "llm", "r9"),
 )
 def q131_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time NEAR-dup admission: arrivals (odd doc_ids) probed
@@ -218,7 +218,7 @@ def _q132_oracle() -> str:
     """
 
 
-@query("q132_admission_manifest", oracle=_q132_oracle(), tags=("curation", "llm"))
+@query("q132_admission_manifest", oracle=_q132_oracle(), tags=("curation", "llm", "r9"))
 def q132_admission_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL admission manifest: all five curation rules composed in
     pipeline order on one corpus scan — (1) domain blocklist (q102, with
@@ -412,7 +412,7 @@ def _q133_oracle() -> str:
 @query(
     "q133_phash_neardup",
     oracle=_q133_oracle(),
-    tags=("dedup", "multimodal", "lsh", "llm"),
+    tags=("dedup", "multimodal", "lsh", "llm", "r9"),
 )
 def q133_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-dup over the media table: dHash (difference
@@ -599,7 +599,7 @@ def _q134_oracle() -> str:
 @query(
     "q134_ivfpq_knn_recall",
     oracle=_q134_oracle(),
-    tags=("similarity", "quantization", "llm"),
+    tags=("similarity", "quantization", "llm", "r9"),
 )
 def q134_ivfpq_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-RESIDUAL product-quantized KNN (IVFPQ — Jegou et al. TPAMI
@@ -754,7 +754,7 @@ _SNAP_OFFSET = 2_000_000_000
            CAST(sum(tok_delta) AS BIGINT) AS tok_delta
     FROM diff GROUP BY source, verdict
     """,
-    tags=("versioning", "dedup", "llm"),
+    tags=("versioning", "dedup", "llm", "r9"),
 )
 def q135_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus SNAPSHOT DIFF: the version-over-version changelog a curated
@@ -844,7 +844,7 @@ _RARE_MAX_OCC = 2  # a token is "rare" if it occurs <= 2 times corpus-wide
     FROM toks t JOIN freq f ON f.w = t.w
     GROUP BY t.doc_id
     """,
-    tags=("quality", "text", "llm"),
+    tags=("quality", "text", "llm", "r9"),
 )
 def q136_rare_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rare-token fraction per document: the share of a doc's token
@@ -921,7 +921,7 @@ def _q137_oracle() -> str:
     """
 
 
-@query("q137_gopher_rules", oracle=_q137_oracle(), tags=("quality", "curation", "llm"))
+@query("q137_gopher_rules", oracle=_q137_oracle(), tags=("quality", "curation", "llm", "r9"))
 def q137_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality RULE PACK (Rae et al. 2021, appendix A1.1):
     per-document pass/fail for the four classic heuristics — word-count
@@ -1075,7 +1075,7 @@ def _q138_oracle() -> str:
 @query(
     "q138_ingest_passage_dedup",
     oracle=_q138_oracle(),
-    tags=("dedup", "incremental", "llm"),
+    tags=("dedup", "incremental", "llm", "r9"),
 )
 def q138_ingest_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time PASSAGE-granularity dedup: arrivals probed against the
@@ -1151,7 +1151,7 @@ def _q139_oracle() -> str:
     """
 
 
-@query("q139_bpe_apply", oracle=_q139_oracle(), tags=("tokenizer", "text", "llm"))
+@query("q139_bpe_apply", oracle=_q139_oracle(), tags=("tokenizer", "text", "llm", "r9"))
 def q139_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE TOKENIZATION with a trained merge table (Sennrich et al., ACL
     2016): every word splits to characters and the frozen 24-merge table
@@ -1246,7 +1246,7 @@ def _q140_oracle() -> str:
     """
 
 
-@query("q140_html_strip", oracle=_q140_oracle(), tags=("cleaning", "text", "llm"))
+@query("q140_html_strip", oracle=_q140_oracle(), tags=("cleaning", "text", "llm", "r9"))
 def q140_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML/markup EXTRACTION — the extractor stage every web-crawl
     pipeline runs before any text op (trafilatura/jusText class, reduced
@@ -1342,7 +1342,7 @@ def _q141_oracle() -> str:
     """
 
 
-@query("q141_unicode_normalize", oracle=_q141_oracle(), tags=("cleaning", "text", "llm"))
+@query("q141_unicode_normalize", oracle=_q141_oracle(), tags=("cleaning", "text", "llm", "r9"))
 def q141_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode/typography NORMALIZATION — the ftfy-class cleanup every
     web corpus needs before tokenization: curly quotes to straight,
@@ -1423,7 +1423,7 @@ def _q142_oracle() -> str:
     """
 
 
-@query("q142_intradoc_dedup", oracle=_q142_oracle(), tags=("dedup", "text", "llm"))
+@query("q142_intradoc_dedup", oracle=_q142_oracle(), tags=("dedup", "text", "llm", "r9"))
 def q142_intradoc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTRA-document passage dedup — q115's sub-document rule scoped to
     each document alone (Dolma's within-page paragraph dedup): a passage
@@ -1528,7 +1528,7 @@ def _q143_oracle() -> str:
     """
 
 
-@query("q143_cluster_keep_best", oracle=_q143_oracle(), tags=("dedup", "graph", "iterative", "llm"))
+@query("q143_cluster_keep_best", oracle=_q143_oracle(), tags=("dedup", "graph", "iterative", "llm", "r9"))
 def q143_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster REPRESENTATIVE selection: q67's connected
     components (exact Jaccard >= 0.5 edges, iterative min-label
@@ -1594,11 +1594,9 @@ _PROBE_TAU_NUM, _PROBE_TAU_DEN = 3, 10  # "true near-dup" = exact Jaccard >= 0.3
 # n_shingles(doc) × max_df candidates per rejected doc; intersection
 # counts can only shrink, so under flood the meter UNDER-reports
 # precision (a conservative audit) and at gate scale the guard is inert
-# (sf0.01 max corpus df = 5 over 500 docs). Env-tunable and read at
-# import so the Spark plan and the oracle SQL bake the SAME value.
-_PROBE_VERIFY_MAX_DF = int(
-    os.environ.get("SPARK_GRAFT_PROBE_VERIFY_MAX_DF", "512")
-)
+# (sf0.01 max corpus df = 5 over 500 docs). One constant, so the Spark
+# plan and the oracle SQL bake the SAME value.
+_PROBE_VERIFY_MAX_DF = 512
 
 
 @query(
@@ -1657,7 +1655,7 @@ _PROBE_VERIFY_MAX_DF = int(
                           // (SELECT count(*) FROM nc) END AS BIGINT)
              AS precision_bp
     """,
-    tags=("dedup", "metrics", "incremental", "llm"),
+    tags=("dedup", "metrics", "incremental", "llm", "r9"),
 )
 def q144_ingest_probe_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRECISION of the ingest probe's band-collision rejection rule
@@ -1959,7 +1957,7 @@ def _q145_oracle() -> str:
 @query(
     "q145_ingest_verified_neardup",
     oracle=_q145_oracle(),
-    tags=("dedup", "incremental", "lsh", "llm"),
+    tags=("dedup", "incremental", "lsh", "llm", "r10"),
 )
 def q145_ingest_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q131's ingest-time admission verdicts with the VERIFY tier
@@ -2073,7 +2071,7 @@ def _q146_oracle() -> str:
 @query(
     "q146_verified_probe_precision",
     oracle=_q146_oracle(),
-    tags=("dedup", "metrics", "incremental", "llm"),
+    tags=("dedup", "metrics", "incremental", "llm", "r10"),
 )
 def q146_verified_probe_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q144's precision meter pointed at the VERIFY-tier probe (q145):
@@ -2156,7 +2154,7 @@ def q146_verified_probe_precision(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM cl WHERE verdict IS NOT NULL
     GROUP BY 1, 2
     """,
-    tags=("warehouse", "incremental", "llm"),
+    tags=("warehouse", "incremental", "llm", "r10"),
 )
 def q147_version_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q135's release diff as the INCREMENTAL changelog operator

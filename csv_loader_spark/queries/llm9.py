@@ -183,7 +183,7 @@ def dsir_scores(target: DataFrame, raw: DataFrame) -> DataFrame:
 @query(
     "q148_dsir_importance",
     oracle=_dsir_oracle(),
-    tags=("selection", "quality", "llm"),
+    tags=("selection", "quality", "llm", "r12"),
 )
 def q148_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection: score every candidate document (doc_id % 10
@@ -281,7 +281,7 @@ def _semdedup_oracle() -> str:
 @query(
     "q149_semdedup",
     oracle=_semdedup_oracle(),
-    tags=("dedup", "similarity", "embedding", "llm"),
+    tags=("dedup", "similarity", "embedding", "llm", "r12"),
 )
 def q149_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication with the
@@ -425,7 +425,7 @@ def _lm_perplexity_oracle() -> str:
 @query(
     "q150_lm_perplexity",
     oracle=_lm_perplexity_oracle(),
-    tags=("quality", "selection", "llm"),
+    tags=("quality", "selection", "llm", "r12"),
 )
 def q150_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style language-model quality scoring (Wenzek et al. 2020):
@@ -504,7 +504,7 @@ def _ccnet_buckets_oracle() -> str:
 @query(
     "q153_ccnet_buckets",
     oracle=_ccnet_buckets_oracle(),
-    tags=("quality", "selection", "llm"),
+    tags=("quality", "selection", "llm", "r12"),
 )
 def q153_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's perplexity bucketing (Wenzek et al. 2020 §4.4): within
@@ -602,7 +602,7 @@ def _repetition_oracle() -> str:
 @query(
     "q151_repetition_rules",
     oracle=_repetition_oracle(),
-    tags=("quality", "text", "llm"),
+    tags=("quality", "text", "llm", "r12"),
 )
 def q151_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition removal (Rae et al. 2021, A1.1 — the half the
@@ -727,7 +727,7 @@ def _unimax_oracle() -> str:
 @query(
     "q152_unimax_mixture",
     oracle=_unimax_oracle(),
-    tags=("selection", "mixing", "llm"),
+    tags=("selection", "mixing", "llm", "r12"),
 )
 def q152_unimax_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UniMax-style token-budget mixture (Chung et al. 2023: allocate a
@@ -939,7 +939,7 @@ def _capstone_oracle() -> str:
 @query(
     "q154_curation_capstone",
     oracle=_capstone_oracle(),
-    tags=("curation", "quality", "selection", "mixing", "llm"),
+    tags=("curation", "quality", "selection", "mixing", "llm", "r12"),
 )
 def q154_curation_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MODEL-BASED curation tier composed end-to-end — the r12

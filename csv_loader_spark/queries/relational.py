@@ -47,7 +47,7 @@ from csv_loader_spark.queries.registry import query
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("agg", "filter", "flagship"),
+    tags=("agg", "filter", "flagship", "headline"),
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped pricing summary: filter → hash agg (8 aggregates).
@@ -143,7 +143,7 @@ def q06_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY sum(l.l_extendedprice * (1 - l.l_discount)) DESC, o.o_orderkey
     LIMIT 10
     """,
-    tags=("join", "agg", "topk"),
+    tags=("join", "agg", "topk", "headline"),
 )
 def q03_topn_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3-shaped 3-way join + agg + deterministic top-N.
@@ -221,7 +221,7 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate <  TIMESTAMP '1997-01-01'
     GROUP BY n.n_name
     """,
-    tags=("join", "broadcast", "agg"),
+    tags=("join", "broadcast", "agg", "headline"),
 )
 def q05_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5-shaped 6-way join; every dim side broadcast, one fact shuffle.
@@ -270,7 +270,7 @@ def q05_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_size <= 10
     GROUP BY p.p_brand
     """,
-    tags=("join", "broadcast", "agg"),
+    tags=("join", "broadcast", "agg", "headline"),
 )
 def q07_brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈broadcast-dim join + agg by a dim attribute (no fact shuffle
@@ -529,7 +529,7 @@ def q39_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("agg", "distinct"),
+    tags=("agg", "distinct", "headline"),
 )
 def q26_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact COUNT(DISTINCT) per group — the distributed version of the
@@ -573,7 +573,7 @@ def q27_distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     WHERE rn <= 3
     """,
-    tags=("window", "topk"),
+    tags=("window", "topk", "headline"),
 )
 def q13_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K per group via row_number (deterministic tie-break on orderkey).
@@ -760,7 +760,7 @@ def q19_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderdate >= TIMESTAMP '1997-01-01'
     GROUP BY 1, 2
     """,
-    tags=("date", "agg"),
+    tags=("date", "agg", "headline"),
 )
 def q21_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-part extraction + monthly aggregation (date_trunc family)."""
@@ -860,7 +860,7 @@ def q22_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions
     GROUP BY user_id
     """,
-    tags=("session", "window"),
+    tags=("session", "window", "headline"),
 )
 def q23_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with a 30-minute inactivity gap: lag → gap flag →

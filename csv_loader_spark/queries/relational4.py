@@ -48,7 +48,7 @@ from csv_loader_spark.queries.registry import query
     FROM base b FULL OUTER JOIN changes c ON b.o_orderkey = c.o_orderkey
     WHERE coalesce(c.op, 'K') <> 'D'
     """,
-    tags=("join", "cdc", "merge"),
+    tags=("join", "cdc", "merge", "r7"),
 )
 def q105_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC upsert: apply a deterministic changeset (updates to every 10th
@@ -125,7 +125,7 @@ def q105_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
            attr
     FROM versions
     """,
-    tags=("window", "scd2", "cdc"),
+    tags=("window", "scd2", "cdc", "r7"),
 )
 def q106_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 history: collapse each user's event stream into validity

@@ -382,20 +382,19 @@ def _triangle_oracle() -> str:
 #: overhead (unsafe row header + hash table load factor).
 _TRI_BYTES_PER_EDGE = 32
 #: Broadcast the closing edge list only when its estimated size is under
-#: this many bytes (env-tunable; default 256 MiB of row payload — the
-#: estimate is PRE-hash-relation, so the built broadcast relation is
-#: roughly double that — far above Spark's 10 MB
-#: autoBroadcastJoinThreshold because this hint is load-bearing: a shuffled
-#: closing join moves the O(m^1.5) wedge stream, measured 21 s vs 4 s at
-#: sf0.1 — but bounded so a 100 TB-scale co-order edge list of O(100M+)
-#: rows never hard-ODEs the executors; above it the join shuffles and the
-#: m^1.5 wedge bound still holds).
-_TRI_BROADCAST_MAX_ENV = "SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES"
+#: this many bytes (256 MiB of row payload — the estimate is
+#: PRE-hash-relation, so the built broadcast relation is roughly double
+#: that — far above Spark's 10 MB autoBroadcastJoinThreshold because this
+#: hint is load-bearing: a shuffled closing join moves the O(m^1.5) wedge
+#: stream, measured 21 s vs 4 s at sf0.1 — but bounded so a 100 TB-scale
+#: co-order edge list of O(100M+) rows never hard-ODEs the executors;
+#: above it the join shuffles and the m^1.5 wedge bound still holds).
+_TRI_BROADCAST_MAX_BYTES = 256 << 20
 
 
 def triangle_nodes(
     edges: DataFrame,
-    broadcast_max_bytes: int | None = None,
+    broadcast_max_bytes: int = _TRI_BROADCAST_MAX_BYTES,
     n_edges: int | None = None,
 ) -> DataFrame:
     """Per-node triangle participation counts over an undirected edge
@@ -414,17 +413,11 @@ def triangle_nodes(
     SIZE-GATED: the edge frame is counted once (materializing the same
     checkpoint every downstream branch reuses, so the action is free) and
     the hint applies only while ``m * 32 B`` fits under
-    ``broadcast_max_bytes`` (default ``$SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES``
-    or 256 MiB row payload, ~0.5 GiB built relation); larger graphs fall
-    back to the shuffled join. Explain-only callers can pass ``n_edges``
-    to skip the gating count's materialization job.
+    ``broadcast_max_bytes`` (256 MiB row payload by default, ~0.5 GiB
+    built relation); larger graphs fall back to the shuffled join.
+    Explain-only callers can pass ``n_edges`` to skip the gating count's
+    materialization job.
     """
-    import os
-
-    if broadcast_max_bytes is None:
-        broadcast_max_bytes = int(
-            os.environ.get(_TRI_BROADCAST_MAX_ENV, str(256 << 20))
-        )
     e = edges.localCheckpoint(eager=False)
     if n_edges is None:
         # one action: materializes the checkpoint (deg / wedges / closing

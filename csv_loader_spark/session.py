@@ -32,6 +32,14 @@ from csv_loader_spark import cds
 CODEGEN_CACHE_ENTRIES = 4096
 
 
+def local_cpus() -> int:
+    """Cores a local run uses: ``$SPARK_GRAFT_CPUS``, else the host's count.
+
+    Spark's ``local[N]`` and the DuckDB baselines both take it, so the two
+    engines are compared on the same number of threads."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
 def get_spark(
     app_name: str = "csv_loader_spark",
     master: str | None = None,
@@ -64,7 +72,7 @@ def get_spark(
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

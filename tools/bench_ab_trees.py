@@ -16,7 +16,7 @@ adjudicate via interleaved A/Bs and POOLED MINS, never single cells):
 - load averages are stamped per cell so a degraded window is visible.
 
 Usage:
-  python tools/bench_ab_trees.py --tree-a /root/repo --tree-b <worktree> \
+  python tools/bench_ab_trees.py --tree-a . --tree-b <worktree> \
       --queries q05_nation_volume,... [--pairs 4] [--label r16_head_vs_r14]
   python tools/bench_ab_trees.py --cell --queries ...   # internal
 """

@@ -1,6 +1,7 @@
-"""DuckDB side of the benchmark: times each headline query's ORACLE SQL on
-the same parquet, warm (one priming run, then timed), 32 threads — the
-methodology bench.py mirrors on the Spark side. Prints one JSON line."""
+"""DuckDB side of the benchmark: times each bench query's ORACLE SQL on
+the same parquet, warm (one priming run, then timed), on as many threads
+as bench.py gives Spark (``session.local_cpus``) — the methodology bench.py
+mirrors on the Spark side. Prints one JSON line."""
 
 from __future__ import annotations
 
@@ -13,51 +14,35 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    HEADLINE, NEW_OPS, R8_OPS, R9_OPS, R10_OPS, R12_OPS, R12C_OPS, R13_OPS,
-    R14_OPS, R15_OPS,
-)
+from bench import _ALL, group_totals  # noqa: E402
 from csv_loader_spark.io.tables import TABLES  # noqa: E402
 from csv_loader_spark.queries.registry import all_specs  # noqa: E402
+from csv_loader_spark.session import local_cpus  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     con = duckdb.connect()
-    con.execute(f"SET threads TO {cpus}")
+    con.execute(f"SET threads TO {local_cpus()}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     specs = all_specs()
     times: dict[str, float] = {}
-    for name in (HEADLINE + NEW_OPS + R8_OPS + R9_OPS + R10_OPS + R12_OPS
-                 + R12C_OPS + R13_OPS + R14_OPS + R15_OPS):
+    for name in _ALL:
         sql = specs[name].oracle
         con.execute(sql).fetchall()  # prime
         t0 = time.perf_counter()
         con.execute(sql).fetchall()
         times[name] = round(time.perf_counter() - t0, 4)
+    groups = group_totals(times)
     print(
         json.dumps(
             {
                 "metric": "duckdb_headline_total",
-                "value": round(sum(times[n] for n in HEADLINE), 4),
+                "value": groups["headline"],
                 "unit": "sec",
                 "queries": times,
-                "groups": {
-                    "headline": round(sum(times[n] for n in HEADLINE), 4),
-                    "new_ops": round(sum(times[n] for n in NEW_OPS), 4),
-                    "r8_ops": round(sum(times[n] for n in R8_OPS), 4),
-                    "r9_ops": round(sum(times[n] for n in R9_OPS), 4),
-                    "r10_ops": round(sum(times[n] for n in R10_OPS), 4),
-                    "r12_ops": round(sum(times[n] for n in R12_OPS), 4),
-                    "r12c_ops": round(
-                        sum(times[n] for n in R12C_OPS), 4
-                    ),
-                    "r13_ops": round(sum(times[n] for n in R13_OPS), 4),
-                    "r14_ops": round(sum(times[n] for n in R14_OPS), 4),
-                    "r15_ops": round(sum(times[n] for n in R15_OPS), 4),
-                },
+                "groups": groups,
             }
         )
     )

@@ -25,7 +25,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from csv_loader_spark.session import get_spark  # noqa: E402
+from csv_loader_spark.session import get_spark, local_cpus  # noqa: E402
 
 MULTIPLIERS = (1, 10, 30, 100)
 
@@ -87,7 +87,7 @@ def run_spark(sf_dir: str, m: int) -> dict[str, float]:
 
 def run_duckdb(sf_dir: str, m: int) -> dict[str, float]:
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {local_cpus()}")
     li = os.path.join(sf_dir, "lineitem.parquet")
     union = " UNION ALL ".join([f"SELECT * FROM '{li}'"] * m)
     con.execute(f"CREATE VIEW lineitem_m AS {union}")
@@ -180,7 +180,7 @@ def run_spark_decontam(sf_dir: str, m: int) -> float:
 
 def run_duckdb_decontam(sf_dir: str, m: int) -> float:
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {local_cpus()}")
     doc = os.path.join(sf_dir, "documents.parquet")
     union = " UNION ALL ".join(
         [f"SELECT doc_id, text FROM '{doc}'"]
@@ -249,7 +249,7 @@ def run_duckdb_dedup(sf_dir: str, m: int) -> dict[str, dict]:
     from csv_loader_spark.queries.registry import get
 
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {local_cpus()}")
     doc = os.path.join(sf_dir, "documents.parquet")
     union = " UNION ALL ".join(
         [f"SELECT doc_id, text FROM '{doc}'"]

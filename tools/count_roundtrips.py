@@ -29,6 +29,7 @@ import contextlib
 import sys
 import threading
 import time
+from pathlib import Path
 
 from py4j import clientserver, java_gateway
 
@@ -88,11 +89,8 @@ def main() -> int:
 
 
 def _report(counter: dict) -> int:
-    # $SPARK_GRAFT_REPO lets an A/B harness point the same tool at a
-    # worktree pinned to an older commit (the "before" side).
-    import os
-
-    sys.path.insert(0, os.environ.get("SPARK_GRAFT_REPO", "/root/repo"))
+    # the checkout this script lives in, whatever the working directory
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from csv_loader_spark.session import get_spark
     from csv_loader_spark.queries.registry import all_specs
 

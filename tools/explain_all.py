@@ -11,7 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, R8_OPS, R9_OPS, R10_OPS, R12_OPS  # noqa: E402
+from bench import _ALL, HEADLINE  # noqa: E402
 from csv_loader_spark.queries.registry import all_specs  # noqa: E402
 from csv_loader_spark.session import get_spark  # noqa: E402
 
@@ -189,10 +189,9 @@ def main() -> None:
         f"Source: `{sf_dir}`; plan-shape assertions live in tests/test_plans.py.",
         "",
     ]
-    heavy_r8 = tuple(
-        n for n in (R8_OPS + R9_OPS + R10_OPS + R12_OPS) if n in NOTES
-    )  # the r8/r9 queries whose plans warrant the human-readable snapshot
-    for name in HEADLINE + heavy_r8:
+    # the headline plus the queries whose plans carry an adjudication note
+    names = HEADLINE + tuple(n for n in _ALL if n in NOTES and n not in HEADLINE)
+    for name in names:
         df = specs[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         out += [f"## {name}", ""]
@@ -202,7 +201,7 @@ def main() -> None:
     out.append(APPENDIX)
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(HEADLINE) + len(heavy_r8)} plans)")
+    print(f"wrote PLANS.md ({len(names)} plans)")
 
 
 if __name__ == "__main__":

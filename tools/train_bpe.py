@@ -25,7 +25,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -33,7 +34,7 @@ from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.session import get_spark
 
-OUT = "/root/repo/csv_loader_spark/functions/bpe_merges.py"
+OUT = os.path.join(REPO, "csv_loader_spark", "functions", "bpe_merges.py")
 
 
 def train(sf_dir: str, n_merges: int) -> list[tuple[str, str, int]]:

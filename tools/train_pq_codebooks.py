@@ -24,8 +24,11 @@ Writes csv_loader_spark/functions/pq_codebooks.py.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, whatever the working directory
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -34,7 +37,7 @@ from csv_loader_spark.functions import vectors as VEC
 from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.session import get_spark
 
-OUT = "/root/repo/csv_loader_spark/functions/pq_codebooks.py"
+OUT = REPO / "csv_loader_spark" / "functions" / "pq_codebooks.py"
 
 
 def train(
