@@ -439,8 +439,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.kinesis:
         from csv_loader_spark.sinks.kinesis import write_kinesis
 
-        write_kinesis(pings, args.kinesis)
-        row = distinct_vehicle_counts(pings).collect()[0]
+        row = write_kinesis(pings, args.kinesis)
     else:
         from csv_loader_spark.sinks.http import write_http
 

@@ -23,9 +23,9 @@ constants re-mapped. README.md ("Wire-format compatibility") and the
 CLI --help epilog state this user-facing.
 
 Pure Python, deterministic, dependency-free — runs on executors in the
-sink's Python worker (``mapInArrow`` for the batch sink, the streaming
-sink's ``foreachPartition``). Each payload is assembled from a list of
-parts joined once, so encoding is linear in the envelope's row count.
+sinks' Python worker (``mapInArrow``, through ``sinks.http._deliver``). Each
+payload is assembled from a list of parts joined once, so encoding is linear
+in the envelope's row count.
 """
 
 from __future__ import annotations

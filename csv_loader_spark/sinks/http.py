@@ -10,17 +10,19 @@ Delivery semantics reproduced exactly:
 - a fresh connection per attempt (the reference builds a new
   CloseableHttpClient every try, :202-204; urllib does this naturally).
 
-Scale shape: ``write_http`` runs every partition through ``mapInArrow``.
-The executor's Python worker reads its partition as Arrow batches, posts it
-in ~10k-row envelopes, and emits one row per distinct (vehicle_id_str,
-vehicle_id) with its row count. The driver never materializes the data, N
-executors POST in parallel (the reference is one thread; at 100 TB the
-receiver's capacity, not the engine, is the limit — cap parallelism by
-coalescing first if the receiver needs it), and the load's distinct counts
-come from a Spark aggregate over those small rows in the same job, so the
-file is scanned and parsed once. A task or stage that Spark recomputes
-(lost executor, failed fetch) posts its envelopes again: at-least-once, like
-a transport retry.
+Scale shape: ``_deliver`` is the one executor-side delivery shape, shared
+by ``write_http``, the Kinesis sink and each streaming micro-batch. It runs
+every partition through ``mapInArrow``: the executor's Python worker reads
+its partition as Arrow batches, hands the (vehicle_id, lat, lon, ts_millis)
+rows to a sender (here ~10k-row envelope POSTs), and emits one row per
+distinct (vehicle_id_str, vehicle_id) with its row count. The driver never
+materializes the data, N executors send in parallel (the reference is one
+thread; at 100 TB the receiver's capacity, not the engine, is the limit —
+cap parallelism by coalescing first if the receiver needs it), and the
+load's distinct counts come from a Spark aggregate over those small rows in
+the same job, so the file is scanned and parsed once. A task or stage that
+Spark recomputes (lost executor, failed fetch) sends its rows again:
+at-least-once, like a transport retry.
 
 Divergences (documented): the reference posts one final possibly-EMPTY
 envelope per file (:169→:196); we skip empty flushes. Batch boundaries land
@@ -35,7 +37,7 @@ import sys
 import time
 import urllib.error
 import urllib.request
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
@@ -92,49 +94,6 @@ def _chunks(it: Iterator, size: int) -> Iterator[list]:
         yield chunk
 
 
-def _post_tuples(
-    tuples: Iterable[tuple[int, float, float, int]],
-    url: str,
-    source_id: int,
-    *,
-    batch_size: int,
-    retry_interval: float,
-    max_retries: int | None,
-) -> int:
-    sent = 0
-    for chunk in _chunks(iter(tuples), batch_size):
-        post_bytes(
-            url,
-            encode_envelope(source_id, chunk),
-            retry_interval=retry_interval,
-            max_retries=max_retries,
-        )
-        sent += len(chunk)
-    return sent
-
-
-def post_partition(
-    rows: Iterable,
-    url: str,
-    source_id: int,
-    *,
-    batch_size: int = BATCH_SIZE,
-    retry_interval: float = RETRY_INTERVAL_S,
-    max_retries: int | None = None,
-) -> int:
-    """Stream one partition's rows to the sink in ``batch_size`` envelopes
-    (micro-batcher, op 14). Returns rows sent. Rows need fields
-    (vehicle_id, lat, lon, ts_millis)."""
-    return _post_tuples(
-        ((r["vehicle_id"], r["lat"], r["lon"], r["ts_millis"]) for r in rows),
-        url,
-        source_id,
-        batch_size=batch_size,
-        retry_interval=retry_interval,
-        max_retries=max_retries,
-    )
-
-
 _ID_KEYS = ["vehicle_id_str", "vehicle_id"]
 _ID_COUNTS_SCHEMA = "vehicle_id_str string, vehicle_id long, n long"
 
@@ -152,6 +111,37 @@ def _arrow_tuples(batches: Iterable, tallies: list) -> Iterator[tuple]:
         yield from zip(*(batch.column(c).to_pylist() for c in cols))
 
 
+def _deliver(pings: DataFrame, send: Callable[[Iterator[tuple]], object]) -> Row:
+    """Drive every partition of ``pings`` through ``send`` on the executors.
+
+    ``send`` gets one partition's (vehicle_id, lat, lon, ts_millis) tuples
+    in order and must consume them all. Returns the load's (n_records,
+    n_vehicles, n_ids), the same exact counts as
+    ``io.pings.distinct_vehicle_counts``, from the same job that sends."""
+
+    def _send_and_count(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        tallies: list = []
+        send(_arrow_tuples(batches, tallies))
+        if tallies:  # yielded only once every row is sent
+            counts = pa.concat_tables(tallies).group_by(_ID_KEYS)
+            counts = counts.aggregate([("count_all", "sum")])
+            yield from counts.select([*_ID_KEYS, "count_all_sum"]).rename_columns(
+                [*_ID_KEYS, "n"]
+            ).to_batches()
+
+    id_counts = pings.select(
+        *_ID_KEYS, "lat", "lon", "ts_millis"
+    ).mapInArrow(_send_and_count, _ID_COUNTS_SCHEMA)
+    return id_counts.agg(
+        # a sum over no rows is NULL: an empty load has 0 records
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_records"),
+        F.countDistinct("vehicle_id_str").alias("n_vehicles"),
+        F.countDistinct("vehicle_id").alias("n_ids"),
+    ).collect()[0]
+
+
 def write_http(
     pings: DataFrame,
     url: str,
@@ -161,37 +151,17 @@ def write_http(
     retry_interval: float = RETRY_INTERVAL_S,
     max_retries: int | None = None,
 ) -> Row:
-    """Batch-mode sink: every partition posts its rows as protobuf envelopes.
+    """Batch-mode sink: every partition posts its rows as protobuf envelopes
+    of ``batch_size`` rows (micro-batcher, op 14). Executor-side, no driver
+    collect; returns the load's counts (``_deliver``)."""
 
-    Executor-side, no driver collect — the 100 TB-safe shape. Returns the
-    load's (n_records, n_vehicles, n_ids), the same exact counts as
-    ``io.pings.distinct_vehicle_counts``, from the same job that posts."""
+    def _post(tuples: Iterator[tuple]) -> None:
+        for chunk in _chunks(tuples, batch_size):
+            post_bytes(
+                url,
+                encode_envelope(source_id, chunk),
+                retry_interval=retry_interval,
+                max_retries=max_retries,
+            )
 
-    def _post_and_count(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        tallies: list = []
-        _post_tuples(
-            _arrow_tuples(batches, tallies),
-            url,
-            source_id,
-            batch_size=batch_size,
-            retry_interval=retry_interval,
-            max_retries=max_retries,
-        )
-        if tallies:  # yielded only once every envelope is posted
-            counts = pa.concat_tables(tallies).group_by(_ID_KEYS)
-            counts = counts.aggregate([("count_all", "sum")])
-            yield from counts.select([*_ID_KEYS, "count_all_sum"]).rename_columns(
-                [*_ID_KEYS, "n"]
-            ).to_batches()
-
-    id_counts = pings.select(
-        *_ID_KEYS, "lat", "lon", "ts_millis"
-    ).mapInArrow(_post_and_count, _ID_COUNTS_SCHEMA)
-    return id_counts.agg(
-        # a sum over no rows is NULL: an empty load has 0 records
-        F.coalesce(F.sum("n"), F.lit(0)).alias("n_records"),
-        F.countDistinct("vehicle_id_str").alias("n_vehicles"),
-        F.countDistinct("vehicle_id").alias("n_ids"),
-    ).collect()[0]
+    return _deliver(pings, _post)

@@ -4,8 +4,9 @@ implementation (SURVEY §2.1 "Sinks beyond HTTP").
 
 Shape: ``put_records`` in chunks of ≤500 (the Kinesis API limit), partition
 key = vehicle_id so per-vehicle ordering holds within a shard — the property
-downstream map-matching needs (SURVEY §7.4.5). Executor-side via
-``foreachPartition``; one boto3 client per partition.
+downstream map-matching needs (SURVEY §7.4.5). Executor-side through the
+HTTP sink's ``_deliver`` (``mapInArrow``), so the load's distinct counts
+come from the same job; one boto3 client per partition.
 
 Retry matrix mirrors the HTTP sink's mapping of the reference
 (CsvLoader.java:200-233) onto the Kinesis API: PutRecords can PARTIALLY
@@ -18,13 +19,10 @@ transit is resent.
 The boto3 import stays gated (the default client factory raises a clear
 error at call time when absent); the chunking/partition-key/retry path
 runs against any injected ``client_factory``
-(tests/test_kinesis_sink.py drives it end-to-end through
-foreachPartition with a fake client). Gate re-check 2026-08-14 (r12):
-boto3 1.43 + moto 5.2 ARE present in this image — the moto-backed
-contract tests in the same file now exercise the REAL client
-marshalling (botocore parameter validation, true PutRecords response
-shapes, shard read-back of the protobuf payload), closing the one gap
-the fake client could not reach.
+(tests/test_kinesis_sink.py drives ``write_kinesis`` end-to-end with a fake
+client, and its moto-backed tests exercise the real client marshalling:
+botocore parameter validation, true PutRecords response shapes, shard
+read-back of the protobuf payload).
 """
 
 from __future__ import annotations
@@ -34,10 +32,10 @@ import time
 from collections.abc import Iterable, Iterator
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 from csv_loader_spark.sinks.envelope import encode_message
-from csv_loader_spark.sinks.http import RETRY_INTERVAL_S
+from csv_loader_spark.sinks.http import RETRY_INTERVAL_S, _chunks, _deliver
 
 try:  # pragma: no cover - absent in the test container
     import boto3  # type: ignore
@@ -48,25 +46,21 @@ PUT_RECORDS_LIMIT = 500  # Kinesis PutRecords hard cap per call
 
 
 def records_for_kinesis(
-    rows: Iterable, *, chunk_size: int = PUT_RECORDS_LIMIT
+    tuples: Iterable[tuple[int, float, float, int]],
+    *,
+    chunk_size: int = PUT_RECORDS_LIMIT,
 ) -> Iterator[list[dict]]:
-    """Rows → PutRecords entry chunks: Data = one-location protobuf
-    VehicleMessage, PartitionKey = vehicle_id (per-vehicle shard ordering)."""
-    chunk: list[dict] = []
-    for r in rows:
-        chunk.append(
+    """(vehicle_id, lat, lon, ts_millis) tuples → PutRecords entry chunks:
+    Data = one-location protobuf VehicleMessage, PartitionKey = vehicle_id
+    (per-vehicle shard ordering)."""
+    for chunk in _chunks(iter(tuples), chunk_size):
+        yield [
             {
-                "Data": encode_message(
-                    r["vehicle_id"], [(r["lat"], r["lon"], r["ts_millis"])]
-                ),
-                "PartitionKey": str(r["vehicle_id"]),
+                "Data": encode_message(vid, [(lat, lon, ts)]),
+                "PartitionKey": str(vid),
             }
-        )
-        if len(chunk) >= chunk_size:
-            yield chunk
-            chunk = []
-    if chunk:
-        yield chunk
+            for vid, lat, lon, ts in chunk
+        ]
 
 
 def put_records_with_retry(
@@ -162,18 +156,19 @@ def write_kinesis(
     client_factory: Callable[[], object] | None = None,
     retry_interval: float = RETRY_INTERVAL_S,
     max_retries: int | None = None,
-) -> None:
+) -> Row:
     """Executor-side Kinesis delivery: one client per partition, ≤500-entry
     PutRecords chunks, vehicle_id partition key, partial-failure retry.
+    Returns the load's counts (``_deliver``).
 
     ``client_factory`` (a zero-arg callable returning a boto3-shaped
     client) is built per PARTITION on the executor — injectable for tests
     and for credential customization; defaults to ``boto3.client``."""
     factory = client_factory or _default_client_factory(region)
 
-    def _send(rows: Iterable) -> None:
+    def _send(tuples: Iterator[tuple]) -> None:
         client = factory()
-        for chunk in records_for_kinesis(rows):
+        for chunk in records_for_kinesis(tuples):
             put_records_with_retry(
                 client,
                 stream_name,
@@ -182,4 +177,4 @@ def write_kinesis(
                 max_retries=max_retries,
             )
 
-    pings.foreachPartition(_send)
+    return _deliver(pings, _send)

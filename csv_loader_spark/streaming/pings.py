@@ -1,5 +1,7 @@
 """Streaming ping ingestion (SURVEY §7.2 M3): readStream → parse chain →
-foreachBatch HTTP sink, with checkpointed exactly-once source tracking.
+foreachBatch HTTP sink, with checkpointed exactly-once source tracking. Each
+micro-batch posts through the batch sink's ``write_http``, so batch and
+streaming loads share one delivery path.
 
 The reference is a one-shot single-pass loader: a crash mid-file restarts
 from scratch under a NEW sourceId (CsvLoader.java:63), and its only
@@ -21,8 +23,7 @@ A ``max`` of per-batch counts would instead report the largest
 single-batch cardinality and arbitrarily underestimate once batches carry
 disjoint vehicles. ``metrics="exact"`` is the documented reference-parity
 OPT-IN (it collect()s id pairs per batch and grows unbounded driver sets,
-exactly like the reference's HashSets); ``metrics=None`` skips metrics
-entirely.
+exactly like the reference's HashSets).
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from csv_loader_spark.io.pings import RAW_SCHEMA, project_pings
-from csv_loader_spark.sinks.http import BATCH_SIZE, RETRY_INTERVAL_S, post_partition
+from csv_loader_spark.sinks.http import BATCH_SIZE, RETRY_INTERVAL_S, write_http
 
 
 def stream_pings(
@@ -154,10 +155,11 @@ def write_stream_http(
     batch_size: int = BATCH_SIZE,
     retry_interval: float = RETRY_INTERVAL_S,
     max_retries: int | None = None,
-    metrics: str | None = "approx",
+    metrics: str = "approx",
     available_now: bool = False,
 ) -> tuple[StreamingQuery, IngestMetrics]:
-    """foreachBatch → per-partition envelope POSTs (executor-side).
+    """foreachBatch → ``write_http`` per micro-batch (executor-side POSTs).
+    ``metrics`` is ``"approx"`` or ``"exact"`` (module docstring).
 
     ``available_now=True`` drains everything currently in the source then
     stops — the batch-equivalent trigger used by tests and backfills.
@@ -165,21 +167,17 @@ def write_stream_http(
     state = IngestMetrics()
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        def _send(rows):
-            post_partition(
-                rows,
+        batch_df.persist()
+        try:
+            write_http(
+                batch_df,
                 url,
                 source_id,
                 batch_size=batch_size,
                 retry_interval=retry_interval,
                 max_retries=max_retries,
             )
-
-        batch_df.persist()
-        try:
-            batch_df.foreachPartition(_send)
-            if metrics in ("exact", "approx"):
-                update_batch_metrics(state, batch_df, batch_id, metrics)
+            update_batch_metrics(state, batch_df, batch_id, metrics)
         finally:
             batch_df.unpersist()
 

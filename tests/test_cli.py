@@ -82,6 +82,26 @@ def test_dry_run_sends_nothing(spark, tmp_path, http_server, capsys):
     assert "unique vehicles" in capsys.readouterr().out
 
 
+def test_stream_posts_once_per_checkpoint(spark, tmp_path, http_server):
+    """--stream drains the directory through the same sink as the batch
+    branch; a second run over the same checkpoint has nothing new to post."""
+    url, rec = http_server
+    src = tmp_path / "incoming"
+    src.mkdir()
+    write_narrow_csv(str(src / "pings.csv"))
+    argv = ["-f", str(src), "--stream", "-u", url,
+            "--checkpoint", str(tmp_path / "ckpt"), "--max-retries", "2"]
+    assert main(argv) == 0
+    sent = sorted(
+        vid for p in rec.payloads for vid, _ in decode_envelope(p).messages
+    )
+    assert sent == sorted(vid for _, (vid, *_ ) in NARROW_ROWS)
+
+    rec.payloads = []
+    assert main(argv) == 0
+    assert rec.payloads == []
+
+
 def test_curate_subcommand_end_to_end(tmp_path, capsys):
     """`python -m csv_loader_spark curate`: the admission DAG over a real
     documents parquet — blocked/dedup/quota/split all fire, kept/ is

@@ -21,9 +21,7 @@ def test_wire_roundtrip_preserves_values():
 
 
 def test_kinesis_chunking_limit():
-    rows = [
-        {"vehicle_id": i, "lat": 1.0, "lon": 2.0, "ts_millis": i} for i in range(1203)
-    ]
+    rows = [(i, 1.0, 2.0, i) for i in range(1203)]
     chunks = list(records_for_kinesis(iter(rows), chunk_size=500))
     assert [len(c) for c in chunks] == [500, 500, 203]
     assert chunks[0][0]["PartitionKey"] == "0"

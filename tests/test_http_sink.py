@@ -8,7 +8,7 @@ import pytest
 
 from csv_loader_spark.io.pings import distinct_vehicle_counts
 from csv_loader_spark.sinks.envelope import decode_envelope
-from csv_loader_spark.sinks.http import post_bytes, post_partition, write_http
+from csv_loader_spark.sinks.http import post_bytes, write_http
 
 
 class _Recorder(BaseHTTPRequestHandler):
@@ -41,17 +41,14 @@ def http_server():
     srv.shutdown()
 
 
-def _rows(n, start=0):
-    return [
-        {"vehicle_id": start + i, "lat": 1.0 + i, "lon": 2.0 + i, "ts_millis": i}
-        for i in range(n)
-    ]
-
-
-def test_batch_boundaries_and_payload(http_server):
+def test_batch_boundaries_and_payload(spark, http_server):
     url, rec = http_server
-    sent = post_partition(iter(_rows(25)), url, source_id=99, batch_size=10)
-    assert sent == 25
+    df = spark.createDataFrame(
+        [(str(i), i, 1.0 + i, 2.0 + i, i) for i in range(25)],
+        "vehicle_id_str string, vehicle_id long, lat double, lon double, ts_millis long",
+    ).coalesce(1)
+    counts = write_http(df, url, source_id=99, batch_size=10, max_retries=2)
+    assert counts["n_records"] == 25
     sizes = [len(decode_envelope(p).messages) for p in rec.payloads]
     assert sizes == [10, 10, 5]  # 10,001-analog grouping + final partial flush
     env = decode_envelope(rec.payloads[0])

@@ -1,6 +1,6 @@
 """End-to-end Kinesis sink test with a fake boto3-shaped client (r7,
 ADVICE): the REAL chunking / partition-key / partial-failure-retry path
-runs executor-side through foreachPartition — no boto3, no AWS. The fake
+runs executor-side through write_kinesis — no boto3, no AWS. The fake
 records every PutRecords call to a shared directory (the executor is a
 separate Python worker process, so plain in-memory capture can't cross)."""
 
@@ -12,13 +12,14 @@ import uuid
 import pytest
 from pyspark import cloudpickle
 
+from csv_loader_spark.io.pings import distinct_vehicle_counts
 from csv_loader_spark.sinks.kinesis import (
     PUT_RECORDS_LIMIT,
     put_records_with_retry,
     write_kinesis,
 )
 
-# The fake client class rides the foreachPartition closure to executor
+# The fake client class rides the sender closure to executor
 # worker PROCESSES, which don't have tests/ on their path — ship this
 # module by value instead of by reference.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
@@ -60,11 +61,11 @@ def test_write_kinesis_end_to_end_chunks_and_retries(spark, tmp_path):
     log_dir = str(tmp_path)
     n = 1200
     pings = spark.createDataFrame(
-        [(i, 10.0 + i * 1e-4, 20.0, 1_433_147_415_000 + i) for i in range(n)],
-        "vehicle_id long, lat double, lon double, ts_millis long",
+        [(str(i), i, 10.0 + i * 1e-4, 20.0, 1_433_147_415_000 + i) for i in range(n)],
+        "vehicle_id_str string, vehicle_id long, lat double, lon double, ts_millis long",
     ).repartition(1)
 
-    write_kinesis(
+    counts = write_kinesis(
         pings,
         "traffic-stream",
         client_factory=lambda: FakeKinesisClient(log_dir),
@@ -83,13 +84,15 @@ def test_write_kinesis_end_to_end_chunks_and_retries(spark, tmp_path):
     delivered = [k for c in calls for k in c["delivered"]]
     assert len(delivered) == n
     assert sorted(map(int, delivered)) == list(range(n))
+    # the counts come from the same job that delivers
+    assert counts.asDict() == distinct_vehicle_counts(pings).collect()[0].asDict()
 
 
 def test_write_kinesis_partition_key_is_vehicle_id(spark, tmp_path):
     log_dir = str(tmp_path)
     pings = spark.createDataFrame(
-        [(42, 1.0, 2.0, 1000), (42, 1.1, 2.1, 2000), (7, 9.0, 9.0, 3000)],
-        "vehicle_id long, lat double, lon double, ts_millis long",
+        [("42", 42, 1.0, 2.0, 1000), ("42", 42, 1.1, 2.1, 2000), ("7", 7, 9.0, 9.0, 3000)],
+        "vehicle_id_str string, vehicle_id long, lat double, lon double, ts_millis long",
     ).coalesce(1)
     write_kinesis(
         pings,
@@ -186,9 +189,9 @@ def test_put_records_raises_on_malformed_responses():
 # botocore parameter validation, response shapes (FailedRecordCount,
 # SequenceNumber), and a true read-back through shard iterators — against
 # moto's Kinesis backend. The fake-client tests above prove the
-# chunk/retry/foreachPartition plumbing; these prove the payload survives
+# chunk/retry/executor plumbing; these prove the payload survives
 # a genuine client round trip. Driver-side on purpose: moto patches
-# botocore IN-PROCESS, and a foreachPartition body runs in a separate
+# botocore IN-PROCESS, and a partition's sender runs in a separate
 # Python worker where the patch is absent — the executor plumbing is
 # already covered by the fake-client end-to-end test.
 # ---------------------------------------------------------------------------
@@ -257,10 +260,7 @@ def test_put_records_real_client_roundtrip():
         return vid, locs
 
     client = _moto_stream()
-    rows = [
-        {"vehicle_id": i, "lat": 45.0 + i / 1000.0, "lon": -122.0, "ts_millis": 1_000 + i}
-        for i in range(1200)
-    ]
+    rows = [(i, 45.0 + i / 1000.0, -122.0, 1_000 + i) for i in range(1200)]
     chunks = list(records_for_kinesis(iter(rows)))
     assert [len(c) for c in chunks] == [500, 500, 200]
     for chunk in chunks:
@@ -276,7 +276,7 @@ def test_put_records_real_client_roundtrip():
     assert set(decoded) == set(range(1200))
     # bit-exact doubles: the wire format is fixed64, so the read-back
     # value must equal the input float exactly, not approximately
-    assert decoded[7] == (rows[7]["lat"], rows[7]["lon"], rows[7]["ts_millis"])
+    assert decoded[7] == rows[7][1:]
 
 
 @moto.mock_aws
