@@ -411,6 +411,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("csv_loader_cli")
     source_id = random.getrandbits(63)  # per-load session id (op 12, :63)
+    retry = {"retry_interval": args.retry_interval, "max_retries": args.max_retries}
 
     if args.stream:
         from csv_loader_spark.streaming.pings import stream_pings, write_stream_http
@@ -425,8 +426,7 @@ def main(argv: list[str] | None = None) -> int:
             source_id,
             ckpt,
             batch_size=args.batch_size,
-            retry_interval=args.retry_interval,
-            max_retries=args.max_retries,
+            **retry,
             metrics="exact" if args.exact_metrics else "approx",
             available_now=True,
         )
@@ -439,18 +439,11 @@ def main(argv: list[str] | None = None) -> int:
     elif args.kinesis:
         from csv_loader_spark.sinks.kinesis import write_kinesis
 
-        row = write_kinesis(pings, args.kinesis)
+        row = write_kinesis(pings, args.kinesis, **retry)
     else:
         from csv_loader_spark.sinks.http import write_http
 
-        row = write_http(
-            pings,
-            args.url,
-            source_id,
-            batch_size=args.batch_size,
-            retry_interval=args.retry_interval,
-            max_retries=args.max_retries,
-        )
+        row = write_http(pings, args.url, source_id, batch_size=args.batch_size, **retry)
     # reference progress-line format (CsvLoader.java:165)
     print(
         "%.2fM records loaded, %d unique vehicles (%d unique ids)"

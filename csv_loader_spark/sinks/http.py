@@ -19,8 +19,9 @@ distinct (vehicle_id_str, vehicle_id) with its row count. The driver never
 materializes the data, N executors send in parallel (the reference is one
 thread; at 100 TB the receiver's capacity, not the engine, is the limit —
 cap parallelism by coalescing first if the receiver needs it), and the
-load's distinct counts come from a Spark aggregate over those small rows in
-the same job, so the file is scanned and parsed once. A task or stage that
+load's distinct counts (a streaming batch's metrics likewise) come from a
+Spark aggregate over those small rows in the same job, so the input is
+scanned and parsed once. A task or stage that
 Spark recomputes (lost executor, failed fetch) sends its rows again:
 at-least-once, like a transport retry.
 
@@ -111,13 +112,15 @@ def _arrow_tuples(batches: Iterable, tallies: list) -> Iterator[tuple]:
         yield from zip(*(batch.column(c).to_pylist() for c in cols))
 
 
-def _deliver(pings: DataFrame, send: Callable[[Iterator[tuple]], object]) -> Row:
+def _deliver(pings: DataFrame, send: Callable[[Iterator[tuple]], object]) -> DataFrame:
     """Drive every partition of ``pings`` through ``send`` on the executors.
 
     ``send`` gets one partition's (vehicle_id, lat, lon, ts_millis) tuples
-    in order and must consume them all. Returns the load's (n_records,
-    n_vehicles, n_ids), the same exact counts as
-    ``io.pings.distinct_vehicle_counts``, from the same job that sends."""
+    in order and must consume them all. Returns the lazy frame of
+    (vehicle_id_str, vehicle_id, n) rows, one per distinct id pair of each
+    partition with its row count: nothing is sent until an action runs on
+    it, and every action sends again. Aggregating it gives the load's
+    counts from the job that sends (``_load_counts``)."""
 
     def _send_and_count(batches: Iterator) -> Iterator:
         import pyarrow as pa
@@ -131,15 +134,42 @@ def _deliver(pings: DataFrame, send: Callable[[Iterator[tuple]], object]) -> Row
                 [*_ID_KEYS, "n"]
             ).to_batches()
 
-    id_counts = pings.select(
-        *_ID_KEYS, "lat", "lon", "ts_millis"
-    ).mapInArrow(_send_and_count, _ID_COUNTS_SCHEMA)
+    return pings.select(*_ID_KEYS, "lat", "lon", "ts_millis").mapInArrow(
+        _send_and_count, _ID_COUNTS_SCHEMA
+    )
+
+
+def _load_counts(id_counts: DataFrame) -> Row:
+    """Run a ``_deliver`` frame: the load's (n_records, n_vehicles, n_ids),
+    the same exact counts as ``io.pings.distinct_vehicle_counts``."""
     return id_counts.agg(
         # a sum over no rows is NULL: an empty load has 0 records
         F.coalesce(F.sum("n"), F.lit(0)).alias("n_records"),
         F.countDistinct("vehicle_id_str").alias("n_vehicles"),
         F.countDistinct("vehicle_id").alias("n_ids"),
     ).collect()[0]
+
+
+def _envelope_sender(
+    url: str,
+    source_id: int,
+    batch_size: int,
+    retry_interval: float,
+    max_retries: int | None,
+) -> Callable[[Iterator[tuple]], None]:
+    """A ``_deliver`` sender that posts a partition's rows as protobuf
+    envelopes of ``batch_size`` rows (micro-batcher, op 14)."""
+
+    def _post(tuples: Iterator[tuple]) -> None:
+        for chunk in _chunks(tuples, batch_size):
+            post_bytes(
+                url,
+                encode_envelope(source_id, chunk),
+                retry_interval=retry_interval,
+                max_retries=max_retries,
+            )
+
+    return _post
 
 
 def write_http(
@@ -151,17 +181,8 @@ def write_http(
     retry_interval: float = RETRY_INTERVAL_S,
     max_retries: int | None = None,
 ) -> Row:
-    """Batch-mode sink: every partition posts its rows as protobuf envelopes
-    of ``batch_size`` rows (micro-batcher, op 14). Executor-side, no driver
-    collect; returns the load's counts (``_deliver``)."""
-
-    def _post(tuples: Iterator[tuple]) -> None:
-        for chunk in _chunks(tuples, batch_size):
-            post_bytes(
-                url,
-                encode_envelope(source_id, chunk),
-                retry_interval=retry_interval,
-                max_retries=max_retries,
-            )
-
-    return _deliver(pings, _post)
+    """Batch-mode sink: every partition posts its rows as envelopes of
+    ``batch_size`` rows. Executor-side, no driver collect; returns the
+    load's counts (``_load_counts``)."""
+    send = _envelope_sender(url, source_id, batch_size, retry_interval, max_retries)
+    return _load_counts(_deliver(pings, send))

@@ -35,7 +35,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Row
 
 from csv_loader_spark.sinks.envelope import encode_message
-from csv_loader_spark.sinks.http import RETRY_INTERVAL_S, _chunks, _deliver
+from csv_loader_spark.sinks.http import RETRY_INTERVAL_S, _chunks, _deliver, _load_counts
 
 try:  # pragma: no cover - absent in the test container
     import boto3  # type: ignore
@@ -159,7 +159,7 @@ def write_kinesis(
 ) -> Row:
     """Executor-side Kinesis delivery: one client per partition, ≤500-entry
     PutRecords chunks, vehicle_id partition key, partial-failure retry.
-    Returns the load's counts (``_deliver``).
+    Returns the load's counts (``_load_counts``).
 
     ``client_factory`` (a zero-arg callable returning a boto3-shaped
     client) is built per PARTITION on the executor — injectable for tests
@@ -177,4 +177,4 @@ def write_kinesis(
                 max_retries=max_retries,
             )
 
-    return _deliver(pings, _send)
+    return _load_counts(_deliver(pings, _send))

@@ -1,7 +1,8 @@
 """Streaming ping ingestion (SURVEY §7.2 M3): readStream → parse chain →
 foreachBatch HTTP sink, with checkpointed exactly-once source tracking. Each
-micro-batch posts through the batch sink's ``write_http``, so batch and
-streaming loads share one delivery path.
+micro-batch posts through the batch sink's ``_deliver``, so batch and
+streaming loads share one delivery path, and one job per batch both sends
+it and returns the id-pair counts its metrics are built from.
 
 The reference is a one-shot single-pass loader: a crash mid-file restarts
 from scratch under a NEW sourceId (CsvLoader.java:63), and its only
@@ -36,7 +37,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from csv_loader_spark.io.pings import RAW_SCHEMA, project_pings
-from csv_loader_spark.sinks.http import BATCH_SIZE, RETRY_INTERVAL_S, write_http
+from csv_loader_spark.sinks.http import (
+    _ID_KEYS, BATCH_SIZE, RETRY_INTERVAL_S, _deliver, _envelope_sender,
+)
 
 
 def stream_pings(
@@ -87,55 +90,66 @@ class IngestMetrics:
 def update_batch_metrics(
     state: IngestMetrics, batch_df: DataFrame, batch_id: int, metrics: str
 ) -> None:
-    """Apply one micro-batch's worth of progress metrics to ``state``.
+    """Apply one micro-batch of pings' progress metrics to ``state``."""
+    id_counts = batch_df.select(*_ID_KEYS, F.lit(1).alias("n"))
+    _apply_id_counts(state, id_counts, batch_id, metrics)
+
+
+def _apply_id_counts(
+    state: IngestMetrics, id_counts: DataFrame, batch_id: int, metrics: str
+) -> None:
+    """Run one job over ``id_counts`` — (vehicle_id_str, vehicle_id, n)
+    rows, ``n`` rows of that pair each, such as a ``_deliver`` frame — and
+    apply its records and distinct counts to ``state``.
 
     Replay-safe: foreachBatch is at-least-once, so after a failure/restart
-    the same batch_id fires again with the same data. A repeated (or
-    older) id is skipped entirely — set/HLL unions would tolerate the
+    the same batch_id fires again with the same data. The job still runs
+    (on a ``_deliver`` frame it is the delivery), but a repeated (or
+    older) id changes no metric — set/HLL unions would tolerate the
     replay, but ``records += n`` would double-count, and a counter that
     looks exactly-once must be exactly-once. The progress line is still
     printed (the reference prints per flush, CsvLoader.java:165)."""
     replayed = state.last_batch_id is not None and batch_id <= state.last_batch_id
     if metrics == "exact":
+        # reference-parity dual distinct (unbounded, like :105-106)
+        rows = id_counts.collect()
         if not replayed:
-            # reference-parity dual distinct (unbounded, like :105-106)
-            ids = batch_df.select("vehicle_id_str", "vehicle_id").collect()
-            state.records += len(ids)
-            state.vehicles_str.update(r[0] for r in ids)
-            state.vehicle_ids.update(r[1] for r in ids)
+            state.records += sum(r["n"] for r in rows)
+            state.vehicles_str.update(r["vehicle_id_str"] for r in rows)
+            state.vehicle_ids.update(r["vehicle_id"] for r in rows)
         print(state.line(exact=True), file=sys.stderr)
-    elif metrics == "approx":
-        if not replayed:
-            # One mergeable HLL sketch per counter per batch (executor
-            # side, partial-agg combined), unioned into the running
-            # cumulative sketch so the printed number estimates the
-            # distinct count over ALL batches — not max-of-batches,
-            # which underestimates as soon as batches carry disjoint
-            # vehicles. The union runs as a literal expression in the
-            # same tiny one-row agg job; driver state stays ~KB.
-            agg_df = batch_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.hll_sketch_agg("vehicle_id_str").alias("sv"),
-                F.hll_sketch_agg("vehicle_id").alias("si"),
-            )
-            if state.hll_vehicles is not None:
-                agg_df = agg_df.select(
-                    "n",
-                    F.hll_union(F.lit(state.hll_vehicles), "sv").alias("sv"),
-                    F.hll_union(F.lit(state.hll_ids), "si").alias("si"),
-                )
-            row = agg_df.select(
+    else:  # "approx"
+        # One mergeable HLL sketch per counter per batch (executor side,
+        # partial-agg combined), unioned into the running cumulative
+        # sketch so the printed number estimates the distinct count over
+        # ALL batches — not max-of-batches, which underestimates as soon
+        # as batches carry disjoint vehicles. The union runs as a literal
+        # expression in the same one-row agg job; driver state stays ~KB.
+        agg_df = id_counts.agg(
+            # a sum over no rows is NULL: an empty batch has 0 records
+            F.coalesce(F.sum("n"), F.lit(0)).alias("n"),
+            F.hll_sketch_agg("vehicle_id_str").alias("sv"),
+            F.hll_sketch_agg("vehicle_id").alias("si"),
+        )
+        if state.hll_vehicles is not None:
+            agg_df = agg_df.select(
                 "n",
-                "sv",
-                "si",
-                F.hll_sketch_estimate("sv").alias("ev"),
-                F.hll_sketch_estimate("si").alias("ei"),
-            ).collect()[0]
+                F.hll_union(F.lit(state.hll_vehicles), "sv").alias("sv"),
+                F.hll_union(F.lit(state.hll_ids), "si").alias("si"),
+            )
+        row = agg_df.select(
+            "n",
+            "sv",
+            "si",
+            F.hll_sketch_estimate("sv").alias("ev"),
+            F.hll_sketch_estimate("si").alias("ei"),
+        ).collect()[0]
+        # An empty batch yields an EMPTY sketch (not null), and
+        # union(prev, empty) == prev — measured, so this null guard is
+        # belt-and-braces against future null-propagating expression
+        # changes, not a load-bearing branch.
+        if not replayed:
             state.records += row["n"]
-            # An empty batch yields an EMPTY sketch (not null), and
-            # union(prev, empty) == prev — measured, so this null
-            # guard is belt-and-braces against future null-propagating
-            # expression changes, not a load-bearing branch.
             if row["sv"] is not None:
                 state.hll_vehicles = bytes(row["sv"])
                 state.hll_ids = bytes(row["si"])
@@ -158,28 +172,19 @@ def write_stream_http(
     metrics: str = "approx",
     available_now: bool = False,
 ) -> tuple[StreamingQuery, IngestMetrics]:
-    """foreachBatch → ``write_http`` per micro-batch (executor-side POSTs).
+    """foreachBatch → ``_deliver`` per micro-batch (executor-side POSTs).
     ``metrics`` is ``"approx"`` or ``"exact"`` (module docstring).
 
     ``available_now=True`` drains everything currently in the source then
     stops — the batch-equivalent trigger used by tests and backfills.
     """
     state = IngestMetrics()
+    send = _envelope_sender(url, source_id, batch_size, retry_interval, max_retries)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            write_http(
-                batch_df,
-                url,
-                source_id,
-                batch_size=batch_size,
-                retry_interval=retry_interval,
-                max_retries=max_retries,
-            )
-            update_batch_metrics(state, batch_df, batch_id, metrics)
-        finally:
-            batch_df.unpersist()
+        # one job per micro-batch: it posts the batch and returns the
+        # id-pair counts its metrics are built from
+        _apply_id_counts(state, _deliver(batch_df, send), batch_id, metrics)
 
     writer = (
         pings.writeStream.foreachBatch(_sink)

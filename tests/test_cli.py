@@ -102,6 +102,40 @@ def test_stream_posts_once_per_checkpoint(spark, tmp_path, http_server):
     assert rec.payloads == []
 
 
+def test_kinesis_honours_retry_flags(spark, tmp_path, monkeypatch):
+    """--kinesis passes --retry-interval and --max-retries to the sink: with
+    --max-retries 1, a stream that fails three attempts fails the load after
+    two."""
+    from types import SimpleNamespace
+
+    from csv_loader_spark.sinks import kinesis
+
+    log = str(tmp_path / "attempts.log")
+
+    def put_records(StreamName, Records):  # noqa: N803 - boto3's names
+        # runs in an executor worker: count the attempts in a file; the
+        # first three fail, so ignored flags show as a success, not a hang
+        with open(log, "a") as f:
+            f.write("put\n")
+        with open(log) as f:
+            if len(f.readlines()) <= 3:
+                raise ConnectionError("endpoint unreachable")
+        return {"FailedRecordCount": 0, "Records": [{} for _ in Records]}
+
+    client = SimpleNamespace(put_records=put_records)
+    monkeypatch.setattr(
+        kinesis, "_default_client_factory", lambda region: lambda: client
+    )
+    path = str(tmp_path / "pings.csv")
+    write_narrow_csv(path)
+    argv = ["-f", path, "--kinesis", "s",
+            "--retry-interval", "0", "--max-retries", "1"]
+    with pytest.raises(Exception, match="still failing after 1 retries"):
+        main(argv)
+    with open(log) as f:
+        assert len(f.read().splitlines()) == 2
+
+
 def test_curate_subcommand_end_to_end(tmp_path, capsys):
     """`python -m csv_loader_spark curate`: the admission DAG over a real
     documents parquet — blocked/dedup/quota/split all fire, kept/ is
