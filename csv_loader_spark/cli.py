@@ -66,9 +66,8 @@ def build_curate_parser() -> argparse.ArgumentParser:
             "Run the admission DAG (blocklist -> eval decontamination -> "
             "exact+near dedup -> passage dedup -> per-source quota -> "
             "split) over a documents parquet and write kept/ (partitioned "
-            "by split) and manifest/ under --output. Each rule is the "
-            "oracle-gated operator the query surface proves "
-            "(q102/q85/q131/q145/q115/q121/q116); see ops/curate.py."
+            "by split) and manifest/ under --output. q127 and q132 run "
+            "the same code under the oracle gate; see ops/curate.py."
         ),
     )
     p.add_argument("--input", required=True, help="documents parquet (doc_id, source, text)")

@@ -11,13 +11,11 @@ it with a copy of every parse expression. The chain is three SQL strings
 few py4j round trips instead of ~15 per composed Column call, and the
 timestamp parse makes one pattern attempt per valid row (the guards in
 functions/timestamps.py). Projection and filter still run in one
-whole-stage-codegen pass. The scan is one task per file: ``read_pings``
-reads with the default ``multiline=True`` (quoted fields may span lines),
-so a plain CSV does not split either (perfbench's
-``io.pings.input_partitions`` reads 1 for its 25k-row file);
-``read_pings_raw(..., multiline=False)`` is the switch that makes a plain
-CSV splittable. .gz/.zip stay single-task per file in any mode — same
-constraint as the reference, noted in SURVEY §7.4.
+whole-stage-codegen pass. The scan is one task per file: the reader
+parses RFC 4180 multi-line records (quoted fields may span lines), so a
+plain CSV does not split either (perfbench's ``io.pings.input_partitions``
+reads 1 for its 25k-row file), and .gz/.zip are unsplittable anyway —
+same constraint as the reference, noted in SURVEY §7.4.
 
 Layout (CsvLoader.java:120-127): col0=time, col1=vehicle_id, col2=lat,
 col3=lon; records wider than 9 fields use col9=lat, col10=lon instead,
@@ -95,21 +93,16 @@ def _extract_first_zip_entry(path: str, workdir: str | None = None) -> str:
     return out_path
 
 
-def read_pings_raw(
-    spark: SparkSession, path: str, *, multiline: bool = True
-) -> DataFrame:
+def read_pings_raw(spark: SparkSession, path: str) -> DataFrame:
     """Suffix-dispatch source (ops 2-5): plain / .gz / .zip-first-entry → raw
     11-column string DataFrame (absent trailing fields are NULL).
 
     Spark decompresses .gz by extension natively; .zip is staged driver-side.
     Suffix match is case-insensitive like the reference (:84,:90).
 
-    ``multiline=True`` (default) is full RFC 4180: quoted fields may embed
-    newlines, exactly like the reference's commons-csv — but it makes every
-    file a single task (records can span split boundaries). At 100 TB, if
-    the producer guarantees no embedded newlines (GPS pings never have
-    them), pass ``multiline=False`` for splittable parallel scans — the
-    one semantics-vs-scale switch in this source.
+    Full RFC 4180: quoted fields may embed newlines, exactly like the
+    reference's commons-csv — which makes every file a single task
+    (records can span split boundaries).
     """
     lower = path.lower()
     if lower.endswith(".zip"):
@@ -120,7 +113,7 @@ def read_pings_raw(
         header=False,
         mode="PERMISSIVE",
         encoding="UTF-8",
-        multiLine=multiline,
+        multiLine=True,
         escape='"',  # RFC 4180 doubled-quote escaping ("" inside a quoted
         # field), like commons-csv; Spark's default escape is backslash
     )

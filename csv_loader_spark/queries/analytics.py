@@ -450,11 +450,11 @@ JCE_KEYS = ("l_partkey", "l_suppkey")
 
 
 def _jce_oracle() -> str:
-    from csv_loader_spark.queries.llm3 import _hash32_sql
+    from csv_loader_spark.functions.hashing import hash32_sql
 
     parts = []
     for key in JCE_KEYS:
-        h = _hash32_sql(f"CAST({key} AS VARCHAR)")
+        h = hash32_sql(f"CAST({key} AS VARCHAR)")
         parts.append(
             f"""
     SELECT '{key}' AS key_col,
@@ -489,13 +489,13 @@ def q182_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, and a scan-level `WHERE hash(key) % {JCE_MOD} = 0` turns it
     into a 1/{JCE_MOD}-cost probe (the exact column here is the test
     harness)."""
-    from csv_loader_spark.queries.llm3 import _hash32_spark_sql
+    from csv_loader_spark.functions.hashing import hash32_spark_sql
 
     li = load_table(spark, sf_dir, "lineitem")
     outs = []
     for key in JCE_KEYS:
         counts = li.groupBy(key).agg(F.count(F.lit(1)).alias("c"))
-        h = _hash32_spark_sql(f"CAST({key} AS STRING)")
+        h = hash32_spark_sql(f"CAST({key} AS STRING)")
         sampled_sq = F.sum(
             F.when(F.expr(f"({h}) % {JCE_MOD} = 0"), F.col("c") * F.col("c"))
             .otherwise(F.lit(0))

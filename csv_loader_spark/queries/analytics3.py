@@ -722,10 +722,10 @@ BLOOM_PRICE = 400_000  # build side: customers with an order above this
 
 
 def _bloom_oracle() -> str:
-    from csv_loader_spark.queries.llm3 import _hash32_sql
+    from csv_loader_spark.functions.hashing import hash32_sql
 
-    h1 = _hash32_sql("'k1:' || CAST(k AS VARCHAR)")
-    h2 = _hash32_sql("'k2:' || CAST(k AS VARCHAR)")
+    h1 = hash32_sql("'k1:' || CAST(k AS VARCHAR)")
+    h2 = hash32_sql("'k2:' || CAST(k AS VARCHAR)")
     return f"""
     WITH keys AS (
       SELECT DISTINCT o_custkey AS k FROM orders
@@ -788,7 +788,7 @@ def q218_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the pruning decision is oracle-checkable bit-for-bit. Scale: the
     filter build is one aggregate to 16 rows; the probe pays two
     broadcast equi-joins and map-side bit tests, never a shuffle."""
-    from csv_loader_spark.queries.llm3 import _hash32_spark_sql
+    from csv_loader_spark.functions.hashing import hash32_spark_sql
 
     o = load_table(spark, sf_dir, "orders")
     keys = (
@@ -797,8 +797,8 @@ def q218_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    h1 = _hash32_spark_sql("'k1:' || CAST(k AS STRING)")
-    h2 = _hash32_spark_sql("'k2:' || CAST(k AS STRING)")
+    h1 = hash32_spark_sql("'k1:' || CAST(k AS STRING)")
+    h2 = hash32_spark_sql("'k2:' || CAST(k AS STRING)")
     pos = keys.select(F.expr(f"({h1}) % {BLOOM_BITS}").alias("p")).unionAll(
         keys.select(F.expr(f"({h2}) % {BLOOM_BITS}").alias("p"))
     )
@@ -810,8 +810,8 @@ def q218_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k")
     )
-    ph1 = _hash32_spark_sql("'k1:' || CAST(k AS STRING)")
-    ph2 = _hash32_spark_sql("'k2:' || CAST(k AS STRING)")
+    ph1 = hash32_spark_sql("'k1:' || CAST(k AS STRING)")
+    ph2 = hash32_spark_sql("'k2:' || CAST(k AS STRING)")
     probe = c.select(
         "k",
         F.expr(f"({ph1}) % {BLOOM_BITS}").alias("p1"),

@@ -1635,9 +1635,9 @@ def q243_seasonal_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q244_oracle() -> str:
-    from csv_loader_spark.queries.llm2 import _hash16_sql
+    from csv_loader_spark.functions.hashing import hash16_sql
 
-    h = _hash16_sql("CAST(doc_id AS STRING)")
+    h = hash16_sql("CAST(doc_id AS STRING)")
     return f"""
     WITH pop AS (
       SELECT source, CAST(count(*) AS BIGINT) AS n
@@ -1685,12 +1685,12 @@ def q244_sample_bias_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order nondeterminism that rules out plain float SUM()
     (CLAUDE.md) does not apply. |sources| is group-bounded, so the
     array is tiny."""
-    from csv_loader_spark.queries.llm2 import _hash16_spark_sql
+    from csv_loader_spark.functions.hashing import hash16_spark_sql
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     pop = d.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n"))
     samp = (
-        d.filter(F.expr(_hash16_spark_sql("CAST(doc_id AS STRING)")) % 2 == 0)
+        d.filter(F.expr(hash16_spark_sql("CAST(doc_id AS STRING)")) % 2 == 0)
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
     )

@@ -40,8 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table
-from csv_loader_spark.queries.llm2 import _hash16_spark_sql, _hash16_sql
 from csv_loader_spark.queries.registry import query
 
 #: coordinate-space resolution: 16-bit integer grid per axis.
@@ -63,16 +63,16 @@ BOX = (8192, 24575, 20480, 36863)  # x_lo, x_hi, y_lo, y_hi
 def _xy_spark(key_sql: str) -> tuple[str, str]:
     """Spark-SQL expressions for the derived (x, y) integer coordinates."""
     return (
-        _hash16_spark_sql(f"concat(CAST({key_sql} AS STRING), 'x')"),
-        _hash16_spark_sql(f"concat(CAST({key_sql} AS STRING), 'y')"),
+        hash16_spark_sql(f"concat(CAST({key_sql} AS STRING), 'x')"),
+        hash16_spark_sql(f"concat(CAST({key_sql} AS STRING), 'y')"),
     )
 
 
 def _xy_sql(key_sql: str) -> tuple[str, str]:
     """DuckDB twins of :func:`_xy_spark` (instr-arithmetic md5 prefix)."""
     return (
-        _hash16_sql(f"concat(CAST({key_sql} AS VARCHAR), 'x')"),
-        _hash16_sql(f"concat(CAST({key_sql} AS VARCHAR), 'y')"),
+        hash16_sql(f"concat(CAST({key_sql} AS VARCHAR), 'x')"),
+        hash16_sql(f"concat(CAST({key_sql} AS VARCHAR), 'y')"),
     )
 
 

@@ -40,8 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table
-from csv_loader_spark.queries.llm2 import _hash16_spark_sql, _hash16_sql
 from csv_loader_spark.queries.registry import query
 
 # --- q162: A-ES weighted sampling without replacement ----------------------
@@ -51,12 +51,12 @@ WS_K = 100
 
 def _ws_key_spark() -> Column:
     """ln(u)/w with u = (hash16('ws:'||doc_id)+1)/65536 ∈ (0, 1]."""
-    h = _hash16_spark_sql("concat('ws:', CAST(doc_id AS STRING))")
+    h = hash16_spark_sql("concat('ws:', CAST(doc_id AS STRING))")
     return F.log((F.expr(h) + 1) / 65536.0) / F.col("n_chars")
 
 
 def _ws_oracle() -> str:
-    h = _hash16_sql("concat('ws:', CAST(doc_id AS VARCHAR))")
+    h = hash16_sql("concat('ws:', CAST(doc_id AS VARCHAR))")
     return f"""
     WITH scored AS (
       SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
@@ -112,14 +112,14 @@ def hrw_shard(key_sql: str, n_shards: int) -> Column:
     combined = []
     for j in range(n_shards):
         tok = "concat({key}, '#{j}')".format(key=key_sql, j=j)
-        combined.append(f"({_hash16_spark_sql(tok)} * 16 + {15 - j})")
+        combined.append(f"({hash16_spark_sql(tok)} * 16 + {15 - j})")
     expr = combined[0] if len(combined) == 1 else f"greatest({', '.join(combined)})"
     return (15 - F.expr(expr) % 16).cast("int")
 
 
 def _hrw_combined_sql(key_sql: str, j: int) -> str:
     tok = "concat({key}, '#{j}')".format(key=key_sql, j=j)
-    return f"({_hash16_sql(tok)} * 16 + {15 - j})"
+    return f"({hash16_sql(tok)} * 16 + {15 - j})"
 
 
 def _hrw_oracle() -> str:

@@ -205,11 +205,11 @@ SPAN_LEN_MOD = 3
 
 def _span_hash(doc: str, pos: str) -> tuple[str, str]:
     """(duckdb_sql, spark_sql) for the portable position hash."""
-    from csv_loader_spark.queries.llm3 import _hash32_spark_sql, _hash32_sql
+    from csv_loader_spark.functions.hashing import hash32_spark_sql, hash32_sql
 
     expr = f"CAST({doc} AS VARCHAR) || ':' || CAST({pos} AS VARCHAR)"
     sexpr = f"concat(CAST({doc} AS STRING), ':', CAST({pos} AS STRING))"
-    return _hash32_sql(expr), _hash32_spark_sql(sexpr)
+    return hash32_sql(expr), hash32_spark_sql(sexpr)
 
 
 @query(

@@ -13,11 +13,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from csv_loader_spark.functions import vectors as VEC
+from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.ops.graph import connected_components
 from csv_loader_spark.ops.multimodal import attach_fake_media, extract_features
 from csv_loader_spark.queries.llm import _SHINGLE_CTE
-from csv_loader_spark.queries.registry import query
+from csv_loader_spark.queries.registry import get, query
 
 # ---------------------------------------------------------------------------
 # SimHash near-dup detection
@@ -26,28 +27,6 @@ from csv_loader_spark.queries.registry import query
 _SIMHASH_BITS = 16
 _SIMHASH_BANDS = 4  # 4 bands × 4 bits; hamming ≤ 3 ⇒ ≥1 band identical (pigeonhole)
 _SIMHASH_MAX_HAMMING = 3
-
-# Portable hex-nibble parse (both engines): value of md5(token)'s first 4
-# hex chars as an int in [0, 65536).
-_HEX = "0123456789abcdef"
-
-
-def _hash16_sql(tok: str) -> str:
-    """First 16 bits of md5(token) via instr arithmetic — engine-portable
-    (instr(str, needle) exists with identical semantics in Spark SQL and
-    DuckDB; Spark's conv() has no DuckDB twin)."""
-    terms = [
-        f"(instr('{_HEX}', substr(md5({tok}), {i + 1}, 1)) - 1) * {16 ** (3 - i)}"
-        for i in range(4)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _hash16_spark_sql(tok: str) -> str:
-    """Spark-side twin of :func:`_hash16_sql` — the same value via one
-    ``conv()`` call (no DuckDB twin, so the oracle keeps the instr form;
-    see llm3._hash32_spark_sql for the measured 2x on the wider hash)."""
-    return f"CAST(conv(substr(md5({tok}), 1, 4), 16, 10) AS INT)"
 
 
 def _simhash_sigs_sql() -> str:
@@ -64,7 +43,7 @@ def _simhash_sigs_sql() -> str:
       FROM documents
     ),
     hashed AS (
-      SELECT doc_id, {_hash16_sql("tok")} AS h FROM toks
+      SELECT doc_id, {hash16_sql("tok")} AS h FROM toks
     ),
     scores AS (
       SELECT doc_id, {bit_scores} FROM hashed GROUP BY doc_id
@@ -110,7 +89,7 @@ def q53_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_distinct(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
         ).alias("tok"),
     )
-    h = F.expr(_hash16_spark_sql("tok")).alias("h")
+    h = F.expr(hash16_spark_sql("tok")).alias("h")
     hashed = toks.select("doc_id", h)
     # single-F.expr construction for the 16 per-bit sums and the fp fold
     # (r15): the composed when/shiftright loops cost ~300 py4j round trips
@@ -469,7 +448,7 @@ def q59_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q66_deterministic_sample",
     oracle=f"""
     WITH b AS (
-      SELECT doc_id, {_hash16_sql("CAST(doc_id AS VARCHAR)")} AS bucket
+      SELECT doc_id, {hash16_sql("CAST(doc_id AS VARCHAR)")} AS bucket
       FROM documents
     )
     SELECT doc_id, bucket,
@@ -489,7 +468,7 @@ def q66_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling is none of those. Portable across engines (oracle runs the
     identical arithmetic)."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.expr(_hash16_spark_sql("CAST(doc_id AS STRING)")).alias("bucket")
+    bucket = F.expr(hash16_spark_sql("CAST(doc_id AS STRING)")).alias("bucket")
     b = d.select("doc_id", bucket)
     split = (
         F.when(F.col("bucket") < 52429, F.lit("train"))
@@ -512,12 +491,17 @@ def q72_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     speedups are only worth their recall loss if you can SEE the loss.
     Deterministic (both inputs are), but its values quantify the
     implementation-defined q36 → rows-only check."""
-    from csv_loader_spark.queries.registry import get
+    return ann_recall(spark, sf_dir, "q36_ann_lsh")
 
+
+def ann_recall(spark: SparkSession, sf_dir: str, ann_query: str) -> DataFrame:
+    """Recall@k of the registered ANN query ``ann_query`` against q35's
+    brute-force top-k: (query_id, k, n_hit, recall) per query plus a
+    summary row with query_id = -1 (q72, q93)."""
     truth = get("q35_knn_bruteforce").fn(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    ann = get("q36_ann_lsh").fn(spark, sf_dir).select(
+    ann = get(ann_query).fn(spark, sf_dir).select(
         F.col("query_id").alias("aq"), F.col("neighbor_id").alias("an")
     )
     hit = truth.join(

@@ -28,7 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
+from csv_loader_spark.functions.hashing import hash32_spark_sql, hash32_sql
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.queries.llm2 import ann_recall
 from csv_loader_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
@@ -503,29 +505,7 @@ def q93_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment; trained k-means centroids alone moved nothing (0.74@3 —
     the corpus is near-structureless); massign=2 multi-assignment is what
     lifted it to 0.94@3 (see q55's docstring)."""
-    from csv_loader_spark.queries.registry import get
-
-    truth = get("q35_knn_bruteforce").fn(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    ann = get("q55_ivf_ann").fn(spark, sf_dir).select(
-        F.col("query_id").alias("aq"), F.col("neighbor_id").alias("an")
-    )
-    hit = truth.join(
-        ann, (truth["query_id"] == ann["aq"]) & (truth["neighbor_id"] == ann["an"]), "left"
-    )
-    per_query = hit.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("k"),
-        F.count("an").alias("n_hit"),
-        F.round(F.count("an") / F.count(F.lit(1)), 4).alias("recall"),
-    )
-    overall = hit.agg(
-        F.lit(-1).cast("long").alias("query_id"),
-        F.count(F.lit(1)).alias("k"),
-        F.count("an").alias("n_hit"),
-        F.round(F.count("an") / F.count(F.lit(1)), 4).alias("recall"),
-    )
-    return per_query.unionAll(overall)
+    return ann_recall(spark, sf_dir, "q55_ivf_ann")
 
 
 # ---------------------------------------------------------------------------
@@ -533,7 +513,6 @@ def q93_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _WIN_W = 8  # window of consecutive gram hashes per fingerprint pick
-_HEX = "0123456789abcdef"
 
 # MOSS-style stop-list for the q96 near-dup join: a fingerprint held by
 # more than _WINNOW_MAX_DF distinct documents is boilerplate (license
@@ -555,29 +534,6 @@ _HEX = "0123456789abcdef"
 _WINNOW_MAX_DF = 512
 
 
-def _hash32_sql(expr: str) -> str:
-    """First 32 bits of md5(expr) via instr arithmetic — engine-portable
-    (same construction as llm2._hash16_sql, twice the width so winnowing
-    fingerprints rarely collide)."""
-    # CAST to BIGINT before the multiply: instr is INT and 15 * 16^7
-    # overflows 32 bits, which ANSI mode (Spark 4 default) makes an error
-    terms = [
-        f"CAST(instr('{_HEX}', substr(md5({expr}), {i + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - i)}"
-        for i in range(8)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _hash32_spark_sql(expr: str) -> str:
-    """Spark-side twin of :func:`_hash32_sql` — the SAME value (integer of
-    the first 8 md5 hex chars) via one ``conv()`` call instead of eight
-    instr terms. DuckDB has no conv(), so the oracle keeps the arithmetic
-    form; measured 2x on the fingerprint stage at sf0.1 (6.1 s -> 3.3 s),
-    and the exact gate proves the values agree."""
-    return f"CAST(conv(substr(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
-
-
 def winnow_fps_oracle(where: str = "doc_id < 100") -> str:
     """q94's oracle SQL with a parameterized document filter, so
     tools/bench_scaling.py can run the identical pipeline over the full
@@ -588,7 +544,7 @@ def winnow_fps_oracle(where: str = "doc_id < 100") -> str:
       FROM documents WHERE {where}
     ),
     grams AS (
-      SELECT doc_id, i AS pos, {_hash32_sql("substr(s, CAST(i AS INTEGER), 4)")} AS h,
+      SELECT doc_id, i AS pos, {hash32_sql("substr(s, CAST(i AS INTEGER), 4)")} AS h,
              length(s) - 3 AS n_grams
       FROM t, LATERAL unnest(range(1, length(s) - 2)) AS u(i)
       WHERE length(s) >= 4
@@ -659,7 +615,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
         "doc_id",
         (F.length("s") - 3).alias("n_grams"),
         F.posexplode(F.sequence(F.lit(1), F.length("s") - 3)).alias("_i", "pos"),
-        F.expr(_hash32_spark_sql("substr(s, CAST(pos AS INTEGER), 4)")).alias("h"),
+        F.expr(hash32_spark_sql("substr(s, CAST(pos AS INTEGER), 4)")).alias("h"),
     )
     w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _WIN_W - 1)
     # Window min over ALL gram rows first, THEN keep only window-start

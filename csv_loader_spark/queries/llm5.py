@@ -45,6 +45,7 @@ from pyspark.sql import Window as W
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.ops.curate import URL_RE, blocklist_domain
 from csv_loader_spark.queries.llm import (
     _KNN_K,
     _KNN_QUERIES,
@@ -280,11 +281,6 @@ def q101_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q102: domain blocklist filter
 # ---------------------------------------------------------------------------
 
-# Case-insensitive scheme + domain, no trailing-slash requirement: a
-# blocklist filter that misses 'https://SITE1.example' (no path) is a
-# provenance filter with a hole. Extracted domains are lowercased before
-# the blocklist comparison. (?i) works identically in Java regex and RE2.
-_URL_RE = r"(?i)https?://([a-z0-9.-]+)"
 _BLOCKLIST = ("site1.example", "site4.example")
 
 
@@ -306,7 +302,7 @@ _BLOCKLIST = ("site1.example", "site4.example")
     ),
     tagged AS (
       SELECT doc_id, source,
-             lower(coalesce(regexp_extract(text, '{_URL_RE}', 1), ''))
+             lower(coalesce(regexp_extract(text, '{URL_RE}', 1), ''))
                AS domain
       FROM injected
     )
@@ -330,25 +326,11 @@ def q102_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, the blocklist rides the task closure; regexp extraction is
     whole-stage codegen. A 10M-domain production blocklist still
     broadcasts at ~100 MB of hashes."""
+    from csv_loader_spark.queries.llm7 import injected_url_text
+
     d = load_table(spark, sf_dir, "documents")
-    injected = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.concat(
-            F.col("text"),
-            F.lit(" see "),
-            F.when(F.col("doc_id") % 2 == 0, F.lit("https://SITE")).otherwise(
-                F.lit("http://site")
-            ),
-            (F.col("doc_id") % 7).cast("string"),
-            F.when(F.col("doc_id") % 2 == 0, F.lit(".EXAMPLE")).otherwise(
-                F.concat(F.lit(".example/page"), F.col("doc_id").cast("string"))
-            ),
-        ),
-    ).otherwise(F.col("text"))
     tagged = d.select(
-        "doc_id",
-        "source",
-        F.lower(F.regexp_extract(injected, _URL_RE, 1)).alias("domain"),
+        "doc_id", "source", blocklist_domain(injected_url_text()).alias("domain")
     )
     block = F.broadcast(
         tagged.sparkSession.createDataFrame(

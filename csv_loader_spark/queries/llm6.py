@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from csv_loader_spark.functions import text as TXT
+from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.queries.llm import (
     _N_HASHES,
@@ -40,7 +41,6 @@ from csv_loader_spark.queries.llm import (
     _minhash_sig_cols,
     minhash_lsh_pairs,
 )
-from csv_loader_spark.queries.llm2 import _hash16_spark_sql, _hash16_sql
 from csv_loader_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
@@ -65,7 +65,7 @@ from csv_loader_spark.queries.registry import query
     )
     SELECT d.doc_id, d.source
     FROM documents d JOIN rates r ON d.source = r.source
-    WHERE {_hash16_sql("CAST(d.doc_id AS VARCHAR)")} < r.thr
+    WHERE {hash16_sql("CAST(d.doc_id AS VARCHAR)")} < r.thr
     """,
     tags=("mixing", "sampling", "llm"),
 )
@@ -94,7 +94,7 @@ def q111_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             * 65536
         ).alias("thr"),
     )
-    bucket = F.expr(_hash16_spark_sql("CAST(doc_id AS STRING)"))
+    bucket = F.expr(hash16_spark_sql("CAST(doc_id AS STRING)"))
     return (
         d.join(F.broadcast(rates), "source")
         .filter(bucket < F.col("thr"))

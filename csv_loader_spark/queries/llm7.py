@@ -37,46 +37,29 @@ from pyspark.sql import functions as F
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.ops.curate import (
+    PASSAGE,
+    QUOTA_KEY_SQL,
+    SPLIT_KEY_SQL,
+    URL_RE,
+    curate,
+    doc_passages,
+    passage_keep_first,
+    quota_rank,
+    split_case,
+    split_col,
+)
 from csv_loader_spark.queries.llm import (
     _KNN_K,
     _KNN_QUERIES,
     _SHINGLE_CTE,
     _shingled,
 )
-from csv_loader_spark.queries.llm2 import _hash16_spark_sql, _hash16_sql
 from csv_loader_spark.queries.registry import get, query
 
 # ---------------------------------------------------------------------------
 # q115: passage-level exact dedup
 # ---------------------------------------------------------------------------
-
-_PASSAGE = 20  # words per passage
-
-
-def doc_passages(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, text[, *extra]) → (doc_id[, *extra], i, passage): every
-    doc split into fixed _PASSAGE-word passages (q115's segmentation),
-    factored (r9) so the batch dedup family (q115/q129/q132) and the
-    ingest-time passage probe (streaming/ingest_dedup.py) segment
-    IDENTICALLY — one rule, no drift between index and probe."""
-    t = TXT.tokens("text")
-    base = docs.select(
-        "doc_id", *extra, t.alias("t"), F.size(t).alias("n")
-    ).filter(F.col("n") >= 1)
-    return base.select(
-        "doc_id",
-        *extra,
-        F.explode(F.sequence(F.lit(0), F.expr(f"(n - 1) div {_PASSAGE}"))).alias("i"),
-        "t",
-    ).select(
-        "doc_id",
-        *extra,
-        "i",
-        F.array_join(
-            F.slice("t", (F.lit(1) + F.col("i") * _PASSAGE).cast("int"), _PASSAGE),
-            " ",
-        ).alias("passage"),
-    )
 
 _PASSAGE_CTE = rf"""
     toks AS (
@@ -86,8 +69,8 @@ _PASSAGE_CTE = rf"""
     ),
     passages AS (
       SELECT doc_id, i,
-             array_to_string(t[1 + i * {_PASSAGE} : i * {_PASSAGE} + {_PASSAGE}], ' ') AS passage
-      FROM toks, LATERAL unnest(range(0, (n - 1) // {_PASSAGE} + 1)) AS u(i)
+             array_to_string(t[1 + i * {PASSAGE} : i * {PASSAGE} + {PASSAGE}], ' ') AS passage
+      FROM toks, LATERAL unnest(range(0, (n - 1) // {PASSAGE} + 1)) AS u(i)
       WHERE n >= 1
     ),
     flagged AS (
@@ -130,9 +113,7 @@ def q115_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket unchanged (doc_id, i).
     """
     d = load_table(spark, sf_dir, "documents")
-    passages = doc_passages(d)
-    w = W.partitionBy(F.md5("passage")).orderBy("doc_id", "i")
-    flagged = passages.withColumn("keep", F.row_number().over(w) == 1)
+    flagged = doc_passages(d).withColumn("keep", passage_keep_first())
     kept_structs = F.array_sort(
         F.collect_list(
             F.when(F.col("keep"), F.struct(F.col("i"), F.col("passage")))
@@ -151,23 +132,12 @@ def q115_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q116: deterministic stratified train/valid/test split
 # ---------------------------------------------------------------------------
 
-_SPLIT_SALT = ":split"
-
-
-def _split_case(h: str) -> str:
-    """Engine-shared bucket→split mapping over a 16-bit hash value."""
-    return (
-        f"CASE WHEN ({h}) % 100 < 96 THEN 'train' "
-        f"WHEN ({h}) % 100 < 98 THEN 'valid' ELSE 'test' END"
-    )
-
-
 @query(
     "q116_stratified_split",
     oracle=f"""
     WITH assigned AS (
       SELECT source,
-             {_split_case(_hash16_sql(f"CAST(doc_id AS VARCHAR) || '{_SPLIT_SALT}'"))} AS split
+             {split_case(SPLIT_KEY_SQL)} AS split
       FROM documents
     ),
     counts AS (
@@ -193,8 +163,7 @@ def q116_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the already-aggregated frame, not the corpus.
     """
     d = load_table(spark, sf_dir, "documents")
-    h = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_SPLIT_SALT}')")
-    assigned = d.select("source", F.expr(_split_case(h)).alias("split"))
+    assigned = d.select("source", split_col().alias("split"))
     counts = assigned.groupBy("source", "split").agg(F.count("*").alias("n_docs"))
     tot = F.sum("n_docs").over(W.partitionBy("source"))
     return counts.withColumn("_tot", tot).withColumn(
@@ -661,7 +630,6 @@ def q120_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _QUOTA = 30  # max docs kept per source
-_QUOTA_SALT = ":quota"
 
 
 @query(
@@ -671,7 +639,7 @@ _QUOTA_SALT = ":quota"
       SELECT doc_id, source,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY {_hash16_sql(f"CAST(doc_id AS VARCHAR) || '{_QUOTA_SALT}'")}, doc_id
+               ORDER BY {QUOTA_KEY_SQL}, doc_id
              ) AS rnk
       FROM documents
     )
@@ -693,11 +661,9 @@ def q121_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond N rows per map task.
     """
     d = load_table(spark, sf_dir, "documents")
-    h = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_QUOTA_SALT}')")
-    w = W.partitionBy("source").orderBy(F.expr(h), F.col("doc_id"))
     return (
         d.select("doc_id", "source")
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
+        .withColumn("rnk", quota_rank().cast("long"))
         .filter(F.col("rnk") <= _QUOTA)
     )
 
@@ -1200,11 +1166,9 @@ def injected_url_text() -> Column:
 
 
 def _q127_oracle() -> str:
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST, _URL_RE
+    from csv_loader_spark.queries.llm5 import _BLOCKLIST
 
     blocked = ", ".join(f"'{b}'" for b in _BLOCKLIST)
-    h_quota = _hash16_sql(f"CAST(doc_id AS VARCHAR) || '{_QUOTA_SALT}'")
-    h_split = _hash16_sql(f"CAST(doc_id AS VARCHAR) || '{_SPLIT_SALT}'")
     return f"""
     WITH injected AS (
       SELECT doc_id, source, n_chars,
@@ -1214,17 +1178,17 @@ def _q127_oracle() -> str:
     surviving AS (
       SELECT doc_id, source, text
       FROM injected
-      WHERE lower(coalesce(regexp_extract(text, '{_URL_RE}', 1), ''))
+      WHERE lower(coalesce(regexp_extract(text, '{URL_RE}', 1), ''))
             NOT IN ({blocked})
     ),
     quota AS (
       SELECT doc_id, source, text,
-             row_number() OVER (PARTITION BY source ORDER BY {h_quota}, doc_id)
+             row_number() OVER (PARTITION BY source ORDER BY {QUOTA_KEY_SQL}, doc_id)
                AS rnk
       FROM surviving
     )
     SELECT doc_id, source,
-           {_split_case(h_split)} AS split,
+           {split_case(SPLIT_KEY_SQL)} AS split,
            CAST(len(string_split_regex(trim(lower(text)), '\\s+')) AS BIGINT)
              AS n_tok
     FROM quota WHERE rnk <= {_QUOTA}
@@ -1233,43 +1197,18 @@ def _q127_oracle() -> str:
 
 @query("q127_curation_manifest", oracle=_q127_oracle(), tags=("curation", "llm"))
 def q127_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CURATION MANIFEST: the three admission rules composed in
-    pipeline order on one scan — domain blocklist (q102's provenance
-    filter, URL-injection scaffolding included so the rule actually
-    fires), then the per-source quota cap (q121, hash-ordered, applied to
-    the SURVIVING docs), then the deterministic split assignment (q116) —
-    emitting (doc_id, source, split, n_tok): exactly the manifest a
-    training job consumes. Proves the rules COMPOSE deterministically,
-    not just hold individually.
-
-    Scale: blocklist is a map-side regexp + NOT IN (broadcast-sized
-    list); quota is the one source-keyed WindowGroupLimit shuffle; split
-    and token count are map-only. One corpus scan end to end.
+    """The CURATION MANIFEST: :func:`ops.curate.curate` with the domain
+    blocklist (q102's, URL-injection scaffolding included so the rule
+    fires) and the per-source quota only, emitting (doc_id, source,
+    split, n_tok) — the manifest a training job consumes. One corpus
+    scan; the quota is the one source-keyed WindowGroupLimit shuffle.
     """
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST, _URL_RE
+    from csv_loader_spark.queries.llm5 import _BLOCKLIST
 
     d = load_table(spark, sf_dir, "documents")
-    tagged = d.select(
-        "doc_id", "source", injected_url_text().alias("text")
-    ).withColumn(
-        "domain",
-        F.lower(F.coalesce(F.regexp_extract("text", _URL_RE, 1), F.lit(""))),
-    )
-    surviving = tagged.filter(~F.col("domain").isin(*_BLOCKLIST)).drop("domain")
-    h_quota = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_QUOTA_SALT}')")
-    wq = W.partitionBy("source").orderBy(F.expr(h_quota), F.col("doc_id"))
-    kept = (
-        surviving.withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= _QUOTA)
-        .drop("rnk")
-    )
-    h_split = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_SPLIT_SALT}')")
-    return kept.select(
-        "doc_id",
-        "source",
-        F.expr(_split_case(h_split)).alias("split"),
-        F.size(TXT.tokens("text")).cast("long").alias("n_tok"),
-    )
+    inj = d.select("doc_id", "source", injected_url_text().alias("text"))
+    kept, _ = curate(inj, blocklist=_BLOCKLIST, dedup=False, quota_cap=_QUOTA)
+    return kept.select("doc_id", "source", "split", "n_tok")
 
 
 # ---------------------------------------------------------------------------
@@ -1278,10 +1217,9 @@ def q127_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q128_oracle() -> str:
-    h_split = _hash16_sql(f"CAST(doc_id AS VARCHAR) || '{_SPLIT_SALT}'")
     return rf"""
     WITH assigned AS (
-      SELECT doc_id, text, {_split_case(h_split)} AS split FROM documents
+      SELECT doc_id, text, {split_case(SPLIT_KEY_SQL)} AS split FROM documents
     ),
     toks AS (
       SELECT doc_id, split, string_split_regex(trim(lower(text)), '\s+') AS t
@@ -1329,10 +1267,7 @@ def q128_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates.
     """
     d = load_table(spark, sf_dir, "documents")
-    h_split = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_SPLIT_SALT}')")
-    assigned = d.select(
-        "doc_id", "text", F.expr(_split_case(h_split)).alias("split")
-    ).filter(F.size(TXT.tokens("text")) >= 3)
+    assigned = d.select("doc_id", "text", split_col().alias("split")).filter(F.size(TXT.tokens("text")) >= 3)
     sh = assigned.select(
         "doc_id", "split", F.explode(TXT.word_shingles("text")).alias("s")
     )
@@ -1402,10 +1337,10 @@ def q129_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc->source join.
     """
     d = load_table(spark, sf_dir, "documents")
-    passages = doc_passages(d, extra=("source",))
-    w = W.partitionBy(F.md5("passage")).orderBy("doc_id", "i")
-    flagged = passages.withColumn("keep", F.row_number().over(w) == 1).withColumn(
-        "n_tok", F.size(F.split(F.col("passage"), " "))
+    flagged = (
+        doc_passages(d, extra=("source",))
+        .withColumn("keep", passage_keep_first())
+        .withColumn("n_tok", F.size(F.split(F.col("passage"), " ")))
     )
     kept = F.sum(F.when(F.col("keep"), F.col("n_tok")).otherwise(0)).cast("long")
     return (

@@ -31,8 +31,16 @@ from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.ops.curate import (
+    PASSAGE,
+    QUOTA_KEY_SQL,
+    SPLIT_KEY_SQL,
+    URL_RE,
+    curate,
+    doc_passages,
+    split_case,
+)
 from csv_loader_spark.queries.llm import _SHINGLE_CTE, _minhash_oracle_band_ctes
-from csv_loader_spark.queries.llm2 import _hash16_spark_sql, _hash16_sql
 from csv_loader_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
@@ -133,19 +141,10 @@ def q131_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q132_oracle() -> str:
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST, _URL_RE
-    from csv_loader_spark.queries.llm7 import (
-        _INJECTED_TEXT_SQL,
-        _PASSAGE,
-        _QUOTA,
-        _QUOTA_SALT,
-        _SPLIT_SALT,
-        _split_case,
-    )
+    from csv_loader_spark.queries.llm5 import _BLOCKLIST
+    from csv_loader_spark.queries.llm7 import _INJECTED_TEXT_SQL, _QUOTA
 
     blocked = ", ".join(f"'{b}'" for b in _BLOCKLIST)
-    h_quota = _hash16_sql(f"CAST(doc_id AS VARCHAR) || '{_QUOTA_SALT}'")
-    h_split = _hash16_sql(f"CAST(doc_id AS VARCHAR) || '{_SPLIT_SALT}'")
     return rf"""
     WITH injected AS (
       SELECT doc_id, source, {_INJECTED_TEXT_SQL} AS text
@@ -153,7 +152,7 @@ def _q132_oracle() -> str:
     ),
     surviving AS (
       SELECT doc_id, source, text FROM injected
-      WHERE lower(coalesce(regexp_extract(text, '{_URL_RE}', 1), ''))
+      WHERE lower(coalesce(regexp_extract(text, '{URL_RE}', 1), ''))
             NOT IN ({blocked})
     ),
     corpus AS (SELECT * FROM surviving WHERE doc_id % 10 <> 0),
@@ -184,9 +183,9 @@ def _q132_oracle() -> str:
     ),
     passages AS (
       SELECT doc_id, i,
-             array_to_string(t[1 + i * {_PASSAGE} : i * {_PASSAGE} + {_PASSAGE}], ' ')
+             array_to_string(t[1 + i * {PASSAGE} : i * {PASSAGE} + {PASSAGE}], ' ')
                AS passage
-      FROM ptoks, LATERAL unnest(range(0, (n - 1) // {_PASSAGE} + 1)) AS u(i)
+      FROM ptoks, LATERAL unnest(range(0, (n - 1) // {PASSAGE} + 1)) AS u(i)
       WHERE n >= 1
     ),
     pstats AS (
@@ -207,11 +206,11 @@ def _q132_oracle() -> str:
     quota AS (
       SELECT doc_id, source, text,
              row_number() OVER (PARTITION BY source
-                                ORDER BY {h_quota}, doc_id) AS rnk
+                                ORDER BY {QUOTA_KEY_SQL}, doc_id) AS rnk
       FROM novel
     )
     SELECT doc_id, source,
-           {_split_case(h_split)} AS split,
+           {split_case(SPLIT_KEY_SQL)} AS split,
            CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT)
              AS n_tok
     FROM quota WHERE rnk <= {_QUOTA}
@@ -220,92 +219,27 @@ def _q132_oracle() -> str:
 
 @query("q132_admission_manifest", oracle=_q132_oracle(), tags=("curation", "llm", "r9"))
 def q132_admission_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL admission manifest: all five curation rules composed in
-    pipeline order on one corpus scan — (1) domain blocklist (q102, with
-    q127's URL-injection scaffolding so the rule fires), (2) eval-set
-    decontamination (q85's word-4-gram rule: any gram shared with the
-    held-out doc_id % 10 = 0 split rejects the doc), (3) passage-level
-    near-dup exclusion (q115's keep-first flags over the SURVIVORS: a doc
-    whose passages are majority-duplicated — 2 * kept < total — is
-    dropped), (4) the per-source quota cap (q121, hash-ordered), and
-    (5) the deterministic split assignment (q116), emitting
-    (doc_id, source, split, n_tok). q127 proved three rules compose; this
-    proves the whole admission DAG — dedup and decontamination included —
-    composes deterministically with an exact oracle.
-
-    Scale: blocklist is map-side regexp; decontamination is the gram
-    equi-join (eval side broadcast-sized in production); the passage rule
-    is one window keep-first on md5(passage) — the hashed key (r9
-    default, 32-byte bound) — plus a doc_id roll-up; quota is the one
-    source-keyed WindowGroupLimit shuffle; split/n_tok are map-only.
-    No pairwise joins anywhere: every rule is linear in the corpus.
+    """The FULL admission manifest: :func:`ops.curate.curate` with q127's
+    blocklist and quota plus eval-set decontamination against the
+    held-out doc_id % 10 = 0 split and passage-level dedup, emitting
+    (doc_id, source, split, n_tok). Every rule is linear in the corpus;
+    no pairwise joins anywhere.
     """
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST, _URL_RE
-    from csv_loader_spark.queries.llm7 import (
-        _QUOTA,
-        _QUOTA_SALT,
-        _SPLIT_SALT,
-        _split_case,
-        injected_url_text,
-    )
+    from csv_loader_spark.queries.llm5 import _BLOCKLIST
+    from csv_loader_spark.queries.llm7 import _QUOTA, injected_url_text
 
     d = load_table(spark, sf_dir, "documents")
     inj = d.select("doc_id", "source", injected_url_text().alias("text"))
-    # rule 1: blocklist
-    domain = F.lower(F.coalesce(F.regexp_extract("text", _URL_RE, 1), F.lit("")))
-    surviving = inj.filter(~domain.isin(*_BLOCKLIST))
-    corpus = surviving.filter(F.col("doc_id") % 10 != 0)
-    # rule 2: eval-set decontamination (grams over ALL injected docs; the
-    # eval side never passes the blocklist — it is a reference set)
-    grams = inj.select("doc_id", F.explode(TXT.word_shingles("text", 4)).alias("g"))
-    eval_g = grams.filter(F.col("doc_id") % 10 == 0).select("g").distinct()
-    contaminated = (
-        grams.filter(F.col("doc_id") % 10 != 0)
-        .join(F.broadcast(eval_g), "g", "left_semi")
-        .select("doc_id")
-        .distinct()
+    held_out = F.col("doc_id") % 10 == 0
+    kept, _ = curate(
+        inj.filter(~held_out),
+        blocklist=_BLOCKLIST,
+        eval_docs=inj.filter(held_out),
+        dedup=False,
+        passage_dedup=True,
+        quota_cap=_QUOTA,
     )
-    # lazy localCheckpoint (the ingest_verdicts pattern): `clean` feeds
-    # both the passage keep-first subtree and the novelty semi-join, and
-    # its own lineage re-runs the injection + blocklist + contamination
-    # anti-join per reference otherwise
-    clean = corpus.join(contaminated, "doc_id", "left_anti").localCheckpoint(
-        eager=False
-    )
-    # rule 3: passage-level dup exclusion over the survivors
-    from csv_loader_spark.queries.llm7 import doc_passages
-
-    passages = doc_passages(clean)
-    wp = W.partitionBy(F.md5("passage")).orderBy("doc_id", "i")
-    pstats = (
-        passages.withColumn("rn", F.row_number().over(wp))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_p"),
-            F.sum(F.when(F.col("rn") == 1, 1).otherwise(0)).alias("n_k"),
-        )
-    )
-    novel = clean.join(
-        pstats.filter(2 * F.col("n_k") >= F.col("n_p")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    # rule 4: per-source quota (hash order)
-    h_quota = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_QUOTA_SALT}')")
-    wq = W.partitionBy("source").orderBy(F.expr(h_quota), F.col("doc_id"))
-    kept = (
-        novel.withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= _QUOTA)
-        .drop("rnk")
-    )
-    # rule 5: split + token count
-    h_split = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_SPLIT_SALT}')")
-    return kept.select(
-        "doc_id",
-        "source",
-        F.expr(_split_case(h_split)).alias("split"),
-        F.size(TXT.tokens("text")).cast("long").alias("n_tok"),
-    )
+    return kept.select("doc_id", "source", "split", "n_tok")
 
 
 # ---------------------------------------------------------------------------
@@ -982,8 +916,6 @@ _RECYC_B_OFFSET = 4_000_000_000
 
 
 def _q138_oracle() -> str:
-    from csv_loader_spark.queries.llm7 import _PASSAGE
-
     return rf"""
     WITH base AS (
       SELECT doc_id, source, text FROM documents
@@ -1011,8 +943,8 @@ def _q138_oracle() -> str:
     ),
     corpus_passages AS (
       SELECT md5(array_to_string(
-               t[1 + i * {_PASSAGE} : i * {_PASSAGE} + {_PASSAGE}], ' ')) AS pfp
-      FROM cp, LATERAL unnest(range(0, (n - 1) // {_PASSAGE} + 1)) AS u(i)
+               t[1 + i * {PASSAGE} : i * {PASSAGE} + {PASSAGE}], ' ')) AS pfp
+      FROM cp, LATERAL unnest(range(0, (n - 1) // {PASSAGE} + 1)) AS u(i)
       WHERE n >= 1
     ),
     idx_pfp AS (SELECT DISTINCT pfp FROM corpus_passages),
@@ -1030,8 +962,8 @@ def _q138_oracle() -> str:
     pf AS (
       SELECT doc_id, i,
              md5(array_to_string(
-               t[1 + i * {_PASSAGE} : i * {_PASSAGE} + {_PASSAGE}], ' ')) AS pfp
-      FROM ap, LATERAL unnest(range(0, (n - 1) // {_PASSAGE} + 1)) AS u(i)
+               t[1 + i * {PASSAGE} : i * {PASSAGE} + {PASSAGE}], ' ')) AS pfp
+      FROM ap, LATERAL unnest(range(0, (n - 1) // {PASSAGE} + 1)) AS u(i)
       WHERE n >= 1
     ),
     exc AS (SELECT doc_id FROM arr WHERE fp IN (SELECT fp FROM idx_fp)),
@@ -1080,7 +1012,7 @@ def _q138_oracle() -> str:
 def q138_ingest_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time PASSAGE-granularity dedup: arrivals probed against the
     accepted corpus's exact-fingerprint index AND its passage-fingerprint
-    index (q115's segmentation, shared via llm7.doc_passages), each
+    index (q115's segmentation, shared via ops/curate.py doc_passages), each
     arrival tagged with its admission verdict — exact dup, majority of
     passages already in the corpus ('passage_corpus': recycled content
     under a fresh fingerprint, the case the exact probe cannot see), or
@@ -1385,8 +1317,6 @@ def q141_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q142_oracle() -> str:
-    from csv_loader_spark.queries.llm7 import _PASSAGE
-
     return rf"""
     WITH raw AS (
       SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t0
@@ -1394,17 +1324,17 @@ def _q142_oracle() -> str:
     ),
     toks AS (
       SELECT doc_id,
-             CASE WHEN doc_id % 6 = 2 AND len(t0) >= {_PASSAGE}
-                  THEN list_concat(t0[1:{_PASSAGE}], t0) ELSE t0 END AS t,
-             CASE WHEN doc_id % 6 = 2 AND len(t0) >= {_PASSAGE}
-                  THEN len(t0) + {_PASSAGE} ELSE len(t0) END AS n
+             CASE WHEN doc_id % 6 = 2 AND len(t0) >= {PASSAGE}
+                  THEN list_concat(t0[1:{PASSAGE}], t0) ELSE t0 END AS t,
+             CASE WHEN doc_id % 6 = 2 AND len(t0) >= {PASSAGE}
+                  THEN len(t0) + {PASSAGE} ELSE len(t0) END AS n
       FROM raw
     ),
     passages AS (
       SELECT doc_id, i,
-             array_to_string(t[1 + i * {_PASSAGE} : i * {_PASSAGE} + {_PASSAGE}], ' ')
+             array_to_string(t[1 + i * {PASSAGE} : i * {PASSAGE} + {PASSAGE}], ' ')
                AS passage
-      FROM toks, LATERAL unnest(range(0, (n - 1) // {_PASSAGE} + 1)) AS u(i)
+      FROM toks, LATERAL unnest(range(0, (n - 1) // {PASSAGE} + 1)) AS u(i)
       WHERE n >= 1
     ),
     flagged AS (
@@ -1443,8 +1373,6 @@ def q142_intradoc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q115's shape with the doc roll-up reusing the same partitioning
     prefix.
     """
-    from csv_loader_spark.queries.llm7 import _PASSAGE, doc_passages
-
     d = load_table(spark, sf_dir, "documents")
     # injection scaffolding: the synthetic corpus has no within-doc
     # repeated passages, so every sixth long-enough doc gets its first
@@ -1452,8 +1380,8 @@ def q142_intradoc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measurably fires, mirrored in the oracle
     t0 = TXT.tokens("text")
     injected = F.when(
-        (F.col("doc_id") % 6 == 2) & (F.size(t0) >= _PASSAGE),
-        F.array_join(F.concat(F.slice(t0, 1, _PASSAGE), t0), " "),
+        (F.col("doc_id") % 6 == 2) & (F.size(t0) >= PASSAGE),
+        F.array_join(F.concat(F.slice(t0, 1, PASSAGE), t0), " "),
     ).otherwise(F.col("text"))
     d = d.select("doc_id", injected.alias("text"))
     passages = doc_passages(d)

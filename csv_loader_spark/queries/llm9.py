@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
+from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table
-from csv_loader_spark.queries.llm2 import _hash16_spark_sql, _hash16_sql
 from csv_loader_spark.queries.registry import query
 
 #: hashed feature space: unigrams + bigrams folded into 2^16 buckets by
@@ -52,7 +52,7 @@ DSIR_TOP_K = 25
 
 
 def _dsir_oracle() -> str:
-    h = _hash16_sql("feat")
+    h = hash16_sql("feat")
     return rf"""
     WITH toks AS (
       SELECT doc_id, source,
@@ -136,7 +136,7 @@ def dsir_scores(target: DataFrame, raw: DataFrame) -> DataFrame:
                     F.concat(TXT.tokens("text"), TXT.word_ngrams("text", 2))
                 ).alias("feat"),
             )
-            .withColumn("b", F.expr(_hash16_spark_sql("feat")))
+            .withColumn("b", F.expr(hash16_spark_sql("feat")))
             .drop("feat")
             .withColumn("is_t", F.lit(flag))
         )

@@ -12,14 +12,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table, register_views
 from csv_loader_spark.ops.skew import salted_join
-from csv_loader_spark.queries.llm2 import _hash16_spark_sql
-from csv_loader_spark.queries.llm2 import _hash16_sql as _hash16
 from csv_loader_spark.queries.registry import query
 
 # md5-hex → 16-bit bucket, identical SQL on both engines (llm2.py owns it)
-_HASH16_IMPORT = _hash16("CAST(doc_id AS VARCHAR)")
+_HASH16_IMPORT = hash16_sql("CAST(doc_id AS VARCHAR)")
 
 
 @query(
@@ -629,7 +628,7 @@ def q77_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     downsampling/upweighting for training-mix control, reproducible across
     engines and re-partitioning."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.expr(_hash16_spark_sql("CAST(doc_id AS STRING)"))
+    bucket = F.expr(hash16_spark_sql("CAST(doc_id AS STRING)"))
     rate = (
         F.when(F.col("lang") == "en", 6554)
         .when(F.col("lang") == "fr", 16384)

@@ -282,10 +282,10 @@ def ingest_verdicts_verified(
 def passage_index(corpus: DataFrame) -> DataFrame:
     """The passage-granularity dedup index of an accepted corpus: DISTINCT
     md5 fingerprints of its fixed 20-word passages (q115's segmentation,
-    queries/llm7.py doc_passages — one rule shared by index and probe).
+    ops/curate.py doc_passages — one rule shared by index and probe).
     One narrow column, like the exact-fp index; grows with distinct
     passages, which FALLS with duplication."""
-    from csv_loader_spark.queries.llm7 import doc_passages
+    from csv_loader_spark.ops.curate import doc_passages
 
     return doc_passages(corpus).select(F.md5("passage").alias("pfp")).distinct()
 
@@ -314,7 +314,7 @@ def ingest_verdicts_passage(
     column, probes are semi/anti equi-joins, the within-batch rule is a
     window min. The passage join fans out each doc to its passage count
     (bounded by doc length), the same explode the batch q115 pays."""
-    from csv_loader_spark.queries.llm7 import doc_passages
+    from csv_loader_spark.ops.curate import doc_passages
 
     # lazy localCheckpoint for the same multi-reference reason as
     # ingest_verdicts (tagged 5x, passages 2x); _dedup_and_tag is the

@@ -91,3 +91,16 @@ def test_walk_follows_lazy_imports():
     reached = reached_files()
     assert PACKAGE / "sinks" / "kinesis.py" in reached
     assert PACKAGE / "streaming" / "pings.py" in reached
+
+
+def test_ops_modules_do_not_import_queries():
+    # ops/ holds the product operators the query surface calls; an import
+    # the other way would make the queries' reference rules the product's.
+    offenders = sorted(
+        f"{path.relative_to(REPO)}: {name}"
+        for path in (PACKAGE / "ops").rglob("*.py")
+        for name in _imported_names(path)
+        if name == "csv_loader_spark.queries"
+        or name.startswith("csv_loader_spark.queries.")
+    )
+    assert not offenders, offenders

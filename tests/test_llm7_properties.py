@@ -346,16 +346,14 @@ def test_q127_manifest_composes_its_three_rules(spark):
         per_source[r["source"]] = per_source.get(r["source"], 0) + 1
     assert all(n <= 30 for n in per_source.values())
     # split rule parity with q116's bucketing (recompute via the shared case)
-    from csv_loader_spark.queries.llm2 import _hash16_spark_sql
-    from csv_loader_spark.queries.llm7 import _SPLIT_SALT, _split_case
+    from csv_loader_spark.ops.curate import split_col
 
-    h = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_SPLIT_SALT}')")
     d = load_table(spark, SF_DIR, "documents").filter(
         F.col("doc_id").isin(*list(ids)[:50])
     )
     expected = {
         r["doc_id"]: r["split"]
-        for r in d.select("doc_id", F.expr(_split_case(h)).alias("split")).collect()
+        for r in d.select("doc_id", split_col().alias("split")).collect()
     }
     got = {r["doc_id"]: r["split"] for r in out if r["doc_id"] in expected}
     assert got == expected
@@ -366,16 +364,14 @@ def test_q128_leak_fraction_bounds_and_python_recompute(spark):
     n_shingles, and a python recompute of the valid/test leak fraction
     against the train shingle union agrees exactly."""
     from csv_loader_spark.functions.text import word_shingles as ws
-    from csv_loader_spark.queries.llm2 import _hash16_spark_sql
-    from csv_loader_spark.queries.llm7 import _SPLIT_SALT, _split_case
+    from csv_loader_spark.ops.curate import split_col
 
     out = {r["split"]: r for r in all_specs()["q128_split_contamination"].fn(spark, SF_DIR).collect()}
     assert set(out) <= {"valid", "test"} and out
-    h = _hash16_spark_sql(f"concat(CAST(doc_id AS STRING), '{_SPLIT_SALT}')")
     rows = (
         load_table(spark, SF_DIR, "documents")
         .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", F.expr(_split_case(h)).alias("split"), ws("text").alias("sh"))
+        .select("doc_id", split_col().alias("split"), ws("text").alias("sh"))
         .collect()
     )
     train = set()

@@ -1006,6 +1006,165 @@ def test_trade_graph_edges_plan_equals_inline_build(spark):
         want._jdf.queryExecution().optimizedPlan()
     )
 
+def _same_optimized_plan(got, want):
+    return got._jdf.queryExecution().optimizedPlan().sameResult(
+        want._jdf.queryExecution().optimizedPlan()
+    )
+
+
+_SPLIT_HASH = (
+    "CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':split')), 1, 4), 16, 10) AS INT)"
+)
+_SPLIT_SQL = (
+    f"CASE WHEN ({_SPLIT_HASH}) % 100 < 96 THEN 'train' "
+    f"WHEN ({_SPLIT_HASH}) % 100 < 98 THEN 'valid' ELSE 'test' END"
+)
+_QUOTA_HASH = (
+    "CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':quota')), 1, 4), 16, 10) AS INT)"
+)
+
+
+def _inline_keep_first(passages):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy(F.md5("passage")).orderBy("doc_id", "i")
+    return passages.withColumn("keep", F.row_number().over(w) == 1)
+
+
+def test_curation_rule_queries_plan_as_their_inline_builds(spark):
+    """q115, q116, q121, q128 and q129 call the admission-rule helpers of
+    ops/curate.py (split, quota rank, passage keep-first); each optimized
+    plan equals the query's build with the rule written out inline here
+    as the reference."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from csv_loader_spark.functions import text as TXT
+    from csv_loader_spark.io.tables import load_table
+    from csv_loader_spark.ops.curate import doc_passages
+
+    d = load_table(spark, SF_DIR, "documents")
+    want = {}
+
+    flagged = _inline_keep_first(doc_passages(d))
+    kept_structs = F.array_sort(
+        F.collect_list(F.when(F.col("keep"), F.struct(F.col("i"), F.col("passage"))))
+    )
+    want["q115_passage_dedup"] = flagged.groupBy("doc_id").agg(
+        F.count("*").alias("n_passages"),
+        F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long").alias("n_kept"),
+        F.md5(
+            F.array_join(F.transform(kept_structs, lambda s: s["passage"]), " ")
+        ).alias("kept_fp"),
+    )
+
+    counts = (
+        d.select("source", F.expr(_SPLIT_SQL).alias("split"))
+        .groupBy("source", "split")
+        .agg(F.count("*").alias("n_docs"))
+    )
+    want["q116_stratified_split"] = (
+        counts.withColumn("_tot", F.sum("n_docs").over(Window.partitionBy("source")))
+        .withColumn("share_bp", F.expr("CAST(n_docs * 10000 div _tot AS BIGINT)"))
+        .drop("_tot")
+    )
+
+    wq = Window.partitionBy("source").orderBy(F.expr(_QUOTA_HASH), F.col("doc_id"))
+    want["q121_source_quota"] = (
+        d.select("doc_id", "source")
+        .withColumn("rnk", F.row_number().over(wq).cast("long"))
+        .filter(F.col("rnk") <= 30)
+    )
+
+    sh = (
+        d.select("doc_id", "text", F.expr(_SPLIT_SQL).alias("split"))
+        .filter(F.size(TXT.tokens("text")) >= 3)
+        .select("doc_id", "split", F.explode(TXT.word_shingles("text")).alias("s"))
+    )
+    train_sh = sh.filter(F.col("split") == "train").select("s").distinct()
+    ev = (
+        sh.filter(F.col("split") != "train")
+        .join(train_sh.withColumn("_hit", F.lit(1)), "s", "left")
+        .groupBy("doc_id", "split")
+        .agg(
+            F.count(F.lit(1)).alias("n_sh"),
+            F.sum(F.when(F.col("_hit").isNotNull(), 1).otherwise(0)).alias("n_leaked"),
+        )
+    )
+    want["q128_split_contamination"] = (
+        ev.groupBy("split")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_leaked").cast("long").alias("n_leaked"),
+            F.sum("n_sh").cast("long").alias("n_shingles"),
+        )
+        .withColumn("leak_bp", F.expr("CAST(n_leaked * 10000 div n_shingles AS BIGINT)"))
+    )
+
+    flagged = _inline_keep_first(doc_passages(d, extra=("source",))).withColumn(
+        "n_tok", F.size(F.split(F.col("passage"), " "))
+    )
+    kept = F.sum(F.when(F.col("keep"), F.col("n_tok")).otherwise(0)).cast("long")
+    want["q129_effective_tokens"] = (
+        flagged.groupBy("source")
+        .agg(F.sum("n_tok").cast("long").alias("raw_tokens"), kept.alias("kept_tokens"))
+        .withColumn("kept_bp", F.expr("CAST(kept_tokens * 10000 div raw_tokens AS BIGINT)"))
+    )
+
+    specs = all_specs()
+    differ = [
+        name
+        for name, ref in want.items()
+        if not _same_optimized_plan(specs[name].fn(spark, SF_DIR), ref)
+    ]
+    assert not differ, differ
+
+
+@pytest.mark.parametrize(
+    "name, ann", [("q72_ann_recall", "q36_ann_lsh"), ("q93_ivf_recall", "q55_ivf_ann")]
+)
+def test_recall_meters_plan_as_their_inline_builds(spark, monkeypatch, name, ann):
+    """q72 and q93 share llm2.ann_recall; each optimized plan equals the
+    recall meter written out inline over its ANN query. Both builds read
+    the same built q35 and ANN frames: q55's centroid frame comes from
+    createDataFrame, an RDD that differs per build."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    from csv_loader_spark.queries import llm2
+
+    built = {}
+
+    def memo_get(query):
+        if query not in built:
+            built[query] = all_specs()[query].fn(spark, SF_DIR)
+        return SimpleNamespace(fn=lambda spark, sf_dir: built[query])
+
+    monkeypatch.setattr(llm2, "get", memo_get)
+    truth = memo_get("q35_knn_bruteforce").fn(spark, SF_DIR).select(
+        "query_id", "neighbor_id"
+    )
+    approx = memo_get(ann).fn(spark, SF_DIR).select(
+        F.col("query_id").alias("aq"), F.col("neighbor_id").alias("an")
+    )
+    hit = truth.join(
+        approx,
+        (truth["query_id"] == approx["aq"]) & (truth["neighbor_id"] == approx["an"]),
+        "left",
+    )
+    stats = (
+        F.count(F.lit(1)).alias("k"),
+        F.count("an").alias("n_hit"),
+        F.round(F.count("an") / F.count(F.lit(1)), 4).alias("recall"),
+    )
+    want = hit.groupBy("query_id").agg(*stats).unionAll(
+        hit.agg(F.lit(-1).cast("long").alias("query_id"), *stats)
+    )
+    assert _same_optimized_plan(all_specs()[name].fn(spark, SF_DIR), want)
+
+
 def test_q247_q249_window_runs_over_histogram_not_fact(spark):
     """q247/q249 claim their rank windows sort the per-(group, value)
     HISTOGRAM, never the fact table: below every Window, a HashAggregate
