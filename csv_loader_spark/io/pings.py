@@ -74,6 +74,19 @@ PING_SCHEMA = T.StructType(
 )
 
 
+# The one CSV parse of the pings source, shared by the batch reader and
+# the streaming reader (streaming/pings.py) so the two cannot drift.
+CSV_OPTIONS = dict(
+    schema=RAW_SCHEMA,
+    header=False,
+    mode="PERMISSIVE",
+    encoding="UTF-8",
+    multiLine=True,
+    escape='"',  # RFC 4180 doubled-quote escaping ("" inside a quoted
+    # field), like commons-csv; Spark's default escape is backslash
+)
+
+
 def _extract_first_zip_entry(path: str, workdir: str | None = None) -> str:
     """Materialize ONLY the first entry of a .zip (CsvLoader.java:84-88 reads
     `zf.entries().nextElement()` once — later entries are ignored by design).
@@ -107,16 +120,7 @@ def read_pings_raw(spark: SparkSession, path: str) -> DataFrame:
     lower = path.lower()
     if lower.endswith(".zip"):
         path = _extract_first_zip_entry(path)
-    return spark.read.csv(
-        path,
-        schema=RAW_SCHEMA,
-        header=False,
-        mode="PERMISSIVE",
-        encoding="UTF-8",
-        multiLine=True,
-        escape='"',  # RFC 4180 doubled-quote escaping ("" inside a quoted
-        # field), like commons-csv; Spark's default escape is backslash
-    )
+    return spark.read.csv(path, **CSV_OPTIONS)
 
 
 # Per-record variant switch (CsvLoader.java:124-127): any evidence of a

@@ -3,10 +3,11 @@ rules: one function (and a CLI subcommand, ``python -m csv_loader_spark
 curate``) so a pipeline owner can run the whole DAG over a real
 documents table without touching the query registry.
 
-Rules, in q132's adjudicated order. Each is written once, here; the
-queries that gate a rule on its own (q102, q115, q116, q121, q128,
-q129) call the same helper, and q127 and q132 are calls to
-:func:`curate`, so the DuckDB oracle gate checks this code itself:
+Rules, in q132's adjudicated order. Each is written once: here, or in
+ops/dedup.py for the dedup stages. The queries that gate a rule on its
+own (q102, q115, q116, q121, q128, q129) call the same helper, and q127
+and q132 are calls to :func:`curate`, so the DuckDB oracle gate checks
+this code itself:
 
 1. domain BLOCKLIST          (:func:`blocklist_domain`)
 2. eval DECONTAMINATION      (:func:`contaminated_ids`, optional via
@@ -18,7 +19,7 @@ q129) call the same helper, and q127 and q132 are calls to
                               ``verify_members=True`` for the
                               precision-1.0 tier, q145; ``dedup=False``
                               skips the stage)
-4. PASSAGE-level dedup       (:func:`doc_passages` +
+4. PASSAGE-level dedup       (doc_passages +
                               :func:`passage_keep_first`, optional via
                               ``passage_dedup``)
 5. per-source hash QUOTA     (:func:`quota_rank`)
@@ -46,9 +47,10 @@ from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
-from csv_loader_spark.streaming.ingest_dedup import (
+from csv_loader_spark.ops.dedup import (
     band_member_index,
     band_signature_index,
+    doc_passages,
     fingerprint_index,
     ingest_verdicts,
     ingest_verdicts_verified,
@@ -59,7 +61,6 @@ from csv_loader_spark.streaming.ingest_dedup import (
 # provenance filter with a hole. Extracted domains are lowercased before
 # the blocklist comparison. (?i) works identically in Java regex and RE2.
 URL_RE = r"(?i)https?://([a-z0-9.-]+)"
-PASSAGE = 20  # words per passage
 
 # The quota and split orders are 16-bit hashes of doc_id plus a salt:
 # seed-free, stable under re-partitioning and appends, engine-portable.
@@ -98,31 +99,6 @@ def split_col() -> Column:
     """train/valid/test from the salted doc_id hash: map-only, and a
     doc's split never changes when the corpus grows."""
     return F.expr(split_case(_SPLIT_KEY))
-
-
-def doc_passages(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, text[, *extra]) → (doc_id[, *extra], i, passage): every
-    doc split into fixed PASSAGE-word passages — the one segmentation of
-    the batch dedup family (q115/q129/q132) and the ingest-time passage
-    probe (streaming/ingest_dedup.py), so index and probe cannot drift."""
-    t = TXT.tokens("text")
-    base = docs.select(
-        "doc_id", *extra, t.alias("t"), F.size(t).alias("n")
-    ).filter(F.col("n") >= 1)
-    return base.select(
-        "doc_id",
-        *extra,
-        F.explode(F.sequence(F.lit(0), F.expr(f"(n - 1) div {PASSAGE}"))).alias("i"),
-        "t",
-    ).select(
-        "doc_id",
-        *extra,
-        "i",
-        F.array_join(
-            F.slice("t", (F.lit(1) + F.col("i") * PASSAGE).cast("int"), PASSAGE),
-            " ",
-        ).alias("passage"),
-    )
 
 
 def passage_keep_first() -> Column:

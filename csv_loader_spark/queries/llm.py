@@ -25,6 +25,14 @@ from pyspark.sql import Window as W
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.ops.dedup import (
+    BAND_CAP,
+    BAND_SIZE,
+    N_HASHES,
+    capped_bands,
+    minhash_bands,
+    shingled_docs,
+)
 from csv_loader_spark.queries.registry import query
 
 # Shared oracle CTE: tokenized + shingled documents (word 3-grams, distinct).
@@ -47,16 +55,6 @@ _SHINGLE_CTE = r"""
       SELECT doc_id, len(shingles) AS n_sh FROM sh
     )
 """
-
-
-def shingled_docs(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, shingles: array<string>) with ≥3 tokens.
-    DataFrame-in form so tools (bench_scaling) can run the same pipeline
-    over a synthetic multiplied corpus — one implementation, no copies."""
-    return (
-        docs.select("doc_id", TXT.word_shingles("text", 3).alias("shingles"))
-        .filter(F.size("shingles") >= 1)
-    )
 
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,37 +157,6 @@ def q33_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_N_HASHES = 6
-_BAND_SIZE = 2  # 3 bands of 2 hashes
-
-# Hot-band-bucket guard (r7, the q97 pattern applied to MinHash LSH): each
-# (band, bkey) bucket keeps only its first _BAND_CAP members by doc_id
-# before the candidate self-join, bounding a degenerate bucket at
-# C(cap, 2) pairs instead of C(M, 2). Keep-first-K (not drop): a band
-# collision certifies probable near-identity — high signal — so unlike
-# q96's boilerplate fingerprints the bucket must survive, just bounded.
-# Measured benign at ×10 duplication pre-guard (250 k pairs, SCALING.json
-# `dedup` r6) but unbounded in principle; the guard makes the bound
-# structural. row_number orders by doc_id on the same (band, bkey) key the
-# join hashes — one exchange serves both. Mirrored in the oracle CTE so
-# the exact gate holds; inert at sf0.01 (largest bucket ≪ 1024). One
-# constant, so plan and oracle bake the same value.
-_BAND_CAP = 1024
-
-
-def _minhash_sig_cols():
-    """Min-hash columns over the exploded shingle relation: min(md5(seed:s)).
-
-    Lexicographic min over fixed-width md5 hex == numeric min — portable to
-    any engine with md5, unlike murmur3-based `F.hash`.
-    """
-    # single-F.expr construction (1 round trip per column instead of ~8;
-    # identical tree — see functions/text.py's fast-path rationale)
-    return [
-        F.expr(f"min(md5(concat('{i}:', s))) AS h{i}") for i in range(_N_HASHES)
-    ]
-
-
 def _minhash_cand_ctes(cap: int, sfx: str = "") -> str:
     """kept{sfx}/cand{sfx} CTEs over an existing ``bands`` CTE with the
     band-bucket cap parameterized — so a recall meter (q110) can place a
@@ -215,11 +182,11 @@ def _minhash_oracle_band_ctes() -> str:
     """sigs/bands CTEs (no candidate chain) over an existing ``exploded``
     CTE — shared with the ingest near-dup twin (llm8.py q131)."""
     cols = ",\n             ".join(
-        f"min(md5('{i}:' || s)) AS h{i}" for i in range(_N_HASHES)
+        f"min(md5('{i}:' || s)) AS h{i}" for i in range(N_HASHES)
     )
     bands = "\n      UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, h{2*b} || h{2*b+1} AS bkey FROM sigs"
-        for b in range(_N_HASHES // _BAND_SIZE)
+        for b in range(N_HASHES // BAND_SIZE)
     )
     return f"""
     sigs AS (
@@ -236,7 +203,7 @@ def _minhash_oracle_band_ctes() -> str:
 def _minhash_oracle_sigs() -> str:
     return f"""
     {_minhash_oracle_band_ctes()},
-    {_minhash_cand_ctes(_BAND_CAP)}
+    {_minhash_cand_ctes(BAND_CAP)}
     """
 
 
@@ -267,7 +234,7 @@ def q34_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: candidates come from equi-joins on (band, bucket-key) — the LSH
     trick that replaces the O(n²) pair space with collision buckets — and
-    each bucket is capped at _BAND_CAP members (r7) so a degenerate corpus
+    each bucket is capped at BAND_CAP members (r7) so a degenerate corpus
     bounds at C(cap, 2) pairs per bucket instead of Σ(bucket²) going
     quadratic. The md5 family keeps the sketch engine-portable
     (oracle-checkable), unlike murmur3 `F.hash`. Measured growth curve:
@@ -276,44 +243,14 @@ def q34_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
 
 
-def minhash_bands(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, band, bkey): the LSH band signatures of
-    q34's 6-minhash / 3-band md5 sketch. Factored out (r9) so the
-    ingest-time near-dup probe (streaming/ingest_dedup.py) indexes and
-    probes EXACTLY the sketch the batch pairwise join uses — one hash
-    family, no drift between the index a stream maintains and the batch
-    dedup's collision rule. Docs with < 3 tokens have no shingles and
-    therefore no bands (mirrors the oracle's ``len(t) >= 3`` shingle CTE)."""
-    sh = shingled_docs(docs)
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    sigs = ex.groupBy("doc_id").agg(*_minhash_sig_cols())
-    bands = None
-    for b in range(_N_HASHES // _BAND_SIZE):
-        part = sigs.select(
-            "doc_id",
-            F.expr(f"{b} AS band"),
-            F.expr(f"concat(h{2*b}, h{2*b+1}) AS bkey"),
-        )
-        bands = part if bands is None else bands.unionAll(part)
-    return bands
-
-
-def minhash_lsh_pairs(docs: DataFrame, cap: int = _BAND_CAP) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, cap: int = BAND_CAP) -> DataFrame:
     """q34's pipeline over an arbitrary (doc_id, text) frame (see
     shingled_docs for why the DataFrame-in form exists). Each (band, bkey)
     bucket is capped at ``cap`` members (first by doc_id) before the
-    candidate self-join — see _BAND_CAP."""
+    candidate self-join — see BAND_CAP."""
     sh = shingled_docs(docs)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    bands = minhash_bands(docs)
-    bands = (
-        bands.withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("band", "bkey").orderBy("doc_id")),
-        )
-        .filter(F.col("rn") <= cap)
-        .drop("rn")
-    )
+    bands = capped_bands(minhash_bands(docs), cap)
     ba, bb = bands.alias("a"), bands.alias("b")
     cand = (
         ba.join(

@@ -217,6 +217,20 @@ def _ivf_cent_values_sql() -> str:
     )
 
 
+# The same centroids as one Spark SQL literal relation (cid INT, cv
+# ARRAY<DOUBLE>), every coordinate a D-suffixed repr, so Spark parses the
+# exact doubles. A literal relation plans identically on every build,
+# where a createDataFrame frame is a new RDD each time.
+_IVF_CENT_SPARK_SQL = "SELECT * FROM VALUES {} AS cent(cid, cv)".format(
+    ", ".join(f"({i}, {VEC.lit_array_sql(c)})" for i, c in enumerate(_IVF_CENT))
+)
+
+
+def _ivf_centroid_frame(spark: SparkSession) -> DataFrame:
+    """(cid, cv, cn): the trained centroids with their norms (q55, q149)."""
+    return spark.sql(_IVF_CENT_SPARK_SQL).withColumn("cn", VEC.norm("cv"))
+
+
 @query(
     "q55_ivf_ann",
     oracle=f"""
@@ -299,9 +313,7 @@ def q55_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = e.withColumn("nrm", VEC.norm("v")).repartition(
         spark.sparkContext.defaultParallelism
     )
-    cent = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(_IVF_CENT)], "cid INT, cv ARRAY<DOUBLE>"
-    ).withColumn("cn", VEC.norm("cv"))
+    cent = _ivf_centroid_frame(spark)
     csim = VEC.dot("v", "cv") / (F.col("nrm") * F.col("cn"))
     w_assign = W.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cid"))
     ranked = (

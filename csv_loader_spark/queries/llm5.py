@@ -46,6 +46,7 @@ from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
 from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.ops.curate import URL_RE, blocklist_domain
+from csv_loader_spark.ops.dedup import fingerprint_index, novel_documents
 from csv_loader_spark.queries.llm import (
     _KNN_K,
     _KNN_QUERIES,
@@ -372,17 +373,12 @@ def q104_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reduced to its fingerprint index), odd doc_ids play the arriving
     batch; only arrivals whose content is absent from the index — and not
     a duplicate of an earlier arrival — land, via
-    streaming/ingest_dedup.novel_documents.
+    ops/dedup.novel_documents.
 
     Scale: the index probe is an anti-join on the fingerprint — the index
     frame is one hashed column, so at 10^10 accepted docs it is an
     id-table shuffle (or a bucketed/broadcast probe), never a corpus
     rescan; the within-batch dedup is the q28 groupBy shape."""
-    from csv_loader_spark.streaming.ingest_dedup import (
-        fingerprint_index,
-        novel_documents,
-    )
-
     d = load_table(spark, sf_dir, "documents")
     index = fingerprint_index(d.filter(F.col("doc_id") % 2 == 0))
     arrivals = d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "source", "text")

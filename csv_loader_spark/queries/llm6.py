@@ -34,11 +34,10 @@ from pyspark.sql import Window as W
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.ops.dedup import N_HASHES, minhash_signatures
 from csv_loader_spark.queries.llm import (
-    _N_HASHES,
     _SHINGLE_CTE,
     _minhash_oracle_sigs,
-    _minhash_sig_cols,
     minhash_lsh_pairs,
 )
 from csv_loader_spark.queries.registry import query
@@ -267,18 +266,18 @@ def q113_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     agree AS (
       SELECT v.doc_a, v.doc_b, v.jac,
-             {" + ".join(f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(_N_HASHES))}
+             {" + ".join(f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(N_HASHES))}
                AS n_agree
       FROM verified v
       JOIN sigs a ON a.doc_id = v.doc_a
       JOIN sigs b ON b.doc_id = v.doc_b
     )
     SELECT doc_a, doc_b,
-           ((2 * n_agree * 10000 + {_N_HASHES}) // (2 * {_N_HASHES}))
+           ((2 * n_agree * 10000 + {N_HASHES}) // (2 * {N_HASHES}))
              / 10000.0 AS est_jaccard,
            round(jac, 4) AS exact_jaccard,
-           round(abs(((2 * n_agree * 10000 + {_N_HASHES})
-                      // (2 * {_N_HASHES})) / 10000.0 - round(jac, 4)), 4)
+           round(abs(((2 * n_agree * 10000 + {N_HASHES})
+                      // (2 * {N_HASHES})) / 10000.0 - round(jac, 4)), 4)
              AS abs_err
     FROM agree
     """,
@@ -298,27 +297,23 @@ def q114_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-attach by two id equi-joins (6 short hash columns, not shingle
     sets), so calibration adds no candidate-set growth."""
     d = load_table(spark, sf_dir, "documents")
-    sh = d.select("doc_id", TXT.word_shingles("text", 3).alias("shingles")).filter(
-        F.size("shingles") >= 1
-    )
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    sigs = ex.groupBy("doc_id").agg(*_minhash_sig_cols())
+    sigs = minhash_signatures(d)
     pairs = minhash_lsh_pairs(d)
     a = sigs.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(_N_HASHES)],
+        *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)],
     )
     b = sigs.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(_N_HASHES)],
+        *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)],
     )
     n_agree = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(_N_HASHES)
+        for i in range(N_HASHES)
     )
     est = (
         F.expr(
-            f"(2 * n_agree * 10000 + {_N_HASHES}) div (2 * {_N_HASHES})"
+            f"(2 * n_agree * 10000 + {N_HASHES}) div (2 * {N_HASHES})"
         )
         / 10000.0
     )

@@ -38,17 +38,16 @@ from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
 from csv_loader_spark.io.tables import load_table
 from csv_loader_spark.ops.curate import (
-    PASSAGE,
     QUOTA_KEY_SQL,
     SPLIT_KEY_SQL,
     URL_RE,
     curate,
-    doc_passages,
     passage_keep_first,
     quota_rank,
     split_case,
     split_col,
 )
+from csv_loader_spark.ops.dedup import PASSAGE, doc_passages
 from csv_loader_spark.queries.llm import (
     _KNN_K,
     _KNN_QUERIES,

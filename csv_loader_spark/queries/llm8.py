@@ -1,7 +1,7 @@
 """Round-9 operators: ingest-time dedup on NEAR-duplicates.
 
 - q131: INGEST-TIME NEAR-DUP VERDICTS — the batch run of the ingest-time
-  verdict functions (streaming/ingest_dedup.py):
+  verdict functions (ops/dedup.py):
   even doc_ids play the accepted corpus, reduced to its TWO indexes
   (exact content fingerprints + MinHash LSH band signatures, q34's
   sketch); odd doc_ids play the arriving batch. Every arrival gets an
@@ -30,17 +30,33 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
-from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.io.tables import file_fingerprint, load_table
 from csv_loader_spark.ops.curate import (
-    PASSAGE,
     QUOTA_KEY_SQL,
     SPLIT_KEY_SQL,
     URL_RE,
     curate,
-    doc_passages,
     split_case,
 )
-from csv_loader_spark.queries.llm import _SHINGLE_CTE, _minhash_oracle_band_ctes
+from csv_loader_spark.ops.dedup import (
+    BAND_CAP,
+    PASSAGE,
+    VERIFY_TAU_DEN,
+    VERIFY_TAU_NUM,
+    band_member_index,
+    band_signature_index,
+    doc_passages,
+    fingerprint_index,
+    ingest_verdicts,
+    ingest_verdicts_passage,
+    ingest_verdicts_verified,
+    passage_index,
+)
+from csv_loader_spark.queries.llm import (
+    _SHINGLE_CTE,
+    _minhash_oracle_band_ctes,
+    _shingled,
+)
 from csv_loader_spark.queries.registry import query
 
 # ---------------------------------------------------------------------------
@@ -111,7 +127,7 @@ def q131_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time NEAR-dup admission: arrivals (odd doc_ids) probed
     against the accepted corpus's (even doc_ids) fingerprint index AND
     MinHash band-signature index, each arrival tagged with its admission
-    verdict (see streaming/ingest_dedup.py ingest_verdicts for the
+    verdict (see ops/dedup.py ingest_verdicts for the
     precedence rules). This is the operator a 100 TB incremental curation
     pipeline runs per micro-batch — the q104 exact probe extended to
     near-duplicates, sharing q34's sketch so index membership means
@@ -121,12 +137,6 @@ def q131_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables probed with semi/anti equi-joins; the within-batch near rule is
     a window min per band bucket (linear), never a candidate self-join.
     """
-    from csv_loader_spark.streaming.ingest_dedup import (
-        band_signature_index,
-        fingerprint_index,
-        ingest_verdicts,
-    )
-
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     arrivals = d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "source", "text")
@@ -1012,25 +1022,19 @@ def _q138_oracle() -> str:
 def q138_ingest_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time PASSAGE-granularity dedup: arrivals probed against the
     accepted corpus's exact-fingerprint index AND its passage-fingerprint
-    index (q115's segmentation, shared via ops/curate.py doc_passages), each
+    index (q115's segmentation, shared via ops/dedup.py doc_passages), each
     arrival tagged with its admission verdict — exact dup, majority of
     passages already in the corpus ('passage_corpus': recycled content
     under a fresh fingerprint, the case the exact probe cannot see), or
     majority lost to an earlier surviving arrival ('passage_batch').
     This is the sub-document sibling of q131's band probe
-    (streaming/ingest_dedup.py ingest_verdicts_passage).
+    (ops/dedup.py ingest_verdicts_passage).
 
     Scale: the index is one hashed column (distinct passage md5s, whose
     count FALLS with duplication); probes are semi/anti equi-joins; the
     within-batch rule is a window min per passage hash. Fan-out per doc
     = its passage count, the same explode the batch q115 pays.
     """
-    from csv_loader_spark.streaming.ingest_dedup import (
-        fingerprint_index,
-        ingest_verdicts_passage,
-        passage_index,
-    )
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     n_tok = F.size(TXT.tokens("text"))
     corpus = d.filter(F.col("doc_id") % 2 == 0)
@@ -1405,8 +1409,6 @@ def q142_intradoc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q143_oracle() -> str:
-    from csv_loader_spark.queries.llm import _SHINGLE_CTE
-
     return rf"""
     WITH RECURSIVE {_SHINGLE_CTE},
     inter AS (
@@ -1603,8 +1605,6 @@ def q144_ingest_probe_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a sample of rejections, not the firehose — it is an audit, not an
     admission step.
     """
-    from csv_loader_spark.streaming.ingest_dedup import ingest_verdicts
-
     d = load_table(spark, sf_dir, "documents")
     arrivals = d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "source", "text")
     fpx, bsx, _ = _probe_corpus_indexes(spark, sf_dir)
@@ -1661,18 +1661,11 @@ def _probe_corpus_indexes(
     meters' even-doc_id corpus, each lazily localCheckpointed once per
     (session, corpus file state) — the same cache/invalidation contract as
     :func:`_probe_verify_frames`. In production these ARE persisted stores
-    (streaming/ingest_dedup.py's fingerprint/band/member state); rebuilding
+    (ops/dedup.py's fingerprint/band/member indexes); rebuilding
     them from text on every meter call was the probe chain's dominant cost
     (r14 profile: band_signature_index alone ~2 s of q144's ~4.7 s warm
     call at sf0.1), so caching here mirrors the deployment shape rather
     than hiding work."""
-    from csv_loader_spark.io.tables import file_fingerprint, load_table
-    from csv_loader_spark.streaming.ingest_dedup import (
-        band_member_index,
-        band_signature_index,
-        fingerprint_index,
-    )
-
     path = os.path.join(sf_dir, "documents.parquet")
     key = (path, "corpus_indexes")
     fp = file_fingerprint(path)
@@ -1695,16 +1688,12 @@ def _probe_verify_frames(
     """(shingled docs, stop-listed corpus postings) — both lazily
     checkpointed once per (session, corpus state) and shared across the
     q144/q146 meters."""
-    from csv_loader_spark.io.tables import file_fingerprint
-
     path = os.path.join(sf_dir, "documents.parquet")
     key = (path, _PROBE_VERIFY_MAX_DF)
     fp = file_fingerprint(path)
     hit = _probe_cache_get(spark, key, fp)
     if hit is not None:
         return hit
-    from csv_loader_spark.queries.llm import _shingled
-
     sh = _shingled(spark, sf_dir).localCheckpoint(eager=False)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     # MOSS stop-list on the corpus posting side (r12): drop shingles
@@ -1802,12 +1791,6 @@ def _probe_precision_meter(
 
 
 def _q145_oracle() -> str:
-    from csv_loader_spark.queries.llm import _BAND_CAP
-    from csv_loader_spark.streaming.ingest_dedup import (
-        VERIFY_TAU_DEN,
-        VERIFY_TAU_NUM,
-    )
-
     return f"""
     WITH {_SHINGLE_CTE},
     {_minhash_oracle_band_ctes()},
@@ -1821,7 +1804,7 @@ def _q145_oracle() -> str:
                row_number() OVER (PARTITION BY band, bkey
                                   ORDER BY doc_id) AS rn
         FROM bands WHERE doc_id % 2 = 0
-      ) WHERE rn <= {_BAND_CAP}
+      ) WHERE rn <= {BAND_CAP}
     ),
     arr AS (SELECT doc_id, source, fp FROM fps WHERE doc_id % 2 = 1),
     exc AS (
@@ -1889,10 +1872,10 @@ def _q145_oracle() -> str:
 )
 def q145_ingest_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q131's ingest-time admission verdicts with the VERIFY tier
-    (streaming/ingest_dedup.py ingest_verdicts_verified): a band-key
+    (ops/dedup.py ingest_verdicts_verified): a band-key
     collision with the corpus index rejects only when confirmed by exact
     3-gram Jaccard >= 0.3 against a member of the colliding bucket — the
-    member index stores each bucket's first _BAND_CAP docs' shingle
+    member index stores each bucket's first BAND_CAP docs' shingle
     arrays, so the confirmation is an equi-join fan-out bounded by the
     cap, never a corpus rescan. Rejection precision becomes 1.0 by
     construction (q146 gates the number); the FP trade q144 measures for
@@ -1902,12 +1885,6 @@ def q145_ingest_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical probe shapes to q131 plus one (band, bkey) equi-join
     that ships member shingle arrays only for colliding pairs.
     """
-    from csv_loader_spark.streaming.ingest_dedup import (
-        band_member_index,
-        fingerprint_index,
-        ingest_verdicts_verified,
-    )
-
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     arrivals = d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "source", "text")
@@ -1917,12 +1894,6 @@ def q145_ingest_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q146_oracle() -> str:
-    from csv_loader_spark.queries.llm import _BAND_CAP
-    from csv_loader_spark.streaming.ingest_dedup import (
-        VERIFY_TAU_DEN,
-        VERIFY_TAU_NUM,
-    )
-
     return f"""
     WITH {_SHINGLE_CTE},
     {_minhash_oracle_band_ctes()},
@@ -1934,7 +1905,7 @@ def _q146_oracle() -> str:
                row_number() OVER (PARTITION BY band, bkey
                                   ORDER BY doc_id) AS rn
         FROM bands WHERE doc_id % 2 = 0
-      ) WHERE rn <= {_BAND_CAP}
+      ) WHERE rn <= {BAND_CAP}
     ),
     arr AS (SELECT doc_id, fp FROM fps WHERE doc_id % 2 = 1),
     exc AS (SELECT doc_id FROM arr WHERE fp IN (SELECT fp FROM idx_fp)),
@@ -2015,10 +1986,6 @@ def q146_verified_probe_precision(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: q144's shape — the independent verification join explodes
     only the rejected arrivals against the corpus posting lists.
     """
-    from csv_loader_spark.streaming.ingest_dedup import (
-        ingest_verdicts_verified,
-    )
-
     d = load_table(spark, sf_dir, "documents")
     arrivals = d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "source", "text")
     fpx, _, bmx = _probe_corpus_indexes(spark, sf_dir)

@@ -38,6 +38,7 @@ from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
 from csv_loader_spark.functions.hashing import hash16_spark_sql, hash16_sql
 from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.queries.llm2 import _ivf_cent_values_sql, _ivf_centroid_frame
 from csv_loader_spark.queries.registry import query
 
 #: hashed feature space: unigrams + bigrams folded into 2^16 buckets by
@@ -123,7 +124,7 @@ def dsir_scores(target: DataFrame, raw: DataFrame) -> DataFrame:
     the hashed stream is built ONCE over a flagged target|raw union and
     lazily localCheckpoint-ed; the bucket-count aggregation, the totals,
     and the scoring join all read the materialized stream instead of
-    re-running the hash (the streaming/ingest_dedup.py adjudication —
+    re-running the hash (the ops/dedup.py verdict-core adjudication —
     recompute was 3 evaluations of the hash per occurrence, measured
     3.7 s -> checkpointed at sf0.1; the checkpoint is narrow
     (doc_id, source, int bucket, flag) executor-local rows)."""
@@ -220,8 +221,6 @@ SEMDEDUP_TAU = 0.40
 
 
 def _semdedup_oracle() -> str:
-    from csv_loader_spark.queries.llm2 import _ivf_cent_values_sql
-
     return f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -307,15 +306,11 @@ def q149_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry ONLY ids + the precedence scalar; vectors re-attach by id
     equi-join before the one dot-product filter (q55's
     wide-arrays-never-ride-the-shuffle discipline)."""
-    from csv_loader_spark.functions.ivf_centroids import CENTROIDS
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", VEC.as_double("embedding").alias("v")
     )
     n = e.withColumn("nrm", VEC.norm("v"))
-    cent = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(CENTROIDS)], "cid INT, cv ARRAY<DOUBLE>"
-    ).withColumn("cn", VEC.norm("cv"))
+    cent = _ivf_centroid_frame(spark)
     csim = VEC.dot("v", "cv") / (F.col("nrm") * F.col("cn"))
     # nearest-centroid argmax as a partially-aggregating max(struct) —
     # (csim desc, cid asc) encoded as lexicographic (csim, -cid) — NOT a

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from csv_loader_spark.io.pings import RAW_SCHEMA, project_pings
+from csv_loader_spark.io.pings import CSV_OPTIONS, project_pings
 from csv_loader_spark.sinks.http import (
     _ID_KEYS, BATCH_SIZE, RETRY_INTERVAL_S, _deliver, _envelope_sender,
 )
@@ -47,13 +47,10 @@ def stream_pings(
 ) -> DataFrame:
     """Incremental CSV source over a directory (new files = new data), same
     parse chain as batch ``read_pings`` — one code path, two execution modes."""
-    reader = spark.readStream.schema(RAW_SCHEMA).option("encoding", "UTF-8")
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.csv(
-        src_dir, header=False, mode="PERMISSIVE", multiLine=True, escape='"'
-    )
-    return project_pings(raw)
+    return project_pings(reader.csv(src_dir, **CSV_OPTIONS))
 
 
 @dataclass

@@ -93,14 +93,77 @@ def test_walk_follows_lazy_imports():
     assert PACKAGE / "streaming" / "pings.py" in reached
 
 
+def _chain_to_queries(start: Path) -> list[Path] | None:
+    """The shortest import chain from ``start`` to a module under
+    ``csv_loader_spark/queries/``, imports in function bodies included."""
+    queries = PACKAGE / "queries"
+    came_from: dict[Path, Path | None] = {start: None}
+    todo = [start]
+    while todo:
+        path = todo.pop(0)
+        if queries in path.parents:
+            chain = []
+            while path is not None:
+                chain.append(path)
+                path = came_from[path]
+            return chain[::-1]
+        for name in sorted(_imported_names(path)):
+            found = _module_file(name, (REPO,))
+            if found is not None and found not in came_from:
+                came_from[found] = path
+                todo.append(found)
+    return None
+
+
 def test_ops_modules_do_not_import_queries():
     # ops/ holds the product operators the query surface calls; an import
-    # the other way would make the queries' reference rules the product's.
-    offenders = sorted(
-        f"{path.relative_to(REPO)}: {name}"
-        for path in (PACKAGE / "ops").rglob("*.py")
-        for name in _imported_names(path)
-        if name == "csv_loader_spark.queries"
-        or name.startswith("csv_loader_spark.queries.")
-    )
+    # the other way, by any path, would make the queries' reference rules
+    # the product's and load the whole query registry with them.
+    offenders = [
+        " → ".join(str(p.relative_to(PACKAGE)) for p in chain)
+        for path in sorted((PACKAGE / "ops").rglob("*.py"))
+        if (chain := _chain_to_queries(path))
+    ]
     assert not offenders, offenders
+
+
+def _top_level_names(path: Path) -> set[str]:
+    """Names a module binds at its top level: defs, classes, assignments
+    and imports."""
+    names: set[str] = set()
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(
+                n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)
+            )
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
+
+
+def test_tool_imports_name_existing_definitions():
+    # No test runs the tools, so a moved or deleted package name would
+    # only show when someone next runs one.
+    broken = []
+    for path in sorted((REPO / "tools").glob("*.py")) + [REPO / "bench.py"]:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[0] in ("csv_loader_spark", "tools")
+            ):
+                continue
+            module = _module_file(node.module, (REPO,))
+            if module is None:
+                broken.append(f"{path.name}:{node.lineno}: no module {node.module}")
+                continue
+            defined = _top_level_names(module)
+            broken.extend(
+                f"{path.name}:{node.lineno}: {node.module} has no {alias.name}"
+                for alias in node.names
+                if alias.name not in defined
+                and _module_file(f"{node.module}.{alias.name}", (REPO,)) is None
+            )
+    assert not broken, broken

@@ -12,7 +12,8 @@
 
 from pyspark.sql import functions as F
 
-from csv_loader_spark.queries.llm import _BAND_CAP, minhash_lsh_pairs
+from csv_loader_spark.ops.dedup import BAND_CAP as _BAND_CAP
+from csv_loader_spark.queries.llm import minhash_lsh_pairs
 from csv_loader_spark.queries.llm3 import _WINNOW_MAX_DF, winnow_neardup_pairs
 
 # Long enough that winnowing emits fingerprints (needs >= _WIN_W + 3 chars

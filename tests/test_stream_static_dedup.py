@@ -1,4 +1,4 @@
-"""Ingest-time dedup (streaming/ingest_dedup.py): arriving documents
+"""Ingest-time dedup (ops/dedup.py): arriving documents
 anti-join a static fingerprint index then dedup among themselves (q104's
 shape), and the near-dup verdict tiers keep their precedence and
 precision rules."""
@@ -7,7 +7,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from csv_loader_spark.streaming.ingest_dedup import (
+from csv_loader_spark.ops.dedup import (
     fingerprint_index,
     novel_documents,
 )
@@ -116,7 +116,7 @@ def test_ingest_verdicts_batch_rules(spark):
     """The five-verdict precedence on one batch: exact-vs-corpus beats
     near-vs-corpus beats near-vs-batch; the within-batch near rule keeps
     the bucket-minimum doc_id."""
-    from csv_loader_spark.streaming.ingest_dedup import (
+    from csv_loader_spark.ops.dedup import (
         band_signature_index,
         ingest_verdicts,
     )
@@ -153,7 +153,7 @@ def test_doubled_delivery_of_novel_doc_is_still_admitted(spark):
     """r9 review fix: a doubled landing-zone file delivering the same
     (doc_id, text) row twice in one batch must yield ONE accepted verdict
     — not two exact_batch rejections that silently drop a novel doc."""
-    from csv_loader_spark.streaming.ingest_dedup import (
+    from csv_loader_spark.ops.dedup import (
         band_signature_index,
         ingest_verdicts,
         ingest_verdicts_passage,
@@ -182,7 +182,7 @@ def test_verified_verdicts_match_membership_on_true_neardups(spark):
     """The VERIFY tier (r10): on genuine near-dups the verified rule
     agrees with the membership rule verdict-for-verdict; the member index
     carries per-bucket shingle arrays; and precedence is unchanged."""
-    from csv_loader_spark.streaming.ingest_dedup import (
+    from csv_loader_spark.ops.dedup import (
         band_member_index,
         ingest_verdicts_verified,
     )
@@ -221,14 +221,14 @@ def test_verify_tier_admits_band_false_positives(spark):
     (q144's 9166 bp); the verified rule's rejections are a strict subset
     and every dropped rejection indeed has no witness at J >= 0.3."""
     from csv_loader_spark.io.tables import load_table
-    from csv_loader_spark.queries.llm import shingled_docs
-    from csv_loader_spark.streaming.ingest_dedup import (
+    from csv_loader_spark.ops.dedup import (
         VERIFY_TAU_DEN,
         VERIFY_TAU_NUM,
         band_member_index,
         band_signature_index,
         ingest_verdicts,
         ingest_verdicts_verified,
+        shingled_docs,
     )
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")

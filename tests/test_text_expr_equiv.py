@@ -1,6 +1,6 @@
 """r15 construction-cost fast paths produce IDENTICAL expression trees.
 
-functions/text.py and llm._minhash_sig_cols/minhash_bands gained a
+functions/text.py and ops/dedup.py minhash_sig_cols/minhash_bands gained a
 single-`F.expr` construction fast path for plain-identifier column names
 (one py4j round trip instead of 8-30 per helper use — the minhash/ingest
 family builds issued ~2000-2700 round trips each, multi-ms apiece under
@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
-from csv_loader_spark.queries import llm
+from csv_loader_spark.ops import dedup
 
 STOPWORDS = TXT.STOPWORDS
 
@@ -113,10 +113,10 @@ def test_minhash_sig_cols_tree_identical(spark):
     old = df.groupBy("doc_id").agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-            for i in range(llm._N_HASHES)
+            for i in range(dedup.N_HASHES)
         ]
     )
-    new = df.groupBy("doc_id").agg(*llm._minhash_sig_cols())
+    new = df.groupBy("doc_id").agg(*dedup.minhash_sig_cols())
     assert old.schema == new.schema
     assert new._jdf.queryExecution().analyzed().sameResult(
         old._jdf.queryExecution().analyzed()
@@ -133,11 +133,11 @@ def test_minhash_bands_rows_identical(spark):
         ],
         "doc_id int, text string",
     )
-    bands = llm.minhash_bands(docs)
+    bands = dedup.minhash_bands(docs)
     assert [f.name for f in bands.schema.fields] == ["doc_id", "band", "bkey"]
     rows = {(r.doc_id, r.band, r.bkey) for r in bands.collect()}
     # identical docs share every band key; short doc has no bands
     assert {r[0] for r in rows} == {1, 2, 3}
     b1 = {(b, k) for d, b, k in rows if d == 1}
     b2 = {(b, k) for d, b, k in rows if d == 2}
-    assert b1 == b2 and len(b1) == llm._N_HASHES // llm._BAND_SIZE
+    assert b1 == b2 and len(b1) == dedup.N_HASHES // dedup.BAND_SIZE

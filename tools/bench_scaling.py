@@ -302,7 +302,7 @@ def _boiler_text(b: int) -> str:
 def run_prefix_flood(sf_dir: str, b: int) -> dict[str, dict]:
     from pyspark.sql import functions as F
 
-    from csv_loader_spark.queries.llm import shingled_docs
+    from csv_loader_spark.ops.dedup import shingled_docs
     from csv_loader_spark.queries.llm7 import (
         prefix_jaccard_candidates,
         prefix_jaccard_index,
@@ -394,8 +394,8 @@ def run_cluster_flood(sf_dir: str, b: int) -> dict[str, float | int]:
     from pyspark.sql import functions as F
 
     from csv_loader_spark.functions import text as TXT
+    from csv_loader_spark.ops.dedup import shingled_docs
     from csv_loader_spark.ops.graph import connected_components
-    from csv_loader_spark.queries.llm import shingled_docs
     from csv_loader_spark.queries.llm7 import (
         prefix_jaccard_index,
         prefix_jaccard_pairs,
@@ -458,13 +458,13 @@ def run_probe_verify_flood(sf_dir: str, b: int) -> dict[str, float | int]:
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from csv_loader_spark.queries.llm import shingled_docs
-    from csv_loader_spark.queries.llm8 import _PROBE_VERIFY_MAX_DF
-    from csv_loader_spark.streaming.ingest_dedup import (
+    from csv_loader_spark.ops.dedup import (
         band_signature_index,
         fingerprint_index,
         ingest_verdicts,
+        shingled_docs,
     )
+    from csv_loader_spark.queries.llm8 import _PROBE_VERIFY_MAX_DF
 
     spark = get_spark("bench_scaling")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
