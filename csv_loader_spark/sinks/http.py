@@ -13,15 +13,15 @@ Delivery semantics reproduced exactly:
 Scale shape: ``_deliver`` is the one executor-side delivery shape, shared
 by ``write_http``, the Kinesis sink and each streaming micro-batch. It runs
 every partition through ``mapInArrow``: the executor's Python worker reads
-its partition as Arrow batches, hands the (vehicle_id, lat, lon, ts_millis)
-rows to a sender (here ~10k-row envelope POSTs), and emits one row per
-distinct (vehicle_id_str, vehicle_id) with its row count. The driver never
-materializes the data, N executors send in parallel (the reference is one
-thread; at 100 TB the receiver's capacity, not the engine, is the limit —
-cap parallelism by coalescing first if the receiver needs it), and the
-load's distinct counts (a streaming batch's metrics likewise) come from a
-Spark aggregate over those small rows in the same job, so the input is
-scanned and parsed once. A task or stage that
+its partition as Arrow batches, hands them to a sender (here ~10k-row
+envelope POSTs, encoded straight from the Arrow columns), and emits one row
+per distinct (vehicle_id_str, vehicle_id) with its row count. N executors
+send in parallel (the reference is one thread; at 100 TB the receiver's
+capacity, not the engine, is the limit — cap parallelism by coalescing
+first if the receiver needs it). A load is one Spark job: the driver
+collects those id-pair rows as Arrow (``toArrow``) and folds the load's
+exact counts from them (``_load_counts``, which states the scale bound), so
+the input is scanned and parsed once. A task or stage that
 Spark recomputes (lost executor, failed fetch) sends its rows again:
 at-least-once, like a transport retry.
 
@@ -33,17 +33,17 @@ sequence — boundaries are transport packaging, not semantics (SURVEY §2 op 14
 
 from __future__ import annotations
 
-import itertools
 import sys
 import time
 import urllib.error
 import urllib.request
 from collections.abc import Callable, Iterable, Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
 
-from csv_loader_spark.sinks.envelope import encode_envelope
+from csv_loader_spark.sinks.envelope import ROW_COLUMNS, encode_columns
 
 # Reference constants (CsvLoader.java:160,229).
 BATCH_SIZE = 10_001  # flush when size() > 10000 → envelopes of 10,001
@@ -87,46 +87,49 @@ def post_bytes(
             time.sleep(retry_interval)
 
 
-def _chunks(it: Iterator, size: int) -> Iterator[list]:
-    while True:
-        chunk = list(itertools.islice(it, size))
-        if not chunk:
-            return
-        yield chunk
-
-
 _ID_KEYS = ["vehicle_id_str", "vehicle_id"]
 _ID_COUNTS_SCHEMA = "vehicle_id_str string, vehicle_id long, n long"
 
 
-def _arrow_tuples(batches: Iterable, tallies: list) -> Iterator[tuple]:
-    """The (vehicle_id, lat, lon, ts_millis) rows of Arrow ``batches`` in
-    order; appends each batch's row count per distinct id pair to
-    ``tallies`` as it goes."""
-    import pyarrow as pa
-
+def _slices(batches: Iterable, size: int) -> Iterator:
+    """The rows of Arrow ``batches`` regrouped, in order, into Arrow tables
+    of ``size`` rows (the last one shorter), cut with zero-copy slices."""
+    parts: list = []
+    held = 0
     for batch in batches:
-        ids = pa.Table.from_batches([batch]).select(_ID_KEYS)
-        tallies.append(ids.group_by(_ID_KEYS).aggregate([([], "count_all")]))
-        cols = ("vehicle_id", "lat", "lon", "ts_millis")
-        yield from zip(*(batch.column(c).to_pylist() for c in cols))
+        while batch.num_rows:
+            part = batch.slice(0, size - held)
+            parts.append(part)
+            held += part.num_rows
+            batch = batch.slice(part.num_rows)
+            if held == size:
+                yield pa.Table.from_batches(parts)
+                parts, held = [], 0
+    if held:
+        yield pa.Table.from_batches(parts)
 
 
-def _deliver(pings: DataFrame, send: Callable[[Iterator[tuple]], object]) -> DataFrame:
+def _deliver(pings: DataFrame, send: Callable[[Iterator], object]) -> DataFrame:
     """Drive every partition of ``pings`` through ``send`` on the executors.
 
-    ``send`` gets one partition's (vehicle_id, lat, lon, ts_millis) tuples
-    in order and must consume them all. Returns the lazy frame of
-    (vehicle_id_str, vehicle_id, n) rows, one per distinct id pair of each
-    partition with its row count: nothing is sent until an action runs on
-    it, and every action sends again. Aggregating it gives the load's
-    counts from the job that sends (``_load_counts``)."""
+    ``send`` gets one partition's Arrow record batches in order, each with
+    the ``ROW_COLUMNS`` (vehicle_id, lat, lon, ts_millis), and must consume
+    them all. Returns the lazy frame of (vehicle_id_str, vehicle_id, n)
+    rows, one per distinct id pair of each partition with its row count,
+    tallied as the batches pass: nothing is sent until an action runs on
+    it, and every action sends again. ``_load_counts`` folds it into the
+    load's counts from the job that sends."""
 
     def _send_and_count(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
         tallies: list = []
-        send(_arrow_tuples(batches, tallies))
+
+        def _tallied() -> Iterator:
+            for batch in batches:
+                ids = pa.Table.from_batches([batch]).select(_ID_KEYS)
+                tallies.append(ids.group_by(_ID_KEYS).aggregate([([], "count_all")]))
+                yield batch
+
+        send(_tallied())
         if tallies:  # yielded only once every row is sent
             counts = pa.concat_tables(tallies).group_by(_ID_KEYS)
             counts = counts.aggregate([("count_all", "sum")])
@@ -134,20 +137,28 @@ def _deliver(pings: DataFrame, send: Callable[[Iterator[tuple]], object]) -> Dat
                 [*_ID_KEYS, "n"]
             ).to_batches()
 
-    return pings.select(*_ID_KEYS, "lat", "lon", "ts_millis").mapInArrow(
+    return pings.select("vehicle_id_str", *ROW_COLUMNS).mapInArrow(
         _send_and_count, _ID_COUNTS_SCHEMA
     )
 
 
 def _load_counts(id_counts: DataFrame) -> Row:
-    """Run a ``_deliver`` frame: the load's (n_records, n_vehicles, n_ids),
-    the same exact counts as ``io.pings.distinct_vehicle_counts``."""
-    return id_counts.agg(
+    """Run a ``_deliver`` frame as one Spark job and fold its Arrow result
+    on the driver: the load's (n_records, n_vehicles, n_ids), the same
+    exact counts as ``io.pings.distinct_vehicle_counts``.
+
+    Scale bound: the driver receives one row per distinct id pair per
+    partition. A plain, gz or zip file is one partition, so that is the
+    file's distinct set, the same state the reference keeps in its two
+    HashSets (CsvLoader.java:105-106); a directory of files sends at most
+    files × distinct rows."""
+    t = id_counts.toArrow()
+    return Row(
         # a sum over no rows is NULL: an empty load has 0 records
-        F.coalesce(F.sum("n"), F.lit(0)).alias("n_records"),
-        F.countDistinct("vehicle_id_str").alias("n_vehicles"),
-        F.countDistinct("vehicle_id").alias("n_ids"),
-    ).collect()[0]
+        n_records=pc.sum(t["n"]).as_py() or 0,
+        n_vehicles=pc.count_distinct(t["vehicle_id_str"]).as_py(),
+        n_ids=pc.count_distinct(t["vehicle_id"]).as_py(),
+    )
 
 
 def _envelope_sender(
@@ -156,15 +167,17 @@ def _envelope_sender(
     batch_size: int,
     retry_interval: float,
     max_retries: int | None,
-) -> Callable[[Iterator[tuple]], None]:
+) -> Callable[[Iterator], None]:
     """A ``_deliver`` sender that posts a partition's rows as protobuf
     envelopes of ``batch_size`` rows (micro-batcher, op 14)."""
+    if batch_size < 1:
+        raise ValueError(f"batch_size must be at least 1, got {batch_size}")
 
-    def _post(tuples: Iterator[tuple]) -> None:
-        for chunk in _chunks(tuples, batch_size):
+    def _post(batches: Iterator) -> None:
+        for rows in _slices(batches, batch_size):
             post_bytes(
                 url,
-                encode_envelope(source_id, chunk),
+                encode_columns(source_id, rows),
                 retry_interval=retry_interval,
                 max_retries=max_retries,
             )

@@ -32,10 +32,11 @@ import time
 from collections.abc import Iterable, Iterator
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row
 
-from csv_loader_spark.sinks.envelope import encode_message
-from csv_loader_spark.sinks.http import RETRY_INTERVAL_S, _chunks, _deliver, _load_counts
+from csv_loader_spark.sinks.envelope import framed_messages
+from csv_loader_spark.sinks.http import RETRY_INTERVAL_S, _deliver, _load_counts, _slices
 
 try:  # pragma: no cover - absent in the test container
     import boto3  # type: ignore
@@ -46,20 +47,22 @@ PUT_RECORDS_LIMIT = 500  # Kinesis PutRecords hard cap per call
 
 
 def records_for_kinesis(
-    tuples: Iterable[tuple[int, float, float, int]],
+    batches: Iterable,
     *,
     chunk_size: int = PUT_RECORDS_LIMIT,
 ) -> Iterator[list[dict]]:
-    """(vehicle_id, lat, lon, ts_millis) tuples → PutRecords entry chunks:
-    Data = one-location protobuf VehicleMessage, PartitionKey = vehicle_id
-    (per-vehicle shard ordering)."""
-    for chunk in _chunks(iter(tuples), chunk_size):
+    """Arrow record batches with the envelope's ROW_COLUMNS →
+    PutRecords entry chunks, in row order: Data = the row's one-location
+    protobuf VehicleMessage, cut from the columnar encoder's buffer;
+    PartitionKey = vehicle_id as a decimal string (per-vehicle shard
+    ordering)."""
+    for rows in _slices(batches, chunk_size):
+        buf, offsets = framed_messages(rows)
+        data, bounds = buf.tobytes(), offsets.tolist()
+        keys = rows.column("vehicle_id").cast(pa.string()).to_pylist()
         yield [
-            {
-                "Data": encode_message(vid, [(lat, lon, ts)]),
-                "PartitionKey": str(vid),
-            }
-            for vid, lat, lon, ts in chunk
+            {"Data": data[start + 2 : end], "PartitionKey": key}
+            for start, end, key in zip(bounds, bounds[1:], keys)
         ]
 
 
@@ -166,9 +169,9 @@ def write_kinesis(
     and for credential customization; defaults to ``boto3.client``."""
     factory = client_factory or _default_client_factory(region)
 
-    def _send(tuples: Iterator[tuple]) -> None:
+    def _send(batches: Iterator) -> None:
         client = factory()
-        for chunk in records_for_kinesis(tuples):
+        for chunk in records_for_kinesis(batches):
             put_records_with_retry(
                 client,
                 stream_name,

@@ -23,8 +23,8 @@ lgConfigK=12), with bounded driver state and NO id-row materialization.
 A ``max`` of per-batch counts would instead report the largest
 single-batch cardinality and arbitrarily underestimate once batches carry
 disjoint vehicles. ``metrics="exact"`` is the documented reference-parity
-OPT-IN (it collect()s id pairs per batch and grows unbounded driver sets,
-exactly like the reference's HashSets).
+OPT-IN (it collects the batch's id pairs as Arrow and grows unbounded
+driver sets, exactly like the reference's HashSets).
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from __future__ import annotations
 import sys
 from dataclasses import dataclass, field
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -108,12 +109,13 @@ def _apply_id_counts(
     printed (the reference prints per flush, CsvLoader.java:165)."""
     replayed = state.last_batch_id is not None and batch_id <= state.last_batch_id
     if metrics == "exact":
-        # reference-parity dual distinct (unbounded, like :105-106)
-        rows = id_counts.collect()
+        # reference-parity dual distinct (unbounded, like :105-106), from
+        # the same Arrow collection as the batch sink's _load_counts
+        t = id_counts.toArrow()
         if not replayed:
-            state.records += sum(r["n"] for r in rows)
-            state.vehicles_str.update(r["vehicle_id_str"] for r in rows)
-            state.vehicle_ids.update(r["vehicle_id"] for r in rows)
+            state.records += pc.sum(t["n"]).as_py() or 0
+            state.vehicles_str.update(t["vehicle_id_str"].to_pylist())
+            state.vehicle_ids.update(t["vehicle_id"].to_pylist())
         print(state.line(exact=True), file=sys.stderr)
     else:  # "approx"
         # One mergeable HLL sketch per counter per batch (executor side,

@@ -1,8 +1,13 @@
 """Envelope build + protobuf wire-format roundtrip (ops 13-15)."""
 
+import pytest
+
 from csv_loader_spark.sinks.envelope import (
+    ROW_COLUMNS,
     decode_envelope,
+    encode_columns,
     encode_envelope,
+    rows_batch,
 )
 from csv_loader_spark.sinks.kinesis import records_for_kinesis
 
@@ -22,6 +27,19 @@ def test_wire_roundtrip_preserves_values():
 
 def test_kinesis_chunking_limit():
     rows = [(i, 1.0, 2.0, i) for i in range(1203)]
-    chunks = list(records_for_kinesis(iter(rows), chunk_size=500))
+    chunks = list(records_for_kinesis([rows_batch(rows)], chunk_size=500))
     assert [len(c) for c in chunks] == [500, 500, 203]
     assert chunks[0][0]["PartitionKey"] == "0"
+
+
+@pytest.mark.parametrize("column", ROW_COLUMNS)
+def test_encoder_refuses_null_fields(column):
+    """``to_numpy`` would turn a NULL into NaN and post wrong bytes; the
+    encoder raises a ValueError that names the column instead."""
+    row = [1, 1.0, 2.0, 3]
+    row[ROW_COLUMNS.index(column)] = None
+    rows = [(2, 4.0, 5.0, 6), tuple(row)]
+    with pytest.raises(ValueError, match=repr(column)):
+        encode_columns(9, rows_batch(rows))
+    with pytest.raises(ValueError, match=repr(column)):
+        encode_envelope(9, rows)

@@ -5,6 +5,8 @@ import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
+from conftest import spark_jobs
+from pyspark.errors import PythonException
 
 from csv_loader_spark.io.pings import distinct_vehicle_counts
 from csv_loader_spark.sinks.envelope import decode_envelope
@@ -174,3 +176,43 @@ def test_write_http_drops_an_envelope_refused_with_500(spark, http_server):
     assert [len(e.messages) for e in envelopes] == [10_001, 4_999]
     got = [(vid, *locs[0]) for e in envelopes for vid, locs in e.messages]
     assert got == [(vid, lat, lon, ts) for _, vid, ts, lat, lon in rows[:10_001] + rows[20_002:]]
+
+
+def test_write_http_runs_one_spark_job(spark, http_server):
+    """A load is one Spark job: the job that posts also returns the id-pair
+    rows, and the driver folds the counts from that Arrow result."""
+    url, rec = http_server
+    _, df = _one_partition_frame(spark)
+
+    counts, jobs = spark_jobs(spark, lambda: write_http(df, url, 11, max_retries=2))
+
+    assert jobs == 1
+    assert counts.asDict() == distinct_vehicle_counts(df).collect()[0].asDict()
+    assert len(rec.payloads) == 3
+
+
+def test_write_http_refuses_a_null_field_and_posts_nothing(spark, http_server):
+    """A NULL has no wire form: the encoder raises, naming the column,
+    instead of posting a NaN in its place."""
+    url, rec = http_server
+    df = spark.createDataFrame(
+        [("1", 1, 10, None, 2.0)],
+        "vehicle_id_str string, vehicle_id long, ts_millis long, lat double, lon double",
+    )
+    with pytest.raises(PythonException, match="'lat'"):
+        write_http(df, url, source_id=7, max_retries=0)
+    assert rec.requests == 0
+
+
+@pytest.mark.parametrize("batch_size", [0, -1])
+def test_write_http_refuses_an_empty_envelope_size(spark, http_server, batch_size):
+    """An envelope holds at least one row: a smaller ``batch_size`` raises
+    before anything is sent."""
+    url, rec = http_server
+    df = spark.createDataFrame(
+        [("1", 1, 10, 1.0, 2.0)],
+        "vehicle_id_str string, vehicle_id long, ts_millis long, lat double, lon double",
+    )
+    with pytest.raises(ValueError, match="batch_size"):
+        write_http(df, url, source_id=7, batch_size=batch_size, max_retries=0)
+    assert rec.requests == 0

@@ -10,6 +10,7 @@ import sys
 import uuid
 
 import pytest
+from conftest import spark_jobs
 from pyspark import cloudpickle
 
 from csv_loader_spark.io.pings import distinct_vehicle_counts
@@ -103,6 +104,22 @@ def test_write_kinesis_partition_key_is_vehicle_id(spark, tmp_path):
     calls = [json.load(open(os.path.join(log_dir, p))) for p in os.listdir(log_dir)]
     keys = sorted(k for c in calls for k in c["delivered"])
     assert keys == ["42", "42", "7"]  # shard ordering rides vehicle_id
+
+
+def test_write_kinesis_runs_one_spark_job(spark, tmp_path):
+    """A Kinesis load is one Spark job, like ``write_http``."""
+    log_dir = str(tmp_path)
+    pings = spark.createDataFrame(
+        [(str(i % 40), i % 40, 1.0, 2.0, 1000 + i) for i in range(700)],
+        "vehicle_id_str string, vehicle_id long, lat double, lon double, ts_millis long",
+    ).coalesce(1)
+
+    counts, jobs = spark_jobs(spark, lambda: write_kinesis(
+        pings, "s", client_factory=lambda: FakeKinesisClient(log_dir), retry_interval=0.0,
+    ))
+
+    assert jobs == 1
+    assert counts.asDict() == distinct_vehicle_counts(pings).collect()[0].asDict()
 
 
 class _AlwaysThrottling:
@@ -232,7 +249,7 @@ def test_put_records_real_client_roundtrip():
     (vehicle_id, lat, lon, ts)."""
     import struct as _struct
 
-    from csv_loader_spark.sinks.envelope import _fields, _signed64
+    from csv_loader_spark.sinks.envelope import _fields, _signed64, rows_batch
     from csv_loader_spark.sinks.kinesis import (
         put_records_with_retry,
         records_for_kinesis,
@@ -261,7 +278,7 @@ def test_put_records_real_client_roundtrip():
 
     client = _moto_stream()
     rows = [(i, 45.0 + i / 1000.0, -122.0, 1_000 + i) for i in range(1200)]
-    chunks = list(records_for_kinesis(iter(rows)))
+    chunks = list(records_for_kinesis([rows_batch(rows)]))
     assert [len(c) for c in chunks] == [500, 500, 200]
     for chunk in chunks:
         attempts = put_records_with_retry(client, "vehicles", chunk)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from csv_loader_spark.functions.ids import decimal_str_to_int64
 from csv_loader_spark.functions.timestamps import parse_time_to_millis
 from csv_loader_spark.io.pings import (
+    CSV_OPTIONS,
     PING_SCHEMA,
     distinct_vehicle_counts,
     project_pings,
@@ -97,6 +98,21 @@ def test_rfc4180_dialect_details(spark, tmp_path):
     assert got[2] == (1433147416000, 41.5, -75.5)
     raw = read_pings_raw(spark, str(p)).collect()
     assert raw[2]["_c1"] == 'say "hi"'  # RFC 4180 unescaping, like commons-csv
+
+
+def test_stray_quotes_hide_a_quoted_newline(spark, tmp_path):
+    """A stray quote inside an unquoted field (commons-csv and Spark keep
+    it as a literal) can pair with the quote that opens a multi-line
+    field: every line below holds an even number of quotes, yet the file
+    is 2 records, not 3. A line-split read would parse it as 3, so "no
+    line with an odd quote count" cannot decide when splitting is safe."""
+    p = tmp_path / "stray.csv"
+    p.write_text('a,b"c,"d\ne",g"h\nx,y,z\n')
+    assert [line.count('"') for line in p.read_text().splitlines()] == [2, 2, 0]
+    rows = [tuple(r)[:4] for r in read_pings_raw(spark, str(p)).collect()]
+    assert rows == [("a", 'b"c', "d\ne", 'g"h'), ("x", "y", "z", None)]
+    line_split = spark.read.csv(str(p), **{**CSV_OPTIONS, "multiLine": False})
+    assert line_split.count() == 3
 
 
 def test_directory_of_csvs(spark, tmp_path):
