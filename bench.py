@@ -4,6 +4,7 @@ Prints exactly ONE JSON line:
     {"metric": "headline_total", "value": <sec>, "unit": "sec",
      "queries": {"q01_pricing_summary": <sec>, ...},
      "groups": {"headline": <sec>, "r7": <sec>, ..., "r15": <sec>},
+     "build_py4j_calls": {"q01_pricing_summary": <count>, ...},
      "sf": 0.1}
 
 ``value`` is the HEADLINE total measured in its OWN fresh JVM (the
@@ -37,9 +38,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from csv_loader_spark.io.tables import TABLES, load_table  # noqa: E402
+from csv_loader_spark.profile import compiling, counting  # noqa: E402
 from csv_loader_spark.queries.registry import all_specs  # noqa: E402
 from csv_loader_spark.session import get_spark  # noqa: E402
-from tools.count_roundtrips import compiling  # noqa: E402
 
 #: the bench's query groups, each a registry tag: ``headline`` spans
 #: scan+agg, join shapes, windows, sessionize, dedup and KNN; ``rN`` is the
@@ -124,10 +125,13 @@ def _wait_for_idle(max_wait_s: float) -> float:
 
 def _timed_passes(
     spark, specs, sf_dir: str, names: tuple[str, ...]
-) -> tuple[list[dict[str, float]], list[float], list[float], list[int]]:
+) -> tuple[
+    list[dict[str, float]], list[float], list[float], list[int], dict[str, int]
+]:
     """Warm every table + two untimed primes over ``names``, then
     TIMED_RUNS timed passes. Returns (per-run per-query times, per-run
-    headline totals, per-run end loads, per-run codegen compile counts).
+    headline totals, per-run end loads, per-run codegen compile counts,
+    per-query py4j round trips of the first prime's build).
 
     Warm-up is TWICE, not once: the HOF-heavy queries (q35's
     zip_with/aggregate dot products are CodegenFallback, i.e.
@@ -153,13 +157,22 @@ def _timed_passes(
     pass; at Spark's default of 100 it held less than one HEADLINE pass
     (~130), and every steady-state pass recompiled 119-123 classes. A
     steady HEADLINE pass now compiles 0, and the per-run compile count in
-    the artifact shows if that stops holding."""
+    the artifact shows if that stops holding.
+
+    The py4j round trips of each query's build (``fn(spark, sf_dir)``,
+    no action) are counted in the first prime: a load-independent measure
+    of driver construction cost, which wall time is not."""
     head = tuple(n for n in HEADLINE if n in names)
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
-    for _ in range(2):
+    build_calls: dict[str, int] = {}
+    for prime in range(2):
         for name in names:
-            specs[name].fn(spark, sf_dir).count()
+            with counting() as calls:
+                df = specs[name].fn(spark, sf_dir)
+            if prime == 0:
+                build_calls[name] = calls["n"]
+            df.count()
     runs: list[dict[str, float]] = []
     run_totals: list[float] = []
     run_loads: list[float] = []
@@ -185,7 +198,7 @@ def _timed_passes(
             f"{compiles['n']} classes compiled",
             file=sys.stderr,
         )
-    return runs, run_totals, run_loads, run_compiles
+    return runs, run_totals, run_loads, run_compiles, build_calls
 
 
 def _trim_runs(
@@ -266,7 +279,7 @@ def headline_cell() -> None:
     started = time.perf_counter()
     spark = get_spark("bench_headline")
     get_spark_s = time.perf_counter() - started
-    runs, run_totals, run_loads, run_compiles = _timed_passes(
+    runs, run_totals, run_loads, run_compiles, _ = _timed_passes(
         spark, all_specs(), sf_dir, HEADLINE
     )
     print(
@@ -326,7 +339,7 @@ def main() -> None:
     spark = get_spark("bench")
     specs = all_specs()
     load_avg_start = load_at_start
-    runs, run_totals, run_loads, run_compiles = _timed_passes(
+    runs, run_totals, run_loads, run_compiles, build_calls = _timed_passes(
         spark, specs, sf_dir, _ALL
     )
 
@@ -377,6 +390,7 @@ def main() -> None:
                 "headline_inprocess": inprocess_headline,
                 "queries": times,
                 "groups": groups,
+                "build_py4j_calls": build_calls,
                 "sf": sf,
                 # host-noise provenance (r9-r11 verdicts): canonical means
                 # BOTH the host was idle when measurement began AND the

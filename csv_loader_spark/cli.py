@@ -21,6 +21,13 @@ import sys
 DEFAULT_URL = "http://localhost:4567/locationUpdate"  # CsvLoader.java:45
 
 
+def _positive_int(text: str) -> int:
+    value = int(text)
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {value}")
+    return value
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="csv_loader_spark",
@@ -46,7 +53,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--stream", action="store_true", help="incremental (Structured Streaming) mode over a directory")
     p.add_argument("--checkpoint", help="checkpoint dir for --stream")
     p.add_argument("--dry-run", action="store_true", help="parse + metrics only, no send")
-    p.add_argument("--batch-size", type=int, default=10_001, help="rows per envelope (reference: 10,001)")
+    p.add_argument("--batch-size", type=_positive_int, default=10_001, help="rows per envelope (reference: 10,001)")
     p.add_argument("--retry-interval", type=float, default=5.0, help="seconds between transport retries (reference: 5)")
     p.add_argument("--max-retries", type=int, default=None, help="cap transport retries (default: forever, like the reference)")
     p.add_argument(
@@ -399,13 +406,19 @@ def main(argv: list[str] | None = None) -> int:
         return audio_main(argv[1:])
     if argv[:1] == ["sql"]:
         return sql_main(argv[1:])
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if args.stream and (args.dry_run or args.kinesis):
+        # the streaming sink posts to --url; it has no dry-run or Kinesis mode
+        parser.error("--stream cannot be combined with --dry-run or --kinesis")
     if not os.path.exists(args.file):
         # reference behavior: message + return, no stack trace (:59-61)
         print(f"file not found: {args.file}", file=sys.stderr)
         return 1
 
-    from csv_loader_spark.io.pings import distinct_vehicle_counts, read_pings
+    from csv_loader_spark.io.pings import (
+        distinct_vehicle_counts, progress_line, read_pings,
+    )
     from csv_loader_spark.session import get_spark
 
     spark = get_spark("csv_loader_cli")
@@ -443,11 +456,7 @@ def main(argv: list[str] | None = None) -> int:
         from csv_loader_spark.sinks.http import write_http
 
         row = write_http(pings, args.url, source_id, batch_size=args.batch_size, **retry)
-    # reference progress-line format (CsvLoader.java:165)
-    print(
-        "%.2fM records loaded, %d unique vehicles (%d unique ids)"
-        % (row["n_records"] / 1e6, row["n_vehicles"], row["n_ids"])
-    )
+    print(progress_line(row["n_records"], row["n_vehicles"], row["n_ids"]))
     return 0
 
 

@@ -190,3 +190,12 @@ def distinct_vehicle_counts(pings: DataFrame) -> DataFrame:
         F.countDistinct("vehicle_id_str").alias("n_vehicles"),
         F.countDistinct("vehicle_id").alias("n_ids"),
     )
+
+
+def progress_line(records: int, vehicles: int, ids: int) -> str:
+    """The reference's progress line (CsvLoader.java:165) for a load's
+    record count and its two distinct-vehicle counts."""
+    return (
+        f"{records / 1e6:.2f}M records loaded, "
+        f"{vehicles} unique vehicles ({ids} unique ids)"
+    )

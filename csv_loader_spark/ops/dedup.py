@@ -53,8 +53,9 @@ BAND_CAP = 1024
 
 def shingled_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, shingles: array<string>) with ≥3 tokens.
-    DataFrame-in form so tools (bench_scaling) can run the same pipeline
-    over a synthetic multiplied corpus — one implementation, no copies."""
+    DataFrame-in form so this module's sketch and the queries'
+    minhash_lsh_pairs, which llm5 and llm6 reuse, share one
+    implementation, no copies."""
     return (
         docs.select("doc_id", TXT.word_shingles("text", 3).alias("shingles"))
         .filter(F.size("shingles") >= 1)

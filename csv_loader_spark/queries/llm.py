@@ -238,7 +238,8 @@ def q34_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds at C(cap, 2) pairs per bucket instead of Σ(bucket²) going
     quadratic. The md5 family keeps the sketch engine-portable
     (oracle-checkable), unlike murmur3 `F.hash`. Measured growth curve:
-    tools/bench_scaling.py (SCALING.json 'minhash').
+    SCALING.json 'minhash'. The pipeline is minhash_lsh_pairs,
+    DataFrame-in because llm5's q110 and llm6's q114 reuse it.
     """
     return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
 

@@ -534,14 +534,13 @@ _WIN_W = 8  # window of consecutive gram hashes per fingerprint pick
 _WINNOW_MAX_DF = 512
 
 
-def winnow_fps_oracle(where: str = "doc_id < 100") -> str:
-    """q94's oracle SQL with a parameterized document filter, so
-    tools/bench_scaling.py can run the identical pipeline over the full
-    (multiplied) corpus — single source of truth for the SQL."""
+def winnow_fps_oracle() -> str:
+    """q94's oracle SQL, the fingerprint CTE of q96's and (through it)
+    llm5's q109 guard-recall meter — one source of truth for the SQL."""
     return rf"""
     WITH t AS (
       SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS s
-      FROM documents WHERE {where}
+      FROM documents WHERE doc_id < 100
     ),
     grams AS (
       SELECT doc_id, i AS pos, {hash32_sql("substr(s, CAST(i AS INTEGER), 4)")} AS h,
@@ -563,14 +562,12 @@ def winnow_fps_oracle(where: str = "doc_id < 100") -> str:
     """
 
 
-def winnow_pairs_oracle(
-    where: str = "doc_id < 100", max_df: int = _WINNOW_MAX_DF
-) -> str:
-    """q96's oracle SQL over the same parameterized filter, mirroring the
-    MOSS stop-list: fingerprints with document frequency > max_df are
-    dropped before the posting-list self-join (see _WINNOW_MAX_DF)."""
+def winnow_pairs_oracle(max_df: int = _WINNOW_MAX_DF) -> str:
+    """q96's oracle SQL over the same documents, mirroring the MOSS
+    stop-list: fingerprints with document frequency > max_df are dropped
+    before the posting-list self-join (see _WINNOW_MAX_DF)."""
     return f"""
-    WITH fps AS ({winnow_fps_oracle(where)}),
+    WITH fps AS ({winnow_fps_oracle()}),
     kept AS (
       SELECT doc_id, fp FROM (
         SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS df FROM fps
@@ -605,8 +602,9 @@ def q94_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:
-    """q94's pipeline over an arbitrary (doc_id, text) frame (DataFrame-in
-    form for tools/bench_scaling.py — single implementation)."""
+    """q94's pipeline over an arbitrary (doc_id, text) frame: the
+    DataFrame-in form lets q96's winnow_neardup_pairs, which llm5's q109
+    reuses, share one implementation."""
     from pyspark.sql import Window as W
 
     s = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
@@ -685,7 +683,8 @@ def q96_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_WINNOW_MAX_DF, r7) drops boilerplate fingerprints whose posting
     list exceeds max_df docs, bounding the join at Σ min(df, max_df)²
     instead of the M² measured in r6 (SCALING.json 'dedup': 1.24 G pairs
-    at ×10 duplication pre-guard). Measured growth curve:
-    tools/bench_scaling.py (SCALING.json 'winnow')."""
+    at ×10 duplication pre-guard). Measured growth curve: SCALING.json
+    'winnow'. The pipeline is winnow_neardup_pairs, DataFrame-in because
+    llm5's q109 reuses it with and without the stop-list."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return winnow_neardup_pairs(d)

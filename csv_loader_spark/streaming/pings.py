@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from csv_loader_spark.io.pings import CSV_OPTIONS, project_pings
+from csv_loader_spark.io.pings import CSV_OPTIONS, progress_line, project_pings
 from csv_loader_spark.sinks.http import (
     _ID_KEYS, BATCH_SIZE, RETRY_INTERVAL_S, _deliver, _envelope_sender,
 )
@@ -79,10 +79,7 @@ class IngestMetrics:
             nv, ni = len(self.vehicles_str), len(self.vehicle_ids)
         else:
             nv, ni = self.approx_vehicles, self.approx_ids
-        return (
-            f"{self.records / 1e6:.2f}M records loaded, "
-            f"{nv} unique vehicles ({ni} unique ids)"
-        )
+        return progress_line(self.records, nv, ni)
 
 
 def update_batch_metrics(

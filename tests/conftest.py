@@ -102,16 +102,3 @@ def write_zip_csv(path: str) -> int:
         zf.writestr("a_data.csv", "".join(line + "\n" for line, _ in NARROW_ROWS))
         zf.writestr("z_decoy.csv", "junk,junk\n" * 100)
     return len(NARROW_ROWS)
-
-
-def spark_jobs(spark, run):
-    """``run()``'s result and the number of Spark jobs it started from this
-    thread."""
-    sc = spark.sparkContext
-    group = f"spark_jobs-{os.getpid()}-{id(run)}"
-    sc.setJobGroup(group, "spark_jobs")
-    try:
-        result = run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -82,6 +82,43 @@ def test_dry_run_sends_nothing(spark, tmp_path, http_server, capsys):
     assert "unique vehicles" in capsys.readouterr().out
 
 
+_TOO_SMALL = "--batch-size: must be at least 1"
+_NO_STREAM_MODE = "--stream cannot be combined"
+
+
+@pytest.mark.parametrize(
+    "stream, flags, message",
+    [
+        (False, ["--batch-size", "0"], _TOO_SMALL),
+        (False, ["--batch-size", "-1"], _TOO_SMALL),
+        (True, ["--batch-size", "0"], _TOO_SMALL),
+        (True, ["--batch-size", "-1"], _TOO_SMALL),
+        (True, ["--dry-run"], _NO_STREAM_MODE),
+        (True, ["--kinesis", "s"], _NO_STREAM_MODE),
+    ],
+    ids=["batch_size_0", "batch_size_-1", "stream_batch_size_0",
+         "stream_batch_size_-1", "stream_dry_run", "stream_kinesis"],
+)
+def test_usage_errors_exit_2_and_post_nothing(
+    tmp_path, http_server, capsys, stream, flags, message
+):
+    """A --batch-size below 1, and --stream with a flag it has no mode for
+    (it posts to --url), are usage errors before any row is read."""
+    url, rec = http_server
+    src = tmp_path / "incoming"
+    src.mkdir()
+    write_narrow_csv(str(src / "pings.csv"))
+    if stream:
+        source = ["-f", str(src), "--stream", "--checkpoint", str(tmp_path / "ckpt")]
+    else:
+        source = ["-f", str(src / "pings.csv")]
+    with pytest.raises(SystemExit) as exit_:
+        main([*source, "-u", url, "--max-retries", "2", *flags])
+    assert exit_.value.code == 2
+    assert message in capsys.readouterr().err
+    assert rec.payloads == []
+
+
 def test_stream_posts_once_per_checkpoint(spark, tmp_path, http_server):
     """--stream drains the directory through the same sink as the batch
     branch; a second run over the same checkpoint has nothing new to post."""

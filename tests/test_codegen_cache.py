@@ -4,8 +4,8 @@ of 100 entries the ten HEADLINE queries (~130 classes) evict each other and
 every pass recompiles ~120 classes through Janino."""
 
 from bench import HEADLINE
+from csv_loader_spark.profile import compiling
 from csv_loader_spark.queries.registry import get
-from tools.count_roundtrips import compiling
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -16,6 +16,7 @@ string-registered UDFs and the test seams over reached queries.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -167,3 +168,25 @@ def test_tool_imports_name_existing_definitions():
                 and _module_file(f"{node.module}.{alias.name}", (REPO,)) is None
             )
     assert not broken, broken
+
+
+#: ``path:line`` of citations of deleted tools that only a change to the
+#: benchmark may edit. It may only shrink.
+_STALE_TOOL_CITATIONS = {"perfbench/layers.py:59"}
+
+
+def test_cited_tools_exist():
+    # Pure text: a docstring or comment that names a deleted tool sends the
+    # reader to a file that is not there.
+    cited = re.compile(r"\btools/(\w+)\.py\b")
+    missing = {
+        f"{path.relative_to(REPO)}:{lineno}"
+        for path in REPO.rglob("*.py")
+        if ".git" not in path.parts
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        for name in cited.findall(line)
+        if not (REPO / "tools" / f"{name}.py").is_file()
+    }
+    assert missing == _STALE_TOOL_CITATIONS, sorted(
+        missing ^ _STALE_TOOL_CITATIONS
+    )

@@ -5,10 +5,10 @@ import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
-from conftest import spark_jobs
 from pyspark.errors import PythonException
 
 from csv_loader_spark.io.pings import distinct_vehicle_counts
+from csv_loader_spark.profile import spark_jobs
 from csv_loader_spark.sinks.envelope import decode_envelope
 from csv_loader_spark.sinks.http import post_bytes, write_http
 

@@ -10,10 +10,10 @@ import sys
 import uuid
 
 import pytest
-from conftest import spark_jobs
 from pyspark import cloudpickle
 
 from csv_loader_spark.io.pings import distinct_vehicle_counts
+from csv_loader_spark.profile import spark_jobs
 from csv_loader_spark.sinks.kinesis import (
     PUT_RECORDS_LIMIT,
     put_records_with_retry,

@@ -28,7 +28,7 @@ from csv_loader_spark.io.pings import (
     read_pings_raw,
     rejected_pings,
 )
-from tools.count_roundtrips import counting
+from csv_loader_spark.profile import counting
 
 
 def _by_id(df):
