@@ -14,6 +14,7 @@ random 64-bit id per load (:63). Extensions beyond the reference: --stream
 from __future__ import annotations
 
 import argparse
+import math
 import os
 import random
 import sys
@@ -25,6 +26,22 @@ def _positive_int(text: str) -> int:
     value = int(text)
     if value < 1:
         raise argparse.ArgumentTypeError(f"must be at least 1, got {value}")
+    return value
+
+
+def _non_negative_int(text: str) -> int:
+    value = int(text)
+    if value < 0:
+        raise argparse.ArgumentTypeError(f"must be at least 0, got {value}")
+    return value
+
+
+def _seconds(text: str) -> float:
+    # time.sleep raises on a negative, NaN or infinite value inside an
+    # executor's retry loop; refuse them here, before a session starts
+    value = float(text)
+    if not 0 <= value < math.inf:
+        raise argparse.ArgumentTypeError(f"must be a finite number >= 0, got {text}")
     return value
 
 
@@ -54,8 +71,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--checkpoint", help="checkpoint dir for --stream")
     p.add_argument("--dry-run", action="store_true", help="parse + metrics only, no send")
     p.add_argument("--batch-size", type=_positive_int, default=10_001, help="rows per envelope (reference: 10,001)")
-    p.add_argument("--retry-interval", type=float, default=5.0, help="seconds between transport retries (reference: 5)")
-    p.add_argument("--max-retries", type=int, default=None, help="cap transport retries (default: forever, like the reference)")
+    p.add_argument("--retry-interval", type=_seconds, default=5.0, help="seconds between transport retries (reference: 5)")
+    p.add_argument("--max-retries", type=_non_negative_int, default=None, help="cap transport retries (default: forever, like the reference)")
     p.add_argument(
         "--exact-metrics",
         action="store_true",

@@ -28,22 +28,6 @@ TABLES = (
 )
 
 
-# Plan cache: spark.read.parquet re-lists the file and re-reads the footer
-# on every call (~50-100 ms of driver time per table); multi-table queries
-# were paying this 4-6× per plan build. DataFrames are immutable logical
-# plans, so reuse within a session is safe. Keyed by the live session
-# OBJECT (not id() — ids are reused after GC and a stale plan bound to a
-# dead session would poison the cache); pinning the handful of sessions a
-# process creates is a bounded, acceptable cost. The cached value carries
-# the file's (mtime_ns, size) fingerprint (r7): a regenerated file under
-# the same path — the lived r5 incident — invalidates the entry instead of
-# serving a plan whose embedded schema/statistics describe dead bytes.
-# One os.stat per call buys that; trivial against the footer read saved.
-_TABLE_CACHE: dict[
-    tuple[SparkSession, str, str], tuple[tuple[int, int] | None, DataFrame]
-] = {}
-
-
 def file_fingerprint(path: str) -> tuple[int, int] | None:
     """(newest mtime_ns, total size) over a file or a directory tree —
     cheap identity for 'did the data under this path change'. Recurses the
@@ -51,9 +35,9 @@ def file_fingerprint(path: str) -> tuple[int, int] | None:
     rewritten IN PLACE changes neither the top directory's stat nor its
     subdirs' sizes, only the leaf files' — one-level scanning would serve
     the stale cache for exactly the incident class this exists to close.
-    Cost is one stat per file, paid per load_table call; trivial next to
-    the footer read the cache saves. None when the path is missing (the
-    subsequent read raises the real error).
+    Cost is one stat per file, paid per :func:`session_cached` call;
+    trivial next to the footer read the cache saves. None when the path
+    is missing (the subsequent read raises the real error).
 
     Known limitation: a same-size rewrite landing within the filesystem's
     mtime granularity is invisible to a stat-only identity — a sub-tick
@@ -74,6 +58,38 @@ def file_fingerprint(path: str) -> tuple[int, int] | None:
         return (newest, total)
     except OSError:
         return None
+
+
+# One session cache for every frame derived from a parquet file: load_table's
+# lazy table plans and the query library's persisted or checkpointed
+# indexes. Keyed by the live session OBJECT (not id(): ids are reused after
+# GC, and a frame bound to a dead session would poison the entry); pinning
+# the handful of sessions a process creates is a bounded cost. A weak key
+# frees nothing here: a cached DataFrame references its own session. Each
+# entry carries its file's fingerprint (r7): a regenerated file under the
+# same path (the lived r5 incident) rebuilds the entry instead of serving
+# a frame whose schema, statistics or frozen rows describe dead bytes.
+_SESSION_CACHE: dict[tuple[SparkSession, object], tuple[object, object]] = {}
+
+
+def session_cached(spark: SparkSession, path: str, key: object, build):
+    """``build()``'s value, kept per ``(spark, key)`` while ``path``'s
+    :func:`file_fingerprint` is unchanged. On a change, every DataFrame
+    in the stale value (a frame or a tuple of them) is unpersisted before
+    ``build()`` runs again. ``build()`` decides what to materialize: a
+    lazy plan, a persisted and counted frame, a localCheckpoint."""
+    fp = file_fingerprint(path)
+    hit = _SESSION_CACHE.get((spark, key))
+    if hit is not None:
+        if hit[0] == fp:
+            return hit[1]
+        stale = hit[1] if isinstance(hit[1], tuple) else (hit[1],)
+        for v in stale:
+            if isinstance(v, DataFrame):
+                v.unpersist()
+    value = build()
+    _SESSION_CACHE[(spark, key)] = (fp, value)
+    return value
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -114,12 +130,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timezone, so a driver that flips the TZ between queries would
     # otherwise silently change results served from the plan cache.
     tune_session(spark)
-    key = (spark, sf_dir, name)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    fp = file_fingerprint(path)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None and cached[0] == fp:
-        return cached[1]
+    # spark.read.parquet re-lists the file and re-reads the footer on
+    # every call (~50-100 ms of driver time per table); multi-table
+    # queries were paying this 4-6x per plan build. A DataFrame is an
+    # immutable logical plan, so the session cache keeps it lazy.
+    return session_cached(spark, path, path, lambda: _read_table(spark, path, name))
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
@@ -141,7 +160,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _TABLE_CACHE[key] = (fp, df)
     return df
 
 
@@ -154,32 +172,3 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     """Register temp views (for the SQL-surface operators, e.g. GROUPING SETS)."""
     for name, df in load_tables(spark, sf_dir, *names).items():
         df.createOrReplaceTempView(name)
-
-
-def persisted_by_fingerprint(cache, key, fp_path, build):
-    """One copy of the fingerprint-keyed persisted-DataFrame lifecycle:
-    return ``cache[key]`` while ``fp_path``'s :func:`file_fingerprint` is
-    unchanged; otherwise unpersist the stale entry, ``build()`` a fresh
-    frame, persist + materialize it (unpersisting on a failed
-    materialization rather than leaking), and register it.
-
-    Used by queries/llm7._df_sorted_tokens. queries/llm4._lsh_candidates
-    implements the same contract inline and CANNOT adopt this helper
-    as-is: its build materializes guard stats off a second, temporary
-    persisted frame that must stay alive through the candidate frame's
-    count — a two-frame lifecycle this single-frame helper doesn't model.
-    """
-    fp = file_fingerprint(fp_path)
-    hit = cache.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        hit[1].unpersist()
-    df = build().persist()
-    try:
-        df.count()  # materialize before registering
-    except BaseException:
-        df.unpersist()
-        raise
-    cache[key] = (fp, df)
-    return df

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import vectors as VEC
-from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.io.tables import load_table, session_cached
 from csv_loader_spark.queries.llm import _LSH_BITS, _LSH_TABLES, _hyperplanes
 from csv_loader_spark.queries.llm2 import _COS_DUP_THRESHOLD
 from csv_loader_spark.queries.registry import query
@@ -193,20 +193,6 @@ def hot_bucket_guard_stats(n: DataFrame, cap: int = _HOT_BUCKET_CAP) -> dict:
     return _guard_stats_from_rn(_tagged_rn(n), cap)
 
 
-# Candidate-pair cache, keyed like io.tables._TABLE_CACHE (live session
-# object + path): the candidate set is the reusable "index" of the LSH
-# dedup — q98 re-runs q97's whole pipeline just to count its rows, so
-# without this the gate executes the 96-signature pass twice. persist()
-# (MEMORY_AND_DISK) holds only (vec_a, vec_b) id pairs — the narrow frame
-# by design — and spills to disk if a big corpus outgrows memory. Unlike
-# the lazy table-plan cache, persist() FREEZES rows, so each entry carries
-# the embeddings file's (mtime_ns, size) fingerprint (r7): a regenerated
-# file under the same path unpersists the stale pairs and rebuilds instead
-# of silently joining fresh vectors against dead candidates.
-_CAND_CACHE: dict[
-    tuple[SparkSession, str], tuple[tuple[int, int] | None, DataFrame]
-] = {}
-
 _LOG = logging.getLogger(__name__)
 
 
@@ -214,28 +200,29 @@ def _lsh_candidates(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate pairs for the embeddings table, plus the normalized-vector
-    frame to verify them against. On each index (re)build, logs the
-    hot-bucket guard stats — a WARNING when the cap evicted anything, so
-    recall degradation under a vector flood is visible at runtime."""
-    from csv_loader_spark.io.tables import file_fingerprint
-
+    frame to verify them against. The candidate set is the reusable
+    "index" of the LSH dedup (q98 re-runs q97's whole pipeline just to
+    count its rows), so it is session-cached per embeddings file state and
+    persisted: MEMORY_AND_DISK over the narrow (vec_a, vec_b) id pairs. On
+    each index (re)build, logs the hot-bucket guard stats — a WARNING when
+    the cap evicted anything, so recall degradation under a vector flood
+    is visible at runtime."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", VEC.as_double("embedding").alias("v")
     )
     n = e.withColumn("nrm", VEC.norm("v")).repartition(
         spark.sparkContext.defaultParallelism
     )
-    key = (spark, sf_dir)
-    fp = file_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    hit = _CAND_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1], n
-    if hit is not None:
-        hit[1].unpersist()  # stale pairs for dead bytes — drop, rebuild
-    # NOTE: io.tables.persisted_by_fingerprint is the shared single-frame
-    # version of this lifecycle; this site keeps its own copy because the
-    # guard-stats frame below must stay persisted through cand's
-    # materializing count (two-frame lifecycle).
+    cand = session_cached(
+        spark,
+        os.path.join(sf_dir, "embeddings.parquet"),
+        ("q97_candidates", sf_dir),
+        lambda: _build_candidates(n),
+    )
+    return cand, n
+
+
+def _build_candidates(n: DataFrame) -> DataFrame:
     # ONE signature/tagging pass per index build: persist the narrow
     # (vec_id, bucket, rn) frame, read the guard stats off it (this also
     # materializes it), build + materialize the candidate pairs from the
@@ -255,7 +242,6 @@ def _lsh_candidates(
         raise
     finally:
         rnf.unpersist()
-    _CAND_CACHE[key] = (fp, cand)
     if stats["n_evicted"]:
         _LOG.warning(
             "q97 hot-bucket cap bound: %(n_evicted)d members evicted from "
@@ -267,7 +253,7 @@ def _lsh_candidates(
         )
     else:
         _LOG.info("q97 hot-bucket cap inert: %s", stats)
-    return cand, n
+    return cand
 
 
 @query(

@@ -56,6 +56,11 @@ from csv_loader_spark.queries.llm import (
     minhash_lsh_pairs,
 )
 from csv_loader_spark.queries.llm3 import winnow_neardup_pairs, winnow_pairs_oracle
+from csv_loader_spark.queries.llm7 import (
+    _BLOCKLIST,
+    _INJECTED_TEXT_SQL,
+    injected_url_text,
+)
 from csv_loader_spark.queries.registry import get, query
 
 # Sized to the synthetic corpus (10-99 tokens/doc, median 56) so outputs
@@ -282,23 +287,12 @@ def q101_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q102: domain blocklist filter
 # ---------------------------------------------------------------------------
 
-_BLOCKLIST = ("site1.example", "site4.example")
-
-
 @query(
     "q102_domain_filter",
     oracle=f"""
     WITH injected AS (
       SELECT doc_id, source,
-             CASE WHEN doc_id % 3 = 0
-                  THEN text || ' see '
-                       || CASE WHEN doc_id % 2 = 0 THEN 'https://SITE'
-                               ELSE 'http://site' END
-                       || CAST(doc_id % 7 AS VARCHAR)
-                       || CASE WHEN doc_id % 2 = 0 THEN '.EXAMPLE'
-                               ELSE '.example/page' || CAST(doc_id AS VARCHAR)
-                          END
-                  ELSE text END AS text
+             {_INJECTED_TEXT_SQL} AS text
       FROM documents
     ),
     tagged AS (
@@ -327,8 +321,6 @@ def q102_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, the blocklist rides the task closure; regexp extraction is
     whole-stage codegen. A 10M-domain production blocklist still
     broadcasts at ~100 MB of hashes."""
-    from csv_loader_spark.queries.llm7 import injected_url_text
-
     d = load_table(spark, sf_dir, "documents")
     tagged = d.select(
         "doc_id", "source", blocklist_domain(injected_url_text()).alias("domain")

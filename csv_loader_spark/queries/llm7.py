@@ -30,13 +30,15 @@ search.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
 from csv_loader_spark.functions import vectors as VEC
-from csv_loader_spark.io.tables import load_table
+from csv_loader_spark.io.tables import load_table, session_cached
 from csv_loader_spark.ops.curate import (
     QUOTA_KEY_SQL,
     SPLIT_KEY_SQL,
@@ -397,14 +399,6 @@ def q118_sq8_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TAU = 0.5  # must match q33's threshold — q119 shares q33's oracle
 
-# The df-sorted token index is referenced three times in q119's DAG
-# (prefix explode, verify side a, verify side b); Spark re-computes
-# unshared subtrees, so the index is persisted once per (session, dir)
-# and invalidated on file change — llm4._CAND_CACHE's exact pattern.
-_TOKIDX_CACHE: dict[
-    tuple[SparkSession, str], tuple[tuple[int, int] | None, DataFrame]
-] = {}
-
 
 def prefix_jaccard_index(shingled: DataFrame) -> DataFrame:
     """(doc_id, shingles) → (doc_id, toks, n_sh, pref): every doc's
@@ -484,20 +478,25 @@ def prefix_jaccard_pairs(index: DataFrame) -> DataFrame:
 def _df_sorted_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted-per-(session, dir) prefix index over the documents
     table; persisted because three plan subtrees read it (building it
-    thrice measured 8.2 s vs 0.9 s at sf0.1). At 100 TB this
+    thrice measured 8.2 s vs 0.9 s at sf0.1), and session-cached so a
+    regenerated documents file rebuilds it. At 100 TB this
     materialization IS the algorithm's index — every set-similarity
-    system writes it before the join. Lifecycle (fingerprint
-    invalidation, persist, leak-safe materialization) lives in the shared
-    io.tables.persisted_by_fingerprint helper."""
-    import os
+    system writes it before the join."""
 
-    from csv_loader_spark.io.tables import persisted_by_fingerprint
+    def build() -> DataFrame:
+        idx = prefix_jaccard_index(_shingled(spark, sf_dir)).persist()
+        try:
+            idx.count()  # materialize before the cache holds it
+        except BaseException:
+            idx.unpersist()
+            raise
+        return idx
 
-    return persisted_by_fingerprint(
-        _TOKIDX_CACHE,
-        (spark, sf_dir),
+    return session_cached(
+        spark,
         os.path.join(sf_dir, "documents.parquet"),
-        lambda: prefix_jaccard_index(_shingled(spark, sf_dir)),
+        ("q119_index", sf_dir),
+        build,
     )
 
 
@@ -1131,10 +1130,11 @@ def q126_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# URL-injection scaffolding (q127/q132): the synthetic corpus carries no
-# URLs, so the blocklist rule would be vacuous — every third doc gets a
+# URL-injection scaffolding (q102/q127/q132): the synthetic corpus carries
+# no URLs, so the blocklist rule would be vacuous — every third doc gets a
 # deterministic doc_id-derived URL appended, identical expression on both
-# engines, so the rule measurably fires.
+# engines, so the rule measurably fires against _BLOCKLIST.
+_BLOCKLIST = ("site1.example", "site4.example")
 _INJECTED_TEXT_SQL = """CASE WHEN doc_id % 3 = 0
                   THEN text || ' see '
                        || CASE WHEN doc_id % 2 = 0 THEN 'https://SITE'
@@ -1165,8 +1165,6 @@ def injected_url_text() -> Column:
 
 
 def _q127_oracle() -> str:
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST
-
     blocked = ", ".join(f"'{b}'" for b in _BLOCKLIST)
     return f"""
     WITH injected AS (
@@ -1202,8 +1200,6 @@ def q127_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, n_tok) — the manifest a training job consumes. One corpus
     scan; the quota is the one source-keyed WindowGroupLimit shuffle.
     """
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST
-
     d = load_table(spark, sf_dir, "documents")
     inj = d.select("doc_id", "source", injected_url_text().alias("text"))
     kept, _ = curate(inj, blocklist=_BLOCKLIST, dedup=False, quota_cap=_QUOTA)

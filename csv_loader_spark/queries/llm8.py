@@ -23,14 +23,13 @@ batch costs one narrow shuffle instead of C(n, 2) candidate pairs.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from csv_loader_spark.functions import text as TXT
-from csv_loader_spark.io.tables import file_fingerprint, load_table
+from csv_loader_spark.io.tables import load_table, session_cached
 from csv_loader_spark.ops.curate import (
     QUOTA_KEY_SQL,
     SPLIT_KEY_SQL,
@@ -151,8 +150,7 @@ def q131_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q132_oracle() -> str:
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST
-    from csv_loader_spark.queries.llm7 import _INJECTED_TEXT_SQL, _QUOTA
+    from csv_loader_spark.queries.llm7 import _BLOCKLIST, _INJECTED_TEXT_SQL, _QUOTA
 
     blocked = ", ".join(f"'{b}'" for b in _BLOCKLIST)
     return rf"""
@@ -235,8 +233,7 @@ def q132_admission_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, source, split, n_tok). Every rule is linear in the corpus;
     no pairwise joins anywhere.
     """
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST
-    from csv_loader_spark.queries.llm7 import _QUOTA, injected_url_text
+    from csv_loader_spark.queries.llm7 import _BLOCKLIST, _QUOTA, injected_url_text
 
     d = load_table(spark, sf_dir, "documents")
     inj = d.select("doc_id", "source", injected_url_text().alias("text"))
@@ -1626,32 +1623,11 @@ def q144_ingest_probe_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the two meters were the bench's slowest idle entries at ~5 s each, and
 # their verify-side DAG below `nc` is IDENTICAL — corpus shingles, df
 # stop-list, posting explode — so the second meter in a session was
-# re-materializing work the first had already done). Keyed and
-# invalidated exactly like io/tables._TABLE_CACHE: live session object +
-# file fingerprint, so a regenerated corpus under the same path misses.
-# Cost of the pin: the shingle arrays + corpus posting rows stay in
+# re-materializing work the first had already done). Both frame sets live
+# in io.tables.session_cached, so a regenerated corpus under the same path
+# misses. Cost of the pin: the shingle arrays + corpus posting rows stay in
 # executor block storage for the session (MBs at gate scale) — the
-# bounded, acceptable trade the table cache already made. The outer map
-# weak-references the session (r13 ADVICE: a plain dict pinned stopped
-# sessions and their checkpointed frames forever), so a collected
-# session drops its whole entry; within a live session the per-key
-# overwrite-on-fingerprint-miss bounds growth to one entry per key.
-_PROBE_FRAME_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _probe_cache_get(spark: SparkSession, key: tuple, fp: object):
-    ent = _PROBE_FRAME_CACHE.get(spark, {}).get(key)
-    if ent is not None and ent[0] == fp:
-        return ent[1]
-    return None
-
-
-def _probe_cache_put(
-    spark: SparkSession, key: tuple, fp: object, val: tuple
-) -> None:
-    _PROBE_FRAME_CACHE.setdefault(spark, {})[key] = (fp, val)
+# bounded, acceptable trade the table cache already made.
 
 
 def _probe_corpus_indexes(
@@ -1666,20 +1642,23 @@ def _probe_corpus_indexes(
     (r14 profile: band_signature_index alone ~2 s of q144's ~4.7 s warm
     call at sf0.1), so caching here mirrors the deployment shape rather
     than hiding work."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, "corpus_indexes")
-    fp = file_fingerprint(path)
-    hit = _probe_cache_get(spark, key, fp)
-    if hit is not None:
-        return hit
-    corpus = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 2 == 0
+
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
+        corpus = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 2 == 0
+        )
+        return (
+            fingerprint_index(corpus).localCheckpoint(eager=False),
+            band_signature_index(corpus).localCheckpoint(eager=False),
+            band_member_index(corpus).localCheckpoint(eager=False),
+        )
+
+    return session_cached(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        ("probe_corpus_indexes", sf_dir),
+        build,
     )
-    fpx = fingerprint_index(corpus).localCheckpoint(eager=False)
-    bsx = band_signature_index(corpus).localCheckpoint(eager=False)
-    bmx = band_member_index(corpus).localCheckpoint(eager=False)
-    _probe_cache_put(spark, key, fp, (fpx, bsx, bmx))
-    return fpx, bsx, bmx
 
 
 def _probe_verify_frames(
@@ -1688,12 +1667,17 @@ def _probe_verify_frames(
     """(shingled docs, stop-listed corpus postings) — both lazily
     checkpointed once per (session, corpus state) and shared across the
     q144/q146 meters."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (path, _PROBE_VERIFY_MAX_DF)
-    fp = file_fingerprint(path)
-    hit = _probe_cache_get(spark, key, fp)
-    if hit is not None:
-        return hit
+    return session_cached(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        ("probe_verify_frames", sf_dir),
+        lambda: _build_verify_frames(spark, sf_dir),
+    )
+
+
+def _build_verify_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
     sh = _shingled(spark, sf_dir).localCheckpoint(eager=False)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     # MOSS stop-list on the corpus posting side (r12): drop shingles
@@ -1716,7 +1700,6 @@ def _probe_verify_frames(
     ex_c = ex_c_all.join(F.broadcast(hot), "s", "left_anti").localCheckpoint(
         eager=False
     )
-    _probe_cache_put(spark, key, fp, (sh, ex_c))
     return sh, ex_c
 
 

@@ -23,22 +23,24 @@ import shutil
 import tempfile
 
 from csv_loader_spark.io.pings import RAW_SCHEMA, project_pings
-from csv_loader_spark.io.tables import load_table, normalize_event_ts
+from csv_loader_spark.io.tables import load_table, normalize_event_ts, session_cached
 from csv_loader_spark.queries.registry import query
 from csv_loader_spark.session import tune_session
 from csv_loader_spark.streaming.trips import segment_trips
 
-_STREAM_STAGE: dict[str, str] = {}
 
-
-def _stage_stream_dir(sf_dir: str) -> str:
+def _stage_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Spark's file stream source requires a DIRECTORY; stage the single
-    events.parquet into a temp dir once per sf_dir (testdata is read-only)."""
-    if sf_dir not in _STREAM_STAGE:
+    events.parquet into a temp dir (testdata is read-only), once per
+    session and file state: a regenerated events.parquet is staged anew."""
+    src = os.path.join(sf_dir, "events.parquet")
+
+    def build() -> str:
         d = tempfile.mkdtemp(prefix="q57_stream_")
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), d)
-        _STREAM_STAGE[sf_dir] = d
-    return _STREAM_STAGE[sf_dir]
+        shutil.copy(src, d)
+        return d
+
+    return session_cached(spark, src, ("q57_stream_dir", sf_dir), build)
 
 
 @query(
@@ -63,7 +65,7 @@ def q57_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     production the same query runs continuously with the 1-hour watermark
     bounding window state."""
     tune_session(spark)
-    path = _stage_stream_dir(sf_dir)
+    path = _stage_stream_dir(spark, sf_dir)
     schema = spark.read.parquet(path).schema
     raw = normalize_event_ts(spark.readStream.schema(schema).parquet(path))
     agg = (

@@ -27,15 +27,14 @@ columns (int64 vehicle id and timestamp, float64 lat/lon) on the executor
 (``mapInArrow``, through ``sinks.http._deliver``), computes every row's
 varint lengths as numpy arrays, and scatters the fixed tags, the
 little-endian doubles and the varint groups into one ``uint8`` buffer, so
-no Python object is built per row. ``encode_envelope``, ``encode_message``
-and ``encode_location`` are thin row adapters over it: the wire tests
-check the code that ships.
+no Python object is built per row. ``encode_envelope`` is a thin row
+adapter over it: the wire tests check the code that ships.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 import numpy as np
@@ -244,22 +243,6 @@ def encode_envelope(
 ) -> bytes:
     """``encode_columns`` over (vehicle_id, lat, lon, ts_millis) tuples."""
     return encode_columns(source_id, rows_batch(rows))
-
-
-def encode_message(vehicle_id: int, locations: Sequence[tuple[float, float, int]]) -> bytes:
-    """One VehicleMessage: the vehicle id, then one repeated location field
-    per (lat, lon, ts_millis) — each row's framed message without its
-    framing and id."""
-    head = bytes((_VEHICLE_ID,)) + _varint(vehicle_id)
-    buf, offsets = framed_messages(rows_batch((vehicle_id, *loc) for loc in locations))
-    keep = np.ones(len(buf), bool)
-    keep[offsets[:-1, None] + np.arange(2 + len(head))] = False
-    return head + buf[keep].tobytes()
-
-
-def encode_location(lat: float, lon: float, ts_millis: int) -> bytes:
-    # the message of vehicle 0 is 08 00, then the location's tag and length
-    return encode_message(0, [(lat, lon, ts_millis)])[4:]
 
 
 # --- decoder (test/receiver side) ------------------------------------------

@@ -83,6 +83,8 @@ def test_dry_run_sends_nothing(spark, tmp_path, http_server, capsys):
 
 
 _TOO_SMALL = "--batch-size: must be at least 1"
+_BAD_INTERVAL = "--retry-interval: must be a finite number >= 0"
+_BAD_RETRIES = "--max-retries: must be at least 0"
 _NO_STREAM_MODE = "--stream cannot be combined"
 
 
@@ -95,14 +97,23 @@ _NO_STREAM_MODE = "--stream cannot be combined"
         (True, ["--batch-size", "-1"], _TOO_SMALL),
         (True, ["--dry-run"], _NO_STREAM_MODE),
         (True, ["--kinesis", "s"], _NO_STREAM_MODE),
+        (False, ["--retry-interval", "-1"], _BAD_INTERVAL),
+        (False, ["--retry-interval", "nan"], _BAD_INTERVAL),
+        (True, ["--retry-interval", "-0.5"], _BAD_INTERVAL),
+        (False, ["--max-retries", "-1"], _BAD_RETRIES),
+        (True, ["--max-retries", "-1"], _BAD_RETRIES),
     ],
     ids=["batch_size_0", "batch_size_-1", "stream_batch_size_0",
-         "stream_batch_size_-1", "stream_dry_run", "stream_kinesis"],
+         "stream_batch_size_-1", "stream_dry_run", "stream_kinesis",
+         "retry_interval_-1", "retry_interval_nan",
+         "stream_retry_interval_-0.5", "max_retries_-1",
+         "stream_max_retries_-1"],
 )
 def test_usage_errors_exit_2_and_post_nothing(
     tmp_path, http_server, capsys, stream, flags, message
 ):
-    """A --batch-size below 1, and --stream with a flag it has no mode for
+    """A --batch-size below 1, a negative or NaN --retry-interval, a
+    negative --max-retries, and --stream with a flag it has no mode for
     (it posts to --url), are usage errors before any row is read."""
     url, rec = http_server
     src = tmp_path / "incoming"
@@ -320,8 +331,7 @@ def test_curate_cli_capstone_equals_q132_oracle(tmp_path, capsys):
 
     from csv_loader_spark.cli import main
     from csv_loader_spark.io.tables import load_table
-    from csv_loader_spark.queries.llm5 import _BLOCKLIST
-    from csv_loader_spark.queries.llm7 import _QUOTA, injected_url_text
+    from csv_loader_spark.queries.llm7 import _BLOCKLIST, _QUOTA, injected_url_text
     from csv_loader_spark.queries.llm8 import _q132_oracle
     from csv_loader_spark.session import get_spark
 

@@ -31,8 +31,6 @@ import pytest
 from csv_loader_spark.sinks.envelope import (
     decode_envelope,
     encode_envelope,
-    encode_location,
-    encode_message,
 )
 
 _VENDORED_PROTOBUF = "/usr/lib/google-cloud-sdk/platform/google_appengine"
@@ -157,12 +155,6 @@ def test_decode_official_bytes():
     d = decode_envelope(e.SerializeToString())
     assert d.source_id == 99
     assert d.messages == [(4, [(1.25, 2.5, 777)])]
-
-
-def test_message_and_location_fragments_compose():
-    body = encode_message(2, [(1.5, -2.5, 1000)])
-    assert body in GOLDEN
-    assert encode_location(1.5, -2.5, 1000) in body
 
 
 # ---------------------------------------------------------------------------
